@@ -119,10 +119,10 @@ object ScratchExplain {
       Seq(("g", 1L, 1.0, 1.0)).toDF("g", "id", "sa", "sb"),
       col("g"), col("id"), col("sa"), col("sb")).count())
 
-    // bpe local trainer: empty corpus, single char word
-    runCase("bpe-local empty")(graft.operators.Bpe.trainModelLocal(
+    // bpe trainer: empty corpus, single char word
+    runCase("bpe-local empty")(graft.operators.Bpe.trainModel(
       Seq.empty[Tuple1[String]].toDF("text"), col("text"), 5)._1.count())
-    runCase("bpe-local single-char")(graft.operators.Bpe.trainModelLocal(
+    runCase("bpe-local single-char")(graft.operators.Bpe.trainModel(
       Seq(Tuple1("a a a")).toDF("text"), col("text"), 5)._1.count())
 
     // r15 wave: gTest / moodMedian / cramerVonMises / hosmerLemeshow /

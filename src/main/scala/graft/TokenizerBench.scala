@@ -10,7 +10,7 @@ import graft.operators.{Bpe, Unigram, Wordpiece}
   * plus the achieved artifact sizes. The specs train toy vocabs (tens
   * of merges); the one cost toy fixtures cannot expose is the BPE
   * merge-loop's ROUND COUNT — this probe measures it, on the
-  * driver-side trainer ([[Bpe.trainModelLocal]]) whose round cost is
+  * driver-side trainer ([[Bpe.trainModel]]) whose round cost is
   * heap arithmetic, not a Spark job scheduling.
   *
   * Usage: runMain graft.TokenizerBench <sfDir> [outPath] [vocab]
@@ -37,7 +37,7 @@ object TokenizerBench {
     }
 
     val ((nMerges, nLex), tBpe) = timed {
-      val (m, lx) = Bpe.trainModelLocal(docs, col("text"),
+      val (m, lx) = Bpe.trainModel(docs, col("text"),
         numMerges = vocab, minPairFreq = 2L)
       (m.count(), lx.count())
     }
@@ -114,7 +114,7 @@ object TokenizerBench {
           val (m0, lx0) = Bpe.trainModelLocalFromWords(z5, numMerges = vocab,
             // the probe MEASURES the heap cliff the production guard
             // protects against, so it opts past the bound deliberately
-            minPairFreq = 2L, maxWords = cap, allowLargeLexicon = true)
+            minPairFreq = 2L, maxWords = Some(cap), allowLargeLexicon = true)
           (m0.count(), lx0.count())
         }
         s"""{"wall_s":${d(t)},"merges":$m,"lexicon_rows":$lx,"peak_heap_mb":${peakHeapMb()}}"""

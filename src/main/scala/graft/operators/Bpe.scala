@@ -1,34 +1,39 @@
 package graft.operators
 
-import java.util.regex.Pattern
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.tokens
 
-/** Distributed BPE vocabulary induction (Sennrich et al., ACL'16 —
-  * the tokenizer-training step of every LLM data pipeline): learn the
+/** BPE vocabulary induction (Sennrich et al., ACL'16 — the
+  * tokenizer-training step of every LLM data pipeline): learn the
   * top-`numMerges` byte-pair merges from a corpus by repeatedly
   * merging the most frequent adjacent symbol pair.
   *
-  * Scale shape — the part that matters at 100 TB: the CORPUS is
-  * touched exactly once (tokenize → word-frequency aggregate, one
-  * partial-aggregated shuffle). Every merge round then runs on the
-  * DISTINCT-WORD table — millions of rows where the corpus has
-  * trillions — as one pair-explode + partial-agg + distributed top-1
-  * (`TakeOrderedAndProject`, no global sort), with the chosen pair
-  * (one row) collected as driver metadata exactly like IVF centroids.
-  * Lineage is `localCheckpoint`-truncated per round
-  * ([[Dedup.connectedComponents]]' iterative contract). Words are
-  * kept as space-joined symbol STRINGS so the merge step is one
-  * codegen'd `regexp_replace` (left-to-right non-overlapping — BPE's
-  * greedy semantics exactly) instead of an interpreted array fold.
+  * Scale shape: the CORPUS is touched exactly once (tokenize →
+  * word-frequency aggregate, one partial-aggregated shuffle) and the
+  * top words by (freq desc, w asc) are collected to the driver. BPE
+  * training only ever reads that WORD-FREQUENCY table, whose size is
+  * sublinear in corpus bytes (Heaps' law) — the same "model artifacts
+  * are driver metadata" contract as IVF centroids and the subword
+  * vocab (SURVEY §5 j). Every merge round is then heap arithmetic on
+  * the driver: a TreeSet keyed (count desc, left asc, right asc) plus
+  * a pair→words inverted index, so each merge touches only the words
+  * containing its pair — the O(merges × touched symbols) algorithm
+  * production tokenizer trainers use. No merge round schedules a
+  * Spark job: 30 merges and 32k merges pay the same one corpus pass.
   *
-  * Determinism: ties on pair frequency break lexicographically
-  * (left asc, right asc), so the merge table is a pure function of
-  * the corpus. No portable SQL twin exists (an iterative driver loop)
-  * → rows-only + the classic hand-computable corpus in BpeSpec.
+  * Word-table guard: the result is exact (every distinct word
+  * trains) unless the caller passes `maxWords`. Without it, a corpus
+  * with more than [[defaultMaxWords]] distinct words fails loudly
+  * rather than training on a silently truncated table. With it, only
+  * the top `maxWords` words train and the Zipf tail later segments as
+  * OOV char-splits ([[segment]] counts them in `n_oov_words`) — the
+  * documented sampling contract of SentencePiece-class trainers.
+  *
+  * Determinism: ties on pair frequency break by code point (left
+  * asc, right asc), so the merge table is a pure function of the
+  * corpus; the q_bpe_merges oracle replays it as a recursive CTE.
   *
   * Returns (rank, left, right, merged, freq): rank 1 = first merge
   * learned, freq = the pair's corpus frequency when merged. Applying
@@ -41,6 +46,13 @@ object Bpe {
   /** End-of-word marker, kept out of the per-char alphabet. */
   val EndOfWord = "</w>"
 
+  /** Distinct-word count past which a caller that did not pass
+    * `maxWords` gets the word-table guard's failure instead of a
+    * truncated training table. A table this size peaked at ~6.3 GB
+    * driver heap over 32k merges (TOKENIZER_PROBE r14).
+    */
+  val defaultMaxWords: Int = 1000000
+
   def train(
       df: DataFrame,
       text: Column,
@@ -52,66 +64,28 @@ object Bpe {
     * lexicon = (w, syms, freq) maps every training word to its final
     * space-joined subword segmentation — the join table [[segment]]
     * consumes. Persisting both is the whole tokenizer artifact.
+    * `maxWords` and `allowLargeLexicon` are the word-table guard's
+    * knobs (see [[Bpe]] and [[localTrainWordBound]]).
     */
   def trainModel(
       df: DataFrame,
       text: Column,
       numMerges: Int,
-      minPairFreq: Long = 2L): (DataFrame, DataFrame) = {
-    require(numMerges >= 1, "numMerges must be >= 1")
-    val spark = df.sparkSession
-    // one corpus pass: word frequencies
+      minPairFreq: Long = 2L,
+      maxWords: Option[Int] = None,
+      allowLargeLexicon: Boolean = false): (DataFrame, DataFrame) = {
     val wordFreq = scaleOut(df.select(text.as("__text")))
       .select(explode(tokens(col("__text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-    // "low" -> "l o w </w>": spaces delimit symbols from here on
-    var words = wordFreq.select(
-        col("w"),
-        concat(trim(regexp_replace(col("w"), "(.)", "$1 ")), lit(" " + EndOfWord)).as("syms"),
-        col("freq"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(Int, String, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= numMerges && !exhausted) {
-      val arr = split(col("syms"), " ")
-      val top = words
-        .select(explode(arrays_zip(
-          slice(arr, lit(1), size(arr) - 1).as("a"),
-          slice(arr, lit(2), size(arr) - 1).as("b"))).as("p"), col("freq"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("pf"))
-        .filter(col("pf") >= minPairFreq)
-        .orderBy(col("pf").desc, col("a").asc, col("b").asc)
-        .limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, pf) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((rank, a, b, a + b, pf))
-        // greedy left-to-right merge: zero-width context guards keep
-        // the shared delimiter space available to the NEXT match
-        val pat = "(?<=^| )" + Pattern.quote(a) + " " + Pattern.quote(b) + "(?= |$)"
-        words = words.select(col("w"),
-          regexp_replace(col("syms"), pat, a + b).as("syms"), col("freq"))
-        // truncate lineage every few rounds, not every round: a short
-        // chain of pending regexp projections re-runs per pair count
-        // for less than a materialization per round costs. The sf0.1
-        // wall time (~3.7 s for 30 merges) is dominated by 30
-        // sequential JOB schedulings, not data — at real scale each
-        // round does real work and the fixed overhead amortizes.
-        if (rank % 4 == 0) words = words.localCheckpoint()
-        rank += 1
-      }
-    }
-    import spark.implicits._
-    (merges.result().toDF("rank", "left", "right", "merged", "freq"), words)
+    trainModelLocalFromWords(wordFreq, numMerges, minPairFreq, maxWords,
+      allowLargeLexicon)
   }
 
   /** Code-point (== UTF-8 binary == Spark UTF8String) string order, so
-    * driver-side tie-breaks agree with the distributed `orderBy` even
-    * past the BMP (Java's compareTo orders by UTF-16 unit and ranks
-    * supplementary chars below U+E000..U+FFFF — wrong for this).
+    * driver-side tie-breaks agree with Spark's (and DuckDB's) string
+    * `ORDER BY` even past the BMP (Java's compareTo orders by UTF-16
+    * unit and ranks supplementary chars below U+E000..U+FFFF — wrong
+    * for this).
     */
   private def cpCompare(x: String, y: String): Int = {
     var i = 0
@@ -126,85 +100,66 @@ object Bpe {
     Integer.compare(x.length - i, y.length - j)
   }
 
-  /** [[trainModel]] with the merge loop on the DRIVER — the
-    * realistic-vocab (32k+) trainer. The distributed loop schedules
-    * one Spark job per merge: exactly right when each round does
-    * cluster-sized work, unusable at numMerges = 32768 (32k sequential
-    * job schedulings dwarf the arithmetic). But BPE training only ever
-    * reads the WORD-FREQUENCY table, whose size is sublinear in corpus
-    * bytes (Heaps' law) and capped here at `maxWords` rows — the same
-    * "model artifacts are driver metadata" contract as IVF centroids
-    * and the subword vocab (SURVEY §5 j). So: ONE distributed
-    * tokenize → word-frequency pass (identical to [[trainModel]]'s),
-    * top-`maxWords` words by (freq desc, w asc) to the driver, then a
-    * heap-driven merge loop (TreeSet keyed (count desc, left asc,
-    * right asc) + a pair→words inverted index; each merge touches only
-    * the words containing its pair — the classic O(merges × touched
-    * symbols) algorithm every production tokenizer trainer uses).
-    *
-    * Result contract: merges and lexicon are IDENTICAL to
-    * [[trainModel]](same args) whenever the corpus has ≤ `maxWords`
-    * distinct words (BpeSpec proves it). Beyond the cap, the Zipf tail
-    * past rank `maxWords` trains nothing and later segments as OOV
-    * char-splits ([[segment]] counts them in `n_oov_words`) — the
-    * documented sampling contract of SentencePiece-class trainers, not
-    * a silent drop.
-    */
-  def trainModelLocal(
-      df: DataFrame,
-      text: Column,
-      numMerges: Int,
-      minPairFreq: Long = 2L,
-      maxWords: Int = 1000000,
-      allowLargeLexicon: Boolean = false): (DataFrame, DataFrame) = {
-    require(numMerges >= 1, "numMerges must be >= 1")
-    require(maxWords >= 1, "maxWords must be >= 1")
-    val wordFreq = scaleOut(df.select(text.as("__text")))
-      .select(explode(tokens(col("__text"))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-    trainModelLocalFromWords(wordFreq, numMerges, minPairFreq, maxWords,
-      allowLargeLexicon)
-  }
-
-  /** MEASURED driver-heap bound for the local merge loop
-    * (TOKENIZER_PROBE r14, 32,768 merges): maxWords = 1M peaks at
-    * ~6.3 GB driver heap, the full 4.24M-word Zipf lexicon at
-    * ~12.7 GB — roughly 3 GB per million retained words. Past this
-    * bound a default driver dies in an OutOfMemoryError with no hint
-    * of which knob caused it, so [[trainModelLocal]] fails LOUDLY at
-    * maxWords > this unless the caller opts in (the senMaxN idiom:
-    * raising the cap is a deliberate act with a sized JVM, never an
-    * accident).
+  /** MEASURED driver-heap bound for the merge loop (TOKENIZER_PROBE
+    * r14, 32,768 merges): maxWords = 1M peaks at ~6.3 GB driver heap,
+    * the full 4.24M-word Zipf lexicon at ~12.7 GB — roughly 3 GB per
+    * million retained words. Past this bound a default driver dies in
+    * an OutOfMemoryError with no hint of which knob caused it, so
+    * [[trainModel]] fails LOUDLY at maxWords > this unless the caller
+    * opts in (the senMaxN idiom: raising the cap is a deliberate act
+    * with a sized JVM, never an accident).
     */
   val localTrainWordBound: Int = 4250000
 
-  /** [[trainModelLocal]] over a precomputed (w, freq) table — the
+  /** One greedy left-to-right BPE merge of (a, b) into `ab` over a
+    * word's symbols: non-overlapping, so "a a a" → "aa a".
+    */
+  private[graft] def mergeWord(
+      s: Array[String], a: String, b: String, ab: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var k = 0
+    while (k < s.length) {
+      if (k + 1 < s.length && s(k) == a && s(k + 1) == b) { out += ab; k += 2 }
+      else { out += s(k); k += 1 }
+    }
+    out.result()
+  }
+
+  /** [[trainModel]] over a precomputed (w, freq) table — the
     * [[Wordpiece.buildVocabFromWords]] seam for this family: callers
     * that already paid the corpus tokenize pass (or probe harnesses
     * feeding synthetic Zipf vocabularies) skip straight to the merge
-    * loop.
+    * loop. Same word-table guard as [[trainModel]].
     */
   def trainModelLocalFromWords(
       wordFreqDf: DataFrame,
       numMerges: Int,
       minPairFreq: Long = 2L,
-      maxWords: Int = 1000000,
+      maxWords: Option[Int] = None,
       allowLargeLexicon: Boolean = false): (DataFrame, DataFrame) = {
     require(numMerges >= 1, "numMerges must be >= 1")
-    require(maxWords >= 1, "maxWords must be >= 1")
-    require(maxWords <= localTrainWordBound || allowLargeLexicon,
-      s"maxWords=$maxWords exceeds the measured driver-heap bound " +
+    val cap = maxWords.getOrElse(defaultMaxWords)
+    require(cap >= 1, "maxWords must be >= 1")
+    require(cap <= localTrainWordBound || allowLargeLexicon,
+      s"maxWords=$cap exceeds the measured driver-heap bound " +
         s"($localTrainWordBound words ~ 12.7 GB peak heap; ~3 GB per " +
         "million retained words, TOKENIZER_PROBE r14). A lexicon this " +
         "size silently OOMs a default driver mid-merge-loop. Pass " +
         "allowLargeLexicon = true deliberately with a sized JVM, or " +
         "keep the cap and let the Zipf tail segment as OOV.")
     val spark = wordFreqDf.sparkSession
+    // one row past the default cap tells "fits" from "would truncate"
     val wordFreq = wordFreqDf
       .select(col("w").cast("string").as("w"), col("freq").cast("long").as("freq"))
       .orderBy(col("freq").desc, col("w").asc)
-      .limit(maxWords)
+      .limit(if (maxWords.isDefined) cap else cap + 1)
       .collect()
+    if (wordFreq.length > cap)
+      throw new IllegalArgumentException(
+        s"BPE word-table guard: the corpus has more than $cap distinct " +
+          "words, and training on the top ones only would silently change " +
+          "the merges. Pass maxWords explicitly to train on the top-maxWords " +
+          "words (the Zipf tail then segments as OOV).")
 
     import scala.collection.mutable
     val n = wordFreq.length
@@ -256,16 +211,6 @@ object Bpe {
         occ.getOrElseUpdate(p, mutable.Set.empty) += i
       }
       i += 1
-    }
-
-    def mergeWord(s: Array[String], a: String, b: String, ab: String): Array[String] = {
-      val out = Array.newBuilder[String]
-      var k = 0
-      while (k < s.length) {
-        if (k + 1 < s.length && s(k) == a && s(k + 1) == b) { out += ab; k += 2 }
-        else { out += s(k); k += 1 }
-      }
-      out.result()
     }
 
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]

@@ -1247,8 +1247,6 @@ object Dedup {
     // in that job instead of paying a separate eager materialization
     // job first. Same single evaluation, same lineage truncation, half
     // the driver round-trips — job latency is serial on a cluster too.
-    val ccDbg0 = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    val tS = System.nanoTime()
     // Checkpoint the pair tier ONCE, before the symmetrization: the
     // old `sym = pairs ∪ pairs.swap` checkpoint carried the (often
     // expensive) pair-generation subtree TWICE in its plan — planned
@@ -1257,14 +1255,9 @@ object Dedup {
     // from the checkpointed single copy is a trivial projection.
     val e0c = e0.localCheckpoint(false)
     val sym = e0c.unionByName(e0c.select(col("b").as("a"), col("a").as("b")))
-    if (ccDbg0) System.err.println(
-      f"[cc-minlabel] sym-create ${(System.nanoTime() - tS) / 1e9}%.2fs")
-    val tL = System.nanoTime()
     var labels = sym.select(col("a").as("id")).distinct()
       .withColumn("comp", col("id"))
       .localCheckpoint(false)
-    if (ccDbg0) System.err.println(
-      f"[cc-minlabel] labels-create ${(System.nanoTime() - tL) / 1e9}%.2fs")
     // FRONTIER propagation (r17, guide §2.3/§2.4 — process only what
     // can still change): comp_i(v) = min(comp_{i-1}(v), min over
     // neighbors u of comp_{i-1}(u)); a neighbor whose label did NOT
@@ -1277,9 +1270,7 @@ object Dedup {
     var frontier = labels
     var changed = 1L
     var i = 0
-    val ccDbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
     while (changed > 0 && i < maxIter) {
-      val t0 = System.nanoTime()
       val nbrMin = sym.join(frontier.withColumnRenamed("id", "b2"), col("b") === col("b2"))
         .groupBy(col("a").as("id"))
         .agg(min(col("comp")).as("nbr_comp"))
@@ -1293,8 +1284,6 @@ object Dedup {
       changed = frontier.count()
       labels = updated.select(col("id"), col("comp_new").as("comp"))
       i += 1
-      if (ccDbg) System.err.println(
-        f"[cc-minlabel] round $i ${(System.nanoTime() - t0) / 1e9}%.2fs changed=$changed")
     }
     // Fail LOUDLY on non-convergence: returning local-min labels would
     // let clusterDuplicates keep several representatives of one cluster
@@ -1359,8 +1348,6 @@ object Dedup {
     var eSig = edgeSig(edges)
     var converged = eSig._1 == 0L
     var i = 0
-    val ccDbg = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    var tR = System.nanoTime()
     while (!converged && i < maxIter) {
       // large-star over the SYMMETRIC neighborhood: strictly-larger
       // neighbors re-attach to the neighborhood min
@@ -1387,11 +1374,6 @@ object Dedup {
       edges = next
       eSig = nSig
       i += 1
-      if (ccDbg) {
-        System.err.println(
-          f"[cc-star] round $i ${(System.nanoTime() - tR) / 1e9}%.2fs edges=${nSig._1}")
-        tR = System.nanoTime()
-      }
     }
     if (!converged) throw new IllegalStateException(
       s"connectedComponentsStar did not converge in $maxIter rounds")

@@ -25,14 +25,14 @@ object CurationQueries {
     * structs in ONE row per round. Each round a correlated subquery
     * unnests the carried words, explodes adjacent symbol pairs via
     * generate_series, and picks the top pair (freq desc, then left/
-    * right asc — the kernel's exact tiebreak). The merge applies with
+    * right asc — the trainer's exact tiebreak). The merge applies with
     * the DOUBLE-SPACE trick: RE2 (DuckDB's regex) has no lookarounds,
     * so every delimiter is doubled first, giving each token a private
     * space on both sides; a plain non-overlapping replace() of
     * ' a  b ' → ' ab ' then consumes only private spaces, which is
-    * exactly what the kernel's zero-width guards achieve, and a
-    * whitespace collapse restores single delimiters. Recursion stops
-    * when no pair reaches minPairFreq = 2 (top IS NULL), the kernel's
+    * exactly the greedy left-to-right pairing of `Bpe.mergeWord`, and
+    * a whitespace collapse restores single delimiters. Recursion stops
+    * when no pair reaches minPairFreq = 2 (top IS NULL), the trainer's
     * exhaustion arm. Ends with `lexicon AS (w, syms)` — the final
     * segmentation table, plus `bpe` still in scope for the merge list.
     */
@@ -919,35 +919,35 @@ object CurationQueries {
     },
 
     // D41: BPE vocabulary induction — the tokenizer-training pass.
-    // One corpus scan (word frequencies), then every merge round runs
-    // on the distinct-word table only. The greedy loop is exact
-    // integer arithmetic with a deterministic tiebreak, so the oracle
-    // replays ALL 30 rounds with a recursive CTE carrying the
-    // distinct-word table as list state (the q_pack_bins FFD
-    // precedent): per round a correlated subquery unnests the carried
-    // words, explodes adjacent symbol pairs, and picks the top pair
-    // (freq desc, left asc, right asc); the merge applies via the
-    // double-space trick — RE2 has no lookarounds, so doubling every
-    // delimiter gives each token a private space on each side and
-    // plain left-to-right replace() of ' a  b ' reproduces the
-    // kernel's zero-width-guarded regex exactly (proven equivalent on
-    // the shared-delimiter 'a a a a' ladder in BpeSpec).
+    // One corpus scan (word frequencies to the driver), then every
+    // merge round is heap arithmetic on the driver-side word table —
+    // no Spark job per round. The greedy loop is exact integer
+    // arithmetic with a deterministic tiebreak, so the oracle replays
+    // ALL 30 rounds with a recursive CTE carrying the distinct-word
+    // table as list state (the q_pack_bins FFD precedent): per round a
+    // correlated subquery unnests the carried words, explodes adjacent
+    // symbol pairs, and picks the top pair (freq desc, left asc, right
+    // asc); the merge applies via the double-space trick — RE2 has no
+    // lookarounds, so doubling every delimiter gives each token a
+    // private space on each side and plain left-to-right replace() of
+    // ' a  b ' reproduces the trainer's greedy non-overlapping merge
+    // (proven equal to `Bpe.mergeWord` on the shared-delimiter
+    // 'a a a a' ladder in BpeSpec). No maxWords: the word-table guard
+    // fails loudly rather than truncate.
     Q("q_bpe_merges", bpeMergesOracle) { (s, dir) =>
       Bpe.train(table(s, dir, "documents").select(col("text")),
           col("text"), numMerges = 30)
         .orderBy("rank")
     },
 
-    // D41d: the DRIVER-LOOP trainer (Bpe.trainModelLocal) — the
-    // realistic-vocab (32k) path whose merge rounds are heap
-    // arithmetic over the capped word-frequency table instead of one
-    // Spark job each. Same oracle as q_bpe_merges: the two trainers
-    // are contract-identical (BpeSpec proves merges AND lexicon equal,
-    // ties included), so the 30-round DuckDB replay checks this one's
-    // hash too — a driver-checked row, not just a spec claim.
+    // D41d: the same trainer under an EXPLICIT word-table cap — the
+    // tail-sampling contract a realistic-vocab (32k) run on a web-scale
+    // corpus uses. The cap sits above this corpus's distinct-word
+    // count, so the result must equal q_bpe_merges exactly: same
+    // oracle, so the driver's hash check covers the capped path too.
     Q("q_bpe_local", bpeMergesOracle) { (s, dir) =>
-      Bpe.trainModelLocal(table(s, dir, "documents").select(col("text")),
-          col("text"), numMerges = 30)._1
+      Bpe.trainModel(table(s, dir, "documents").select(col("text")),
+          col("text"), numMerges = 30, maxWords = Some(Bpe.defaultMaxWords))._1
         .orderBy("rank")
     },
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bpe
@@ -94,17 +96,14 @@ class BpeSpec extends SparkSpec {
     assert(d2z.last._4 == symId("</w>").toLong && !d2z.last._5)
   }
 
-  test("oracle's double-space replace reproduces the guarded-regex merge on shared-delimiter ladders") {
-    // the q_bpe_merges oracle can't use the kernel's zero-width guards
-    // (RE2 has no lookarounds); it doubles delimiters so plain
-    // replace() consumes only private spaces. Pin the equivalence on
-    // the adversarial shapes: runs of the same symbol (shared
-    // delimiters), pair at start/end, merged-symbol adjacency.
-    def kernel(syms: String, a: String, b: String): String = {
-      val pat = "(?<=^| )" + java.util.regex.Pattern.quote(a) + " " +
-        java.util.regex.Pattern.quote(b) + "(?= |$)"
-      syms.replaceAll(pat, a + b)
-    }
+  test("oracle double-space replace == mergeWord on shared-delimiter ladders") {
+    // the q_bpe_merges oracle runs on DuckDB, whose RE2 regex has no
+    // lookarounds; it doubles delimiters so plain replace() consumes
+    // only private spaces. Pin that it equals the trainer's shipped
+    // merge step on the adversarial shapes: runs of the same symbol
+    // (shared delimiters), pair at start/end, merged-symbol adjacency.
+    def shipped(syms: String, a: String, b: String): String =
+      Bpe.mergeWord(syms.split(" "), a, b, a + b).mkString(" ")
     def oracle(syms: String, a: String, b: String): String = {
       val doubled = "  " + syms.replace(" ", "  ") + "  "
       val replaced = doubled.replace(s" $a  $b ", s" $a$b ")
@@ -122,9 +121,9 @@ class BpeSpec extends SparkSpec {
       ("e r </w>", "e", "r"),
       ("x y", "y", "x")) // no match at all
     for ((s, a, b) <- cases)
-      assert(kernel(s, a, b) == oracle(s, a, b),
-        s"'$s' merge ($a,$b): kernel='${kernel(s, a, b)}' oracle='${oracle(s, a, b)}'")
-    assert(kernel("a a a a", "a", "a") == "aa aa") // and the value itself
+      assert(shipped(s, a, b) == oracle(s, a, b),
+        s"'$s' merge ($a,$b): shipped='${shipped(s, a, b)}' oracle='${oracle(s, a, b)}'")
+    assert(shipped("a a a a", "a", "a") == "aa aa") // and the value itself
   }
 
   test("train is deterministic and stops when no pair clears minPairFreq") {
@@ -161,36 +160,50 @@ class BpeSpec extends SparkSpec {
     assert(full.forall(_.getAs[Long]("n_lossy_words") == 0L))
   }
 
-  test("trainModelLocal == trainModel: merges AND lexicon, incl. ties and early exhaustion") {
-    // textbook corpus + tie-heavy filler + words that fully collapse,
-    // over MORE merges than the corpus supports so both forms hit the
-    // exhaustion path; driver loop must replay the distributed
-    // (freq desc, left asc, right asc) choice exactly
-    val docs = (
+  test("trainModel == BpeReference: merges AND lexicon, ties, early exhaustion") {
+    // BpeReference is the distributed merge loop (one Spark job per
+    // round) the shipped driver-heap trainer replaced. Two corpora:
+    // (1) textbook + tie-heavy filler + words that fully collapse,
+    // over MORE merges than the corpus supports so both hit the
+    // exhaustion path; (2) a seeded random corpus over a tiny
+    // alphabet (many equal pair counts) mixing BMP letters above
+    // U+E000 with supplementary-plane letters, where UTF-16 order and
+    // code-point order disagree — the heap's tie-break must follow
+    // the code-point order Spark's string sort uses.
+    val textbook = (
       Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
         Seq.fill(6)("newest") ++ Seq.fill(3)("widest") ++
         Seq.fill(4)("aaa") ++ Seq.fill(2)("banana bandana")
     ).map(Tuple1(_)).toDF("text")
-    val (dm, dl) = Bpe.trainModel(docs, col("text"), numMerges = 40)
-    val (lm, ll) = Bpe.trainModelLocal(docs, col("text"), numMerges = 40)
-    val dms = dm.orderBy("rank").as[(Int, String, String, String, Long)].collect().toSeq
-    val lms = lm.orderBy("rank").as[(Int, String, String, String, Long)].collect().toSeq
-    assert(lms == dms)
-    val dlx = dl.select("w", "syms", "freq").orderBy("w")
-      .as[(String, String, Long)].collect().toSeq
-    val llx = ll.select("w", "syms", "freq").orderBy("w")
-      .as[(String, String, Long)].collect().toSeq
-    assert(llx == dlx)
+    val rng = new scala.util.Random(17)
+    val alphabet = Seq("a", "b", "\uff41", "\uff42", "\ud840\udc00", "\ud801\udc28")
+    val random = Seq.fill(60) {
+      Seq.fill(1 + rng.nextInt(4)) {
+        Seq.fill(1 + rng.nextInt(4))(alphabet(rng.nextInt(alphabet.size))).mkString
+      }.mkString(" ")
+    }.map(Tuple1(_)).toDF("text")
+    for ((docs, numMerges) <- Seq((textbook, 40), (random, 25))) {
+      val (rm, rl) = BpeReference.trainModel(docs, col("text"), numMerges)
+      val (m, l) = Bpe.trainModel(docs, col("text"), numMerges)
+      val rms = rm.orderBy("rank").as[(Int, String, String, String, Long)].collect().toSeq
+      val ms = m.orderBy("rank").as[(Int, String, String, String, Long)].collect().toSeq
+      assert(ms == rms)
+      val rlx = rl.select("w", "syms", "freq").orderBy("w")
+        .as[(String, String, Long)].collect().toSeq
+      val lx = l.select("w", "syms", "freq").orderBy("w")
+        .as[(String, String, Long)].collect().toSeq
+      assert(lx == rlx)
+    }
   }
 
-  test("trainModelLocal maxWords cap drops the Zipf tail from training, not from minPairFreq") {
+  test("trainModel maxWords cap drops the Zipf tail from training, not from minPairFreq") {
     // 3 distinct words; cap at 2 keeps the two most frequent. The cut
     // word's pairs never enter the counts, so merges reflect only the
     // kept head — and the lexicon has exactly maxWords rows.
     val docs = (Seq.fill(6)("fee") ++ Seq.fill(4)("fie") ++ Seq.fill(1)("foe"))
       .map(Tuple1(_)).toDF("text")
-    val (m, lx) = Bpe.trainModelLocal(docs, col("text"), numMerges = 10,
-      minPairFreq = 1L, maxWords = 2)
+    val (m, lx) = Bpe.trainModel(docs, col("text"), numMerges = 10,
+      minPairFreq = 1L, maxWords = Some(2))
     assert(lx.count() == 2L)
     assert(lx.select("w").as[String].collect().toSet == Set("fee", "fie"))
     // no merge may mention 'o' (only 'foe' carries it)
@@ -198,19 +211,68 @@ class BpeSpec extends SparkSpec {
     assert(syms.forall(!_.contains("o")))
   }
 
-  test("trainModelLocal fails loudly past the measured driver-heap word bound") {
+  test("trainModel fails loudly past the measured driver-heap word bound") {
     val docs = Seq("a b c").map(Tuple1(_)).toDF("text")
     // above the measured ~12.7 GB envelope: refuse unless opted in
     val e = intercept[IllegalArgumentException] {
-      Bpe.trainModelLocal(docs, col("text"), numMerges = 1,
-        maxWords = Bpe.localTrainWordBound + 1)
+      Bpe.trainModel(docs, col("text"), numMerges = 1,
+        maxWords = Some(Bpe.localTrainWordBound + 1))
     }
     assert(e.getMessage.contains("driver-heap") &&
       e.getMessage.contains("allowLargeLexicon"), e.getMessage)
     // the deliberate opt-in path still trains
-    val (m, lx) = Bpe.trainModelLocal(docs, col("text"), numMerges = 1,
-      minPairFreq = 1L, maxWords = Bpe.localTrainWordBound + 1,
+    val (m, lx) = Bpe.trainModel(docs, col("text"), numMerges = 1,
+      minPairFreq = 1L, maxWords = Some(Bpe.localTrainWordBound + 1),
       allowLargeLexicon = true)
     assert(lx.count() == 3L && m.count() == 1L)
+  }
+
+  test("trainModel without maxWords fails with the word-table guard, never truncates") {
+    // one distinct word past the default cap: training on the top
+    // defaultMaxWords would silently change the merges, so the call
+    // without an explicit maxWords must fail loudly and name the knob
+    val wf = spark.range(Bpe.defaultMaxWords.toLong + 1)
+      .select(concat(lit("w"), col("id").cast("string")).as("w"), lit(1L).as("freq"))
+    val e = intercept[IllegalArgumentException] {
+      Bpe.trainModelLocalFromWords(wf, numMerges = 1)
+    }
+    assert(e.getMessage.contains("word-table guard") &&
+      e.getMessage.contains("maxWords"), e.getMessage)
+    // passing maxWords explicitly opts into the tail-sampling contract
+    val (_, lx) = Bpe.trainModelLocalFromWords(wf, numMerges = 1,
+      minPairFreq = 1L, maxWords = Some(10))
+    assert(lx.count() == 10L)
+  }
+
+  test("train runs a constant number of Spark jobs, independent of numMerges") {
+    // the merge rounds are driver heap arithmetic: building the merge
+    // table runs only the corpus word-frequency pass, so 30 merges
+    // cost the same jobs as 5 (the distributed loop ran ~2 per merge)
+    val sc = spark.sparkContext
+    val docs = (1 to 300).map { i =>
+      Tuple1(Seq.tabulate(3)(j => Integer.toString(i * 7 + j * 131, 5)).mkString(" "))
+    }.toDF("text")
+    def jobsFor(numMerges: Int): (Int, Long) = {
+      val tag = s"bpe-jobs-$numMerges-${System.nanoTime()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("graft.test.tag") == tag)
+            jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setLocalProperty("graft.test.tag", tag)
+      val merges = try Bpe.train(docs, col("text"), numMerges).collect().length
+      finally {
+        sc.setLocalProperty("graft.test.tag", null)
+        ListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+      (jobs.get, merges.toLong)
+    }
+    val (j5, m5) = jobsFor(5)
+    val (j30, m30) = jobsFor(30)
+    assert(m5 == 5L && m30 == 30L) // neither run exhausted early
+    assert(j5 >= 1 && j30 == j5 && j30 <= 5, s"jobs: 5 merges=$j5, 30 merges=$j30")
   }
 }
