@@ -250,15 +250,15 @@ object Bench {
     // A mover without 2 clean isolated runs keeps its suite time, same
     // rule as a failed fork before.
     val rawMap = rawResults.toMap
-    val moverCap = sys.env.get("SPARK_GRAFT_MOVER_CAP").map(_.toInt).getOrElse(20)
-    val moverChunk = sys.env.get("SPARK_GRAFT_MOVER_CHUNK").map(_.toInt).getOrElse(8)
-    val adjBudget = sys.env.get("SPARK_GRAFT_ADJ_BUDGET").map(_.toDouble).getOrElse(600.0)
+    val moverCap = 20
+    val moverChunk = 8
+    val adjBudget = 600.0
     val movers = moversAll
       .sortBy(q => -math.abs(math.log(rawMap(q) / prior(q))))
       .take(moverCap)
     if (moversAll.size > movers.size) System.err.println(
       s"[bench] ${moversAll.size} movers flagged; adjudicating top $moverCap by deviation, " +
-        s"rest keep suite times (cap SPARK_GRAFT_MOVER_CAP)")
+        "rest keep suite times")
     val adjT0 = System.nanoTime()
     var adjTruncated = moversAll.size > movers.size
     val isolated: Map[String, Seq[Double]] =

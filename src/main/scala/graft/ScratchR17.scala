@@ -12,19 +12,6 @@ object ScratchR17 {
     try SparkEntry.queries("q1_agg")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    if (sys.env.contains("SCRATCH_LSH_STATS")) {
-      import org.apache.spark.sql.functions._
-      val e = queries.table(spark, sfDir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val pert = e.select((col("vec_id") + 1000000).as("vec_id"),
-        concat(array(element_at(col("v"), 1) + lit(0.1)), slice(col("v"), 2, 63)).as("v"))
-      val u = e.unionByName(pert)
-      val b = u.select(operators.Similarity.hyperplaneBucket(col("v"), 64, 8, 42L).as("blk"))
-        .groupBy("blk").count()
-      val stats = b.agg(count(lit(1)), max(col("count")), sum(col("count") * col("count"))).head()
-      println(s"[scratch-lsh] nBuckets=${stats.getLong(0)} maxBucket=${stats.getLong(1)} sumSq=${stats.getLong(2)}")
-      spark.stop(); return
-    }
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val tasks = new java.util.concurrent.atomic.AtomicLong
     val taskMs = new java.util.concurrent.atomic.AtomicLong

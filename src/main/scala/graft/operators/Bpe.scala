@@ -64,21 +64,19 @@ object Bpe {
     * lexicon = (w, syms, freq) maps every training word to its final
     * space-joined subword segmentation — the join table [[segment]]
     * consumes. Persisting both is the whole tokenizer artifact.
-    * `maxWords` and `allowLargeLexicon` are the word-table guard's
-    * knobs (see [[Bpe]] and [[localTrainWordBound]]).
+    * `maxWords` is the word-table guard's knob (see [[Bpe]] and
+    * [[localTrainWordBound]]).
     */
   def trainModel(
       df: DataFrame,
       text: Column,
       numMerges: Int,
       minPairFreq: Long = 2L,
-      maxWords: Option[Int] = None,
-      allowLargeLexicon: Boolean = false): (DataFrame, DataFrame) = {
+      maxWords: Option[Int] = None): (DataFrame, DataFrame) = {
     val wordFreq = scaleOut(df.select(text.as("__text")))
       .select(explode(tokens(col("__text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-    trainModelLocalFromWords(wordFreq, numMerges, minPairFreq, maxWords,
-      allowLargeLexicon)
+    trainModelLocalFromWords(wordFreq, numMerges, minPairFreq, maxWords)
   }
 
   /** Code-point (== UTF-8 binary == Spark UTF8String) string order, so
@@ -105,9 +103,7 @@ object Bpe {
     * the full 4.24M-word Zipf lexicon at ~12.7 GB — roughly 3 GB per
     * million retained words. Past this bound a default driver dies in
     * an OutOfMemoryError with no hint of which knob caused it, so
-    * [[trainModel]] fails LOUDLY at maxWords > this unless the caller
-    * opts in (the senMaxN idiom: raising the cap is a deliberate act
-    * with a sized JVM, never an accident).
+    * [[trainModel]] fails LOUDLY at maxWords > this.
     */
   val localTrainWordBound: Int = 4250000
 
@@ -127,26 +123,23 @@ object Bpe {
 
   /** [[trainModel]] over a precomputed (w, freq) table — the
     * [[Wordpiece.buildVocabFromWords]] seam for this family: callers
-    * that already paid the corpus tokenize pass (or probe harnesses
-    * feeding synthetic Zipf vocabularies) skip straight to the merge
-    * loop. Same word-table guard as [[trainModel]].
+    * that already paid the corpus tokenize pass skip straight to the
+    * merge loop. Same word-table guard as [[trainModel]].
     */
-  def trainModelLocalFromWords(
+  private[graft] def trainModelLocalFromWords(
       wordFreqDf: DataFrame,
       numMerges: Int,
       minPairFreq: Long = 2L,
-      maxWords: Option[Int] = None,
-      allowLargeLexicon: Boolean = false): (DataFrame, DataFrame) = {
+      maxWords: Option[Int] = None): (DataFrame, DataFrame) = {
     require(numMerges >= 1, "numMerges must be >= 1")
     val cap = maxWords.getOrElse(defaultMaxWords)
     require(cap >= 1, "maxWords must be >= 1")
-    require(cap <= localTrainWordBound || allowLargeLexicon,
+    require(cap <= localTrainWordBound,
       s"maxWords=$cap exceeds the measured driver-heap bound " +
         s"($localTrainWordBound words ~ 12.7 GB peak heap; ~3 GB per " +
         "million retained words, TOKENIZER_PROBE r14). A lexicon this " +
-        "size silently OOMs a default driver mid-merge-loop. Pass " +
-        "allowLargeLexicon = true deliberately with a sized JVM, or " +
-        "keep the cap and let the Zipf tail segment as OOV.")
+        "size silently OOMs a default driver mid-merge-loop. Lower " +
+        "maxWords and let the Zipf tail segment as OOV.")
     val spark = wordFreqDf.sparkSession
     // one row past the default cap tells "fits" from "would truncate"
     val wordFreq = wordFreqDf

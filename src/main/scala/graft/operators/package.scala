@@ -33,6 +33,25 @@ package object operators {
     def dec(c: Column): Column = c.cast("decimal(18,6)")
   }
 
+  /** Materialize several INDEPENDENT DataFrames as local checkpoints
+    * CONCURRENTLY (guide §2.6 overlap-independent-jobs): Spark's
+    * scheduler runs multiple jobs at once — actions are only
+    * sequential because driver code calls them sequentially. Audit
+    * queries build several checkpoint seams that share an input but
+    * not each other; submitted one by one, each short job's straggler
+    * tail leaves the cluster idle. Results come back in argument
+    * order; exceptions propagate (the seams' jobs are independent, so
+    * a failure cannot corrupt a sibling).
+    */
+  def checkpointPar(dfs: DataFrame*): Seq[DataFrame] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(
+      Future.sequence(dfs.toSeq.map(df => Future(df.localCheckpoint()))),
+      Duration.Inf)
+  }
+
   /** Ensure a CPU-bound kernel stage has at least the cluster's
     * parallelism. Small inputs (a single parquet split, a compact doc
     * table) otherwise serialize expensive per-row work — tokenization,
@@ -53,27 +72,6 @@ package object operators {
     * splits and get spread — exactly the under-split case the guard
     * exists for.
     */
-  /** Materialize several INDEPENDENT DataFrames as local checkpoints
-    * CONCURRENTLY (guide §2.6 overlap-independent-jobs): Spark's
-    * scheduler runs multiple jobs at once — actions are only
-    * sequential because driver code calls them sequentially. Audit
-    * queries build several checkpoint seams that share an input but
-    * not each other; submitted one by one, each short job's straggler
-    * tail leaves the cluster idle. Results come back in argument
-    * order; exceptions propagate (the seams' jobs are independent, so
-    * a failure cannot corrupt a sibling).
-    */
-  def checkpointPar(dfs: DataFrame*): Seq[DataFrame] = {
-    if (sys.env.contains("SPARK_GRAFT_SEQ_SEAMS")) // A/B escape hatch
-      return dfs.toSeq.map(_.localCheckpoint())
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(
-      Future.sequence(dfs.toSeq.map(df => Future(df.localCheckpoint()))),
-      Duration.Inf)
-  }
-
   def scaleOut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism

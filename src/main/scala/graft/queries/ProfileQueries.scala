@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Profile, Sampling}
@@ -26,6 +27,29 @@ object ProfileQueries {
        |  CAST(min($c) AS VARCHAR) AS min_val,
        |  CAST(max($c) AS VARCHAR) AS max_val
        |FROM lineitem""".stripMargin
+
+  /** Hourly event counts per event type, (key, bucket, value): the
+    * series every time-series diagnostic below reads, bucket =
+    * ts_ns div 1h (the oracles' `epoch_ns(ts) // 3600000000000`).
+    */
+  private def hourlyCounts(s: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.events(s, dir)
+      .groupBy(col("event_type").as("key"),
+        expr("ts_ns div 3600000000000").as("bucket"))
+      .agg(count(lit(1)).cast("double").as("value"))
+
+  /** Densify an hourly (key, bucket, ...) series: every bucket from a
+    * key's first to its last hour, with `valueCols` 0.0 in the empty
+    * hours — lag-based diagnostics need a gap-free grid.
+    */
+  private def zeroFillHours(counts: DataFrame, valueCols: String*): DataFrame = {
+    val span = counts.groupBy("key")
+      .agg(min("bucket").as("lo"), max("bucket").as("hi"))
+    val grid = span
+      .select(col("key"), explode(sequence(col("lo"), col("hi"))).as("bucket"))
+      .join(counts, Seq("key", "bucket"), "left")
+    valueCols.foldLeft(grid)((df, c) => df.withColumn(c, coalesce(col(c), lit(0.0))))
+  }
 
   val all: Seq[Q] = Seq(
 
@@ -2181,10 +2205,7 @@ object ProfileQueries {
         |      * (floor(abs(value - trend - seasonal) * 1e4) / 1e4) + 0.0 END AS residual
         |FROM o ORDER BY key, bucket""".stripMargin
     ) { (s, dir) =>
-      val b = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
+      val b = hourlyCounts(s, dir)
       graft.operators.Stats.seasonalDecompose(
           b, col("key"), col("bucket"), col("value"), period = 25)
         .orderBy("key", "bucket")
@@ -2273,10 +2294,7 @@ object ProfileQueries {
         |     - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) <= 0.0) AS degenerate
         |FROM m ORDER BY key""".stripMargin
     ) { (s, dir) =>
-      val b = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
+      val b = hourlyCounts(s, dir)
       graft.operators.Stats.decompositionStrength(
           b, col("key"), col("bucket"), col("value"), period = 25)
         .orderBy("key")
@@ -2523,16 +2541,7 @@ object ProfileQueries {
            |ORDER BY a.key, a.lag""".stripMargin
       }
     ) { (s, dir) =>
-      val counts = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
-      val span = counts.groupBy("key")
-        .agg(min("bucket").as("lo"), max("bucket").as("hi"))
-      val dense = span
-        .select(col("key"), explode(sequence(col("lo"), col("hi"))).as("bucket"))
-        .join(counts, Seq("key", "bucket"), "left")
-        .withColumn("value", coalesce(col("value"), lit(0.0)))
+      val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.autocorrelation(dense, col("key"), col("bucket"),
           col("value"), maxLag = 3)
         .orderBy("key", "lag")
@@ -2604,13 +2613,7 @@ object ProfileQueries {
           expr("ts_ns div 3600000000000").as("bucket"))
         .agg(count(lit(1)).cast("double").as("x"),
           sum(col("value").cast("decimal(18,6)")).cast("double").as("y"))
-      val span = counts.groupBy("key")
-        .agg(min("bucket").as("lo"), max("bucket").as("hi"))
-      val dense = span
-        .select(col("key"), explode(sequence(col("lo"), col("hi"))).as("bucket"))
-        .join(counts, Seq("key", "bucket"), "left")
-        .withColumn("x", coalesce(col("x"), lit(0.0)))
-        .withColumn("y", coalesce(col("y"), lit(0.0)))
+      val dense = zeroFillHours(counts, "x", "y")
       graft.operators.Stats.crossCorrelation(dense, col("key"), col("bucket"),
           col("x"), col("y"), maxLag = 2)
         .orderBy("key", "lag")
@@ -3105,16 +3108,7 @@ object ProfileQueries {
            |FROM top WHERE r = 1 ORDER BY key""".stripMargin
       }
     ) { (s, dir) =>
-      val counts = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
-      val span = counts.groupBy("key")
-        .agg(min("bucket").as("lo"), max("bucket").as("hi"))
-      val dense = span
-        .select(col("key"), explode(sequence(col("lo"), col("hi"))).as("bucket"))
-        .join(counts, Seq("key", "bucket"), "left")
-        .withColumn("value", coalesce(col("value"), lit(0.0)))
+      val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.dominantPeriod(dense, col("key"), col("bucket"),
           col("value"), maxLag = 36)
         .orderBy("key")
@@ -3389,16 +3383,7 @@ object ProfileQueries {
            |FROM g2 ORDER BY key""".stripMargin
       }
     ) { (s, dir) =>
-      val counts = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
-      val span = counts.groupBy("key")
-        .agg(min("bucket").as("lo"), max("bucket").as("hi"))
-      val dense = span
-        .select(col("key"), explode(sequence(col("lo"), col("hi"))).as("bucket"))
-        .join(counts, Seq("key", "bucket"), "left")
-        .withColumn("value", coalesce(col("value"), lit(0.0)))
+      val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.ljungBox(dense, col("key"), col("bucket"),
           col("value"), maxLag = 3, critical = 7.815)
         .orderBy("key")
@@ -3488,16 +3473,7 @@ object ProfileQueries {
            |FROM g ORDER BY key""".stripMargin
       }
     ) { (s, dir) =>
-      val counts = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
-      val span = counts.groupBy("key")
-        .agg(min("bucket").as("lo"), max("bucket").as("hi"))
-      val dense = span
-        .select(col("key"), explode(sequence(col("lo"), col("hi"))).as("bucket"))
-        .join(counts, Seq("key", "bucket"), "left")
-        .withColumn("value", coalesce(col("value"), lit(0.0)))
+      val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.pacf(dense, col("key"), col("bucket"),
           col("value"))
         .orderBy("key")
@@ -3548,16 +3524,7 @@ object ProfileQueries {
         |  CAST(cc AS DOUBLE) <= 0.0 AS degenerate
         |FROM g ORDER BY key""".stripMargin
     ) { (s, dir) =>
-      val counts = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
-      val span = counts.groupBy("key")
-        .agg(min("bucket").as("lo"), max("bucket").as("hi"))
-      val dense = span
-        .select(col("key"), explode(sequence(col("lo"), col("hi"))).as("bucket"))
-        .join(counts, Seq("key", "bucket"), "left")
-        .withColumn("value", coalesce(col("value"), lit(0.0)))
+      val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.kpss(dense, col("key"), col("bucket"), col("value"))
         .orderBy("key")
     },
@@ -3621,10 +3588,7 @@ object ProfileQueries {
         |  (fx OR n < 3 OR CAST(den AS DOUBLE) <= 0.0) AS degenerate
         |FROM g ORDER BY key""".stripMargin
     ) { (s, dir) =>
-      val counts = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
+      val counts = hourlyCounts(s, dir)
       graft.operators.Stats.durbinWatson(counts, col("key"),
           col("bucket"), col("value"))
         .orderBy("key")
@@ -3701,10 +3665,7 @@ object ProfileQueries {
         |  (fx OR n < 4 OR avx <= 0.0 OR avz <= 0.0) AS degenerate
         |FROM d ORDER BY key""".stripMargin
     ) { (s, dir) =>
-      val counts = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
+      val counts = hourlyCounts(s, dir)
       graft.operators.Stats.breuschPagan(counts, col("key"),
           col("bucket"), col("value"))
         .orderBy("key")
@@ -3796,16 +3757,7 @@ object ProfileQueries {
         |  (n1 = 0 OR nm = 0 OR CAST(s1 AS DOUBLE) <= 0.0) AS degenerate
         |FROM g ORDER BY key""".stripMargin
     ) { (s, dir) =>
-      val counts = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
-      val span = counts.groupBy("key")
-        .agg(min("bucket").as("lo"), max("bucket").as("hi"))
-      val dense = span
-        .select(col("key"), explode(sequence(col("lo"), col("hi"))).as("bucket"))
-        .join(counts, Seq("key", "bucket"), "left")
-        .withColumn("value", coalesce(col("value"), lit(0.0)))
+      val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.forecastability(dense, col("key"), col("bucket"),
           col("value"), period = 24)
         .orderBy("key")
@@ -3877,10 +3829,7 @@ object ProfileQueries {
         |  (bad OR h >= 1.0 - 1e-9) AS degenerate
         |FROM p ORDER BY key, x""".stripMargin
     ) { (s, dir) =>
-      val counts = graft.sources.Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
+      val counts = hourlyCounts(s, dir)
       graft.operators.Stats.cooksDistance(counts, col("key"),
           col("bucket"), col("value"))
         .orderBy("key", "x")

@@ -213,18 +213,13 @@ class BpeSpec extends SparkSpec {
 
   test("trainModel fails loudly past the measured driver-heap word bound") {
     val docs = Seq("a b c").map(Tuple1(_)).toDF("text")
-    // above the measured ~12.7 GB envelope: refuse unless opted in
+    // above the measured ~12.7 GB envelope: always refuse
     val e = intercept[IllegalArgumentException] {
       Bpe.trainModel(docs, col("text"), numMerges = 1,
         maxWords = Some(Bpe.localTrainWordBound + 1))
     }
     assert(e.getMessage.contains("driver-heap") &&
-      e.getMessage.contains("allowLargeLexicon"), e.getMessage)
-    // the deliberate opt-in path still trains
-    val (m, lx) = Bpe.trainModel(docs, col("text"), numMerges = 1,
-      minPairFreq = 1L, maxWords = Some(Bpe.localTrainWordBound + 1),
-      allowLargeLexicon = true)
-    assert(lx.count() == 3L && m.count() == 1L)
+      e.getMessage.contains("Lower maxWords"), e.getMessage)
   }
 
   test("trainModel without maxWords fails with the word-table guard, never truncates") {

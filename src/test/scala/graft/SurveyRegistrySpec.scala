@@ -54,4 +54,24 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(noOracle.isEmpty,
       s"queries without an oracle twin: ${noOracle.toSeq.sorted.mkString(", ")}")
   }
+
+  test("engine code reads no environment variable or system property") {
+    // debug and A/B switches belong in the entry points (Bench, Verify),
+    // never in the engine: a switch in an operator is a second code
+    // path no spec or oracle exercises
+    import scala.jdk.CollectionConverters._
+    val engineDirs = Seq("operators", "queries", "functions", "streaming",
+      "sources", "plans", "pipeline")
+    val read = "sys\\.env|sys\\.props|System\\.(getenv|getProperty|getProperties)".r
+    val offenders = for {
+      d <- engineDirs
+      walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft", d))
+      f <- try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+        finally walk.close()
+      (l, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if read.findFirstIn(l).isDefined
+    } yield s"$f:${i + 1}: ${l.trim}"
+    assert(offenders.isEmpty,
+      s"engine code reads env/system properties:\n${offenders.mkString("\n")}")
+  }
 }
