@@ -1867,7 +1867,6 @@ object Dedup {
     def norm(df: DataFrame) = df.select(
       least(col("id_a"), col("id_b")).as("a"),
       greatest(col("id_a"), col("id_b")).as("b")).distinct()
-    def t4(c: Column): Column = floor(c * 1e4) / 1e4
     // one declarative plan (no driver-side counting): found left-joins
     // truth to count hits, truth's size rides in on a 1-row cross join.
     // merge hint: BOTH sides are pair lists that grow with the corpus
@@ -1882,14 +1881,14 @@ object Dedup {
         coalesce(sum(col("__t")), lit(0L)).as("n_hit"))
     val th = norm(truth).agg(count(lit(1)).as("n_truth"))
     val p = when(col("n_found") > 0,
-      t4(col("n_hit").cast("double") / col("n_found"))).otherwise(0.0)
+      Num.t4floor(col("n_hit").cast("double") / col("n_found"))).otherwise(0.0)
     val r = when(col("n_truth") > 0,
-      t4(col("n_hit").cast("double") / col("n_truth"))).otherwise(0.0)
+      Num.t4floor(col("n_hit").cast("double") / col("n_truth"))).otherwise(0.0)
     fh.crossJoin(th)
       .withColumn("precision", p)
       .withColumn("recall", r)
       .withColumn("f1", when(col("precision") + col("recall") > 0,
-        t4(lit(2) * col("precision") * col("recall") /
+        Num.t4floor(lit(2) * col("precision") * col("recall") /
           (col("precision") + col("recall")))).otherwise(0.0))
       .select("n_found", "n_truth", "n_hit", "precision", "recall", "f1")
   }

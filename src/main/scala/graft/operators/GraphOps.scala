@@ -47,20 +47,19 @@ object GraphOps {
     val nTotal = nodes.agg(count(lit(1)).as("cnt"))
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // 7-dp truncation (see determinism contract above)
-    def t7(c: Column): Column = floor(c * 1e7) / 1e7
     var ranks = nodes.crossJoin(broadcast(nTotal))
-      .select(col("v"), t7(lit(1.0) / col("cnt")).as("r"))
+      .select(col("v"), Num.t7floor(lit(1.0) / col("cnt")).as("r"))
       .localCheckpoint()
     for (_ <- 1 to iterations) {
       val inbound = e
         .join(ranks.withColumnRenamed("v", "src"), "src")
         .join(outDeg, "src")
         .groupBy(col("dst").as("v"))
-        .agg(sum(t7(col("r") / col("deg")).cast("decimal(28,7)")).as("m"))
+        .agg(sum(Num.t7floor(col("r") / col("deg")).cast("decimal(28,7)")).as("m"))
       ranks = nodes.crossJoin(broadcast(nTotal))
         .join(inbound, Seq("v"), "left")
         .select(col("v"),
-          t7(
+          Num.t7floor(
             lit(1.0 - damping) / col("cnt") +
               lit(damping) * coalesce(col("m").cast("double"), lit(0.0)))
             .as("r"))

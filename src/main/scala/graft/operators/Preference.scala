@@ -79,7 +79,6 @@ object Preference {
   def bradleyTerry(games: DataFrame, winner: Column, loser: Column,
       iterations: Int = 3): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    def t7(c: Column): Column = floor(c * 1e7) / 1e7
     val g = games.select(winner.cast("long").as("w"), loser.cast("long").as("l"))
       .localCheckpoint()
     val players = g.select(col("w").as("player"))
@@ -104,14 +103,14 @@ object Preference {
       val rj = r.select(col("player").as("j"), col("r").as("rj"))
       val den = e.join(ri, "i").join(rj, "j")
         .groupBy(col("i").as("player"))
-        .agg(sum(t7(col("n") / (col("ri") + col("rj"))).cast("decimal(28,7)"))
+        .agg(sum(Num.t7floor(col("n") / (col("ri") + col("rj"))).cast("decimal(28,7)"))
           .as("den"))
       val raw = base.join(den, "player")
-        .select(col("player"), t7(col("wsm") / col("den").cast("double")).as("r"))
+        .select(col("player"), Num.t7floor(col("wsm") / col("den").cast("double")).as("r"))
       val tot = raw.agg(sum(col("r").cast("decimal(28,7)")).as("s"))
       r = raw.crossJoin(broadcast(tot)).crossJoin(broadcast(k))
         .select(col("player"),
-          t7(col("r") * col("cnt") / col("s").cast("double")).as("r"))
+          Num.t7floor(col("r") * col("cnt") / col("s").cast("double")).as("r"))
         .localCheckpoint()
     }
     r.select(col("player"), col("r").as("rating"))

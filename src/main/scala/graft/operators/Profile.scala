@@ -992,7 +992,6 @@ object Profile {
   def benford(
       df: DataFrame,
       value: Column): DataFrame = {
-    def t7(c: Column): Column = floor(c * 1e7) / 1e7
     val expected = (1 to 9).map(d => d -> math.log10(1.0 + 1.0 / d)).toMap
     // floor() before the long cast: Spark truncates double→long while
     // DuckDB rounds — flooring first makes a raw double column give
@@ -1021,7 +1020,7 @@ object Profile {
           floor(col("n").cast("double") / col("__n_ok") * 1e4) / 1e4)
           .otherwise(lit(0.0)))
       .withColumn("p_expected", floor(expCol * 1e4) / 1e4)
-      .withColumn("__chiterm", t7(
+      .withColumn("__chiterm", Num.t7floor(
         when(col("__n_ok") > 0,
           (col("n").cast("double") - expCol * col("__n_ok"))
             * (col("n").cast("double") - expCol * col("__n_ok"))

@@ -789,14 +789,13 @@ object Similarity {
     * is truncated again. `dim` is 1-based (matching SQL subscripts).
     */
   def centroids(df: DataFrame, group: Column, vec: Column): DataFrame = {
-    def t7(c: Column): Column = floor(c * 1e7) / 1e7
     df.select(group.as("grp"), posexplode(vec).as(Seq("pos", "v")))
       .groupBy(col("grp"), (col("pos") + 1).as("dim"))
       .agg(
         count(lit(1)).as("n"),
-        sum(t7(col("v").cast("double")).cast("decimal(28,7)")).as("s"))
+        sum(Num.t7floor(col("v").cast("double")).cast("decimal(28,7)")).as("s"))
       .select(col("grp"), col("dim"),
-        t7(col("s").cast("double") / col("n")).as("mean_v"))
+        Num.t7floor(col("s").cast("double") / col("n")).as("mean_v"))
   }
 
   // ---------------------------------------------------------------

@@ -2645,7 +2645,6 @@ object Stats {
       df: DataFrame,
       a: Column,
       b: Column): DataFrame = {
-    def t7(c: Column): Column = floor(c * 1e7) / 1e7
     val ln2 = math.log(2.0)
     val cells = df.select(a.cast("string").as("a"), b.cast("string").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("n"))
@@ -2653,11 +2652,11 @@ object Stats {
     val rb = cells.groupBy("b").agg(sum(col("n")).as("nb"))
     val tot = cells.agg(sum(col("n")).as("nn"))
     def entropy(m: DataFrame, cnt: String): Column =
-      sum(t7((-(col(cnt).cast("double") / col("nn")))
+      sum(Num.t7floor((-(col(cnt).cast("double") / col("nn")))
         * log(col(cnt).cast("double") / col("nn")) / ln2).cast("decimal(20,7)"))
     val ha = ra.crossJoin(broadcast(tot)).agg(entropy(ra, "na").as("__h")).withColumnRenamed("__h", "ha")
     val hb = rb.crossJoin(broadcast(tot)).agg(entropy(rb, "nb").as("__h")).withColumnRenamed("__h", "hb")
-    val miTerm = t7(col("n").cast("double") / col("nn")
+    val miTerm = Num.t7floor(col("n").cast("double") / col("nn")
       * log(col("n").cast("double") * col("nn")
         / (col("na").cast("double") * col("nb"))) / ln2)
       .cast("decimal(20,7)")
@@ -2934,17 +2933,16 @@ object Stats {
     */
   def cuped(df: DataFrame, group: Column, metric: Column,
       covariate: Column): DataFrame = {
-    def dec(c: Column): Column = c.cast("decimal(18,6)")
     val t = df.select(group.cast("string").as("__g"),
         metric.cast("double").as("__y"), covariate.cast("double").as("__x"))
       .where(col("__g").isNotNull && col("__y").isNotNull &&
         col("__x").isNotNull)
     val g = t.groupBy("__g").agg(
         count(lit(1)).as("n"),
-        sum(dec(col("__y"))).as("sy"), sum(dec(col("__x"))).as("sx"),
-        sum(dec(col("__x")) * dec(col("__y"))).as("sxy"),
-        sum(dec(col("__x")) * dec(col("__x"))).as("sxx"),
-        sum(dec(col("__y")) * dec(col("__y"))).as("syy"))
+        sum(Num.dec(col("__y"))).as("sy"), sum(Num.dec(col("__x"))).as("sx"),
+        sum(Num.dec(col("__x")) * Num.dec(col("__y"))).as("sxy"),
+        sum(Num.dec(col("__x")) * Num.dec(col("__x"))).as("sxx"),
+        sum(Num.dec(col("__y")) * Num.dec(col("__y"))).as("syy"))
       .localCheckpoint() // two consumers: pooled θ + the per-group report
     val pooled = g.agg(sum(col("n")).as("__nn"), sum(col("sy")).as("__py"),
       sum(col("sx")).as("__px"), sum(col("sxy")).as("__pxy"),

@@ -598,7 +598,6 @@ object TextMetrics {
   def tokenEntropy(df: DataFrame, group: Column, text: Column): DataFrame = {
     // truncation, not round(): the per-row 7/4-dp reductions must be
     // repr-independent across engines (see GraphOps.pageRank)
-    def t7(c: Column): Column = floor(c * 1e7) / 1e7
     def t4(c: Column): Column = Num.t4floor(c)
     val toks = df.select(group.as("grp"), explode(tokens(text)).as("term"))
     val tf = toks.groupBy("grp", "term").agg(count(lit(1)).as("n"))
@@ -606,7 +605,7 @@ object TextMetrics {
       .agg(
         sum(col("n")).as("n_tokens"),
         count(lit(1)).as("n_vocab"),
-        sum(t7(col("n") * log(col("n").cast("double")))
+        sum(Num.t7floor(col("n") * log(col("n").cast("double")))
           .cast("decimal(28,7)")).as("__nlogn"))
       .select(
         col("grp"),
@@ -1290,7 +1289,6 @@ object TextMetrics {
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val t7 = (c: Column) => floor(c * 1e7) / 1e7
     val base = scaleOut(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), tokens(col("__text")).as("__tk"))
       .select(col("id"), size(col("__tk")).as("dl"),
@@ -1306,7 +1304,7 @@ object TextMetrics {
       .withColumn("__avgdl", col("sum_dl").cast("double") / col("n_docs"))
       .withColumn("__idf",
         log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
-      .withColumn("__w", t7(
+      .withColumn("__w", Num.t7floor(
         col("__idf") * (col("tf") * (lit(k1) + lit(1.0))) /
           (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("__avgdl")))))
       .groupBy("id")
@@ -1344,7 +1342,6 @@ object TextMetrics {
       df: DataFrame,
       source: Column,
       text: Column): DataFrame = {
-    def t7(c: Column): Column = floor(c * 1e7) / 1e7
     val ln2 = math.log(2.0)
     val tk = graft.operators.scaleOut(
         df.select(source.as("src"), text.as("__text")))
@@ -1353,7 +1350,7 @@ object TextMetrics {
     val tot = cnt.groupBy("src").agg(sum(col("n")).as("__tot"))
     val p = cnt.join(broadcast(tot), "src")
       .select(col("src"), col("term"),
-        t7(col("n").cast("double") / col("__tot")).as("p"))
+        Num.t7floor(col("n").cast("double") / col("__tot")).as("p"))
     val pairTerm = p.as("a")
       .join(p.as("b"), col("a.term") === col("b.term")
         && col("a.src") < col("b.src"))
@@ -1363,7 +1360,7 @@ object TextMetrics {
     val js = col("pa") / 2 * (log(lit(2.0) * col("pa") / m) / ln2) +
       col("pb") / 2 * (log(lit(2.0) * col("pb") / m) / ln2)
     val shared = pairTerm
-      .withColumn("__js", t7(js).cast("decimal(20,7)"))
+      .withColumn("__js", Num.t7floor(js).cast("decimal(20,7)"))
       .withColumn("__pa", col("pa").cast("decimal(20,7)"))
       .withColumn("__pb", col("pb").cast("decimal(20,7)"))
       .groupBy("src_a", "src_b")

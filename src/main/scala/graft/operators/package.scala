@@ -20,6 +20,11 @@ package object operators {
       */
     def t4floor(c: Column): Column = floor(c * 1e4) / 1e4
 
+    /** 7-dp floor truncation — the per-row reduction that makes a
+      * double sum order-independent enough to replay exactly.
+      */
+    def t7floor(c: Column): Column = floor(c * 1e7) / 1e7
+
     /** 4-dp truncation TOWARD ZERO — for values feeding a symmetric
       * |x| > threshold gate, where floor's away-from-zero truncation
       * of negatives would make the verdict depend on sign. `+ 0.0`

@@ -187,9 +187,7 @@ object ChatQueries {
       s"""$turnsSql,
          |fu AS (
          |  SELECT conv_id,
-         |    md5(trim(regexp_replace(regexp_replace(
-         |      lower(min_by(content, turn_idx)),
-         |      '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+', ' ', 'g'))) AS prompt_fp
+         |    ${normFingerprintSql("min_by(content, turn_idx)")} AS prompt_fp
          |  FROM turns WHERE role = 'user' GROUP BY conv_id),
          |k AS (SELECT prompt_fp, min(conv_id) AS keeper FROM fu GROUP BY prompt_fp),
          |c AS (SELECT DISTINCT conv_id FROM turns)

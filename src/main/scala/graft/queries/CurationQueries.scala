@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, Dedup, Packing, Quality, Sampling, TextMetrics, Unigram}
@@ -81,6 +82,60 @@ object CurationQueries {
        |  FROM (SELECT words FROM bpe WHERE r = (SELECT max(r) FROM bpe)),
        |    unnest(words) AS u(x))""".stripMargin
 
+  /** The smoothed grid log-prob map over a (piece, cnt) CTE `cnts`,
+    * as a parenthesized CTE body: `mp` = piece → 7-dp floored
+    * ln((cnt + 0.5) / (Σcnt + 0.5·|pieces|)).
+    */
+  private def unigramLogProbsSql(cnts: String): String =
+    s"""(
+       |  SELECT map(list(piece ORDER BY piece), list(lp ORDER BY piece)) AS mp
+       |  FROM (
+       |    SELECT piece,
+       |      floor(ln((CAST(cnt AS DOUBLE) + 0.5) /
+       |        (CAST((SELECT sum(cnt) FROM $cnts) AS DOUBLE)
+       |          + 0.5 * (SELECT count(*) FROM $cnts))) * 1e7) / 1e7 AS lp
+       |    FROM $cnts))""".stripMargin
+
+  /** One recursive Viterbi pass `name` over `words` under the model CTE
+    * `model`(mp): best log-prob prefix, back-pointers and unknown
+    * flags per position, pieces up to `maxLen`, the -1000 unknown
+    * single-character fallback.
+    */
+  private def unigramViterbiSql(name: String, model: String, maxLen: Int): String =
+    s"""$name AS (
+       |  SELECT w, freq, length(w) AS n, 0 AS i,
+       |    [CAST(0.0 AS DOUBLE)] AS best, CAST([] AS INT[]) AS back,
+       |    CAST([] AS BOOLEAN[]) AS unk
+       |  FROM words
+       |  UNION ALL
+       |  SELECT w, freq, n, i + 1,
+       |    list_append(best, CASE WHEN usefb THEN best[i + 1] + (-1000.0) ELSE cb.s END),
+       |    list_append(back, CASE WHEN usefb THEN i ELSE cb.j END),
+       |    list_append(unk, usefb)
+       |  FROM (
+       |    SELECT w, freq, n, i, best, back, unk, cb,
+       |      (cb.s IS NULL OR best[i + 1] + (-1000.0) > cb.s) AS usefb
+       |    FROM (
+       |      SELECT v.w, v.freq, v.n, v.i, v.best, v.back, v.unk,
+       |        (SELECT {'s': s, 'j': j} FROM (
+       |           SELECT v.best[j + 1] + map_extract(m.mp, v.w[j + 1:v.i + 1])[1] AS s,
+       |             j
+       |           FROM unnest(generate_series(greatest(0, v.i + 1 - $maxLen), v.i)) AS g(j))
+       |         WHERE s IS NOT NULL ORDER BY s DESC, j ASC LIMIT 1) AS cb
+       |      FROM $name v, $model m WHERE v.i < v.n)))""".stripMargin
+
+  /** The recursive back-trace `name` over the finished Viterbi CTE `vit`:
+    * one (piece, punk) row per segment of every word.
+    */
+  private def unigramBacktrackSql(name: String, vit: String): String =
+    s"""$name AS (
+       |  SELECT w, freq, back, unk, n AS p, CAST(NULL AS VARCHAR) AS piece, false AS punk
+       |  FROM $vit WHERE i = n
+       |  UNION ALL
+       |  SELECT w, freq, back, unk, back[p] AS p,
+       |    w[back[p] + 1:p] AS piece, unk[p] AS punk
+       |  FROM $name WHERE p > 0)""".stripMargin
+
   /** Recursive-CTE replay of [[Unigram.train]]'s Viterbi-EM loop —
     * the q_train_classifier round-unroll pattern plus a per-round
     * lattice-DP recursion. Replayable at all because the kernel's
@@ -109,45 +164,6 @@ object CurationQueries {
       vocabSize: Int = 80,
       seedSize: Int = 400,
       maxLen: Int = 6): (String, String) = {
-    def lpSql(cnts: String): String =
-      s"""MATERIALIZED (
-         |  SELECT map(list(piece ORDER BY piece), list(lp ORDER BY piece)) AS mp
-         |  FROM (
-         |    SELECT piece,
-         |      floor(ln((CAST(cnt AS DOUBLE) + 0.5) /
-         |        (CAST((SELECT sum(cnt) FROM $cnts) AS DOUBLE)
-         |          + 0.5 * (SELECT count(*) FROM $cnts))) * 1e7) / 1e7 AS lp
-         |    FROM $cnts))""".stripMargin
-    def vitSql(name: String, model: String): String =
-      s"""$name AS (
-         |  SELECT w, freq, length(w) AS n, 0 AS i,
-         |    [CAST(0.0 AS DOUBLE)] AS best, CAST([] AS INT[]) AS back,
-         |    CAST([] AS BOOLEAN[]) AS unk
-         |  FROM words
-         |  UNION ALL
-         |  SELECT w, freq, n, i + 1,
-         |    list_append(best, CASE WHEN usefb THEN best[i + 1] + (-1000.0) ELSE cb.s END),
-         |    list_append(back, CASE WHEN usefb THEN i ELSE cb.j END),
-         |    list_append(unk, usefb)
-         |  FROM (
-         |    SELECT w, freq, n, i, best, back, unk, cb,
-         |      (cb.s IS NULL OR best[i + 1] + (-1000.0) > cb.s) AS usefb
-         |    FROM (
-         |      SELECT v.w, v.freq, v.n, v.i, v.best, v.back, v.unk,
-         |        (SELECT {'s': s, 'j': j} FROM (
-         |           SELECT v.best[j + 1] + map_extract(m.mp, v.w[j + 1:v.i + 1])[1] AS s,
-         |             j
-         |           FROM unnest(generate_series(greatest(0, v.i + 1 - $maxLen), v.i)) AS g(j))
-         |         WHERE s IS NOT NULL ORDER BY s DESC, j ASC LIMIT 1) AS cb
-         |      FROM $name v, $model m WHERE v.i < v.n)))""".stripMargin
-    def btSql(name: String, vit: String): String =
-      s"""$name AS (
-         |  SELECT w, freq, back, unk, n AS p, CAST(NULL AS VARCHAR) AS piece, false AS punk
-         |  FROM $vit WHERE i = n
-         |  UNION ALL
-         |  SELECT w, freq, back, unk, back[p] AS p,
-         |    w[back[p] + 1:p] AS piece, unk[p] AS punk
-         |  FROM $name WHERE p > 0)""".stripMargin
     def emcSql(name: String, bt: String): String =
       s"""$name AS MATERIALIZED (
          |  SELECT piece, CAST(sum(freq) AS BIGINT) AS cnt
@@ -172,9 +188,9 @@ object CurationQueries {
        |      row_number() OVER (ORDER BY cnt DESC, piece ASC) AS rk
        |    FROM cand WHERE length(piece) > 1)
        |  WHERE rk <= $seedSize - (SELECT ns FROM nsing))""".stripMargin
-    parts += s"m_seed AS ${lpSql("seed")}"
-    parts += vitSql("vit0", "m_seed")
-    parts += btSql("bt0", "vit0")
+    parts += s"m_seed AS MATERIALIZED ${unigramLogProbsSql("seed")}"
+    parts += unigramViterbiSql("vit0", "m_seed", maxLen)
+    parts += unigramBacktrackSql("bt0", "vit0")
     parts += emcSql("emc0", "bt0")
     parts += s"""c0 AS MATERIALIZED (
        |  SELECT s.piece, coalesce(e.cnt, 0) AS cnt
@@ -192,9 +208,9 @@ object CurationQueries {
          |    FROM $prev WHERE length(piece) > 1)
          |  WHERE rk <= greatest((SELECT fs FROM fl$r),
          |      CAST((SELECT sz FROM fl$r) * 0.75 AS INT)) - (SELECT ns FROM nsing))""".stripMargin
-      parts += s"m$r AS ${lpSql(s"pr$r")}"
-      parts += vitSql(s"vit$r", s"m$r")
-      parts += btSql(s"bt$r", s"vit$r")
+      parts += s"m$r AS MATERIALIZED ${unigramLogProbsSql(s"pr$r")}"
+      parts += unigramViterbiSql(s"vit$r", s"m$r", maxLen)
+      parts += unigramBacktrackSql(s"bt$r", s"vit$r")
       parts += emcSql(s"emc$r", s"bt$r")
       parts += s"""c$r AS MATERIALIZED (
          |  SELECT p.piece, coalesce(e.cnt, 0) AS cnt
@@ -228,42 +244,9 @@ object CurationQueries {
   private def unigramSegmentOracle: String = {
     val (ctes, fin) = unigramTrainCtes()
     s"""$ctes,
-       |m_fin AS (
-       |  SELECT map(list(piece ORDER BY piece), list(lp ORDER BY piece)) AS mp
-       |  FROM (
-       |    SELECT piece,
-       |      floor(ln((CAST(cnt AS DOUBLE) + 0.5) /
-       |        (CAST((SELECT sum(cnt) FROM $fin) AS DOUBLE)
-       |          + 0.5 * (SELECT count(*) FROM $fin))) * 1e7) / 1e7 AS lp
-       |    FROM $fin)),
-       |vitf AS (
-       |  SELECT w, freq, length(w) AS n, 0 AS i,
-       |    [CAST(0.0 AS DOUBLE)] AS best, CAST([] AS INT[]) AS back,
-       |    CAST([] AS BOOLEAN[]) AS unk
-       |  FROM words
-       |  UNION ALL
-       |  SELECT w, freq, n, i + 1,
-       |    list_append(best, CASE WHEN usefb THEN best[i + 1] + (-1000.0) ELSE cb.s END),
-       |    list_append(back, CASE WHEN usefb THEN i ELSE cb.j END),
-       |    list_append(unk, usefb)
-       |  FROM (
-       |    SELECT w, freq, n, i, best, back, unk, cb,
-       |      (cb.s IS NULL OR best[i + 1] + (-1000.0) > cb.s) AS usefb
-       |    FROM (
-       |      SELECT v.w, v.freq, v.n, v.i, v.best, v.back, v.unk,
-       |        (SELECT {'s': s, 'j': j} FROM (
-       |           SELECT v.best[j + 1] + map_extract(m.mp, v.w[j + 1:v.i + 1])[1] AS s,
-       |             j
-       |           FROM unnest(generate_series(greatest(0, v.i + 1 - 6), v.i)) AS g(j))
-       |         WHERE s IS NOT NULL ORDER BY s DESC, j ASC LIMIT 1) AS cb
-       |      FROM vitf v, m_fin m WHERE v.i < v.n))),
-       |btf AS (
-       |  SELECT w, freq, back, unk, n AS p, CAST(NULL AS VARCHAR) AS piece, false AS punk
-       |  FROM vitf WHERE i = n
-       |  UNION ALL
-       |  SELECT w, freq, back, unk, back[p] AS p,
-       |    w[back[p] + 1:p] AS piece, unk[p] AS punk
-       |  FROM btf WHERE p > 0),
+       |m_fin AS ${unigramLogProbsSql(fin)},
+       |${unigramViterbiSql("vitf", "m_fin", maxLen = 6)},
+       |${unigramBacktrackSql("btf", "vitf")},
        |wcounts AS MATERIALIZED (
        |  SELECT w, CAST(count(*) AS INT) AS np,
        |    CAST(sum(CASE WHEN punk THEN 1 ELSE 0 END) AS INT) AS nu
@@ -336,6 +319,73 @@ object CurationQueries {
        |    s.np + 1
        |  FROM seg s JOIN cand c ON c.w = s.w AND c.pos = s.pos
        |  WHERE s.pos < length(s.w))""".stripMargin
+
+  /** documents ∪ an exact-duplicate rendition (doc_id + 1000000),
+    * scored by `TextMetrics.withQuality` and `withLangId`: the input
+    * of every curation cascade.
+    */
+  private def scoredDocs(s: SparkSession, dir: String): DataFrame = {
+    val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
+    val planted = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
+    TextMetrics.withLangId(
+      TextMetrics.withQuality(d.unionByName(planted), col("text")), col("text"))
+  }
+
+  /** DuckDB twin of [[scoredDocs]]: ends in `q`(doc_id, text, quality,
+    * best, lang_pred).
+    */
+  private val scoredDocsSql: String =
+    s"""docs AS (
+       |  SELECT doc_id, text FROM documents
+       |  UNION ALL
+       |  SELECT doc_id + 1000000, text FROM documents),
+       |t AS (SELECT doc_id, text, ${tkSql("text")} AS tk FROM docs),
+       |m AS (
+       |  SELECT doc_id, text,
+       |    $qualitySignalsSql,
+       |    $langHitsSql
+       |  FROM t),
+       |q AS (
+       |  SELECT doc_id, text,
+       |    $qualityScoreSql AS quality,
+       |    $bestHitsSql AS best,
+       |    CASE WHEN $bestHitsSql = 0 THEN 'und' $langCasesSql END AS lang_pred
+       |  FROM m)""".stripMargin
+
+  /** The q_decontaminate / q_decontaminate_bloom oracle: each doc's
+    * share of 5-shingles found among the shingles of the probe docs
+    * (hash bucket < `probeBuckets` of 1000).
+    */
+  private def decontaminationOracle(probeBuckets: Int): String = {
+    val b = Sampling.hashBucketSql("doc_id")
+    s"""WITH tk0 AS (
+       |  SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
+       |sh AS (
+       |  SELECT DISTINCT doc_id, array_to_string(tk[i:i+4], ' ') AS s
+       |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) - 3)) AS i
+       |        FROM tk0 WHERE len(tk) >= 5)),
+       |probe AS (
+       |  SELECT DISTINCT s FROM sh
+       |  WHERE doc_id IN (SELECT doc_id FROM documents WHERE $b < $probeBuckets)),
+       |tot AS (SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY 1),
+       |hit AS (
+       |  SELECT doc_id, count(*) AS n_contaminated
+       |  FROM sh WHERE s IN (SELECT s FROM probe) GROUP BY 1)
+       |SELECT t.doc_id AS id, CAST(n_shingles AS BIGINT) AS n_shingles,
+       |  CAST(coalesce(n_contaminated, 0) AS BIGINT) AS n_contaminated,
+       |  round(coalesce(n_contaminated, 0) * 1.0 / n_shingles, 4) AS contamination
+       |FROM tot t LEFT JOIN hit h ON t.doc_id = h.doc_id
+       |ORDER BY id""".stripMargin
+  }
+
+  /** (doc_id, shard = doc_id mod 8, n_toks): the budgeting and packing
+    * queries' per-document token counts.
+    */
+  private def shardedTokenCounts(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "documents").select(
+      col("doc_id"),
+      pmod(col("doc_id"), lit(8L)).as("shard"),
+      size(graft.functions.tokens(col("text"))).cast("long").as("n_toks"))
 
   val all: Seq[Q] = Seq(
 
@@ -419,44 +469,8 @@ object CurationQueries {
     // rendition of every doc must be swallowed by the dedup stage.
     Q(
       "q_corpus_curate", {
-        val stop = TextMetrics.langMarkers.flatMap(_._2).distinct
-          .map(w => s"'$w'").mkString("(", ", ", ")")
-        val hitCols = TextMetrics.langMarkers.map { case (l, ms) =>
-          val in = ms.map(w => s"'$w'").mkString("(", ", ", ")")
-          s"len(list_filter(tk, t -> t IN $in)) AS h_$l"
-        }.mkString(",\n    ")
-        val langs = TextMetrics.langMarkers.map(_._1)
-        val best = langs.map(l => s"h_$l").mkString("greatest(", ", ", ")")
-        val cases = langs.map(l => s"WHEN h_$l = best THEN '$l'").mkString(" ")
         val b = Sampling.hashBucketSql("doc_id")
-        s"""WITH docs AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000, text FROM documents),
-           |t AS (SELECT doc_id, text, ${tkSql("text")} AS tk FROM docs),
-           |m AS (
-           |  SELECT doc_id, text,
-           |    len(tk) AS n_tokens,
-           |    CASE WHEN len(tk) > 0
-           |      THEN list_sum(list_transform(tk, t -> len(t))) * 1.0 / len(tk)
-           |      ELSE 0.0 END AS mean_tok_len,
-           |    CASE WHEN len(text) > 0
-           |      THEN (len(text) - len(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))) * 1.0 / len(text)
-           |      ELSE 0.0 END AS punct_ratio,
-           |    CASE WHEN len(tk) > 0
-           |      THEN len(list_filter(tk, t -> t IN $stop)) * 1.0 / len(tk)
-           |      ELSE 0.0 END AS stop_ratio,
-           |    $hitCols
-           |  FROM t),
-           |q AS (
-           |  SELECT doc_id, text,
-           |    CAST(round(CASE WHEN mean_tok_len >= 3 AND mean_tok_len <= 10 THEN 0.4 ELSE 0.0 END
-           |        + CASE WHEN stop_ratio >= 0.05 THEN 0.3 ELSE 0.0 END
-           |        + CASE WHEN punct_ratio <= 0.1 THEN 0.2 ELSE 0.0 END
-           |        + CASE WHEN n_tokens >= 10 AND n_tokens <= 10000 THEN 0.1 ELSE 0.0 END, 4) AS DOUBLE) AS quality,
-           |    $best AS best,
-           |    CASE WHEN $best = 0 THEN 'und' $cases END AS lang_pred
-           |  FROM m),
+        s"""WITH $scoredDocsSql,
            |f AS (SELECT * FROM q WHERE quality >= 0.5 AND lang_pred <> 'und'),
            |k AS (SELECT md5(text) AS fp, min(doc_id) AS keep_id FROM f GROUP BY 1),
            |s AS (SELECT doc_id, lang_pred, quality FROM f
@@ -468,10 +482,7 @@ object CurationQueries {
            |FROM s ORDER BY doc_id""".stripMargin
       }
     ) { (s, dir) =>
-      val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-      val planted = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      val scored = TextMetrics.withLangId(
-        TextMetrics.withQuality(d.unionByName(planted), col("text")), col("text"))
+      val scored = scoredDocs(s, dir)
       val gated = scored.filter(col("quality") >= 0.5 && col("lang_pred") =!= "und")
       val kept = Dedup.exactKeep(gated, col("text"), col("doc_id"))
       Sampling.splitAssign(kept, col("doc_id"),
@@ -489,76 +500,36 @@ object CurationQueries {
     // window over the prior survivors, materialized before the
     // aggregate. The oracle replays flags, window, and cascade sums.
     Q(
-      "q_curation_attrition", {
-        val stop = TextMetrics.langMarkers.flatMap(_._2).distinct
-          .map(w => s"'$w'").mkString("(", ", ", ")")
-        val hitCols = TextMetrics.langMarkers.map { case (l, ms) =>
-          val in = ms.map(w => s"'$w'").mkString("(", ", ", ")")
-          s"len(list_filter(tk, t -> t IN $in)) AS h_$l"
-        }.mkString(",\n    ")
-        val langs = TextMetrics.langMarkers.map(_._1)
-        val best = langs.map(l => s"h_$l").mkString("greatest(", ", ", ")")
-        val cases = langs.map(l => s"WHEN h_$l = best THEN '$l'").mkString(" ")
-        s"""WITH docs AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000, text FROM documents),
-           |t AS (SELECT doc_id, text, ${tkSql("text")} AS tk FROM docs),
-           |m AS (
-           |  SELECT doc_id, text,
-           |    len(tk) AS n_tokens,
-           |    CASE WHEN len(tk) > 0
-           |      THEN list_sum(list_transform(tk, t -> len(t))) * 1.0 / len(tk)
-           |      ELSE 0.0 END AS mean_tok_len,
-           |    CASE WHEN len(text) > 0
-           |      THEN (len(text) - len(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))) * 1.0 / len(text)
-           |      ELSE 0.0 END AS punct_ratio,
-           |    CASE WHEN len(tk) > 0
-           |      THEN len(list_filter(tk, t -> t IN $stop)) * 1.0 / len(tk)
-           |      ELSE 0.0 END AS stop_ratio,
-           |    $hitCols
-           |  FROM t),
-           |q AS (
-           |  SELECT doc_id, text,
-           |    CAST(round(CASE WHEN mean_tok_len >= 3 AND mean_tok_len <= 10 THEN 0.4 ELSE 0.0 END
-           |        + CASE WHEN stop_ratio >= 0.05 THEN 0.3 ELSE 0.0 END
-           |        + CASE WHEN punct_ratio <= 0.1 THEN 0.2 ELSE 0.0 END
-           |        + CASE WHEN n_tokens >= 10 AND n_tokens <= 10000 THEN 0.1 ELSE 0.0 END, 4) AS DOUBLE) AS quality,
-           |    $best AS best,
-           |    CASE WHEN $best = 0 THEN 'und' $cases END AS lang_pred
-           |  FROM m),
-           |w AS (
-           |  SELECT *, doc_id = min(CASE WHEN quality >= 0.5 AND lang_pred <> 'und'
-           |                              THEN doc_id END) OVER (PARTITION BY text) AS is_winner
-           |  FROM q),
-           |f AS (
-           |  SELECT count(*) AS n0,
-           |    sum(CASE WHEN quality >= 0.5 THEN 1 ELSE 0 END) AS s1,
-           |    sum(CASE WHEN quality >= 0.5 AND lang_pred <> 'und' THEN 1 ELSE 0 END) AS s2,
-           |    sum(CASE WHEN quality >= 0.5 AND lang_pred <> 'und'
-           |             AND coalesce(is_winner, false) THEN 1 ELSE 0 END) AS s3
-           |  FROM w),
-           |st AS (
-           |  SELECT 1 AS stage_idx, 'quality_gate' AS stage, n0 AS docs_in, s1 AS docs_out, n0 AS total FROM f
-           |  UNION ALL
-           |  SELECT 2, 'lang_gate', s1, s2, n0 FROM f
-           |  UNION ALL
-           |  SELECT 3, 'exact_dedup', s2, s3, n0 FROM f)
-           |SELECT stage_idx, stage,
-           |  CAST(docs_in AS BIGINT) AS docs_in,
-           |  CAST(docs_out AS BIGINT) AS docs_out,
-           |  CAST(docs_in - docs_out AS BIGINT) AS dropped,
-           |  CASE WHEN docs_in = 0 THEN 0.0
-           |       ELSE round((docs_in - docs_out) * 1.0 / docs_in, 4) END AS drop_rate,
-           |  CASE WHEN total = 0 THEN 0.0
-           |       ELSE round(docs_out * 1.0 / total, 4) END AS survival_rate
-           |FROM st ORDER BY stage_idx""".stripMargin
-      }
+      "q_curation_attrition",
+      s"""WITH $scoredDocsSql,
+         |w AS (
+         |  SELECT *, doc_id = min(CASE WHEN quality >= 0.5 AND lang_pred <> 'und'
+         |                              THEN doc_id END) OVER (PARTITION BY text) AS is_winner
+         |  FROM q),
+         |f AS (
+         |  SELECT count(*) AS n0,
+         |    sum(CASE WHEN quality >= 0.5 THEN 1 ELSE 0 END) AS s1,
+         |    sum(CASE WHEN quality >= 0.5 AND lang_pred <> 'und' THEN 1 ELSE 0 END) AS s2,
+         |    sum(CASE WHEN quality >= 0.5 AND lang_pred <> 'und'
+         |             AND coalesce(is_winner, false) THEN 1 ELSE 0 END) AS s3
+         |  FROM w),
+         |st AS (
+         |  SELECT 1 AS stage_idx, 'quality_gate' AS stage, n0 AS docs_in, s1 AS docs_out, n0 AS total FROM f
+         |  UNION ALL
+         |  SELECT 2, 'lang_gate', s1, s2, n0 FROM f
+         |  UNION ALL
+         |  SELECT 3, 'exact_dedup', s2, s3, n0 FROM f)
+         |SELECT stage_idx, stage,
+         |  CAST(docs_in AS BIGINT) AS docs_in,
+         |  CAST(docs_out AS BIGINT) AS docs_out,
+         |  CAST(docs_in - docs_out AS BIGINT) AS dropped,
+         |  CASE WHEN docs_in = 0 THEN 0.0
+         |       ELSE round((docs_in - docs_out) * 1.0 / docs_in, 4) END AS drop_rate,
+         |  CASE WHEN total = 0 THEN 0.0
+         |       ELSE round(docs_out * 1.0 / total, 4) END AS survival_rate
+         |FROM st ORDER BY stage_idx""".stripMargin
     ) { (s, dir) =>
-      val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-      val planted = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      val scored = TextMetrics.withLangId(
-        TextMetrics.withQuality(d.unionByName(planted), col("text")), col("text"))
+      val scored = scoredDocs(s, dir)
       val prior = col("quality") >= 0.5 && col("lang_pred") =!= "und"
       val byText = org.apache.spark.sql.expressions.Window.partitionBy(col("text"))
       val staged = scored.withColumn("is_winner",
@@ -575,27 +546,8 @@ object CurationQueries {
     // probe set. Probe docs themselves must score 1.0; the oracle
     // recomputes the bipartite overlap from scratch.
     Q(
-      "q_decontaminate", {
-        val b = Sampling.hashBucketSql("doc_id")
-        s"""WITH tk0 AS (
-           |  SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
-           |sh AS (
-           |  SELECT DISTINCT doc_id, array_to_string(tk[i:i+4], ' ') AS s
-           |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) - 3)) AS i
-           |        FROM tk0 WHERE len(tk) >= 5)),
-           |probe AS (
-           |  SELECT DISTINCT s FROM sh
-           |  WHERE doc_id IN (SELECT doc_id FROM documents WHERE $b < 50)),
-           |tot AS (SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY 1),
-           |hit AS (
-           |  SELECT doc_id, count(*) AS n_contaminated
-           |  FROM sh WHERE s IN (SELECT s FROM probe) GROUP BY 1)
-           |SELECT t.doc_id AS id, CAST(n_shingles AS BIGINT) AS n_shingles,
-           |  CAST(coalesce(n_contaminated, 0) AS BIGINT) AS n_contaminated,
-           |  round(coalesce(n_contaminated, 0) * 1.0 / n_shingles, 4) AS contamination
-           |FROM tot t LEFT JOIN hit h ON t.doc_id = h.doc_id
-           |ORDER BY id""".stripMargin
-      }
+      "q_decontaminate",
+      decontaminationOracle(probeBuckets = 50)
     ) { (s, dir) =>
       val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val probes = Sampling.hashSample(d, col("doc_id"), 0.05)
@@ -609,33 +561,26 @@ object CurationQueries {
     // (q_dedup_embedding_lsh pattern) INCLUDING the probe-side
     // Hamming-1 multi-probe fanout, and the exact cosine confirm.
     Q(
-      "q_decontaminate_semantic", {
-        val planes = graft.operators.Similarity.hyperplanes(dim = 64, nPlanes = 8, seed = 42L)
-        def bucketExpr(v: String): String = planes.zipWithIndex.map { case (p, i) =>
-          val arr = p.mkString("[", ", ", "]")
-          s"CASE WHEN list_dot_product($v, $arr) > 0 THEN ${1L << i} ELSE 0 END"
-        }.mkString("(", "\n      + ", ")")
-        s"""WITH e AS (
-           |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |p AS (
-           |  SELECT list_concat([v[1] + 0.05], v[2:]) AS pv
-           |  FROM e WHERE vec_id % 25 = 0),
-           |cb AS (SELECT vec_id, v, ${bucketExpr("v")} AS bucket FROM e),
-           |pb0 AS (SELECT pv, ${bucketExpr("pv")} AS b FROM p),
-           |pb AS (SELECT pv, unnest(${
-             (Seq("b") ++ (0 until 8).map(i => s"xor(b, ${1L << i})"))
-               .mkString("[", ", ", "]")}) AS bucket FROM pb0),
-           |hits AS (
-           |  SELECT cb.vec_id AS id,
-           |    round(list_cosine_similarity(cb.v, pb.pv), 4) AS cs
-           |  FROM cb JOIN pb USING (bucket)
-           |  WHERE round(list_cosine_similarity(cb.v, pb.pv), 4) >= 0.99)
-           |SELECT id, CAST(count(*) AS BIGINT) AS n_probe_hits, max(cs) AS max_cos
-           |FROM hits GROUP BY id ORDER BY id""".stripMargin
-      }
+      "q_decontaminate_semantic",
+      s"""WITH e AS (
+         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |p AS (
+         |  SELECT list_concat([v[1] + 0.05], v[2:]) AS pv
+         |  FROM e WHERE vec_id % 25 = 0),
+         |cb AS (SELECT vec_id, v, ${DedupQueries.lshBucketSql("v")} AS bucket FROM e),
+         |pb0 AS (SELECT pv, ${DedupQueries.lshBucketSql("pv")} AS b FROM p),
+         |pb AS (SELECT pv, unnest(${
+           (Seq("b") ++ (0 until 8).map(i => s"xor(b, ${1L << i})"))
+             .mkString("[", ", ", "]")}) AS bucket FROM pb0),
+         |hits AS (
+         |  SELECT cb.vec_id AS id,
+         |    round(list_cosine_similarity(cb.v, pb.pv), 4) AS cs
+         |  FROM cb JOIN pb USING (bucket)
+         |  WHERE round(list_cosine_similarity(cb.v, pb.pv), 4) >= 0.99)
+         |SELECT id, CAST(count(*) AS BIGINT) AS n_probe_hits, max(cs) AS max_cos
+         |FROM hits GROUP BY id ORDER BY id""".stripMargin
     ) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = DedupQueries.embeddingVecs(s, dir)
       val probes = e.filter(col("vec_id") % 25 === 0).select(
         concat(array(element_at(col("v"), 1) + lit(0.05)), slice(col("v"), 2, 63)).as("pv"))
       Dedup.contaminationEmbedding(e, col("vec_id"), col("v"),
@@ -649,27 +594,8 @@ object CurationQueries {
     // drops non-candidates before the shuffle. 8% probe slice to keep
     // the query distinct from q_decontaminate.
     Q(
-      "q_decontaminate_bloom", {
-        val b = Sampling.hashBucketSql("doc_id")
-        s"""WITH tk0 AS (
-           |  SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
-           |sh AS (
-           |  SELECT DISTINCT doc_id, array_to_string(tk[i:i+4], ' ') AS s
-           |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) - 3)) AS i
-           |        FROM tk0 WHERE len(tk) >= 5)),
-           |probe AS (
-           |  SELECT DISTINCT s FROM sh
-           |  WHERE doc_id IN (SELECT doc_id FROM documents WHERE $b < 80)),
-           |tot AS (SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY 1),
-           |hit AS (
-           |  SELECT doc_id, count(*) AS n_contaminated
-           |  FROM sh WHERE s IN (SELECT s FROM probe) GROUP BY 1)
-           |SELECT t.doc_id AS id, CAST(n_shingles AS BIGINT) AS n_shingles,
-           |  CAST(coalesce(n_contaminated, 0) AS BIGINT) AS n_contaminated,
-           |  round(coalesce(n_contaminated, 0) * 1.0 / n_shingles, 4) AS contamination
-           |FROM tot t LEFT JOIN hit h ON t.doc_id = h.doc_id
-           |ORDER BY id""".stripMargin
-      }
+      "q_decontaminate_bloom",
+      decontaminationOracle(probeBuckets = 80)
     ) { (s, dir) =>
       val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
       val probes = Sampling.hashSample(d, col("doc_id"), 0.08)
@@ -756,13 +682,7 @@ object CurationQueries {
            |lose AS (
            |  SELECT DISTINCT doc_id, pos FROM (
            |    SELECT doc_id, unnest(range(start, start + 5)) AS pos FROM hits)),
-           |tp AS (
-           |  SELECT doc_id, pos, tk[pos + 1] AS term FROM (
-           |    SELECT doc_id, tk, unnest(range(0, len(tk))) AS pos FROM tk0)),
-           |kept AS (
-           |  SELECT t.doc_id, t.pos, t.term
-           |  FROM tp t LEFT JOIN lose l ON t.doc_id = l.doc_id AND t.pos = l.pos
-           |  WHERE l.doc_id IS NULL),
+           |$keptTermsSql,
            |agg AS (
            |  SELECT doc_id, count(*) AS n_kept,
            |    string_agg(term, ' ' ORDER BY pos) AS cleaned
@@ -1343,10 +1263,7 @@ object CurationQueries {
          |  CAST(tb AS BIGINT) AS tokens_before
          |FROM c WHERE tb < 2000 ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      val docs = table(s, dir, "documents").select(
-        col("doc_id"),
-        pmod(col("doc_id"), lit(8L)).as("shard"),
-        size(graft.functions.tokens(col("text"))).cast("long").as("n_toks"))
+      val docs = shardedTokenCounts(s, dir)
       Sampling.admitToBudget(docs, col("shard"), col("doc_id"),
           col("n_toks"), budget = 2000L)
         .select(col("doc_id"), col("shard"), col("n_toks"), col("tokens_before"))
@@ -1474,10 +1391,7 @@ object CurationQueries {
          |FROM c
          |ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
-      val docs = table(s, dir, "documents").select(
-        col("doc_id"),
-        pmod(col("doc_id"), lit(8L)).as("shard"),
-        size(graft.functions.tokens(col("text"))).cast("long").as("n_toks"))
+      val docs = shardedTokenCounts(s, dir)
       Packing.packSequences(docs, col("shard"), Seq(col("doc_id")),
           col("n_toks"), budget = 512)
         .select(col("doc_id"), col("shard"), col("n_toks"),
@@ -1523,8 +1437,6 @@ object CurationQueries {
     // exchange count.
     Q(
       "q_corpus_build", {
-        val stop = TextMetrics.langMarkers.flatMap(_._2).distinct
-          .map(w => s"'$w'").mkString("(", ", ", ")")
         val b = Sampling.hashBucketSql("doc_id")
         val chainDocs =
           s"""dcap AS (
@@ -1544,23 +1456,11 @@ object CurationQueries {
              |tq AS (SELECT doc_id, source, text, ${tkSql("text")} AS tk FROM inp),
              |mq AS (
              |  SELECT doc_id, source, tk,
-             |    len(tk) AS n_tokens,
-             |    CASE WHEN len(tk) > 0
-             |      THEN list_sum(list_transform(tk, t -> len(t))) * 1.0 / len(tk)
-             |      ELSE 0.0 END AS mean_tok_len,
-             |    CASE WHEN len(text) > 0
-             |      THEN (len(text) - len(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))) * 1.0 / len(text)
-             |      ELSE 0.0 END AS punct_ratio,
-             |    CASE WHEN len(tk) > 0
-             |      THEN len(list_filter(tk, t -> t IN $stop)) * 1.0 / len(tk)
-             |      ELSE 0.0 END AS stop_ratio
+             |    $qualitySignalsSql
              |  FROM tq),
              |qq AS (
              |  SELECT doc_id, source, tk,
-             |    CAST(round(CASE WHEN mean_tok_len >= 3 AND mean_tok_len <= 10 THEN 0.4 ELSE 0.0 END
-             |        + CASE WHEN stop_ratio >= 0.05 THEN 0.3 ELSE 0.0 END
-             |        + CASE WHEN punct_ratio <= 0.1 THEN 0.2 ELSE 0.0 END
-             |        + CASE WHEN n_tokens >= 10 AND n_tokens <= 10000 THEN 0.1 ELSE 0.0 END, 4) AS DOUBLE) AS quality
+             |    $qualityScoreSql AS quality
              |  FROM mq),
              |fq AS (SELECT * FROM qq WHERE quality >= 0.5),
              |shq AS (
@@ -1755,11 +1655,9 @@ object CurationQueries {
     // oracle: one ranking window + integer div + a groupBy.
     Q(
       "q_length_batches",
-      """WITH tk AS (
+      s"""WITH tk AS (
         |  SELECT source AS shard, doc_id AS id,
-        |    CAST(len(list_filter(regexp_split_to_array(
-        |      regexp_replace(lower(text), '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+'),
-        |      t -> len(t) > 0)) AS BIGINT) AS n_tokens
+         |    CAST(len(${tkSql("text")}) AS BIGINT) AS n_tokens
         |  FROM documents),
         |a AS (SELECT shard, id, n_tokens,
         |    CAST((row_number() OVER (PARTITION BY shard
@@ -1834,10 +1732,7 @@ object CurationQueries {
          |SELECT shard, id, n_tokens, bin_id, n_tokens > 512 AS oversize
          |FROM ffd WHERE rn > 0 ORDER BY id""".stripMargin
     ) { (s, dir) =>
-      val docs = table(s, dir, "documents").select(
-        col("doc_id"),
-        pmod(col("doc_id"), lit(8L)).as("shard"),
-        size(graft.functions.tokens(col("text"))).cast("long").as("n_toks"))
+      val docs = shardedTokenCounts(s, dir)
       Packing.binPackFFD(docs, col("shard"), col("doc_id"),
           col("n_toks"), budget = 512L)
         .orderBy("id")

@@ -19,26 +19,32 @@ import graft.operators.{Dedup, Packing, Sampling, Similarity, TextMetrics}
   */
 object DedupQueries {
 
-  /** documents ∪ word-truncated rendition (first 4/5 of the tokens,
-    * id + 1000000) — the planted near-dup corpus.
+  /** The planted rendition's text: the first 4/5 of `text`'s tokens
+    * (at least one), space-joined.
     */
-  private def truncatedDocs(s: SparkSession, dir: String): DataFrame = {
-    // scaleOut BEFORE the (interpreted, tokenizing) truncation
-    // projection: the raw text shuffles once and the expensive per-row
-    // work runs at full parallelism instead of on the file's splits
-    val d = graft.operators.scaleOut(
-      table(s, dir, "documents").select(col("doc_id").as("id"), col("text")))
+  private def truncatedText(text: Column): Column =
     // tokens(text) bound as a lambda variable (array-wrap trick, see
     // functions.shingles): referencing it twice in one projection would
     // tokenize each row twice under interpreted HOF eval
-    val trunc = d.select(
-      (col("id") + 1000000).as("id"),
-      array_join(
-        flatten(transform(array(tokens(col("text"))), tk =>
-          slice(tk, lit(1), greatest(floor(size(tk) * 4 / 5), lit(1)).cast("int")))),
-        " ").as("text"))
-    d.unionByName(trunc)
-  }
+    array_join(
+      flatten(transform(array(tokens(text)), tk =>
+        slice(tk, lit(1), greatest(floor(size(tk) * 4 / 5), lit(1)).cast("int")))),
+      " ")
+
+  /** `d`(id, text) ∪ its [[truncatedText]] renditions at id + 1000000. */
+  private def withTruncated(d: DataFrame): DataFrame =
+    d.unionByName(d.select(
+      (col("id") + 1000000).as("id"), truncatedText(col("text")).as("text")))
+
+  /** documents ∪ word-truncated rendition (first 4/5 of the tokens,
+    * id + 1000000) — the planted near-dup corpus.
+    */
+  private def truncatedDocs(s: SparkSession, dir: String): DataFrame =
+    // scaleOut BEFORE the (interpreted, tokenizing) truncation
+    // projection: the raw text shuffles once and the expensive per-row
+    // work runs at full parallelism instead of on the file's splits
+    withTruncated(graft.operators.scaleOut(
+      table(s, dir, "documents").select(col("doc_id").as("id"), col("text"))))
 
   /** [[truncatedDocs]] with an ABSOLUTE deterministic cap on the BASE
     * docs (hash-bucket order, doc_id tiebreak — the q_audit_* idiom)
@@ -56,39 +62,54 @@ object DedupQueries {
     val base = table(s, dir, "documents")
       .orderBy(bkt, col("doc_id")).limit(cap)
       .select(col("doc_id").as("id"), col("text"))
-    val d = graft.operators.scaleOut(base)
-    val trunc = d.select(
-      (col("id") + 1000000).as("id"),
-      array_join(
-        flatten(transform(array(tokens(col("text"))), tk =>
-          slice(tk, lit(1), greatest(floor(size(tk) * 4 / 5), lit(1)).cast("int")))),
-        " ").as("text"))
-    d.unionByName(trunc)
+    withTruncated(graft.operators.scaleOut(base))
   }
+
+  /** `tk0`(doc_id, tk): [[tkSql]] over `src`(doc_id, text). */
+  private def tk0Sql(src: String): String =
+    s"""tk0 AS (
+       |  SELECT doc_id, ${tkSql("text")} AS tk
+       |  FROM $src)""".stripMargin
+
+  /** DuckDB twin of the truncated corpus over `src`(doc_id, text):
+    * [[tk0Sql]] then `docs`(id, tk), renditions at doc_id + `offset`.
+    */
+  private def truncatedDocsFromSql(src: String, offset: Long = 1000000L): String =
+    s"""${tk0Sql(src)},
+       |docs AS (
+       |  SELECT doc_id AS id, tk FROM tk0
+       |  UNION ALL
+       |  SELECT doc_id + $offset, tk[1:greatest(CAST(floor(len(tk) * 4 / 5) AS BIGINT), 1)] FROM tk0)""".stripMargin
 
   /** DuckDB twin of [[truncatedDocsCapped]] — ends in `docs`(id, tk). */
   private def truncatedDocsCappedSql(cap: Int): String = {
     val b = graft.operators.Sampling.hashBucketSql("doc_id")
     s"""tkc AS (
        |  SELECT doc_id, text FROM documents ORDER BY $b, doc_id LIMIT $cap),
-       |tk0 AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(regexp_replace(lower(text), '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+'), t -> len(t) > 0) AS tk
-       |  FROM tkc),
-       |docs AS (
-       |  SELECT doc_id AS id, tk FROM tk0
-       |  UNION ALL
-       |  SELECT doc_id + 1000000, tk[1:greatest(CAST(floor(len(tk) * 4 / 5) AS BIGINT), 1)] FROM tk0)""".stripMargin
+       |${truncatedDocsFromSql("tkc")}""".stripMargin
   }
 
-  /** Same corpus in DuckDB. */
-  private val truncatedDocsSql: String =
-    """tk0 AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(regexp_replace(lower(text), '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+'), t -> len(t) > 0) AS tk
-      |  FROM documents),
-      |docs AS (
-      |  SELECT doc_id AS id, tk FROM tk0
-      |  UNION ALL
-      |  SELECT doc_id + 1000000, tk[1:greatest(CAST(floor(len(tk) * 4 / 5) AS BIGINT), 1)] FROM tk0)""".stripMargin
+  /** DuckDB twin of [[truncatedDocs]]. */
+  private val truncatedDocsSql: String = truncatedDocsFromSql("documents")
+
+  /** `e`(id, v): every embedding as a DOUBLE list. */
+  private val embeddingVecsSql: String =
+    """e AS MATERIALIZED (
+      |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      |  FROM embeddings)""".stripMargin
+
+  /** The ANN oracles' answer over `adc`(query_id, id, adc_dist): each
+    * query's 5 nearest ids by 6-dp rounded distance, id tiebreak.
+    */
+  private val adcTop5Sql: String =
+    """SELECT query_id, CAST(rank AS INT) AS rank, vec_id, round(adc_dist, 4) AS adc_dist
+      |FROM (
+      |  SELECT query_id, id AS vec_id, adc_dist,
+      |    row_number() OVER (PARTITION BY query_id ORDER BY
+      |      round(adc_dist, 6) ASC, id ASC) AS rank
+      |  FROM adc)
+      |WHERE rank <= 5
+      |ORDER BY query_id, rank""".stripMargin
 
   /** CTE chain replaying [[graft.operators.Similarity]]'s power
     * iteration over the embeddings table — the q_embed_pc /
@@ -243,20 +264,24 @@ object DedupQueries {
        |  ELSE list_dot_product($a, $b) /
        |    (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))) END""".stripMargin
 
-  /** The q_ann_ivf oracle: 5 Lloyd rounds + nProbe=4 probing + top-5. */
-  private def annIvfOracle: String =
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |${ivfLloydCtes(iters = 5, d = 64, kExpr = "16")},
-       |probe AS MATERIALIZED (
+  /** `probe`(query_id, qv, cluster): the 4 centroids of `cen` nearest
+    * each query (ids < 10), centroid-id tiebreak.
+    */
+  private def ivfProbeSql(cen: String): String =
+    s"""probe AS MATERIALIZED (
        |  SELECT query_id, qv, cluster FROM (
        |    SELECT q.id AS query_id, q.v AS qv, c.cluster,
        |      row_number() OVER (PARTITION BY q.id ORDER BY
        |        list_dot_product(c.cen, c.cen) - list_dot_product(q.v, c.cen) * 2.0 ASC,
        |        c.cluster ASC) AS pr
-       |    FROM (SELECT id, v FROM e WHERE id < 10) q, cen5 c)
-       |  WHERE pr <= 4)
+       |    FROM (SELECT id, v FROM e WHERE id < 10) q, $cen c)
+       |  WHERE pr <= 4)""".stripMargin
+
+  /** The q_ann_ivf oracle: 5 Lloyd rounds + nProbe=4 probing + top-5. */
+  private def annIvfOracle: String =
+    s"""WITH $embeddingVecsSql,
+       |${ivfLloydCtes(iters = 5, d = 64, kExpr = "16")},
+       |${ivfProbeSql("cen5")}
        |SELECT query_id, CAST(rank AS INT) AS rank, vec_id, round(cos_sim, 4) AS cos_sim
        |FROM (
        |  SELECT query_id, i.id AS vec_id,
@@ -276,9 +301,7 @@ object DedupQueries {
     * toward-zero).
     */
   private def clusterQualityOracle: String =
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""WITH $embeddingVecsSql,
        |${ivfLloydCtes(iters = 3, d = 64, kExpr = "8")},
        |iv AS (SELECT id, cluster, v, list_dot_product(v, v) AS vv FROM idx),
        |pts AS (SELECT i.id, i.cluster, c.cluster AS j,
@@ -440,9 +463,7 @@ object DedupQueries {
     * per-query LUT, left-fold ADC, top-5.
     */
   private def annPqOracle: String =
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""WITH $embeddingVecsSql,
        |${pqCtes(iters = 3, m = 8, subd = 8, src = "e")},
        |enc AS MATERIALIZED (
        |  ${pqEncodeSql("bk3")}),
@@ -455,14 +476,7 @@ object DedupQueries {
        |    FROM enc JOIN lut l USING (sub, code)
        |    WHERE enc.id != l.query_id
        |    GROUP BY l.query_id, enc.id))
-       |SELECT query_id, CAST(rank AS INT) AS rank, vec_id, round(adc_dist, 4) AS adc_dist
-       |FROM (
-       |  SELECT query_id, id AS vec_id, adc_dist,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY
-       |      round(adc_dist, 6) ASC, id ASC) AS rank
-       |  FROM adc)
-       |WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
+       |$adcTop5Sql""".stripMargin
 
   /** The q_ann_ivfpq oracle (IVFADC): coarse Lloyd replay (3 rounds,
     * k=8), cell-relative residuals, residual codebook replay, the
@@ -470,9 +484,7 @@ object DedupQueries {
     * ADC over the probed cells' members.
     */
   private def annIvfPqOracle: String =
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""WITH $embeddingVecsSql,
        |${ivfLloydCtes(iters = 3, d = 64, kExpr = "8")},
        |resid AS MATERIALIZED (
        |  SELECT i.id, i.cluster,
@@ -501,14 +513,7 @@ object DedupQueries {
        |    FROM pidx p JOIN lut l USING (cluster, sub, code)
        |    WHERE p.id != l.query_id
        |    GROUP BY l.query_id, p.id))
-       |SELECT query_id, CAST(rank AS INT) AS rank, vec_id, round(adc_dist, 4) AS adc_dist
-       |FROM (
-       |  SELECT query_id, id AS vec_id, adc_dist,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY
-       |      round(adc_dist, 6) ASC, id ASC) AS rank
-       |  FROM adc)
-       |WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
+       |$adcTop5Sql""".stripMargin
 
   /** The q_lsh_plan oracle: the S-curve integral replayed on the
     * 9-dp integer lanes, one row per divisor band count.
@@ -553,18 +558,9 @@ object DedupQueries {
     * with the [simLo, simHi) filter on the 6-dp sim key.
     */
   private def hardNegativesOracle: String =
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+    s"""WITH $embeddingVecsSql,
        |${ivfLloydCtes(iters = 3, d = 64, kExpr = "8")},
-       |probe AS MATERIALIZED (
-       |  SELECT query_id, qv, cluster FROM (
-       |    SELECT q.id AS query_id, q.v AS qv, c.cluster,
-       |      row_number() OVER (PARTITION BY q.id ORDER BY
-       |        list_dot_product(c.cen, c.cen) - list_dot_product(q.v, c.cen) * 2.0 ASC,
-       |        c.cluster ASC) AS pr
-       |    FROM (SELECT id, v FROM e WHERE id < 10) q, cen3 c)
-       |  WHERE pr <= 4)
+       |${ivfProbeSql("cen3")}
        |SELECT query_id, CAST(rank AS INT) AS rank, vec_id, round(cos_sim, 4) AS cos_sim
        |FROM (
        |  SELECT query_id, vec_id, cos_sim,
@@ -606,12 +602,7 @@ object DedupQueries {
        |  SELECT a.id AS id_a, b.id AS id_b
        |  FROM idx a JOIN idx b ON a.cluster = b.cluster AND a.id < b.id
        |  WHERE round(${cosSql("a.v", "b.v")}, 4) >= 0.995),
-       |sym AS MATERIALIZED (
-       |  SELECT id_a AS a, id_b AS b FROM pairs
-       |  UNION ALL
-       |  SELECT id_b, id_a FROM pairs),
-       |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS comp FROM sym),
-       |${ccUnrollSql(8)},
+       |$pairsCcSql,
        |drops AS (SELECT id AS drop_id FROM l8 WHERE id != comp)
        |SELECT id AS vec_id FROM e
        |WHERE id NOT IN (SELECT drop_id FROM drops)
@@ -633,6 +624,222 @@ object DedupQueries {
          |      WHERE e.a = l.id), l.comp)) AS comp
          |  FROM l${i - 1} l)""".stripMargin
     }.mkString(",\n")
+
+  /** Min-label CC over a `pairs`(id_a, id_b) CTE: both edge directions
+    * `sym`, the seed `l0`, then [[ccUnrollSql]] → `l8`(id, comp).
+    * MATERIALIZED: each round references the previous one twice;
+    * inlined CTEs would re-evaluate the whole chain per reference
+    * (exponential in rounds).
+    */
+  private val pairsCcSql: String =
+    s"""sym AS MATERIALIZED (
+       |  SELECT id_a AS a, id_b AS b FROM pairs
+       |  UNION ALL
+       |  SELECT id_b, id_a FROM pairs),
+       |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS comp FROM sym),
+       |${ccUnrollSql(8)}""".stripMargin
+
+  /** `Dedup.ngramJaccard`'s df-capped 5-shingle index over `docs`(id,
+    * tk): shingles `sh`, `rare` (df 2..20), `idx`,
+    * `inter`(id_a, id_b, n_inter) and `sizes`(id, n_sh).
+    */
+  private val shingleIndexSql: String =
+    """sh AS (
+      |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
+      |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
+      |        FROM docs WHERE len(tk) >= 5)),
+      |rare AS (
+      |  SELECT s FROM sh GROUP BY s HAVING count(*) BETWEEN 2 AND 20),
+      |idx AS (SELECT id, s FROM sh WHERE s IN (SELECT s FROM rare)),
+      |inter AS (
+      |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
+      |  FROM idx a JOIN idx b ON a.s = b.s AND a.id < b.id
+      |  GROUP BY 1, 2),
+      |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id)""".stripMargin
+
+  /** `pairs`(id_a, id_b) at Jaccard ≥ 0.5 from `inter`(id_a, id_b,
+    * n_inter) and `sizes`(id, n_sh), then [[pairsCcSql]] →
+    * `l8`(id, comp).
+    */
+  private val interClustersSql: String =
+    s"""pairs AS (
+       |  SELECT id_a, id_b
+       |  FROM inter
+       |  JOIN sizes na ON na.id = id_a
+       |  JOIN sizes nb ON nb.id = id_b
+       |  WHERE round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) >= 0.5),
+       |$pairsCcSql""".stripMargin
+
+  /** DuckDB twin of [[jaccardPairs]] over [[truncatedDocs]] fed to CC:
+    * [[truncatedDocsSql]], [[shingleIndexSql]] and
+    * [[interClustersSql]] → `l8`(id, comp). The oracle unrolls the
+    * propagation 8 rounds (planted-corpus component diameters are
+    * tiny, so it matches Spark's run to fixpoint).
+    */
+  private val jaccardClustersSql: String =
+    s"""$truncatedDocsSql,
+       |$shingleIndexSql,
+       |$interClustersSql""".stripMargin
+
+  /** q_dedup_clusters and q_dedup_clusters_star share one contract,
+    * so one oracle: the component label of every paired doc.
+    */
+  private val dedupClustersOracle: String =
+    s"""WITH $jaccardClustersSql
+       |SELECT id, comp FROM l8 ORDER BY id""".stripMargin
+
+  /** The entity-resolution fixture's originals, (id, nm, blk):
+    * customer names carrying a decorrelating tag (custkey·7919 mod 1e5).
+    */
+  private def taggedCustomers(customer: DataFrame): DataFrame =
+    customer.select(
+      col("c_custkey").as("id"),
+      concat(col("c_name"), lit("-"),
+        pmod(col("c_custkey") * 7919L, lit(100000L))).as("nm"),
+      col("c_nationkey").as("blk"))
+
+  /** Typo twins of [[taggedCustomers]] rows at id + 1000000: the
+    * character at position id % 10 + 5 dropped.
+    */
+  private def customerTypos(c0: DataFrame): DataFrame = {
+    val p = (pmod(col("id"), lit(10L)) + 5).cast("int")
+    c0.select(
+      (col("id") + 1000000L).as("id"),
+      concat(col("nm").substr(lit(1), p - 1),
+        col("nm").substr(p + 1, lit(1000))).as("nm"),
+      col("blk"))
+  }
+
+  /** DuckDB twin of [[taggedCustomers]] (`c0`) and [[customerTypos]]
+    * (`t`) over `customer`.
+    */
+  private val customerTyposSql: String =
+    """c0 AS (
+      |  SELECT c_custkey AS id,
+      |    c_name || '-' || (c_custkey * 7919) % 100000 AS nm,
+      |    c_nationkey AS blk
+      |  FROM customer),
+      |t AS (
+      |  SELECT id0 + 1000000 AS id,
+      |    substr(nm, 1, p - 1) || substr(nm, p + 1) AS nm, blk
+      |  FROM (SELECT id AS id0, CAST((id % 10) + 5 AS INT) AS p, nm, blk
+      |        FROM c0))""".stripMargin
+
+  /** The incremental exact-dedup fixture over `documents`(doc_id, text):
+    * the corpus is doc_id < `split`; the shard holds the fresh docs, a
+    * copy of every corpus doc (+1000000) and of every fresh doc
+    * (+2000000).
+    */
+  private def incrementalShard(s: SparkSession, dir: String,
+      split: Int): (DataFrame, DataFrame) = {
+    val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
+    val corpus = d.filter(col("doc_id") < split)
+    val fresh = d.filter(col("doc_id") >= split)
+    val shard = fresh
+      .unionByName(corpus.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
+      .unionByName(fresh.select((col("doc_id") + 2000000).as("doc_id"), col("text")))
+    (corpus, shard)
+  }
+
+  /** The oracle of both incremental exact-dedup queries over
+    * [[incrementalShard]]: the shard's min-id winner per md5, minus
+    * every text the corpus already holds.
+    */
+  private def incrementalDedupOracle(split: Int): String =
+    s"""WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id < $split),
+       |shard AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id >= $split
+       |  UNION ALL
+       |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id < $split
+       |  UNION ALL
+       |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id >= $split),
+       |k AS (SELECT min(doc_id) AS keep_id FROM shard GROUP BY md5(text)),
+       |surv AS (SELECT doc_id, text FROM shard
+       |         WHERE doc_id IN (SELECT keep_id FROM k))
+       |SELECT doc_id FROM surv
+       |WHERE md5(text) NOT IN (SELECT md5(text) FROM corpus)
+       |ORDER BY doc_id""".stripMargin
+
+  /** Every source's distinct document fingerprints, `fp`(src, f), with
+    * every 7th doc mirrored into a synthetic 'mirror' source.
+    */
+  private val mirroredSourcesSql: String =
+    s"""u AS (
+       |  SELECT source, text FROM documents
+       |  UNION ALL
+       |  SELECT 'mirror' AS source, text FROM documents WHERE doc_id % 7 = 0),
+       |fp AS (
+       |  SELECT DISTINCT source AS src,
+       |    ${normFingerprintSql("text")} AS f
+       |  FROM u)""".stripMargin
+
+  /** DuckDB twin of the seeded hyperplane LSH bucket over the 64-dim
+    * vector column `v`: 8 sign bits of `Similarity.hyperplanes(64, 8,
+    * 42)`, the plane constants inlined.
+    */
+  private[queries] def lshBucketSql(v: String): String =
+    Similarity.hyperplanes(dim = 64, nPlanes = 8, seed = 42L).zipWithIndex.map {
+      case (p, i) =>
+        val arr = p.mkString("[", ", ", "]")
+        s"CASE WHEN list_dot_product($v, $arr) > 0 THEN ${1L << i} ELSE 0 END"
+    }.mkString("(", "\n      + ", ")")
+
+  /** `c`(c_custkey, c_name) as (id, t) ∪ a typo twin of every name
+    * at id + 1000000: character 6 replaced by 'X'.
+    */
+  private def withNameTypos(c: DataFrame): DataFrame =
+    c.select(col("c_custkey").as("id"), col("c_name").as("t"))
+      .unionByName(c.select(
+        (col("c_custkey") + 1000000).as("id"),
+        concat(substring(col("c_name"), 1, 5), lit("X"),
+          substring(col("c_name"), 7, 1000000)).as("t")))
+
+  /** DuckDB twin of [[withNameTypos]] over `customer` (rows matching
+    * `where`, when given): the CTE `u`(id, t).
+    */
+  private def nameTyposSql(where: String = ""): String = {
+    val filter = if (where.isEmpty) "" else s" WHERE $where"
+    s"""u AS (
+       |  SELECT c_custkey AS id, c_name AS t FROM customer$filter
+       |  UNION ALL
+       |  SELECT c_custkey + 1000000,
+       |    substr(c_name, 1, 5) || 'X' || substr(c_name, 7)
+       |  FROM customer$filter)""".stripMargin
+  }
+
+  /** `embeddings` as (vec_id, v), the vector cast to a DOUBLE array. */
+  private[queries] def embeddingVecs(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "embeddings").select(
+      col("vec_id"), col("embedding").cast("array<double>").as("v"))
+
+  /** The planted-boilerplate fixture, (doc_id, text): every fifth doc
+    * ends with the same newsletter sentence.
+    */
+  private def boilerplateDocs(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "documents")
+      .select(col("doc_id"),
+        when(col("doc_id") % 5 === 0, concat(col("text"),
+          lit(" subscribe to our newsletter today for fresh offers")))
+          .otherwise(col("text")).as("text"))
+
+  /** DuckDB twin of [[boilerplateDocs]] (`d`), tokenized as
+    * `tk0`(doc_id, tk).
+    */
+  private val boilerplateDocsSql: String =
+    s"""d AS (
+       |  SELECT doc_id,
+       |    CASE WHEN doc_id % 5 = 0 THEN text ||
+       |      ' subscribe to our newsletter today for fresh offers'
+       |    ELSE text END AS text
+       |  FROM documents),
+       |tk0 AS (SELECT doc_id, ${tkSql("text")} AS tk FROM d)""".stripMargin
+
+  /** The near-dup pairs every Jaccard-cluster query reads: 5-shingle
+    * Jaccard ≥ 0.5 over a df ≤ 20 index.
+    */
+  private def jaccardPairs(docs: DataFrame): DataFrame =
+    Dedup.ngramJaccard(docs, col("id"), col("text"),
+      n = 5, dfCap = 20, threshold = 0.5)
 
   /** Shared CTE prefix for the MinHash oracles: the truncated corpus,
     * its 5-shingles, the [[XxSql]] xxhash64 replay, the affine
@@ -665,6 +872,19 @@ object DedupQueries {
   private[queries] val estJaccardSql =
     "(list_sum(list_transform(range(1, 65), i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))*625 + 2) // 4"
 
+  /** MinHash candidate pairs over the band buckets `bkt`: buckets
+    * holding 2..200 ids (`cap`), their in-bucket pairs (`cand`) and
+    * the estimated-Jaccard lanes `est`(id_a, id_b, e4).
+    */
+  private val bucketPairsSql: String =
+    s"""cap AS (SELECT id, bucket FROM (
+       |          SELECT id, bucket, COUNT(*) OVER (PARTITION BY bucket) AS nn FROM bkt)
+       |        WHERE nn BETWEEN 2 AND 200),
+       |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
+       |         FROM cap x JOIN cap y ON x.bucket = y.bucket AND x.id < y.id),
+       |est AS (SELECT c.id_a, c.id_b, $estJaccardSql AS e4
+       |        FROM cand c JOIN sigl sa ON c.id_a = sa.id JOIN sigl sb ON c.id_b = sb.id)""".stripMargin
+
   /** Audit-sample corpus: the truncated-docs corpus carrying BOTH the
     * token list and the winnowable STRING form (raw text for base ids,
     * space-joined sliced tokens for renditions — exactly what
@@ -677,7 +897,7 @@ object DedupQueries {
     val bucketExpr = graft.operators.Sampling.hashBucketSql("(id % 1000000)")
     val capSql = cap.map(n => s" ORDER BY $bucketExpr, id LIMIT $n").getOrElse("")
     s"""tk1 AS (
-       |  SELECT doc_id, text, list_filter(regexp_split_to_array(regexp_replace(lower(text), '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+'), t -> len(t) > 0) AS tk
+       |  SELECT doc_id, text, ${tkSql("text")} AS tk
        |  FROM documents),
        |docsall AS (
        |  SELECT doc_id AS id, tk, text AS s FROM tk1
@@ -686,6 +906,35 @@ object DedupQueries {
        |  FROM (SELECT doc_id, tk[1:greatest(CAST(floor(len(tk) * 4 / 5) AS BIGINT), 1)] AS tkt FROM tk1)),
        |docs AS (SELECT id, tk, s FROM docsall WHERE $bucketExpr < $fracBuckets$capSql)""".stripMargin
   }
+
+  /** `Dedup.prefixFilterJaccard` at threshold 0.5 over
+    * [[truncatedDocsSql]]: 5-shingles `sh`, `sizes`(id, n_sh), the
+    * df-ordered prefixes `pref`, candidate pairs `cand` and their
+    * verified intersections `inter`(id_a, id_b, n_inter).
+    */
+  private val prefixInterSql: String =
+    s"""$truncatedDocsSql,
+       |sh AS (
+       |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
+       |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
+       |        FROM docs WHERE len(tk) >= 5)),
+       |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
+       |dfreq AS (SELECT s, count(*) AS df FROM sh GROUP BY s),
+       |pref AS (
+       |  SELECT id, s FROM (
+       |    SELECT sh.id, sh.s, sizes.n_sh,
+       |      row_number() OVER (PARTITION BY sh.id ORDER BY d.df, sh.s) AS pos
+       |    FROM sh JOIN dfreq d USING (s) JOIN sizes USING (id))
+       |  WHERE pos <= n_sh - ceil(CAST(0.5 AS DOUBLE) * n_sh) + 1),
+       |cand AS (
+       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+       |  FROM pref a JOIN pref b ON a.s = b.s AND a.id < b.id),
+       |inter AS (
+       |  SELECT c.id_a, c.id_b, count(*) AS n_inter
+       |  FROM cand c
+       |  JOIN sh x ON x.id = c.id_a
+       |  JOIN sh y ON y.id = c.id_b AND y.s = x.s
+       |  GROUP BY 1, 2)""".stripMargin
 
   /** `Dedup.prefixFilterJaccard` truth-tier replay over `docs`(id, tk):
     * emits `{pre}pairs`(id_a, id_b) — the q_dedup_prefix oracle chain
@@ -765,6 +1014,31 @@ object DedupQueries {
        |sigs AS (SELECT d.id, COALESCE((CASE WHEN s.su >= 9223372036854775808 THEN s.su - 18446744073709551616 ELSE s.su END)::BIGINT, 0) AS sig
        |         FROM (SELECT id FROM docs) d LEFT JOIN sigu s ON d.id = s.id)""".stripMargin
 
+  /** The planted-banner line fixture: each doc's 8-token `lines` plus one
+    * cookie-banner line (line_no = -1) per doc, their fingerprints `fp`,
+    * doc frequencies `df`(f, dfreq) and the doc count `nd`(n_docs).
+    */
+  private val bannerLinesSql: String =
+    s"""tk0 AS (SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
+       |s AS (SELECT doc_id, tk, len(tk) AS n FROM tk0 WHERE len(tk) >= 1),
+       |seg AS (
+       |  SELECT doc_id, CAST(start // 8 AS INT) AS line_no,
+       |    array_to_string(tk[start + 1 : start + 8], ' ') AS line
+       |  FROM (SELECT doc_id, n, tk, unnest(range(0, n, 8)) AS start FROM s)),
+       |lines AS (
+       |  SELECT * FROM seg
+       |  UNION ALL
+       |  SELECT doc_id, -1 AS line_no,
+       |    'all rights reserved accept our cookie policy' AS line
+       |  FROM s),
+       |fp AS (
+       |  SELECT *, ${normFingerprintSql("line")} AS f
+       |  FROM lines),
+       |df AS (
+       |  SELECT f, count(*) AS dfreq
+       |  FROM (SELECT DISTINCT f, doc_id FROM fp) GROUP BY 1),
+       |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM lines)""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // D2: MinHash + LSH near-dup pairs on the planted corpus. EXACT
@@ -773,13 +1047,7 @@ object DedupQueries {
     // arithmetic), the engine-generated permutation params inlined.
     Q("q_dedup_minhash",
       minHashOracleSql(
-        """cap AS (SELECT id, bucket FROM (
-          |          SELECT id, bucket, COUNT(*) OVER (PARTITION BY bucket) AS nn FROM bkt)
-          |        WHERE nn BETWEEN 2 AND 200),
-          |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-          |         FROM cap x JOIN cap y ON x.bucket = y.bucket AND x.id < y.id),
-          |est AS (SELECT c.id_a, c.id_b, """.stripMargin + estJaccardSql + """ AS e4
-          |        FROM cand c JOIN sigl sa ON c.id_a = sa.id JOIN sigl sb ON c.id_b = sb.id)
+        s"""$bucketPairsSql
           |SELECT id_a, id_b, e4 / 10000.0 AS est_jaccard FROM est
           |WHERE e4 >= 5000 ORDER BY id_a, id_b""".stripMargin)) { (s, dir) =>
       Dedup.minHashLSH(truncatedDocs(s, dir), col("id"), col("text"),
@@ -795,9 +1063,7 @@ object DedupQueries {
     // splits on whitespace after the punctuation strip.
     Q("q_dedup_simhash",
       simHashSigSql(
-        """tk0 AS (
-          |  SELECT doc_id, list_filter(regexp_split_to_array(regexp_replace(lower(text), '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+'), t -> len(t) > 0) AS tk
-          |  FROM documents),
+        s"""${tk0Sql("documents")},
           |docs AS (
           |  SELECT doc_id AS id, tk FROM tk0
           |  UNION ALL
@@ -823,9 +1089,7 @@ object DedupQueries {
     // (the chunk blocking is lossless at maxDist 3, uncapped).
     Q("q_dedup_simhash_incr",
       simHashSigSql(
-        """tk0 AS (
-          |  SELECT doc_id, list_filter(regexp_split_to_array(regexp_replace(lower(text), '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+'), t -> len(t) > 0) AS tk
-          |  FROM documents),
+        s"""${tk0Sql("documents")},
           |docs AS (
           |  SELECT doc_id AS id, tk FROM tk0
           |  UNION ALL
@@ -852,18 +1116,7 @@ object DedupQueries {
     Q(
       "q_dedup_jaccard",
       s"""WITH $truncatedDocsSql,
-         |sh AS (
-         |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
-         |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
-         |        FROM docs WHERE len(tk) >= 5)),
-         |rare AS (
-         |  SELECT s FROM sh GROUP BY s HAVING count(*) BETWEEN 2 AND 20),
-         |idx AS (SELECT id, s FROM sh WHERE s IN (SELECT s FROM rare)),
-         |inter AS (
-         |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-         |  FROM idx a JOIN idx b ON a.s = b.s AND a.id < b.id
-         |  GROUP BY 1, 2),
-         |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id)
+         |$shingleIndexSql
          |SELECT id_a, id_b,
          |  round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) AS jaccard
          |FROM inter
@@ -872,9 +1125,7 @@ object DedupQueries {
          |WHERE round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) >= 0.5
          |ORDER BY id_a, id_b""".stripMargin
     ) { (s, dir) =>
-      Dedup.ngramJaccard(truncatedDocs(s, dir), col("id"), col("text"),
-          n = 5, dfCap = 20, threshold = 0.5)
-        .orderBy("id_a", "id_b")
+      jaccardPairs(truncatedDocs(s, dir)).orderBy("id_a", "id_b")
     },
 
     // D4c: DIRECTIONAL containment (asymmetric Jaccard) over the same
@@ -885,18 +1136,7 @@ object DedupQueries {
     Q(
       "q_dedup_containment",
       s"""WITH $truncatedDocsSql,
-         |sh AS (
-         |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
-         |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
-         |        FROM docs WHERE len(tk) >= 5)),
-         |rare AS (
-         |  SELECT s FROM sh GROUP BY s HAVING count(*) BETWEEN 2 AND 20),
-         |idx AS (SELECT id, s FROM sh WHERE s IN (SELECT s FROM rare)),
-         |inter AS (
-         |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-         |  FROM idx a JOIN idx b ON a.s = b.s AND a.id < b.id
-         |  GROUP BY 1, 2),
-         |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
+         |$shingleIndexSql,
          |scored AS (
          |  SELECT id_a, id_b, n_inter, na.n_sh AS n_a, nb.n_sh AS n_b
          |  FROM inter
@@ -927,28 +1167,7 @@ object DedupQueries {
     // must emit the identical verified pair set.
     Q(
       "q_dedup_prefix",
-      s"""WITH $truncatedDocsSql,
-         |sh AS (
-         |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
-         |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
-         |        FROM docs WHERE len(tk) >= 5)),
-         |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-         |dfreq AS (SELECT s, count(*) AS df FROM sh GROUP BY s),
-         |pref AS (
-         |  SELECT id, s FROM (
-         |    SELECT sh.id, sh.s, sizes.n_sh,
-         |      row_number() OVER (PARTITION BY sh.id ORDER BY d.df, sh.s) AS pos
-         |    FROM sh JOIN dfreq d USING (s) JOIN sizes USING (id))
-         |  WHERE pos <= n_sh - ceil(CAST(0.5 AS DOUBLE) * n_sh) + 1),
-         |cand AS (
-         |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-         |  FROM pref a JOIN pref b ON a.s = b.s AND a.id < b.id),
-         |inter AS (
-         |  SELECT c.id_a, c.id_b, count(*) AS n_inter
-         |  FROM cand c
-         |  JOIN sh x ON x.id = c.id_a
-         |  JOIN sh y ON y.id = c.id_b AND y.s = x.s
-         |  GROUP BY 1, 2)
+      s"""WITH $prefixInterSql
          |SELECT id_a, id_b,
          |  round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) AS jaccard
          |FROM inter
@@ -995,43 +1214,9 @@ object DedupQueries {
     // cluster decisions. Spark runs min-label propagation to fixpoint;
     // the oracle unrolls the same propagation 8 rounds (planted-corpus
     // component diameters are tiny, so both converge).
-    Q(
-      "q_dedup_clusters", {
-        // MATERIALIZED: each round references the previous one twice;
-        // inlined CTEs would re-evaluate the whole chain per reference
-        // (exponential in rounds)
-        val rounds = ccUnrollSql(8)
-        s"""WITH $truncatedDocsSql,
-           |sh AS (
-           |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
-           |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
-           |        FROM docs WHERE len(tk) >= 5)),
-           |rare AS (
-           |  SELECT s FROM sh GROUP BY s HAVING count(*) BETWEEN 2 AND 20),
-           |idx AS (SELECT id, s FROM sh WHERE s IN (SELECT s FROM rare)),
-           |inter AS (
-           |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-           |  FROM idx a JOIN idx b ON a.s = b.s AND a.id < b.id
-           |  GROUP BY 1, 2),
-           |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-           |pairs AS (
-           |  SELECT id_a, id_b
-           |  FROM inter
-           |  JOIN sizes na ON na.id = id_a
-           |  JOIN sizes nb ON nb.id = id_b
-           |  WHERE round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) >= 0.5),
-           |sym AS MATERIALIZED (
-           |  SELECT id_a AS a, id_b AS b FROM pairs
-           |  UNION ALL
-           |  SELECT id_b, id_a FROM pairs),
-           |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS comp FROM sym),
-           |$rounds
-           |SELECT id, comp FROM l8 ORDER BY id""".stripMargin
-      }
-    ) { (s, dir) =>
-      val pairs = Dedup.ngramJaccard(truncatedDocs(s, dir), col("id"), col("text"),
-        n = 5, dfCap = 20, threshold = 0.5)
-      Dedup.connectedComponents(pairs, col("id_a"), col("id_b"))
+    Q("q_dedup_clusters", dedupClustersOracle) { (s, dir) =>
+      Dedup.connectedComponents(jaccardPairs(truncatedDocs(s, dir)),
+          col("id_a"), col("id_b"))
         .orderBy("id")
     },
 
@@ -1039,40 +1224,9 @@ object DedupQueries {
     // large-star/small-star algorithm (O(log n) rounds — the deep-
     // graph escape hatch). Identical contract, so it must hit the
     // identical oracle the min-label variant hits.
-    Q(
-      "q_dedup_clusters_star", {
-        val rounds = ccUnrollSql(8)
-        s"""WITH $truncatedDocsSql,
-           |sh AS (
-           |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
-           |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
-           |        FROM docs WHERE len(tk) >= 5)),
-           |rare AS (
-           |  SELECT s FROM sh GROUP BY s HAVING count(*) BETWEEN 2 AND 20),
-           |idx AS (SELECT id, s FROM sh WHERE s IN (SELECT s FROM rare)),
-           |inter AS (
-           |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-           |  FROM idx a JOIN idx b ON a.s = b.s AND a.id < b.id
-           |  GROUP BY 1, 2),
-           |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-           |pairs AS (
-           |  SELECT id_a, id_b
-           |  FROM inter
-           |  JOIN sizes na ON na.id = id_a
-           |  JOIN sizes nb ON nb.id = id_b
-           |  WHERE round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) >= 0.5),
-           |sym AS MATERIALIZED (
-           |  SELECT id_a AS a, id_b AS b FROM pairs
-           |  UNION ALL
-           |  SELECT id_b, id_a FROM pairs),
-           |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS comp FROM sym),
-           |$rounds
-           |SELECT id, comp FROM l8 ORDER BY id""".stripMargin
-      }
-    ) { (s, dir) =>
-      val pairs = Dedup.ngramJaccard(truncatedDocs(s, dir), col("id"), col("text"),
-        n = 5, dfCap = 20, threshold = 0.5)
-      Dedup.connectedComponentsStar(pairs, col("id_a"), col("id_b"))
+    Q("q_dedup_clusters_star", dedupClustersOracle) { (s, dir) =>
+      Dedup.connectedComponentsStar(jaccardPairs(truncatedDocs(s, dir)),
+          col("id_a"), col("id_b"))
         .orderBy("id")
     },
 
@@ -1082,45 +1236,18 @@ object DedupQueries {
     // portable — stands in for quality/recency), not the min id. The
     // oracle unrolls the propagation then replays the ranking window.
     Q(
-      "q_dedup_best", {
-        val rounds = ccUnrollSql(8)
-        s"""WITH $truncatedDocsSql,
-           |sh AS (
-           |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
-           |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
-           |        FROM docs WHERE len(tk) >= 5)),
-           |rare AS (
-           |  SELECT s FROM sh GROUP BY s HAVING count(*) BETWEEN 2 AND 20),
-           |idx AS (SELECT id, s FROM sh WHERE s IN (SELECT s FROM rare)),
-           |inter AS (
-           |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-           |  FROM idx a JOIN idx b ON a.s = b.s AND a.id < b.id
-           |  GROUP BY 1, 2),
-           |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-           |pairs AS (
-           |  SELECT id_a, id_b
-           |  FROM inter
-           |  JOIN sizes na ON na.id = id_a
-           |  JOIN sizes nb ON nb.id = id_b
-           |  WHERE round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) >= 0.5),
-           |sym AS MATERIALIZED (
-           |  SELECT id_a AS a, id_b AS b FROM pairs
-           |  UNION ALL
-           |  SELECT id_b, id_a FROM pairs),
-           |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS comp FROM sym),
-           |$rounds,
-           |m AS (SELECT id, comp, CAST(id % 7 AS DOUBLE) AS q FROM l8),
-           |w AS (
-           |  SELECT id,
-           |    first_value(id) OVER (PARTITION BY comp ORDER BY q DESC, id) AS keep_id
-           |  FROM m)
-           |SELECT id AS drop_id, keep_id FROM w WHERE id <> keep_id
-           |ORDER BY drop_id""".stripMargin
-      }
+      "q_dedup_best",
+      s"""WITH $jaccardClustersSql,
+         |m AS (SELECT id, comp, CAST(id % 7 AS DOUBLE) AS q FROM l8),
+         |w AS (
+         |  SELECT id,
+         |    first_value(id) OVER (PARTITION BY comp ORDER BY q DESC, id) AS keep_id
+         |  FROM m)
+         |SELECT id AS drop_id, keep_id FROM w WHERE id <> keep_id
+         |ORDER BY drop_id""".stripMargin
     ) { (s, dir) =>
       val docs = truncatedDocs(s, dir)
-      val pairs = Dedup.ngramJaccard(docs, col("id"), col("text"),
-        n = 5, dfCap = 20, threshold = 0.5)
+      val pairs = jaccardPairs(docs)
       Dedup.keepBestPerCluster(pairs, col("id_a"), col("id_b"),
           docs.select(col("id"), (col("id") % 7).cast("double").as("q")),
           col("id"), col("q"))
@@ -1132,28 +1259,21 @@ object DedupQueries {
     // replays the identical plane constants, so bucketing, pairing,
     // and cosine all hash-match.
     Q(
-      "q_dedup_embedding_lsh", {
-        val planes = graft.operators.Similarity.hyperplanes(dim = 64, nPlanes = 8, seed = 42L)
-        val bucketExpr = planes.zipWithIndex.map { case (p, i) =>
-          val arr = p.mkString("[", ", ", "]")
-          s"CASE WHEN list_dot_product(v, $arr) > 0 THEN ${1L << i} ELSE 0 END"
-        }.mkString("(", "\n      + ", ")")
-        s"""WITH e AS (
-           |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |u AS (
-           |  SELECT * FROM e
-           |  UNION ALL
-           |  SELECT vec_id + 1000000, list_concat([v[1] + 0.1], v[2:]) FROM e),
-           |b AS (SELECT vec_id, v, $bucketExpr AS bucket FROM u)
-           |SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
-           |  round(list_cosine_similarity(a.v, b2.v), 4) AS cos_sim
-           |FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-           |WHERE round(list_cosine_similarity(a.v, b2.v), 4) >= 0.99
-           |ORDER BY id_a, id_b""".stripMargin
-      }
+      "q_dedup_embedding_lsh",
+      s"""WITH e AS (
+         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |u AS (
+         |  SELECT * FROM e
+         |  UNION ALL
+         |  SELECT vec_id + 1000000, list_concat([v[1] + 0.1], v[2:]) FROM e),
+         |b AS (SELECT vec_id, v, ${lshBucketSql("v")} AS bucket FROM u)
+         |SELECT a.vec_id AS id_a, b2.vec_id AS id_b,
+         |  round(list_cosine_similarity(a.v, b2.v), 4) AS cos_sim
+         |FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
+         |WHERE round(list_cosine_similarity(a.v, b2.v), 4) >= 0.99
+         |ORDER BY id_a, id_b""".stripMargin
     ) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       val pert = e.select(
         (col("vec_id") + 1000000).as("vec_id"),
         concat(array(element_at(col("v"), 1) + lit(0.1)), slice(col("v"), 2, 63)).as("v"))
@@ -1224,8 +1344,7 @@ object DedupQueries {
         |FROM r WHERE rank <= 10
         |ORDER BY query_id, rank""".stripMargin
     ) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       Similarity.bruteForceTopK(
           corpus = e, queries = e.filter(col("vec_id") < 10),
           corpusId = col("vec_id"), corpusVec = col("v"),
@@ -1275,8 +1394,7 @@ object DedupQueries {
         |FROM r WHERE rank = 1 AND margin >= 1.0
         |ORDER BY src_id""".stripMargin
     ) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       Similarity.marginMatch(
           src = e.filter(col("vec_id") % 2 === 0 && col("vec_id") < 100),
           tgt = e.filter(col("vec_id") % 2 === 1),
@@ -1294,15 +1412,10 @@ object DedupQueries {
     Q(
       "q_ann_lsh_multiprobe", {
         val nPlanes = 8
-        val planes = Similarity.hyperplanes(dim = 64, nPlanes = nPlanes, seed = 42L)
-        val bucketExpr = planes.zipWithIndex.map { case (p, i) =>
-          val arr = p.mkString("[", ", ", "]")
-          s"CASE WHEN list_dot_product(v, $arr) > 0 THEN ${1L << i} ELSE 0 END"
-        }.mkString("(", "\n      + ", ")")
         val probeList = ("bucket" +: (0 until nPlanes).map(i =>
           s"xor(bucket, ${1L << i})")).mkString("[", ", ", "]")
         s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |b AS (SELECT vec_id, v, $bucketExpr AS bucket FROM e),
+           |b AS (SELECT vec_id, v, ${lshBucketSql("v")} AS bucket FROM e),
            |qp AS (
            |  SELECT vec_id AS query_id, unnest($probeList) AS bucket
            |  FROM b WHERE vec_id < 10),
@@ -1325,8 +1438,7 @@ object DedupQueries {
            |ORDER BY query_id, rank""".stripMargin
       }
     ) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       Similarity.lshTopKMultiProbe(
           corpus = e, queries = e.filter(col("vec_id") < 10),
           corpusId = col("vec_id"), corpusVec = col("v"),
@@ -1372,8 +1484,7 @@ object DedupQueries {
         |QUALIFY fused_rank <= 10
         |ORDER BY query_id, fused_rank""".stripMargin
     ) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       val dense = Similarity.bruteForceTopK(
           corpus = e, queries = e.filter(col("vec_id") < 10),
           corpusId = col("vec_id"), corpusVec = col("v"),
@@ -1395,32 +1506,25 @@ object DedupQueries {
     // constants (Similarity.hyperplanes) so DuckDB buckets identically
     // and the in-bucket top-k must agree value-for-value.
     Q(
-      "q_ann_lsh", {
-        val planes = Similarity.hyperplanes(dim = 64, nPlanes = 8, seed = 42L)
-        val bucketExpr = planes.zipWithIndex.map { case (p, i) =>
-          val arr = p.mkString("[", ", ", "]")
-          s"CASE WHEN list_dot_product(v, $arr) > 0 THEN ${1L << i} ELSE 0 END"
-        }.mkString("(", "\n      + ", ")")
-        s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |b AS (
-           |  SELECT vec_id, v,
-           |    $bucketExpr AS bucket
-           |  FROM e),
-           |q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 10),
-           |s AS (
-           |  SELECT q.query_id, b.vec_id, list_cosine_similarity(qv, b.v) AS cs
-           |  FROM q JOIN b USING (bucket) WHERE b.vec_id <> q.query_id),
-           |r AS (
-           |  SELECT query_id, vec_id, cs,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY round(cs, 6) DESC, vec_id) AS rank
-           |  FROM s)
-           |SELECT query_id, CAST(rank AS INT) AS rank, vec_id, round(cs, 4) AS cos_sim
-           |FROM r WHERE rank <= 5
-           |ORDER BY query_id, rank""".stripMargin
-      }
+      "q_ann_lsh",
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |b AS (
+         |  SELECT vec_id, v,
+         |    ${lshBucketSql("v")} AS bucket
+         |  FROM e),
+         |q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 10),
+         |s AS (
+         |  SELECT q.query_id, b.vec_id, list_cosine_similarity(qv, b.v) AS cs
+         |  FROM q JOIN b USING (bucket) WHERE b.vec_id <> q.query_id),
+         |r AS (
+         |  SELECT query_id, vec_id, cs,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY round(cs, 6) DESC, vec_id) AS rank
+         |  FROM s)
+         |SELECT query_id, CAST(rank AS INT) AS rank, vec_id, round(cs, 4) AS cos_sim
+         |FROM r WHERE rank <= 5
+         |ORDER BY query_id, rank""".stripMargin
     ) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       Similarity.lshTopK(
           corpus = e, queries = e.filter(col("vec_id") < 10),
           corpusId = col("vec_id"), corpusVec = col("v"),
@@ -1436,8 +1540,7 @@ object DedupQueries {
     // IEEE with a first-min tiebreak, so all 5 rounds + the probe
     // replay bit-for-bit; recall-vs-brute specs unchanged.
     Q("q_ann_ivf", annIvfOracle) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       Similarity.ivfTopK(
           corpus = e, queries = e.filter(col("vec_id") < 10),
           corpusId = col("vec_id"), corpusVec = col("v"),
@@ -1517,14 +1620,10 @@ object DedupQueries {
     // Lloyd replay + the exclusive-running-sum window + integer
     // div/mod, all deterministic.
     Q("q_pack_similar",
-      s"""WITH e AS MATERIALIZED (
-         |  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         |  FROM embeddings),
+      s"""WITH $embeddingVecsSql,
          |${ivfLloydCtes(iters = 3, d = 64, kExpr = "8")},
          |tk AS (SELECT doc_id AS id,
-         |    CAST(len(list_filter(regexp_split_to_array(
-         |      regexp_replace(lower(text), '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+'),
-         |      t -> len(t) > 0)) AS BIGINT) AS n_tokens
+         |    CAST(len(${tkSql("text")}) AS BIGINT) AS n_tokens
          |  FROM documents),
          |j AS (SELECT i.id, i.cluster, t.n_tokens FROM idx i JOIN tk t USING (id)),
          |c AS (SELECT id, cluster, n_tokens,
@@ -1556,8 +1655,7 @@ object DedupQueries {
     // adcDist's left fold; DedupSpec keeps the exact-quantization /
     // round-trip / planted-twin specs.
     Q("q_ann_pq", annPqOracle) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       val books = Similarity.trainPqCodebooks(
         e, col("vec_id"), col("v"), dim = 64, m = 8, k = 16, iters = 3)
       Similarity.pqTopK(
@@ -1574,8 +1672,7 @@ object DedupQueries {
     // left-fold ADC mirror the kernel; DedupSpec pins exact recovery
     // on clustered data and planted-twin recall.
     Q("q_ann_ivfpq", annIvfPqOracle) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       val centroids = Similarity.trainIvfCentroids(
         e, col("vec_id"), col("v"), nCentroids = 8, iters = 3)
       val books = Similarity.trainPqCodebooks(
@@ -1636,42 +1733,9 @@ object DedupQueries {
     // no-straddle invariant.
     Q(
       "q_split_by_cluster", {
-        val rounds = ccUnrollSql(8)
         val b = graft.operators.Sampling.hashBucketSql("cluster")
-        s"""WITH $truncatedDocsSql,
-           |sh AS (
-           |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
-           |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
-           |        FROM docs WHERE len(tk) >= 5)),
-           |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-           |dfreq AS (SELECT s, count(*) AS df FROM sh GROUP BY s),
-           |pref AS (
-           |  SELECT id, s FROM (
-           |    SELECT sh.id, sh.s, sizes.n_sh,
-           |      row_number() OVER (PARTITION BY sh.id ORDER BY d.df, sh.s) AS pos
-           |    FROM sh JOIN dfreq d USING (s) JOIN sizes USING (id))
-           |  WHERE pos <= n_sh - ceil(CAST(0.5 AS DOUBLE) * n_sh) + 1),
-           |cand AS (
-           |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |  FROM pref a JOIN pref b ON a.s = b.s AND a.id < b.id),
-           |inter AS (
-           |  SELECT c.id_a, c.id_b, count(*) AS n_inter
-           |  FROM cand c
-           |  JOIN sh x ON x.id = c.id_a
-           |  JOIN sh y ON y.id = c.id_b AND y.s = x.s
-           |  GROUP BY 1, 2),
-           |pairs AS (
-           |  SELECT id_a, id_b
-           |  FROM inter
-           |  JOIN sizes na ON na.id = id_a
-           |  JOIN sizes nb ON nb.id = id_b
-           |  WHERE round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) >= 0.5),
-           |sym AS MATERIALIZED (
-           |  SELECT id_a AS a, id_b AS b FROM pairs
-           |  UNION ALL
-           |  SELECT id_b, id_a FROM pairs),
-           |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS comp FROM sym),
-           |$rounds,
+        s"""WITH $prefixInterSql,
+           |$interClustersSql,
            |wc AS (
            |  SELECT d.id, coalesce(l.comp, d.id) AS cluster
            |  FROM (SELECT DISTINCT id FROM docs) d
@@ -1706,52 +1770,28 @@ object DedupQueries {
     // one. Components are pairs (diameter 1) → the 8-round CC unroll
     // is exact.
     Q(
-      "q_entity_resolve", {
-        val rounds = ccUnrollSql(8)
-        s"""WITH c0 AS (
-           |  SELECT c_custkey AS id,
-           |    c_name || '-' || (c_custkey * 7919) % 100000 AS nm,
-           |    c_nationkey AS blk
-           |  FROM customer),
-           |t AS (
-           |  SELECT id0 + 1000000 AS id,
-           |    substr(nm, 1, p - 1) || substr(nm, p + 1) AS nm, blk
-           |  FROM (SELECT id AS id0, CAST((id % 10) + 5 AS INT) AS p, nm, blk
-           |        FROM c0)),
-           |u AS (SELECT * FROM c0 UNION ALL SELECT * FROM t),
-           |ub AS (SELECT id, nm, blk || '|' || right(nm, 6) AS bkey FROM u),
-           |bn AS (SELECT bkey, count(*) AS bcnt FROM ub GROUP BY 1),
-           |cap AS (
-           |  SELECT ub.id, ub.nm, ub.bkey FROM ub JOIN bn USING (bkey)
-           |  WHERE bn.bcnt <= 10000 AND bn.bcnt >= 2),
-           |pairs AS (
-           |  SELECT a.id AS id_a, b.id AS id_b
-           |  FROM cap a JOIN cap b
-           |    ON a.bkey = b.bkey AND a.id < b.id
-           |   AND levenshtein(a.nm, b.nm) <= 1),
-           |sym AS MATERIALIZED (
-           |  SELECT id_a AS a, id_b AS b FROM pairs
-           |  UNION ALL SELECT id_b, id_a FROM pairs),
-           |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS comp FROM sym),
-           |$rounds,
-           |wc AS (
-           |  SELECT u.id, coalesce(l.comp, u.id) AS cluster
-           |  FROM u LEFT JOIN l8 l ON l.id = u.id)
-           |SELECT id, cluster, id = cluster AS is_rep
-           |FROM wc ORDER BY id""".stripMargin
-      }
+      "q_entity_resolve",
+      s"""WITH $customerTyposSql,
+         |u AS (SELECT * FROM c0 UNION ALL SELECT * FROM t),
+         |ub AS (SELECT id, nm, blk || '|' || right(nm, 6) AS bkey FROM u),
+         |bn AS (SELECT bkey, count(*) AS bcnt FROM ub GROUP BY 1),
+         |cap AS (
+         |  SELECT ub.id, ub.nm, ub.bkey FROM ub JOIN bn USING (bkey)
+         |  WHERE bn.bcnt <= 10000 AND bn.bcnt >= 2),
+         |pairs AS (
+         |  SELECT a.id AS id_a, b.id AS id_b
+         |  FROM cap a JOIN cap b
+         |    ON a.bkey = b.bkey AND a.id < b.id
+         |   AND levenshtein(a.nm, b.nm) <= 1),
+         |$pairsCcSql,
+         |wc AS (
+         |  SELECT u.id, coalesce(l.comp, u.id) AS cluster
+         |  FROM u LEFT JOIN l8 l ON l.id = u.id)
+         |SELECT id, cluster, id = cluster AS is_rep
+         |FROM wc ORDER BY id""".stripMargin
     ) { (s, dir) =>
-      val c0 = table(s, dir, "customer").select(
-        col("c_custkey").as("id"),
-        concat(col("c_name"), lit("-"),
-          pmod(col("c_custkey") * 7919L, lit(100000L))).as("nm"),
-        col("c_nationkey").as("blk"))
-      val p = (pmod(col("id"), lit(10L)) + 5).cast("int")
-      val typo = c0.select(
-        (col("id") + 1000000L).as("id"),
-        concat(col("nm").substr(lit(1), p - 1),
-          col("nm").substr(p + 1, lit(1000))).as("nm"),
-        col("blk"))
+      val c0 = taggedCustomers(table(s, dir, "customer"))
+      val typo = customerTypos(c0)
       Dedup.entityResolve(c0.unionByName(typo), col("id"), col("nm"),
           concat(col("blk"), lit("|"), expr("right(nm, 6)")), maxDist = 1)
         .orderBy("id")
@@ -1764,16 +1804,7 @@ object DedupQueries {
     // oracle is one levenshtein join + min-cluster + coalesce.
     Q(
       "q_entity_resolve_incr",
-      """WITH c0 AS (
-        |  SELECT c_custkey AS id,
-        |    c_name || '-' || (c_custkey * 7919) % 100000 AS nm,
-        |    c_nationkey AS blk
-        |  FROM customer),
-        |t AS (
-        |  SELECT id0 + 1000000 AS id,
-        |    substr(nm, 1, p - 1) || substr(nm, p + 1) AS nm, blk
-        |  FROM (SELECT id AS id0, CAST((id % 10) + 5 AS INT) AS p, nm, blk
-        |        FROM c0)),
+      s"""WITH $customerTyposSql,
         |corpus AS (
         |  SELECT id AS cid, nm AS cn, blk || '|' || right(nm, 6) AS cbk,
         |    id AS ccl
@@ -1790,17 +1821,8 @@ object DedupQueries {
         |FROM shard s LEFT JOIN m ON m.id = s.id
         |ORDER BY s.id""".stripMargin
     ) { (s, dir) =>
-      val c0 = table(s, dir, "customer").select(
-        col("c_custkey").as("id"),
-        concat(col("c_name"), lit("-"),
-          pmod(col("c_custkey") * 7919L, lit(100000L))).as("nm"),
-        col("c_nationkey").as("blk"))
-      val p = (pmod(col("id"), lit(10L)) + 5).cast("int")
-      val typo = c0.select(
-        (col("id") + 1000000L).as("id"),
-        concat(col("nm").substr(lit(1), p - 1),
-          col("nm").substr(p + 1, lit(1000))).as("nm"),
-        col("blk"))
+      val c0 = taggedCustomers(table(s, dir, "customer"))
+      val typo = customerTypos(c0)
       val bkey = concat(col("blk"), lit("|"), expr("right(nm, 6)"))
       val resolved = c0.select(col("id"), col("nm"), bkey.as("bk"),
         col("id").as("cluster"))
@@ -1817,15 +1839,7 @@ object DedupQueries {
     // replayed.
     Q(
       "q_source_overlap",
-      """WITH u AS (
-        |  SELECT source, text FROM documents
-        |  UNION ALL
-        |  SELECT 'mirror' AS source, text FROM documents WHERE doc_id % 7 = 0),
-        |fp AS (
-        |  SELECT DISTINCT source AS src,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS f
-        |  FROM u),
+      s"""WITH $mirroredSourcesSql,
         |b AS (
         |  SELECT src, f FROM (
         |    SELECT src, f, count(*) OVER (PARTITION BY f) AS ns FROM fp)
@@ -1858,15 +1872,7 @@ object DedupQueries {
     // contract, not slack).
     Q(
       "q_source_overlap_sketch",
-      """WITH u AS (
-        |  SELECT source, text FROM documents
-        |  UNION ALL
-        |  SELECT 'mirror' AS source, text FROM documents WHERE doc_id % 7 = 0),
-        |fp AS (
-        |  SELECT DISTINCT source AS src,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text),
-        |      '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS f
-        |  FROM u),
+      s"""WITH $mirroredSourcesSql,
         |sz AS (SELECT src, CAST(count(*) AS BIGINT) AS n FROM fp GROUP BY 1),
         |ov AS (
         |  SELECT a.src AS src_a, b.src AS src_b,
@@ -1919,13 +1925,11 @@ object DedupQueries {
     // oracle asserts TRUE with zero slack consumed.
     Q(
       "q_theta_diff",
-      """WITH fpc AS (
-        |  SELECT DISTINCT md5(trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS f
+      s"""WITH fpc AS (
+         |  SELECT DISTINCT ${normFingerprintSql("text")} AS f
         |  FROM documents WHERE doc_id < 300),
         |fps AS (
-        |  SELECT DISTINCT md5(trim(regexp_replace(regexp_replace(lower(text),
-        |    '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS f
+         |  SELECT DISTINCT ${normFingerprintSql("text")} AS f
         |  FROM (
         |    SELECT text FROM documents WHERE doc_id >= 300
         |    UNION ALL
@@ -1968,8 +1972,7 @@ object DedupQueries {
     // IVF-routed; EXACT oracle since the Lloyd trainer replays
     // (integer lanes) — the probe adds only the banded sim filter.
     Q("q_hard_negatives", hardNegativesOracle) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       val centroids = Similarity.trainIvfCentroids(
         e, col("vec_id"), col("v"), nCentroids = 8, iters = 3)
       val index = Similarity.ivfAssign(e, col("vec_id"), col("v"), centroids)
@@ -1999,8 +2002,7 @@ object DedupQueries {
     // recall exactness and the min-id survivor policy stay asserted
     // in DedupSpec.
     Q("q_dedup_semantic", dedupSemanticOracle) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       val pert = e.filter(col("vec_id") % 5 === 0).select(
         (col("vec_id") + 1000000).as("vec_id"),
         concat(array(element_at(col("v"), 1) + lit(0.05)), slice(col("v"), 2, 63)).as("v"))
@@ -2023,26 +2025,9 @@ object DedupQueries {
     // index anti-join) from scratch.
     Q(
       "q_dedup_incremental",
-      """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id < 300),
-        |shard AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 300
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 300
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id >= 300),
-        |k AS (SELECT min(doc_id) AS keep_id FROM shard GROUP BY md5(text)),
-        |surv AS (SELECT doc_id, text FROM shard
-        |         WHERE doc_id IN (SELECT keep_id FROM k))
-        |SELECT doc_id FROM surv
-        |WHERE md5(text) NOT IN (SELECT md5(text) FROM corpus)
-        |ORDER BY doc_id""".stripMargin
+      incrementalDedupOracle(split = 300)
     ) { (s, dir) =>
-      val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = d.filter(col("doc_id") < 300)
-      val fresh = d.filter(col("doc_id") >= 300)
-      val shard = fresh
-        .unionByName(corpus.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-        .unionByName(fresh.select((col("doc_id") + 2000000).as("doc_id"), col("text")))
+      val (corpus, shard) = incrementalShard(s, dir, split = 300)
       val index = Dedup.fingerprintIndex(corpus, col("text"))
       Dedup.exactIncremental(shard, col("text"), col("doc_id"), index, col("fp"))
         .select("doc_id")
@@ -2056,26 +2041,9 @@ object DedupQueries {
     // q_dedup_incremental.
     Q(
       "q_dedup_incremental_bloom",
-      """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-        |shard AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 250
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id >= 250),
-        |k AS (SELECT min(doc_id) AS keep_id FROM shard GROUP BY md5(text)),
-        |surv AS (SELECT doc_id, text FROM shard
-        |         WHERE doc_id IN (SELECT keep_id FROM k))
-        |SELECT doc_id FROM surv
-        |WHERE md5(text) NOT IN (SELECT md5(text) FROM corpus)
-        |ORDER BY doc_id""".stripMargin
+      incrementalDedupOracle(split = 250)
     ) { (s, dir) =>
-      val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-      val corpus = d.filter(col("doc_id") < 250)
-      val fresh = d.filter(col("doc_id") >= 250)
-      val shard = fresh
-        .unionByName(corpus.select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-        .unionByName(fresh.select((col("doc_id") + 2000000).as("doc_id"), col("text")))
+      val (corpus, shard) = incrementalShard(s, dir, split = 250)
       val index = Dedup.fingerprintIndex(corpus, col("text"))
       Dedup.exactIncrementalBloom(shard, col("text"), col("doc_id"), index, col("fp"))
         .select("doc_id")
@@ -2105,24 +2073,14 @@ object DedupQueries {
           |SELECT shard_id, corpus_id, e4 / 10000.0 AS est_jaccard FROM est
           |WHERE e4 >= 5000 ORDER BY shard_id, corpus_id""".stripMargin,
         docsSql =
-          """tk0 AS (
-            |  SELECT doc_id, list_filter(regexp_split_to_array(regexp_replace(lower(text), '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+'), t -> len(t) > 0) AS tk
-            |  FROM documents),
-            |docs AS (
-            |  SELECT doc_id AS id, tk FROM tk0
-            |  UNION ALL
-            |  SELECT doc_id + 1000000000000, tk[1:greatest(CAST(floor(len(tk) * 4 / 5) AS BIGINT), 1)] FROM tk0)""".stripMargin)) { (s, dir) =>
+          truncatedDocsFromSql("documents", offset = 1000000000000L))) { (s, dir) =>
       val d = graft.operators.scaleOut(
         table(s, dir, "documents").select(col("doc_id").as("id"), col("text")))
       // the corpus signature index a real pipeline would read from
       // parquet; built here from the same table
       val corpusSigs = Dedup.minHashSignatures(d, col("id"), col("text"))
       val shard = d.select(
-        (col("id") + 1000000000000L).as("id"),
-        array_join(
-          flatten(transform(array(tokens(col("text"))), tk =>
-            slice(tk, lit(1), greatest(floor(size(tk) * 4 / 5), lit(1)).cast("int")))),
-          " ").as("text"))
+        (col("id") + 1000000000000L).as("id"), truncatedText(col("text")).as("text"))
       Dedup.minHashLSHIncremental(shard, col("id"), col("text"), corpusSigs,
           numHashes = 64, bands = 16, shingleSize = 5,
           threshold = 0.5, maxBucket = 200)
@@ -2136,12 +2094,7 @@ object DedupQueries {
     // have identical unit costs.
     Q(
       "q_dedup_editdist",
-      """WITH u AS (
-        |  SELECT c_custkey AS id, c_name AS t FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000,
-        |    substr(c_name, 1, 5) || 'X' || substr(c_name, 7)
-        |  FROM customer),
+      s"""WITH ${nameTyposSql()},
         |d AS (SELECT id, t, substr(t, length(t) - 3, 4) AS blk FROM u)
         |SELECT DISTINCT a.id AS id_a, b.id AS id_b,
         |  CAST(levenshtein(a.t, b.t) AS INT) AS dist
@@ -2149,12 +2102,7 @@ object DedupQueries {
         |WHERE levenshtein(a.t, b.t) <= 2
         |ORDER BY id_a, id_b""".stripMargin
     ) { (s, dir) =>
-      val c = table(s, dir, "customer")
-      val u = c.select(col("c_custkey").as("id"), col("c_name").as("t"))
-        .unionByName(c.select(
-          (col("c_custkey") + 1000000).as("id"),
-          concat(substring(col("c_name"), 1, 5), lit("X"),
-            substring(col("c_name"), 7, 1000000)).as("t")))
+      val u = withNameTypos(table(s, dir, "customer"))
       Dedup.editDistancePairs(u, col("id"), col("t"),
           block = substring(col("t"), -4, 4), maxDist = 2)
         .withColumn("dist", col("dist").cast("int"))
@@ -2179,12 +2127,7 @@ object DedupQueries {
     // the window semantics with row_number offsets.
     Q(
       "q_dedup_snm",
-      """WITH u AS (
-        |  SELECT c_custkey AS id, c_name AS t FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000,
-        |    substr(c_name, 1, 5) || 'X' || substr(c_name, 7)
-        |  FROM customer),
+      s"""WITH ${nameTyposSql()},
         |d AS (SELECT id, reverse(t) AS sk FROM u),
         |b AS (
         |  SELECT id, sk, substr(sk, 1, 1) AS blk,
@@ -2198,12 +2141,7 @@ object DedupQueries {
         |SELECT id_a, id_b, dist FROM p WHERE dist <= 2
         |ORDER BY id_a, id_b""".stripMargin
     ) { (s, dir) =>
-      val c = table(s, dir, "customer")
-      val u = c.select(col("c_custkey").as("id"), col("c_name").as("t"))
-        .unionByName(c.select(
-          (col("c_custkey") + 1000000).as("id"),
-          concat(substring(col("c_name"), 1, 5), lit("X"),
-            substring(col("c_name"), 7, 1000000)).as("t")))
+      val u = withNameTypos(table(s, dir, "customer"))
       Dedup.sortedNeighbors(u, col("id"), reverse(col("t")),
           window = 4, maxDist = 2, blockPrefix = 1)
         // seam (r17): same range-partitioner double-eval as
@@ -2223,12 +2161,7 @@ object DedupQueries {
     // apart in sort order).
     Q(
       "q_audit_snm",
-      """WITH u AS (
-        |  SELECT c_custkey AS id, c_name AS t FROM customer WHERE c_custkey < 200
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000,
-        |    substr(c_name, 1, 5) || 'X' || substr(c_name, 7)
-        |  FROM customer WHERE c_custkey < 200),
+      s"""WITH ${nameTyposSql(where = "c_custkey < 200")},
         |d AS (SELECT id, reverse(t) AS sk FROM u),
         |b AS (
         |  SELECT id, sk, substr(sk, 1, 1) AS blk,
@@ -2264,12 +2197,7 @@ object DedupQueries {
         |    ELSE 0.0 END AS f1
         |FROM pr""".stripMargin
     ) { (s, dir) =>
-      val c = table(s, dir, "customer").filter(col("c_custkey") < 200)
-      val u = c.select(col("c_custkey").as("id"), col("c_name").as("t"))
-        .unionByName(c.select(
-          (col("c_custkey") + 1000000).as("id"),
-          concat(substring(col("c_name"), 1, 5), lit("X"),
-            substring(col("c_name"), 7, 1000000)).as("t")))
+      val u = withNameTypos(table(s, dir, "customer").filter(col("c_custkey") < 200))
       val found = Dedup.sortedNeighbors(u, col("id"), reverse(col("t")),
         window = 4, maxDist = 2, blockPrefix = 1)
       val right = u.select(col("id").as("__id2"), col("t").as("__t2"))
@@ -2334,26 +2262,7 @@ object DedupQueries {
     // is 1/(segments+1). Exact oracle over the same fingerprint CTEs.
     Q(
       "q_template_score",
-      s"""WITH tk0 AS (SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
-         |s AS (SELECT doc_id, tk, len(tk) AS n FROM tk0 WHERE len(tk) >= 1),
-         |seg AS (
-         |  SELECT doc_id, CAST(start // 8 AS INT) AS line_no,
-         |    array_to_string(tk[start + 1 : start + 8], ' ') AS line
-         |  FROM (SELECT doc_id, n, tk, unnest(range(0, n, 8)) AS start FROM s)),
-         |lines AS (
-         |  SELECT * FROM seg
-         |  UNION ALL
-         |  SELECT doc_id, -1 AS line_no,
-         |    'all rights reserved accept our cookie policy' AS line
-         |  FROM s),
-         |fp AS (
-         |  SELECT *, md5(trim(regexp_replace(regexp_replace(lower(line),
-         |    '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM lines),
-         |df AS (
-         |  SELECT f, count(*) AS dfreq
-         |  FROM (SELECT DISTINCT f, doc_id FROM fp) GROUP BY 1),
-         |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM lines),
+      s"""WITH $bannerLinesSql,
          |bset AS (
          |  SELECT f, 1 AS b FROM df CROSS JOIN nd
          |  WHERE df.dfreq > nd.n_docs * 0.5)
@@ -2385,26 +2294,7 @@ object DedupQueries {
     // engines reassemble the survivors in line order.
     Q(
       "q_dedup_lines",
-      s"""WITH tk0 AS (SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
-         |s AS (SELECT doc_id, tk, len(tk) AS n FROM tk0 WHERE len(tk) >= 1),
-         |seg AS (
-         |  SELECT doc_id, CAST(start // 8 AS INT) AS line_no,
-         |    array_to_string(tk[start + 1 : start + 8], ' ') AS line
-         |  FROM (SELECT doc_id, n, tk, unnest(range(0, n, 8)) AS start FROM s)),
-         |lines AS (
-         |  SELECT * FROM seg
-         |  UNION ALL
-         |  SELECT doc_id, -1 AS line_no,
-         |    'all rights reserved accept our cookie policy' AS line
-         |  FROM s),
-         |fp AS (
-         |  SELECT *, md5(trim(regexp_replace(regexp_replace(lower(line),
-         |    '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+', ' ', 'g'))) AS f
-         |  FROM lines),
-         |df AS (
-         |  SELECT f, count(*) AS dfreq
-         |  FROM (SELECT DISTINCT f, doc_id FROM fp) GROUP BY 1),
-         |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM lines),
+      s"""WITH $bannerLinesSql,
          |kept AS (
          |  SELECT fp.doc_id, fp.line_no, fp.line
          |  FROM fp JOIN df USING (f) CROSS JOIN nd
@@ -2470,13 +2360,7 @@ object DedupQueries {
            |  SELECT DISTINCT doc_id, pos FROM (
            |    SELECT doc_id, unnest(range(start, start + 10)) AS pos
            |    FROM w WHERE cnt >= 2 AND rn >= 2)),
-           |tp AS (
-           |  SELECT doc_id, pos, tk[pos + 1] AS term FROM (
-           |    SELECT doc_id, tk, unnest(range(0, len(tk))) AS pos FROM tk0)),
-           |kept AS (
-           |  SELECT t.doc_id, t.pos, t.term
-           |  FROM tp t LEFT JOIN lose l ON t.doc_id = l.doc_id AND t.pos = l.pos
-           |  WHERE l.doc_id IS NULL),
+           |$keptTermsSql,
            |agg AS (
            |  SELECT doc_id, count(*) AS n_kept,
            |    string_agg(term, ' ' ORDER BY pos) AS cleaned
@@ -2547,13 +2431,7 @@ object DedupQueries {
     // (q_dedup_minhash, q_dedup_prefix — sf1 hash-green, uncapped).
     Q("q_dedup_verified",
       minHashOracleSql(docsSql = truncatedDocsCappedSql(1500), tail =
-        """cap AS (SELECT id, bucket FROM (
-          |          SELECT id, bucket, COUNT(*) OVER (PARTITION BY bucket) AS nn FROM bkt)
-          |        WHERE nn BETWEEN 2 AND 200),
-          |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-          |         FROM cap x JOIN cap y ON x.bucket = y.bucket AND x.id < y.id),
-          |est AS (SELECT c.id_a, c.id_b, """.stripMargin + estJaccardSql + """ AS e4
-          |        FROM cand c JOIN sigl sa ON c.id_a = sa.id JOIN sigl sb ON c.id_b = sb.id),
+        s"""$bucketPairsSql,
           |cpairs AS (SELECT id_a, id_b, e4 / 10000.0 AS est_jaccard FROM est WHERE e4 >= 4000),
           |vsh AS (SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
           |        FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
@@ -2589,13 +2467,7 @@ object DedupQueries {
     // auditRowCtes the truncated P/R/F1 arithmetic.
     Q("q_dedup_audit",
       minHashOracleSql(
-        """cap AS (SELECT id, bucket FROM (
-          |          SELECT id, bucket, COUNT(*) OVER (PARTITION BY bucket) AS nn FROM bkt)
-          |        WHERE nn BETWEEN 2 AND 200),
-          |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
-          |         FROM cap x JOIN cap y ON x.bucket = y.bucket AND x.id < y.id),
-          |est AS (SELECT c.id_a, c.id_b, """.stripMargin + estJaccardSql + """ AS e4
-          |        FROM cand c JOIN sigl sa ON c.id_a = sa.id JOIN sigl sb ON c.id_b = sb.id),
+        s"""$bucketPairsSql,
           |found AS (SELECT id_a, id_b FROM est WHERE e4 >= 5000),
           |""".stripMargin + prefixJaccardCtes(0.5, "pj") + ",\n" +
           auditRowCtes("found", "pjpairs", "ad") + "\n" +
@@ -2777,20 +2649,10 @@ object DedupQueries {
            |SELECT 'suffix_block_vs_brute_lev1' AS tier, n_found, n_truth, n_hit, "precision", recall, f1 FROM srow
            |ORDER BY tier""".stripMargin
       }) { (s, dir) =>
-      val c0 = table(s, dir, "customer")
-        .filter(col("c_custkey") % 2 === 0)
-        .select(
-          col("c_custkey").as("id"),
-          concat(col("c_name"), lit("-"),
-            pmod(col("c_custkey") * 7919L, lit(100000L))).as("nm"),
-          col("c_nationkey").as("blk"))
+      val c0 = taggedCustomers(
+          table(s, dir, "customer").filter(col("c_custkey") % 2 === 0))
         .orderBy("id").limit(600)
-      val p = (pmod(col("id"), lit(10L)) + 5).cast("int")
-      val typo = c0.select(
-        (col("id") + 1000000L).as("id"),
-        concat(col("nm").substr(lit(1), p - 1),
-          col("nm").substr(p + 1, lit(1000))).as("nm"),
-        col("blk"))
+      val typo = customerTypos(c0)
       val tailTypo = c0.select(
         (col("id") + 2000000L).as("id"),
         concat(col("nm").substr(lit(1), length(col("nm")) - 3),
@@ -2954,8 +2816,7 @@ object DedupQueries {
            |ORDER BY query_id, mmr_rank""".stripMargin
       }
     ) { (s, dir) =>
-      val e = table(s, dir, "embeddings").select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = embeddingVecs(s, dir)
       val topk = Similarity.bruteForceTopK(
         corpus = e, queries = e.filter(col("vec_id") < 5),
         corpusId = col("vec_id"), corpusVec = col("v"),
@@ -3054,47 +2915,20 @@ object DedupQueries {
     // component replay extended by one size aggregation: every corpus
     // doc appears, cluster members weigh 1/|cluster|, singletons 1.0.
     Q(
-      "q_dup_weights", {
-        val rounds = ccUnrollSql(8)
-        s"""WITH $truncatedDocsSql,
-           |sh AS (
-           |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
-           |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
-           |        FROM docs WHERE len(tk) >= 5)),
-           |rare AS (
-           |  SELECT s FROM sh GROUP BY s HAVING count(*) BETWEEN 2 AND 20),
-           |idx AS (SELECT id, s FROM sh WHERE s IN (SELECT s FROM rare)),
-           |inter AS (
-           |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-           |  FROM idx a JOIN idx b ON a.s = b.s AND a.id < b.id
-           |  GROUP BY 1, 2),
-           |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-           |pairs AS (
-           |  SELECT id_a, id_b
-           |  FROM inter
-           |  JOIN sizes na ON na.id = id_a
-           |  JOIN sizes nb ON nb.id = id_b
-           |  WHERE round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) >= 0.5),
-           |sym AS MATERIALIZED (
-           |  SELECT id_a AS a, id_b AS b FROM pairs
-           |  UNION ALL
-           |  SELECT id_b, id_a FROM pairs),
-           |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS comp FROM sym),
-           |$rounds,
-           |csz AS (SELECT comp, CAST(count(*) AS BIGINT) AS sz
-           |        FROM l8 GROUP BY comp)
-           |SELECT d.id AS doc_id,
-           |  coalesce(csz.sz, 1) AS cluster_size,
-           |  floor(1.0 / coalesce(csz.sz, 1) * 1e6) / 1e6 AS weight
-           |FROM (SELECT id FROM docs) d
-           |LEFT JOIN l8 ON l8.id = d.id
-           |LEFT JOIN csz ON csz.comp = l8.comp
-           |ORDER BY doc_id""".stripMargin
-      }
+      "q_dup_weights",
+      s"""WITH $jaccardClustersSql,
+         |csz AS (SELECT comp, CAST(count(*) AS BIGINT) AS sz
+         |        FROM l8 GROUP BY comp)
+         |SELECT d.id AS doc_id,
+         |  coalesce(csz.sz, 1) AS cluster_size,
+         |  floor(1.0 / coalesce(csz.sz, 1) * 1e6) / 1e6 AS weight
+         |FROM (SELECT id FROM docs) d
+         |LEFT JOIN l8 ON l8.id = d.id
+         |LEFT JOIN csz ON csz.comp = l8.comp
+         |ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
       val docs = truncatedDocs(s, dir)
-      val pairs = Dedup.ngramJaccard(docs, col("id"), col("text"),
-        n = 5, dfCap = 20, threshold = 0.5)
+      val pairs = jaccardPairs(docs)
       Dedup.duplicationWeights(docs, col("id"), pairs)
         .orderBy("doc_id")
     },
@@ -3104,13 +2938,7 @@ object DedupQueries {
     // against the natural lorem baseline; df >= 5, flag above 0.5.
     Q(
       "q_dup_coverage",
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 5 = 0 THEN text ||
-         |      ' subscribe to our newsletter today for fresh offers'
-         |    ELSE text END AS text
-         |  FROM documents),
-         |tk0 AS (SELECT doc_id, ${tkSql("text")} AS tk FROM d),
+      s"""WITH $boilerplateDocsSql,
          |occ AS (
          |  SELECT doc_id, array_to_string(tk[i:i+2], ' ') AS sh
          |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) - 1)) AS i
@@ -3137,11 +2965,7 @@ object DedupQueries {
          |FROM tot t LEFT JOIN per p USING (doc_id)
          |ORDER BY t.doc_id""".stripMargin
     ) { (s, dir) =>
-      val d2 = table(s, dir, "documents")
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 0, concat(col("text"),
-            lit(" subscribe to our newsletter today for fresh offers")))
-            .otherwise(col("text")).as("text"))
+      val d2 = boilerplateDocs(s, dir)
       Dedup.duplicatedNgramCoverage(d2, col("doc_id"), col("text"),
           n = 3, minDf = 5, maxCoverage = 0.5)
         .orderBy("doc_id")
@@ -3153,13 +2977,7 @@ object DedupQueries {
     // from q_corpus_build's mask stage).
     Q(
       "q_dup_trim",
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 5 = 0 THEN text ||
-         |      ' subscribe to our newsletter today for fresh offers'
-         |    ELSE text END AS text
-         |  FROM documents),
-         |tk0 AS (SELECT doc_id, ${tkSql("text")} AS tk FROM d),
+      s"""WITH $boilerplateDocsSql,
          |occ AS (
          |  SELECT doc_id, i - 1 AS start, array_to_string(tk[i:i+2], ' ') AS sh
          |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) - 1)) AS i
@@ -3171,13 +2989,7 @@ object DedupQueries {
          |  SELECT DISTINCT doc_id, pos FROM (
          |    SELECT o.doc_id, unnest(range(o.start, o.start + 3)) AS pos
          |    FROM occ o JOIN dfreq USING (sh))),
-         |tp AS (
-         |  SELECT doc_id, pos, tk[pos + 1] AS term FROM (
-         |    SELECT doc_id, tk, unnest(range(0, len(tk))) AS pos FROM tk0)),
-         |kept AS (
-         |  SELECT t.doc_id, t.pos, t.term
-         |  FROM tp t LEFT JOIN lose l ON t.doc_id = l.doc_id AND t.pos = l.pos
-         |  WHERE l.doc_id IS NULL),
+         |$keptTermsSql,
          |reb AS (
          |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
          |    array_to_string(list(term ORDER BY pos), ' ') AS trimmed
@@ -3192,11 +3004,7 @@ object DedupQueries {
          |FROM tot t LEFT JOIN reb r USING (doc_id)
          |ORDER BY t.doc_id""".stripMargin
     ) { (s, dir) =>
-      val d2 = table(s, dir, "documents")
-        .select(col("doc_id"),
-          when(col("doc_id") % 5 === 0, concat(col("text"),
-            lit(" subscribe to our newsletter today for fresh offers")))
-            .otherwise(col("text")).as("text"))
+      val d2 = boilerplateDocs(s, dir)
       Dedup.duplicatedNgramTrim(d2, col("doc_id"), col("text"),
           n = 3, minDf = 5)
         .orderBy("doc_id")
@@ -3208,33 +3016,8 @@ object DedupQueries {
     // fold, singletons hash their own id.
     Q(
       "q_cv_folds", {
-        val rounds = ccUnrollSql(8)
         val fold = graft.operators.Sampling.hashModSql("cluster", "5")
-        s"""WITH $truncatedDocsSql,
-           |sh AS (
-           |  SELECT DISTINCT id, array_to_string(tk[i:i+4], ' ') AS s
-           |  FROM (SELECT id, tk, unnest(range(1, len(tk) - 3)) AS i
-           |        FROM docs WHERE len(tk) >= 5)),
-           |rare AS (
-           |  SELECT s FROM sh GROUP BY s HAVING count(*) BETWEEN 2 AND 20),
-           |idx AS (SELECT id, s FROM sh WHERE s IN (SELECT s FROM rare)),
-           |inter AS (
-           |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-           |  FROM idx a JOIN idx b ON a.s = b.s AND a.id < b.id
-           |  GROUP BY 1, 2),
-           |sizes AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id),
-           |pairs AS (
-           |  SELECT id_a, id_b
-           |  FROM inter
-           |  JOIN sizes na ON na.id = id_a
-           |  JOIN sizes nb ON nb.id = id_b
-           |  WHERE round(n_inter * 1.0 / (na.n_sh + nb.n_sh - n_inter), 4) >= 0.5),
-           |sym AS MATERIALIZED (
-           |  SELECT id_a AS a, id_b AS b FROM pairs
-           |  UNION ALL
-           |  SELECT id_b, id_a FROM pairs),
-           |l0 AS MATERIALIZED (SELECT DISTINCT a AS id, a AS comp FROM sym),
-           |$rounds,
+        s"""WITH $jaccardClustersSql,
            |asg AS (
            |  SELECT d.id, coalesce(l8.comp, d.id) AS cluster
            |  FROM (SELECT id FROM docs) d
@@ -3245,8 +3028,7 @@ object DedupQueries {
       }
     ) { (s, dir) =>
       val docs = truncatedDocs(s, dir)
-      val pairs = Dedup.ngramJaccard(docs, col("id"), col("text"),
-        n = 5, dfCap = 20, threshold = 0.5)
+      val pairs = jaccardPairs(docs)
       Dedup.cvFolds(docs, col("id"), pairs, col("id_a"), col("id_b"), k = 5)
         .orderBy("id")
     }

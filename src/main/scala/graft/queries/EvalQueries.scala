@@ -85,6 +85,24 @@ object EvalQueries {
        |ORDER BY id""".stripMargin
   }
 
+  /** The recursive LCS dynamic program over `p`(pid, ca, cb): row i of
+    * the DP table per pair, the inner j-loop flattened through the
+    * prefix-max identity; row len(ca) holds the LCS length at [len(cb) + 1].
+    */
+  private val lcsRowsSql: String =
+    """dp(pid, i, row) AS (
+      |  SELECT pid, 0, list_transform(range(0, len(cb) + 1), x -> CAST(0 AS BIGINT))
+      |  FROM p
+      |  UNION ALL
+      |  SELECT q.pid AS pid, d.i + 1 AS i,
+      |    list_prepend(CAST(0 AS BIGINT),
+      |      list_transform(range(1, len(q.cb) + 1), j ->
+      |        greatest(d.row[j + 1],
+      |          list_max(list_transform(range(1, j + 1), k ->
+      |            d.row[k] + CASE WHEN q.ca[d.i + 1] = q.cb[k]
+      |              THEN 1 ELSE 0 END))))) AS row
+      |  FROM dp d JOIN p q ON q.pid = d.pid AND d.i < len(q.ca))""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // C87: Cochran's Q across three graded "systems" (the n_chars mod
@@ -334,18 +352,7 @@ object EvalQueries {
          |      CASE WHEN i % 4 = 0 THEN 'x' ELSE t END)[1:24] AS ca,
          |    tk[1:24] AS cb
          |  FROM d0),
-         |dp(pid, i, row) AS (
-         |  SELECT pid, 0, list_transform(range(0, len(cb) + 1), x -> CAST(0 AS BIGINT))
-         |  FROM p
-         |  UNION ALL
-         |  SELECT q.pid AS pid, d.i + 1 AS i,
-         |    list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(1, len(q.cb) + 1), j ->
-         |        greatest(d.row[j + 1],
-         |          list_max(list_transform(range(1, j + 1), k ->
-         |            d.row[k] + CASE WHEN q.ca[d.i + 1] = q.cb[k]
-         |              THEN 1 ELSE 0 END))))) AS row
-         |  FROM dp d JOIN p q ON q.pid = d.pid AND d.i < len(q.ca)),
+         |$lcsRowsSql,
          |lc AS (
          |  SELECT d.pid, len(q.ca) AS n_cand, len(q.cb) AS n_ref,
          |    d.row[len(q.cb) + 1] AS lcs
@@ -394,18 +401,7 @@ object EvalQueries {
          |p AS (
          |  SELECT doc_id AS pid, source, tk[1:24] AS ca, tk2[1:24] AS cb
          |  FROM ord WHERE tk2 IS NOT NULL),
-         |dp(pid, i, row) AS (
-         |  SELECT pid, 0, list_transform(range(0, len(cb) + 1), x -> CAST(0 AS BIGINT))
-         |  FROM p
-         |  UNION ALL
-         |  SELECT q.pid AS pid, d.i + 1 AS i,
-         |    list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(1, len(q.cb) + 1), j ->
-         |        greatest(d.row[j + 1],
-         |          list_max(list_transform(range(1, j + 1), k ->
-         |            d.row[k] + CASE WHEN q.ca[d.i + 1] = q.cb[k]
-         |              THEN 1 ELSE 0 END))))) AS row
-         |  FROM dp d JOIN p q ON q.pid = d.pid AND d.i < len(q.ca)),
+         |$lcsRowsSql,
          |lc AS (
          |  SELECT q.source, len(q.ca) AS nc, len(q.cb) AS nr,
          |    d.row[len(q.cb) + 1] AS lcs
@@ -867,11 +863,9 @@ object EvalQueries {
     // sqrt(sqrt(product)) BLEU core on identical doubles.
     Q(
       "q_ngram_overlap",
-      """WITH tk1 AS (
+      s"""WITH tk1 AS (
         |  SELECT doc_id AS id,
-        |    list_filter(regexp_split_to_array(
-        |      regexp_replace(lower(text), '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+'),
-        |      t -> len(t) > 0) AS rt
+        |    ${tkSql("text")} AS rt
         |  FROM documents),
         |pairs AS (SELECT id, rt,
         |    rt[1:greatest(CAST(floor(len(rt) * 4 / 5) AS BIGINT), 1)] AS ct

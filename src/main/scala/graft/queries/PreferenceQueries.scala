@@ -151,13 +151,11 @@ object PreferenceQueries {
          |  SELECT group_key, CAST(count(*) AS BIGINT) AS n_samples,
          |    max(CASE WHEN rn_hi = 1 THEN sample_id END) AS chosen_id,
          |    max(CASE WHEN rn_hi = 1 THEN reward END) AS chosen_reward,
-         |    max(CASE WHEN rn_hi = 1 THEN md5(trim(regexp_replace(regexp_replace(
-         |      lower(response), '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+', ' ', 'g')))
+         |    max(CASE WHEN rn_hi = 1 THEN ${normFingerprintSql("response")}
          |      END) AS cfp,
          |    max(CASE WHEN rn_lo = 1 THEN sample_id END) AS rejected_id,
          |    max(CASE WHEN rn_lo = 1 THEN reward END) AS rejected_reward,
-         |    max(CASE WHEN rn_lo = 1 THEN md5(trim(regexp_replace(regexp_replace(
-         |      lower(response), '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+', ' ', 'g')))
+         |    max(CASE WHEN rn_lo = 1 THEN ${normFingerprintSql("response")}
          |      END) AS rfp
          |  FROM rk GROUP BY group_key)
          |SELECT group_key, n_samples, chosen_id, chosen_reward,

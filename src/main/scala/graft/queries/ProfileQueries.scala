@@ -30,9 +30,9 @@ object ProfileQueries {
 
   /** Hourly event counts per event type, (key, bucket, value): the
     * series every time-series diagnostic below reads, bucket =
-    * ts_ns div 1h (the oracles' `epoch_ns(ts) // 3600000000000`).
+    * ts_ns div 1h. Its DuckDB twin is [[hourlyCountsSql]].
     */
-  private def hourlyCounts(s: SparkSession, dir: String): DataFrame =
+  private[queries] def hourlyCounts(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.events(s, dir)
       .groupBy(col("event_type").as("key"),
         expr("ts_ns div 3600000000000").as("bucket"))
@@ -50,6 +50,290 @@ object ProfileQueries {
       .join(counts, Seq("key", "bucket"), "left")
     valueCols.foldLeft(grid)((df, c) => df.withColumn(c, coalesce(col(c), lit(0.0))))
   }
+
+  /** DuckDB twin of [[hourlyCounts]]: the CTE `b`(key, bucket, value). */
+  private[queries] val hourlyCountsSql: String =
+    """b AS (
+      |  SELECT event_type AS key,
+      |    epoch_ns(ts) // 3600000000000 AS bucket,
+      |    CAST(count(*) AS DOUBLE) AS value
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** DuckDB twin of [[zeroFillHours]] over the CTE `b`: `sp`, `grid`
+    * and the dense `d`(key, bucket, valueCols...).
+    */
+  private def zeroFillHoursSql(valueCols: String*): String =
+    s"""sp AS (SELECT key, min(bucket) AS lo, max(bucket) AS hi
+       |  FROM b GROUP BY 1),
+       |grid AS (SELECT key, unnest(range(lo, hi + 1)) AS bucket FROM sp),
+       |d AS (
+       |  SELECT g.key, g.bucket,
+       |    ${valueCols.map(c => s"coalesce(b.$c, 0.0) AS $c").mkString(", ")}
+       |  FROM grid g LEFT JOIN b ON g.key = b.key AND g.bucket = b.bucket)""".stripMargin
+
+  /** `mu` + `c`: the dense series `d` demeaned per key into 6-dp
+    * integer lanes `c6`.
+    */
+  private val demeanSql: String =
+    """mu AS (
+      |  SELECT key,
+      |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mu
+      |  FROM d GROUP BY 1),
+      |c AS (
+      |  SELECT d.key, d.bucket,
+      |    CAST((d.value - mu.mu) * 1e6 AS DECIMAL(18,0)) AS c6
+      |  FROM d JOIN mu ON d.key = mu.key)""".stripMargin
+
+  /** The autocorrelation oracle chain over the dense hourly series,
+    * through `den`(key, dn) and `a`(key, lag, n_pairs, num) for lags
+    * 1..maxLag; [[acfSelectSql]] turns them into the 4-dp r_k rows.
+    */
+  private def acfChainSql(maxLag: Int): String = {
+    val lagSels = (1 to maxLag).map { l =>
+      s"""SELECT key, $l AS lag,
+         |  CAST(c6 AS DECIMAL(38,0))
+         |    * lag(c6, $l) OVER (PARTITION BY key ORDER BY bucket) AS p
+         |FROM c""".stripMargin
+    }.mkString("\n  UNION ALL\n  ")
+    s"""$hourlyCountsSql,
+       |${zeroFillHoursSql("value")},
+       |$demeanSql,
+       |den AS (
+       |  SELECT key, sum(CAST(c6 AS DECIMAL(38,0)) * c6) AS dn
+       |  FROM c GROUP BY 1),
+       |l AS (
+       |  $lagSels),
+       |a AS (
+       |  SELECT key, lag, CAST(count(p) AS BIGINT) AS n_pairs,
+       |    coalesce(sum(p), 0) AS num
+       |  FROM l GROUP BY 1, 2)""".stripMargin
+  }
+
+  /** r_k per (key, lag) over [[acfChainSql]]: `Stats.autocorrelation`'s
+    * sign-preserving 4-dp truncation, 0.0 + degenerate on a flat series.
+    */
+  private val acfSelectSql: String =
+    """SELECT a.key, a.lag, a.n_pairs,
+      |  CASE WHEN CAST(den.dn AS DOUBLE) <= 0.0 THEN CAST(0.0 AS DOUBLE)
+      |    ELSE sign(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
+      |      * (floor(abs(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
+      |        * 1e4) / 1e4) + 0.0
+      |  END AS acf,
+      |  CAST(den.dn AS DOUBLE) <= 0.0 AS degenerate
+      |FROM a JOIN den ON a.key = den.key""".stripMargin
+
+  /** `Stats.seasonalDecompose` at period 25 over the CTE `b`: `t`
+    * (centered 25-point window sums), `tr` (trend, phase), `se`/`gr`
+    * (per-phase and grand means) and `o`(key, bucket, value, trend,
+    * seasonal).
+    */
+  private val seasonalDecomposeSql: String =
+    """t AS (
+      |  SELECT key, bucket, value,
+      |    count(value) OVER w AS n,
+      |    sum(CAST(value AS DECIMAL(18,6))) OVER w AS s
+      |  FROM b
+      |  WINDOW w AS (PARTITION BY key ORDER BY bucket
+      |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
+      |tr AS (
+      |  SELECT key, bucket, value,
+      |    CASE WHEN n = 25 THEN floor(CAST(s AS DOUBLE) / 25 * 1e4) / 1e4 END AS trend,
+      |    ((bucket % 25) + 25) % 25 AS phase
+      |  FROM t),
+      |se AS (
+      |  SELECT key AS sk, phase AS sp,
+      |    CAST(sum(CAST(value - trend AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS praw
+      |  FROM tr WHERE trend IS NOT NULL GROUP BY 1, 2),
+      |gr AS (
+      |  SELECT sk AS gk,
+      |    CAST(sum(CAST(praw AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS gmean
+      |  FROM se GROUP BY 1),
+      |o AS (
+      |  SELECT tr.key, tr.bucket, tr.value, tr.trend,
+      |    sign(coalesce(praw, 0.0) - coalesce(gmean, 0.0))
+      |      * (floor(abs(coalesce(praw, 0.0) - coalesce(gmean, 0.0)) * 1e4) / 1e4)
+      |      + 0.0 AS seasonal
+      |  FROM tr
+      |  LEFT JOIN se ON tr.key = se.sk AND tr.phase = se.sp
+      |  LEFT JOIN gr ON tr.key = gr.gk)""".stripMargin
+
+  /** The OLS trend-fit inputs over hourly counts: `b`(key, x = hour,
+    * y = count) and the per-key exact-decimal moment sums
+    * `m`(key, n, sx, sy, sxy, sxx).
+    */
+  private val hourlyTrendSumsSql: String =
+    """b AS (
+      |  SELECT event_type AS key,
+      |    CAST(epoch_ns(ts) // 3600000000000 AS DOUBLE) AS x,
+      |    CAST(count(*) AS DOUBLE) AS y
+      |  FROM events GROUP BY key, epoch_ns(ts) // 3600000000000),
+      |m AS (
+      |  SELECT key, CAST(count(*) AS BIGINT) AS n,
+      |    sum(CAST(x AS DECIMAL(19,6))) AS sx,
+      |    sum(CAST(y AS DECIMAL(19,6))) AS sy,
+      |    sum(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS sxy,
+      |    sum(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))) AS sxx
+      |  FROM b GROUP BY key)""".stripMargin
+
+  /** Trend residuals over [[hourlyTrendSumsSql]]: slope `f`(key, n,
+    * slope, flatx), residuals `r` and their demeaned 6-dp lanes
+    * `r6`(key, x, n, flatx, e6).
+    */
+  private val trendResidualsSql: String =
+    """f AS (
+      |  SELECT key, n,
+      |    CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+      |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0 THEN 0.0
+      |      ELSE (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+      |        - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+      |        / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+      |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END AS slope,
+      |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+      |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0 AS flatx
+      |  FROM m),
+      |r AS (
+      |  SELECT b.key, b.x, f.n, f.flatx, b.y - f.slope * b.x AS e
+      |  FROM b JOIN f ON b.key = f.key),
+      |emu AS (
+      |  SELECT key,
+      |    CAST(sum(CAST(e AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mu
+      |  FROM r GROUP BY key),
+      |r6 AS (
+      |  SELECT r.key, r.x, r.n, r.flatx,
+      |    CAST((r.e - emu.mu) * 1e6 AS DECIMAL(18,0)) AS e6
+      |  FROM r JOIN emu ON r.key = emu.key)""".stripMargin
+
+  /** Click-vs-view value moments over `events`: count, exact decimal
+    * sum and sum of squares per side, `m`(na, sa, ssa, nb, sb, ssb).
+    */
+  private val clickViewSumsSql: String =
+    """v AS (SELECT event_type, value FROM events WHERE value IS NOT NULL),
+      |m AS (SELECT
+      |  coalesce(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END), 0) AS na,
+      |  sum(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(19,6)) END) AS sa,
+      |  sum(CASE WHEN event_type = 'click'
+      |      THEN CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6)) END) AS ssa,
+      |  coalesce(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END), 0) AS nb,
+      |  sum(CASE WHEN event_type = 'view' THEN CAST(value AS DECIMAL(19,6)) END) AS sb,
+      |  sum(CASE WHEN event_type = 'view'
+      |      THEN CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6)) END) AS ssb
+      |  FROM v)""".stripMargin
+
+  /** Per-event-type value moments over `events`: `per`(g, n, s = exact
+    * sum, q = exact sum of squares, cst = all values equal).
+    */
+  private val groupMomentsSql: String =
+    """v AS (SELECT event_type AS g, value FROM events
+      |  WHERE value IS NOT NULL AND event_type IS NOT NULL),
+      |per AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
+      |    sum(CAST(value AS DECIMAL(18,6))) AS s,
+      |    sum(CAST(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
+      |        AS DECIMAL(38,12))) AS q,
+      |    min(CAST(value AS DECIMAL(18,6))) = max(CAST(value AS DECIMAL(18,6)))
+      |      AS cst
+      |  FROM v GROUP BY g)""".stripMargin
+
+  /** DuckDB twin of [[langScores]] with its pooled mid-ranks: value ties
+    * `vtc`(v, t, cum, tc) and per-language doubled rank sums `perg`(g, n, r2).
+    */
+  private val langRanksSql: String =
+    s"""sc AS (
+       |  SELECT lang AS g, round(least(1.0, len(${tkSql("text")}) / 400.0), 6) AS v
+       |  FROM documents WHERE lang IS NOT NULL),
+       |vg AS (SELECT v, g, CAST(count(*) AS BIGINT) AS nvg FROM sc GROUP BY 1, 2),
+       |vt AS (SELECT v, CAST(sum(nvg) AS BIGINT) AS t FROM vg GROUP BY 1),
+       |vtc AS (SELECT v, t,
+       |    coalesce(sum(t) OVER (ORDER BY v
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum,
+       |    CAST(CAST(t AS DECIMAL(13,0)) * CAST(t AS DECIMAL(13,0))
+       |      * CAST(t AS DECIMAL(13,0)) - t AS DECIMAL(38,0)) AS tc
+       |  FROM vt),
+       |perg AS (SELECT g, CAST(sum(nvg) AS BIGINT) AS n,
+       |    CAST(sum(CAST(nvg AS DECIMAL(19,0))
+       |      * (CAST(cum AS DECIMAL(19,0)) * 2 + t + 1)) AS DECIMAL(38,0)) AS r2
+       |  FROM vg JOIN vtc USING (v) GROUP BY g)""".stripMargin
+
+  /** The one-way ANOVA table over `per`(g, n, s, q): between/within
+    * sums of squares from exact decimal moments, F and eta².
+    */
+  private val anovaTableSql: String =
+    """m AS (SELECT
+      |    coalesce(sum(n), 0) AS nn, CAST(count(*) AS BIGINT) AS k,
+      |    sum(s) AS ts, sum(q) AS tq,
+      |    sum(CAST(floor(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n * 1e7) / 1e7
+      |        AS DECIMAL(30,7))) AS w
+      |  FROM per),
+      |d AS (SELECT nn, k,
+      |    greatest(0.0, CAST(tq AS DOUBLE) - CAST(w AS DOUBLE)) AS ssw,
+      |    greatest(0.0, CAST(w AS DOUBLE)
+      |      - CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / CAST(nn AS DOUBLE)) AS ssb
+      |  FROM m)
+      |SELECT CAST(nn AS BIGINT) AS n, k,
+      |  CASE WHEN nn > 0 THEN floor(ssb * 1e4) / 1e4 ELSE 0.0 END AS ss_between,
+      |  CASE WHEN nn > 0 THEN floor(ssw * 1e4) / 1e4 ELSE 0.0 END AS ss_within,
+      |  CASE WHEN k < 2 OR nn <= k OR ssw = 0.0 THEN 0.0
+      |       ELSE floor((ssb / (k - 1)) / (ssw / (nn - k)) * 1e4) / 1e4 END AS f,
+      |  CASE WHEN ssb + ssw > 0 THEN floor(ssb / (ssb + ssw) * 1e4) / 1e4
+      |       ELSE 0.0 END AS eta_sq,
+      |  (k < 2 OR nn <= k OR ssw = 0.0) AS degenerate
+      |FROM d""".stripMargin
+
+  /** Per-language document length score, (g, v): token count / 400
+    * capped at 1.0 — the q_kruskal / q_dunn input.
+    */
+  private def langScores(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "documents")
+      .filter(col("lang").isNotNull)
+      .select(col("lang").as("g"),
+        least(lit(1.0), size(graft.functions.tokens(col("text"))) / lit(400.0)).as("v"))
+
+  /** The scored-classifier fixture, (score, y): score = token count /
+    * 400 capped at 1.0, y = the text mentions "data".
+    */
+  private def scoredLabels(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "documents").select(
+      least(lit(1.0), size(graft.functions.tokens(col("text"))) / lit(400.0))
+        .as("score"),
+      lower(col("text")).contains("data").as("y"))
+
+  /** The returnflag × linestatus contingency table over `lineitem`:
+    * `cells`(a, b, n), margins `ra`(a, rt) and `rb`(b, ct), totals
+    * `t`(tot, n_cells), and the level counts `nr`(r), `nc`(c).
+    */
+  private val contingencySql: String =
+    """cells AS (
+      |  SELECT l_returnflag AS a, l_linestatus AS b, count(*) AS n
+      |  FROM lineitem GROUP BY 1, 2),
+      |ra AS (SELECT a, sum(n) AS rt FROM cells GROUP BY 1),
+      |rb AS (SELECT b, sum(n) AS ct FROM cells GROUP BY 1),
+      |t AS (SELECT sum(n) AS tot, count(*) AS n_cells FROM cells),
+      |nr AS (SELECT count(*) AS r FROM ra),
+      |nc AS (SELECT count(*) AS c FROM rb)""".stripMargin
+
+  /** The multiple-testing fixture, (key, p): 80 hypothesis groups with
+    * pseudo-random p-values, every 7th planted significant (×0.001)
+    * and every 13th untested (null).
+    */
+  private def plantedPValues(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "documents")
+      .select((col("doc_id") % 80).as("g"), ((col("doc_id") * 7919) % 997).as("hv"))
+      .groupBy("g").agg((min(col("hv")) / lit(996.0)).as("base"))
+      .select(col("g").as("key"),
+        when(col("g") % 13 === 0, lit(null).cast("double"))
+          .when(col("g") % 7 === 0, col("base") * lit(0.001))
+          .otherwise(col("base")).as("p"))
+
+  /** Open vs finished order counts per 4-dp o_totalprice value,
+    * `g`(v, na, nb).
+    */
+  private val openFinishedPricesSql: String =
+    """g AS (
+      |  SELECT round(CAST(o_totalprice AS DOUBLE), 4) AS v,
+      |    sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS na,
+      |    sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS nb
+      |  FROM orders
+      |  WHERE o_totalprice IS NOT NULL AND o_orderstatus IN ('O', 'F')
+      |  GROUP BY 1)""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -465,17 +749,7 @@ object ProfileQueries {
     // aggregation, mirrored double derivation, 4-dp truncation.
     Q(
       "q_two_sample_z",
-      """WITH v AS (SELECT event_type, value FROM events WHERE value IS NOT NULL),
-        |m AS (SELECT
-        |  coalesce(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END), 0) AS na,
-        |  sum(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(19,6)) END) AS sa,
-        |  sum(CASE WHEN event_type = 'click'
-        |      THEN CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6)) END) AS ssa,
-        |  coalesce(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END), 0) AS nb,
-        |  sum(CASE WHEN event_type = 'view' THEN CAST(value AS DECIMAL(19,6)) END) AS sb,
-        |  sum(CASE WHEN event_type = 'view'
-        |      THEN CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6)) END) AS ssb
-        |  FROM v),
+      s"""WITH $clickViewSumsSql,
         |d AS (SELECT *,
         |  CAST(sa AS DOUBLE) / na AS ma, CAST(sb AS DOUBLE) / nb AS mb,
         |  sqrt(
@@ -504,17 +778,7 @@ object ProfileQueries {
     // ratio order.
     Q(
       "q_effect_size",
-      """WITH v AS (SELECT event_type, value FROM events WHERE value IS NOT NULL),
-        |m AS (SELECT
-        |  coalesce(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END), 0) AS na,
-        |  sum(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(19,6)) END) AS sa,
-        |  sum(CASE WHEN event_type = 'click'
-        |      THEN CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6)) END) AS ssa,
-        |  coalesce(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END), 0) AS nb,
-        |  sum(CASE WHEN event_type = 'view' THEN CAST(value AS DECIMAL(19,6)) END) AS sb,
-        |  sum(CASE WHEN event_type = 'view'
-        |      THEN CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6)) END) AS ssb
-        |  FROM v),
+      s"""WITH $clickViewSumsSql,
         |d AS (SELECT *,
         |  CAST(sa AS DOUBLE) / na AS ma, CAST(sb AS DOUBLE) / nb AS mb,
         |  greatest(0.0, (CAST(ssa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / na) / (na - 1)) AS va,
@@ -550,33 +814,14 @@ object ProfileQueries {
     // the order-independent sum, F and eta² 4-dp floored.
     Q(
       "q_anova",
-      """WITH v AS (SELECT event_type AS g, value FROM events
+      s"""WITH v AS (SELECT event_type AS g, value FROM events
         |  WHERE value IS NOT NULL AND event_type IS NOT NULL),
         |per AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
         |    sum(CAST(value AS DECIMAL(18,6))) AS s,
         |    sum(CAST(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
         |        AS DECIMAL(38,12))) AS q
         |  FROM v GROUP BY g),
-        |m AS (SELECT
-        |    coalesce(sum(n), 0) AS nn, CAST(count(*) AS BIGINT) AS k,
-        |    sum(s) AS ts, sum(q) AS tq,
-        |    sum(CAST(floor(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n * 1e7) / 1e7
-        |        AS DECIMAL(30,7))) AS w
-        |  FROM per),
-        |d AS (SELECT nn, k,
-        |    greatest(0.0, CAST(tq AS DOUBLE) - CAST(w AS DOUBLE)) AS ssw,
-        |    greatest(0.0, CAST(w AS DOUBLE)
-        |      - CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / CAST(nn AS DOUBLE)) AS ssb
-        |  FROM m)
-        |SELECT CAST(nn AS BIGINT) AS n, k,
-        |  CASE WHEN nn > 0 THEN floor(ssb * 1e4) / 1e4 ELSE 0.0 END AS ss_between,
-        |  CASE WHEN nn > 0 THEN floor(ssw * 1e4) / 1e4 ELSE 0.0 END AS ss_within,
-        |  CASE WHEN k < 2 OR nn <= k OR ssw = 0.0 THEN 0.0
-        |       ELSE floor((ssb / (k - 1)) / (ssw / (nn - k)) * 1e4) / 1e4 END AS f,
-        |  CASE WHEN ssb + ssw > 0 THEN floor(ssb / (ssb + ssw) * 1e4) / 1e4
-        |       ELSE 0.0 END AS eta_sq,
-        |  (k < 2 OR nn <= k OR ssw = 0.0) AS degenerate
-        |FROM d""".stripMargin
+         |$anovaTableSql""".stripMargin
     ) { (s, dir) =>
       graft.operators.Stats.anovaOneWay(graft.sources.Tables.events(s, dir),
         col("event_type"), col("value"))
@@ -588,15 +833,7 @@ object ProfileQueries {
     // F*/dof2 on fixed-order doubles, 4-dp floors.
     Q(
       "q_welch_anova",
-      """WITH v AS (SELECT event_type AS g, value FROM events
-        |  WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |per AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(value AS DECIMAL(18,6))) AS s,
-        |    sum(CAST(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
-        |        AS DECIMAL(38,12))) AS q,
-        |    min(CAST(value AS DECIMAL(18,6))) = max(CAST(value AS DECIMAL(18,6)))
-        |      AS cst
-        |  FROM v GROUP BY g),
+      s"""WITH $groupMomentsSql,
         |raw AS (SELECT g, n, cst, CAST(s AS DOUBLE) / n AS xb,
         |    CASE WHEN n >= 2 THEN (CAST(q AS DOUBLE)
         |      - floor(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n * 1e7) / 1e7)
@@ -655,15 +892,7 @@ object ProfileQueries {
     // the 7-dp truncated lanes.
     Q(
       "q_games_howell",
-      """WITH v AS (SELECT event_type AS g, value FROM events
-        |  WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |per AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(value AS DECIMAL(18,6))) AS s,
-        |    sum(CAST(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
-        |        AS DECIMAL(38,12))) AS q,
-        |    min(CAST(value AS DECIMAL(18,6))) = max(CAST(value AS DECIMAL(18,6)))
-        |      AS cst
-        |  FROM v GROUP BY g),
+      s"""WITH $groupMomentsSql,
         |raw AS (SELECT g, n, cst, CAST(s AS DOUBLE) / n AS xb,
         |    CASE WHEN n >= 2 THEN (CAST(q AS DOUBLE)
         |      - floor(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n * 1e7) / 1e7)
@@ -701,15 +930,7 @@ object ProfileQueries {
     // fixed-order doubles, mean_diff 4-dp toward zero, q 4-dp floor.
     Q(
       "q_tukey_hsd",
-      """WITH v AS (SELECT event_type AS g, value FROM events
-        |  WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |per AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(value AS DECIMAL(18,6))) AS s,
-        |    sum(CAST(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
-        |        AS DECIMAL(38,12))) AS q,
-        |    min(CAST(value AS DECIMAL(18,6))) = max(CAST(value AS DECIMAL(18,6)))
-        |      AS cst
-        |  FROM v GROUP BY g),
+      s"""WITH $groupMomentsSql,
         |m AS (SELECT coalesce(sum(n), 0) AS nn, CAST(count(*) AS BIGINT) AS k,
         |    sum(q) AS tq,
         |    sum(CAST(floor(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n * 1e7) / 1e7
@@ -787,7 +1008,7 @@ object ProfileQueries {
     // picks, z lanes 6-dp floored, then the q_anova moment replay.
     Q(
       "q_brown_forsythe",
-      """WITH v AS (SELECT CAST(event_type AS VARCHAR) AS g, CAST(value AS DOUBLE) AS x
+      s"""WITH v AS (SELECT CAST(event_type AS VARCHAR) AS g, CAST(value AS DOUBLE) AS x
         |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
         |cnt AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM v GROUP BY 1),
         |rk AS (SELECT g, greatest(1, CAST(ceil(CAST(n AS DOUBLE) * 0.5) AS BIGINT))
@@ -803,26 +1024,7 @@ object ProfileQueries {
         |    sum(CAST(CAST(value AS DECIMAL(18,6)) * CAST(value AS DECIMAL(18,6))
         |        AS DECIMAL(38,12))) AS q
         |  FROM zt GROUP BY g),
-        |m AS (SELECT
-        |    coalesce(sum(n), 0) AS nn, CAST(count(*) AS BIGINT) AS k,
-        |    sum(s) AS ts, sum(q) AS tq,
-        |    sum(CAST(floor(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n * 1e7) / 1e7
-        |        AS DECIMAL(30,7))) AS w
-        |  FROM per),
-        |d AS (SELECT nn, k,
-        |    greatest(0.0, CAST(tq AS DOUBLE) - CAST(w AS DOUBLE)) AS ssw,
-        |    greatest(0.0, CAST(w AS DOUBLE)
-        |      - CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / CAST(nn AS DOUBLE)) AS ssb
-        |  FROM m)
-        |SELECT CAST(nn AS BIGINT) AS n, k,
-        |  CASE WHEN nn > 0 THEN floor(ssb * 1e4) / 1e4 ELSE 0.0 END AS ss_between,
-        |  CASE WHEN nn > 0 THEN floor(ssw * 1e4) / 1e4 ELSE 0.0 END AS ss_within,
-        |  CASE WHEN k < 2 OR nn <= k OR ssw = 0.0 THEN 0.0
-        |       ELSE floor((ssb / (k - 1)) / (ssw / (nn - k)) * 1e4) / 1e4 END AS f,
-        |  CASE WHEN ssb + ssw > 0 THEN floor(ssb / (ssb + ssw) * 1e4) / 1e4
-        |       ELSE 0.0 END AS eta_sq,
-        |  (k < 2 OR nn <= k OR ssw = 0.0) AS degenerate
-        |FROM d""".stripMargin
+         |$anovaTableSql""".stripMargin
     ) { (s, dir) =>
       graft.operators.Stats.brownForsythe(graft.sources.Tables.events(s, dir),
         col("event_type"), col("value"))
@@ -835,21 +1037,7 @@ object ProfileQueries {
     // 13-digit decimals, H and the tie-corrected H' replayed exactly.
     Q(
       "q_kruskal",
-      s"""WITH sc AS (
-         |  SELECT lang AS g, round(least(1.0, len(${tkSql("text")}) / 400.0), 6) AS v
-         |  FROM documents WHERE lang IS NOT NULL),
-         |vg AS (SELECT v, g, CAST(count(*) AS BIGINT) AS nvg FROM sc GROUP BY 1, 2),
-         |vt AS (SELECT v, CAST(sum(nvg) AS BIGINT) AS t FROM vg GROUP BY 1),
-         |vtc AS (SELECT v, t,
-         |    coalesce(sum(t) OVER (ORDER BY v
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum,
-         |    CAST(CAST(t AS DECIMAL(13,0)) * CAST(t AS DECIMAL(13,0))
-         |      * CAST(t AS DECIMAL(13,0)) - t AS DECIMAL(38,0)) AS tc
-         |  FROM vt),
-         |perg AS (SELECT g, CAST(sum(nvg) AS BIGINT) AS n,
-         |    CAST(sum(CAST(nvg AS DECIMAL(19,0))
-         |      * (CAST(cum AS DECIMAL(19,0)) * 2 + t + 1)) AS DECIMAL(38,0)) AS r2
-         |  FROM vg JOIN vtc USING (v) GROUP BY g),
+      s"""WITH $langRanksSql,
          |m AS (SELECT coalesce(sum(n), 0) AS nn, CAST(count(*) AS BIGINT) AS k,
          |    sum(CAST(r2 AS HUGEINT) * CAST(r2 AS HUGEINT) * 10000000
          |      // (4 * n)) AS s
@@ -874,11 +1062,7 @@ object ProfileQueries {
          |  (k < 2 OR nn < 2 OR corr <= 0.0) AS degenerate
          |FROM e""".stripMargin
     ) { (s, dir) =>
-      import graft.functions.tokens
-      val d = graft.queries.table(s, dir, "documents")
-        .filter(col("lang").isNotNull)
-        .select(col("lang").as("g"),
-          least(lit(1.0), size(tokens(col("text"))) / lit(400.0)).as("v"))
+      val d = langScores(s, dir)
       graft.operators.Stats.kruskalWallis(d, col("g"), col("v"))
     },
 
@@ -888,21 +1072,7 @@ object ProfileQueries {
     // rank variance, z 4-dp toward zero.
     Q(
       "q_dunn",
-      s"""WITH sc AS (
-         |  SELECT lang AS g, round(least(1.0, len(${tkSql("text")}) / 400.0), 6) AS v
-         |  FROM documents WHERE lang IS NOT NULL),
-         |vg AS (SELECT v, g, CAST(count(*) AS BIGINT) AS nvg FROM sc GROUP BY 1, 2),
-         |vt AS (SELECT v, CAST(sum(nvg) AS BIGINT) AS t FROM vg GROUP BY 1),
-         |vtc AS (SELECT v, t,
-         |    coalesce(sum(t) OVER (ORDER BY v
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum,
-         |    CAST(CAST(t AS DECIMAL(13,0)) * CAST(t AS DECIMAL(13,0))
-         |      * CAST(t AS DECIMAL(13,0)) - t AS DECIMAL(38,0)) AS tc
-         |  FROM vt),
-         |perg AS (SELECT g, CAST(sum(nvg) AS BIGINT) AS n,
-         |    CAST(sum(CAST(nvg AS DECIMAL(19,0))
-         |      * (CAST(cum AS DECIMAL(19,0)) * 2 + t + 1)) AS DECIMAL(38,0)) AS r2
-         |  FROM vg JOIN vtc USING (v) GROUP BY g),
+      s"""WITH $langRanksSql,
          |ties AS (SELECT CAST(coalesce(sum(tc), 0) AS DECIMAL(38,0)) AS sumtc FROM vtc),
          |tot AS (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS nn,
          |    CAST(count(*) AS BIGINT) AS k FROM perg),
@@ -930,11 +1100,7 @@ object ProfileQueries {
          |  degenerate
          |FROM z ORDER BY g_a, g_b""".stripMargin
     ) { (s, dir) =>
-      import graft.functions.tokens
-      val d = graft.queries.table(s, dir, "documents")
-        .filter(col("lang").isNotNull)
-        .select(col("lang").as("g"),
-          least(lit(1.0), size(tokens(col("text"))) / lit(400.0)).as("v"))
+      val d = langScores(s, dir)
       graft.operators.Stats.dunnTest(d, col("g"), col("v"))
     },
 
@@ -1121,10 +1287,7 @@ object ProfileQueries {
            |FROM st ORDER BY threshold""".stripMargin
       }
     ) { (s, dir) =>
-      val d = table(s, dir, "documents").select(
-        least(lit(1.0), size(graft.functions.tokens(col("text"))) / lit(400.0))
-          .as("score"),
-        lower(col("text")).contains("data").as("y"))
+      val d = scoredLabels(s, dir)
       graft.operators.Stats.prCurve(d, col("score"), col("y"),
           Seq(0.1, 0.25, 0.5, 0.75, 0.9))
         .orderBy("threshold")
@@ -1161,10 +1324,7 @@ object ProfileQueries {
          |  END AS auc
          |FROM c""".stripMargin
     ) { (s, dir) =>
-      val d = table(s, dir, "documents").select(
-        least(lit(1.0), size(graft.functions.tokens(col("text"))) / lit(400.0))
-          .as("score"),
-        lower(col("text")).contains("data").as("y"))
+      val d = scoredLabels(s, dir)
       graft.operators.Stats.auc(d, col("score"), col("y"))
     },
 
@@ -1196,10 +1356,7 @@ object ProfileQueries {
          |    / CAST(sum(n) OVER () AS DOUBLE) * 1e4) / 1e4 AS ece
          |FROM w ORDER BY bin""".stripMargin
     ) { (s, dir) =>
-      val d = table(s, dir, "documents").select(
-        least(lit(1.0), size(graft.functions.tokens(col("text"))) / lit(400.0))
-          .as("score"),
-        lower(col("text")).contains("data").as("y"))
+      val d = scoredLabels(s, dir)
       graft.operators.Stats.calibration(d, col("score"), col("y"), nBins = 10)
     },
 
@@ -1250,10 +1407,7 @@ object ProfileQueries {
            |FROM agg""".stripMargin
       }
     ) { (s, dir) =>
-      val d = table(s, dir, "documents").select(
-        least(lit(1.0), size(graft.functions.tokens(col("text"))) / lit(400.0))
-          .as("score"),
-        lower(col("text")).contains("data").as("y"))
+      val d = scoredLabels(s, dir)
       graft.operators.Stats.hosmerLemeshow(d, col("score"), col("y"),
         bins = 10)
     },
@@ -1304,10 +1458,7 @@ object ProfileQueries {
          |  floor(max(ybar) * (1.0 - max(ybar)) * 1e4) / 1e4 AS uncertainty
          |FROM t3""".stripMargin
     ) { (s, dir) =>
-      val d = table(s, dir, "documents").select(
-        least(lit(1.0), size(graft.functions.tokens(col("text"))) / lit(400.0))
-          .as("score"),
-        lower(col("text")).contains("data").as("y"))
+      val d = scoredLabels(s, dir)
       graft.operators.Stats.brierDecomposition(d, col("score"), col("y"),
         nBins = 10)
     },
@@ -1548,14 +1699,7 @@ object ProfileQueries {
     // decimals (order-independent sum), chi2/Cramér's V truncated 4 dp.
     Q(
       "q_chi_squared",
-      """WITH cells AS (
-        |  SELECT l_returnflag AS a, l_linestatus AS b, count(*) AS n
-        |  FROM lineitem GROUP BY 1, 2),
-        |ra AS (SELECT a, sum(n) AS rt FROM cells GROUP BY 1),
-        |rb AS (SELECT b, sum(n) AS ct FROM cells GROUP BY 1),
-        |t AS (SELECT sum(n) AS tot, count(*) AS n_cells FROM cells),
-        |nr AS (SELECT count(*) AS r FROM ra),
-        |nc AS (SELECT count(*) AS c FROM rb),
+      s"""WITH $contingencySql,
         |terms AS (
         |  SELECT floor(
         |    (CAST(cells.n AS DOUBLE)
@@ -1587,14 +1731,7 @@ object ProfileQueries {
     // of exact longs (the bartlett discipline).
     Q(
       "q_g_test",
-      """WITH cells AS (
-        |  SELECT l_returnflag AS a, l_linestatus AS b, count(*) AS n
-        |  FROM lineitem GROUP BY 1, 2),
-        |ra AS (SELECT a, sum(n) AS rt FROM cells GROUP BY 1),
-        |rb AS (SELECT b, sum(n) AS ct FROM cells GROUP BY 1),
-        |t AS (SELECT sum(n) AS tot, count(*) AS n_cells FROM cells),
-        |nr AS (SELECT count(*) AS r FROM ra),
-        |nc AS (SELECT count(*) AS c FROM rb),
+      s"""WITH $contingencySql,
         |terms AS (
         |  SELECT CASE WHEN cells.n > 0 THEN
         |    CAST(floor(CAST(cells.n AS DOUBLE)
@@ -1888,13 +2025,7 @@ object ProfileQueries {
     // the end. Open vs finished orders on o_totalprice.
     Q(
       "q_ks_test",
-      """WITH g AS (
-        |  SELECT round(CAST(o_totalprice AS DOUBLE), 4) AS v,
-        |    sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS na,
-        |    sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS nb
-        |  FROM orders
-        |  WHERE o_totalprice IS NOT NULL AND o_orderstatus IN ('O', 'F')
-        |  GROUP BY 1),
+      s"""WITH $openFinishedPricesSql,
         |c AS (
         |  SELECT
         |    sum(na) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
@@ -1932,13 +2063,7 @@ object ProfileQueries {
     // truncated into exact decimals.
     Q(
       "q_cvm",
-      """WITH g AS (
-        |  SELECT round(CAST(o_totalprice AS DOUBLE), 4) AS v,
-        |    sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS na,
-        |    sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS nb
-        |  FROM orders
-        |  WHERE o_totalprice IS NOT NULL AND o_orderstatus IN ('O', 'F')
-        |  GROUP BY 1),
+      s"""WITH $openFinishedPricesSql,
         |c AS (
         |  SELECT na, nb,
         |    sum(na) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
@@ -2166,39 +2291,8 @@ object ProfileQueries {
     // replay from exact decimal sums + floor truncation.
     Q(
       "q_seasonal",
-      """WITH b AS (
-        |  SELECT event_type AS key,
-        |    epoch_ns(ts) // 3600000000000 AS bucket,
-        |    CAST(count(*) AS DOUBLE) AS value
-        |  FROM events GROUP BY 1, 2),
-        |t AS (
-        |  SELECT key, bucket, value,
-        |    count(value) OVER w AS n,
-        |    sum(CAST(value AS DECIMAL(18,6))) OVER w AS s
-        |  FROM b
-        |  WINDOW w AS (PARTITION BY key ORDER BY bucket
-        |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        |tr AS (
-        |  SELECT key, bucket, value,
-        |    CASE WHEN n = 25 THEN floor(CAST(s AS DOUBLE) / 25 * 1e4) / 1e4 END AS trend,
-        |    ((bucket % 25) + 25) % 25 AS phase
-        |  FROM t),
-        |se AS (
-        |  SELECT key AS sk, phase AS sp,
-        |    CAST(sum(CAST(value - trend AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS praw
-        |  FROM tr WHERE trend IS NOT NULL GROUP BY 1, 2),
-        |gr AS (
-        |  SELECT sk AS gk,
-        |    CAST(sum(CAST(praw AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS gmean
-        |  FROM se GROUP BY 1),
-        |o AS (
-        |  SELECT tr.key, tr.bucket, tr.value, tr.trend,
-        |    sign(coalesce(praw, 0.0) - coalesce(gmean, 0.0))
-        |      * (floor(abs(coalesce(praw, 0.0) - coalesce(gmean, 0.0)) * 1e4) / 1e4)
-        |      + 0.0 AS seasonal
-        |  FROM tr
-        |  LEFT JOIN se ON tr.key = se.sk AND tr.phase = se.sp
-        |  LEFT JOIN gr ON tr.key = gr.gk)
+      s"""WITH $hourlyCountsSql,
+         |$seasonalDecomposeSql
         |SELECT key, CAST(bucket AS BIGINT) AS bucket, value, trend, seasonal,
         |  CASE WHEN trend IS NOT NULL THEN
         |    sign(value - trend - seasonal)
@@ -2217,39 +2311,8 @@ object ProfileQueries {
     // double ratio each.
     Q(
       "q_seasonal_strength",
-      """WITH b AS (
-        |  SELECT event_type AS key,
-        |    epoch_ns(ts) // 3600000000000 AS bucket,
-        |    CAST(count(*) AS DOUBLE) AS value
-        |  FROM events GROUP BY 1, 2),
-        |t AS (
-        |  SELECT key, bucket, value,
-        |    count(value) OVER w AS n,
-        |    sum(CAST(value AS DECIMAL(18,6))) OVER w AS s
-        |  FROM b
-        |  WINDOW w AS (PARTITION BY key ORDER BY bucket
-        |    ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)),
-        |tr AS (
-        |  SELECT key, bucket, value,
-        |    CASE WHEN n = 25 THEN floor(CAST(s AS DOUBLE) / 25 * 1e4) / 1e4 END AS trend,
-        |    ((bucket % 25) + 25) % 25 AS phase
-        |  FROM t),
-        |se AS (
-        |  SELECT key AS sk, phase AS sp,
-        |    CAST(sum(CAST(value - trend AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS praw
-        |  FROM tr WHERE trend IS NOT NULL GROUP BY 1, 2),
-        |gr AS (
-        |  SELECT sk AS gk,
-        |    CAST(sum(CAST(praw AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS gmean
-        |  FROM se GROUP BY 1),
-        |o AS (
-        |  SELECT tr.key, tr.bucket, tr.value, tr.trend,
-        |    sign(coalesce(praw, 0.0) - coalesce(gmean, 0.0))
-        |      * (floor(abs(coalesce(praw, 0.0) - coalesce(gmean, 0.0)) * 1e4) / 1e4)
-        |      + 0.0 AS seasonal
-        |  FROM tr
-        |  LEFT JOIN se ON tr.key = se.sk AND tr.phase = se.sp
-        |  LEFT JOIN gr ON tr.key = gr.gk),
+      s"""WITH $hourlyCountsSql,
+         |$seasonalDecomposeSql,
         |dec AS (
         |  SELECT key, trend, seasonal,
         |    CASE WHEN trend IS NOT NULL THEN
@@ -2312,9 +2375,7 @@ object ProfileQueries {
     Q("q_cms_heavy",
       s"""WITH RECURSIVE
          |tok AS (
-         |  SELECT unnest(list_filter(regexp_split_to_array(
-         |    regexp_replace(lower(text), '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+'),
-         |    t -> len(t) > 0)) AS term
+         |  SELECT unnest(${tkSql("text")}) AS term
          |  FROM documents),
          |tcnt AS (SELECT term, count(*)::BIGINT AS exact_cnt FROM tok GROUP BY term),
          |shd AS (SELECT DISTINCT term AS s FROM tok),
@@ -2492,54 +2553,10 @@ object ProfileQueries {
     // C65: autocorrelation of hourly event volumes per type, lags
     // 1..3, over a zero-filled dense grid (the ACF row-lag contract).
     Q(
-      "q_acf", {
-        def lagSel(l: Int): String =
-          s"""SELECT key, $l AS lag,
-             |  CAST(c6 AS DECIMAL(38,0))
-             |    * lag(c6, $l) OVER (PARTITION BY key ORDER BY bucket) AS p
-             |FROM c""".stripMargin
-        s"""WITH b AS (
-           |  SELECT event_type AS key,
-           |    epoch_ns(ts) // 3600000000000 AS bucket,
-           |    CAST(count(*) AS DOUBLE) AS value
-           |  FROM events GROUP BY 1, 2),
-           |sp AS (SELECT key, min(bucket) AS lo, max(bucket) AS hi
-           |  FROM b GROUP BY 1),
-           |grid AS (SELECT key, unnest(range(lo, hi + 1)) AS bucket FROM sp),
-           |d AS (
-           |  SELECT g.key, g.bucket, coalesce(b.value, 0.0) AS value
-           |  FROM grid g LEFT JOIN b ON g.key = b.key AND g.bucket = b.bucket),
-           |mu AS (
-           |  SELECT key,
-           |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mu
-           |  FROM d GROUP BY 1),
-           |c AS (
-           |  SELECT d.key, d.bucket,
-           |    CAST((d.value - mu.mu) * 1e6 AS DECIMAL(18,0)) AS c6
-           |  FROM d JOIN mu ON d.key = mu.key),
-           |den AS (
-           |  SELECT key, sum(CAST(c6 AS DECIMAL(38,0)) * c6) AS dn
-           |  FROM c GROUP BY 1),
-           |l AS (
-           |  ${lagSel(1)}
-           |  UNION ALL
-           |  ${lagSel(2)}
-           |  UNION ALL
-           |  ${lagSel(3)}),
-           |a AS (
-           |  SELECT key, lag, CAST(count(p) AS BIGINT) AS n_pairs,
-           |    coalesce(sum(p), 0) AS num
-           |  FROM l GROUP BY 1, 2)
-           |SELECT a.key, a.lag, a.n_pairs,
-           |  CASE WHEN CAST(den.dn AS DOUBLE) <= 0.0 THEN CAST(0.0 AS DOUBLE)
-           |    ELSE sign(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
-           |      * (floor(abs(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
-           |        * 1e4) / 1e4) + 0.0
-           |  END AS acf,
-           |  CAST(den.dn AS DOUBLE) <= 0.0 AS degenerate
-           |FROM a JOIN den ON a.key = den.key
-           |ORDER BY a.key, a.lag""".stripMargin
-      }
+      "q_acf",
+      s"""WITH ${acfChainSql(3)}
+         |$acfSelectSql
+         |ORDER BY a.key, a.lag""".stripMargin
     ) { (s, dir) =>
       val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.autocorrelation(dense, col("key"), col("bucket"),
@@ -2565,13 +2582,7 @@ object ProfileQueries {
            |    CAST(count(*) AS DOUBLE) AS x,
            |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS y
            |  FROM events GROUP BY 1, 2),
-           |sp AS (SELECT key, min(bucket) AS lo, max(bucket) AS hi
-           |  FROM b GROUP BY 1),
-           |grid AS (SELECT key, unnest(range(lo, hi + 1)) AS bucket FROM sp),
-           |d AS (
-           |  SELECT g.key, g.bucket, coalesce(b.x, 0.0) AS x,
-           |    coalesce(b.y, 0.0) AS y
-           |  FROM grid g LEFT JOIN b ON g.key = b.key AND g.bucket = b.bucket),
+           |${zeroFillHoursSql("x", "y")},
            |mu AS (
            |  SELECT key,
            |    CAST(sum(CAST(x AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mx,
@@ -2817,10 +2828,8 @@ object ProfileQueries {
     // contract as TRUE, the engine verifies it empirically.
     Q(
       "q_freq_sketch",
-      """WITH tok AS (
-        |  SELECT unnest(list_filter(regexp_split_to_array(
-        |    regexp_replace(lower(text), '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+'),
-        |    t -> len(t) > 0)) AS item
+      s"""WITH tok AS (
+         |  SELECT unnest(${tkSql("text")}) AS item
         |  FROM documents),
         |c AS (SELECT item, CAST(count(*) AS BIGINT) AS exact_n
         |      FROM tok GROUP BY 1)
@@ -2885,14 +2894,7 @@ object ProfileQueries {
         |  c.p_value IS NULL AS untested
         |FROM c CROSS JOIN k ORDER BY c.key""".stripMargin
     ) { (s, dir) =>
-      val h = table(s, dir, "documents").select(
-        (col("doc_id") % 80).as("g"),
-        ((col("doc_id") * 7919) % 997).as("hv"))
-      val hyp = h.groupBy("g").agg((min(col("hv")) / lit(996.0)).as("base"))
-        .select(col("g").as("key"),
-          when(col("g") % 13 === 0, lit(null).cast("double"))
-            .when(col("g") % 7 === 0, col("base") * lit(0.001))
-            .otherwise(col("base")).as("p"))
+      val hyp = plantedPValues(s, dir)
       graft.operators.Stats.benjaminiHochberg(hyp, col("key"), col("p"),
           q = 0.05)
         .orderBy("key")
@@ -3030,14 +3032,7 @@ object ProfileQueries {
         |FROM h WHERE p IS NULL
         |ORDER BY key""".stripMargin
     ) { (s, dir) =>
-      val h = table(s, dir, "documents").select(
-        (col("doc_id") % 80).as("g"),
-        ((col("doc_id") * 7919) % 997).as("hv"))
-      val hyp = h.groupBy("g").agg((min(col("hv")) / lit(996.0)).as("base"))
-        .select(col("g").as("key"),
-          when(col("g") % 13 === 0, lit(null).cast("double"))
-            .when(col("g") % 7 === 0, col("base") * lit(0.001))
-            .otherwise(col("base")).as("p"))
+      val hyp = plantedPValues(s, dir)
       graft.operators.Stats.holmBonferroni(hyp, col("key"), col("p"),
           alpha = 0.05)
         .orderBy("key")
@@ -3048,65 +3043,23 @@ object ProfileQueries {
     // white-noise gate); the probe to run before committing any
     // seasonal period.
     Q(
-      "q_dominant_period", {
-        val maxLag = 36
-        val lagSels = (1 to maxLag).map { l =>
-          s"""SELECT key, $l AS lag,
-             |  CAST(c6 AS DECIMAL(38,0))
-             |    * lag(c6, $l) OVER (PARTITION BY key ORDER BY bucket) AS p
-             |FROM c""".stripMargin
-        }.mkString("\n  UNION ALL\n  ")
-        s"""WITH b AS (
-           |  SELECT event_type AS key,
-           |    epoch_ns(ts) // 3600000000000 AS bucket,
-           |    CAST(count(*) AS DOUBLE) AS value
-           |  FROM events GROUP BY 1, 2),
-           |sp AS (SELECT key, min(bucket) AS lo, max(bucket) AS hi
-           |  FROM b GROUP BY 1),
-           |grid AS (SELECT key, unnest(range(lo, hi + 1)) AS bucket FROM sp),
-           |d AS (
-           |  SELECT g.key, g.bucket, coalesce(b.value, 0.0) AS value
-           |  FROM grid g LEFT JOIN b ON g.key = b.key AND g.bucket = b.bucket),
-           |mu AS (
-           |  SELECT key,
-           |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mu
-           |  FROM d GROUP BY 1),
-           |c AS (
-           |  SELECT d.key, d.bucket,
-           |    CAST((d.value - mu.mu) * 1e6 AS DECIMAL(18,0)) AS c6
-           |  FROM d JOIN mu ON d.key = mu.key),
-           |den AS (
-           |  SELECT key, sum(CAST(c6 AS DECIMAL(38,0)) * c6) AS dn
-           |  FROM c GROUP BY 1),
-           |l AS (
-           |  $lagSels),
-           |a AS (
-           |  SELECT key, lag, CAST(count(p) AS BIGINT) AS n_pairs,
-           |    coalesce(sum(p), 0) AS num
-           |  FROM l GROUP BY 1, 2),
-           |acf AS (
-           |  SELECT a.key, a.lag, a.n_pairs,
-           |    CASE WHEN CAST(den.dn AS DOUBLE) <= 0.0 THEN CAST(0.0 AS DOUBLE)
-           |      ELSE sign(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
-           |        * (floor(abs(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
-           |          * 1e4) / 1e4) + 0.0
-           |    END AS acf,
-           |    CAST(den.dn AS DOUBLE) <= 0.0 AS degenerate
-           |  FROM a JOIN den ON a.key = den.key
-           |  WHERE a.lag >= 2),
-           |top AS (
-           |  SELECT key, lag, n_pairs, acf, degenerate,
-           |    row_number() OVER (PARTITION BY key ORDER BY acf DESC, lag ASC)
-           |      AS r
-           |  FROM acf)
-           |SELECT key, CAST(lag AS INT) AS period, acf AS acf_peak,
-           |  CAST(n_pairs + lag AS BIGINT) AS n,
-           |  (NOT degenerate)
-           |    AND acf > 2.0 / sqrt(CAST(n_pairs + lag AS DOUBLE))
-           |    AS significant,
-           |  degenerate
-           |FROM top WHERE r = 1 ORDER BY key""".stripMargin
-      }
+      "q_dominant_period",
+      s"""WITH ${acfChainSql(36)},
+         |acf AS (
+         |  $acfSelectSql
+         |  WHERE a.lag >= 2),
+         |top AS (
+         |  SELECT key, lag, n_pairs, acf, degenerate,
+         |    row_number() OVER (PARTITION BY key ORDER BY acf DESC, lag ASC)
+         |      AS r
+         |  FROM acf)
+         |SELECT key, CAST(lag AS INT) AS period, acf AS acf_peak,
+         |  CAST(n_pairs + lag AS BIGINT) AS n,
+         |  (NOT degenerate)
+         |    AND acf > 2.0 / sqrt(CAST(n_pairs + lag AS DOUBLE))
+         |    AS significant,
+         |  degenerate
+         |FROM top WHERE r = 1 ORDER BY key""".stripMargin
     ) { (s, dir) =>
       val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.dominantPeriod(dense, col("key"), col("bucket"),
@@ -3314,74 +3267,30 @@ object ProfileQueries {
     // Q = n(n+2)·Σ r_k²/(n−k) over lags 1..3 with r_k the published
     // 4-dp autocorrelations, so the oracle replays C65 then the sum.
     Q(
-      "q_ljung_box", {
-        def lagSel(l: Int): String =
-          s"""SELECT key, $l AS lag,
-             |  CAST(c6 AS DECIMAL(38,0))
-             |    * lag(c6, $l) OVER (PARTITION BY key ORDER BY bucket) AS p
-             |FROM c""".stripMargin
-        s"""WITH b AS (
-           |  SELECT event_type AS key,
-           |    epoch_ns(ts) // 3600000000000 AS bucket,
-           |    CAST(count(*) AS DOUBLE) AS value
-           |  FROM events GROUP BY 1, 2),
-           |sp AS (SELECT key, min(bucket) AS lo, max(bucket) AS hi
-           |  FROM b GROUP BY 1),
-           |grid AS (SELECT key, unnest(range(lo, hi + 1)) AS bucket FROM sp),
-           |d AS (
-           |  SELECT g.key, g.bucket, coalesce(b.value, 0.0) AS value
-           |  FROM grid g LEFT JOIN b ON g.key = b.key AND g.bucket = b.bucket),
-           |mu AS (
-           |  SELECT key,
-           |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mu
-           |  FROM d GROUP BY 1),
-           |c AS (
-           |  SELECT d.key, d.bucket,
-           |    CAST((d.value - mu.mu) * 1e6 AS DECIMAL(18,0)) AS c6
-           |  FROM d JOIN mu ON d.key = mu.key),
-           |den AS (
-           |  SELECT key, sum(CAST(c6 AS DECIMAL(38,0)) * c6) AS dn
-           |  FROM c GROUP BY 1),
-           |l AS (
-           |  ${lagSel(1)}
-           |  UNION ALL
-           |  ${lagSel(2)}
-           |  UNION ALL
-           |  ${lagSel(3)}),
-           |a AS (
-           |  SELECT key, lag, CAST(count(p) AS BIGINT) AS n_pairs,
-           |    coalesce(sum(p), 0) AS num
-           |  FROM l GROUP BY 1, 2),
-           |r AS (
-           |  SELECT a.key, a.lag, a.n_pairs,
-           |    CASE WHEN CAST(den.dn AS DOUBLE) <= 0.0 THEN CAST(0.0 AS DOUBLE)
-           |      ELSE sign(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
-           |        * (floor(abs(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
-           |          * 1e4) / 1e4) + 0.0
-           |    END AS acf,
-           |    CAST(den.dn AS DOUBLE) <= 0.0 AS degenerate
-           |  FROM a JOIN den ON a.key = den.key),
-           |g AS (
-           |  SELECT key,
-           |    max(CASE WHEN lag = 1 THEN n_pairs + 1 END) AS n,
-           |    max(lag) AS max_lag,
-           |    sum(CASE WHEN n_pairs > 0
-           |      THEN CAST(floor(acf * acf / n_pairs * 1e9) / 1e9
-           |        AS DECIMAL(28,9)) END) AS s,
-           |    bool_or(degenerate) AS deg0
-           |  FROM r GROUP BY key),
-           |g2 AS (SELECT key, n, max_lag, s,
-           |    (deg0 OR n <= max_lag) AS degenerate FROM g)
-           |SELECT key, max_lag, n,
-           |  CASE WHEN degenerate THEN 0.0
-           |    ELSE floor(CAST(n AS DOUBLE) * (n + 2) * CAST(s AS DOUBLE)
-           |      * 1e4) / 1e4 END AS q_stat,
-           |  (NOT degenerate) AND
-           |    CAST(n AS DOUBLE) * (n + 2) * CAST(s AS DOUBLE) > 7.815
-           |    AS significant,
-           |  degenerate
-           |FROM g2 ORDER BY key""".stripMargin
-      }
+      "q_ljung_box",
+      s"""WITH ${acfChainSql(3)},
+         |r AS (
+         |  $acfSelectSql),
+         |g AS (
+         |  SELECT key,
+         |    max(CASE WHEN lag = 1 THEN n_pairs + 1 END) AS n,
+         |    max(lag) AS max_lag,
+         |    sum(CASE WHEN n_pairs > 0
+         |      THEN CAST(floor(acf * acf / n_pairs * 1e9) / 1e9
+         |        AS DECIMAL(28,9)) END) AS s,
+         |    bool_or(degenerate) AS deg0
+         |  FROM r GROUP BY key),
+         |g2 AS (SELECT key, n, max_lag, s,
+         |    (deg0 OR n <= max_lag) AS degenerate FROM g)
+         |SELECT key, max_lag, n,
+         |  CASE WHEN degenerate THEN 0.0
+         |    ELSE floor(CAST(n AS DOUBLE) * (n + 2) * CAST(s AS DOUBLE)
+         |      * 1e4) / 1e4 END AS q_stat,
+         |  (NOT degenerate) AND
+         |    CAST(n AS DOUBLE) * (n + 2) * CAST(s AS DOUBLE) > 7.815
+         |    AS significant,
+         |  degenerate
+         |FROM g2 ORDER BY key""".stripMargin
     ) { (s, dir) =>
       val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.ljungBox(dense, col("key"), col("bucket"),
@@ -3393,85 +3302,41 @@ object ProfileQueries {
     // Durbin-Levinson closed forms over the q_ljung_box ACF chain,
     // n from the lag-1 row, nullif-guarded denominators.
     Q(
-      "q_pacf", {
-        def lagSel(l: Int): String =
-          s"""SELECT key, $l AS lag,
-             |  CAST(c6 AS DECIMAL(38,0))
-             |    * lag(c6, $l) OVER (PARTITION BY key ORDER BY bucket) AS p
-             |FROM c""".stripMargin
-        s"""WITH b AS (
-           |  SELECT event_type AS key,
-           |    epoch_ns(ts) // 3600000000000 AS bucket,
-           |    CAST(count(*) AS DOUBLE) AS value
-           |  FROM events GROUP BY 1, 2),
-           |sp AS (SELECT key, min(bucket) AS lo, max(bucket) AS hi
-           |  FROM b GROUP BY 1),
-           |grid AS (SELECT key, unnest(range(lo, hi + 1)) AS bucket FROM sp),
-           |d AS (
-           |  SELECT g.key, g.bucket, coalesce(b.value, 0.0) AS value
-           |  FROM grid g LEFT JOIN b ON g.key = b.key AND g.bucket = b.bucket),
-           |mu AS (
-           |  SELECT key,
-           |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mu
-           |  FROM d GROUP BY 1),
-           |c AS (
-           |  SELECT d.key, d.bucket,
-           |    CAST((d.value - mu.mu) * 1e6 AS DECIMAL(18,0)) AS c6
-           |  FROM d JOIN mu ON d.key = mu.key),
-           |den AS (
-           |  SELECT key, sum(CAST(c6 AS DECIMAL(38,0)) * c6) AS dn
-           |  FROM c GROUP BY 1),
-           |l AS (
-           |  ${lagSel(1)}
-           |  UNION ALL
-           |  ${lagSel(2)}
-           |  UNION ALL
-           |  ${lagSel(3)}),
-           |a AS (
-           |  SELECT key, lag, CAST(count(p) AS BIGINT) AS n_pairs,
-           |    coalesce(sum(p), 0) AS num
-           |  FROM l GROUP BY 1, 2),
-           |r AS (
-           |  SELECT a.key, a.lag, a.n_pairs,
-           |    CASE WHEN CAST(den.dn AS DOUBLE) <= 0.0 THEN CAST(0.0 AS DOUBLE)
-           |      ELSE sign(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
-           |        * (floor(abs(CAST(a.num AS DOUBLE) / CAST(den.dn AS DOUBLE))
-           |          * 1e4) / 1e4) + 0.0
-           |    END AS acf,
-           |    CAST(den.dn AS DOUBLE) <= 0.0 AS degenerate
-           |  FROM a JOIN den ON a.key = den.key),
-           |pv AS (
-           |  SELECT key,
-           |    max(CASE WHEN lag = 1 THEN n_pairs + 1 END) AS n,
-           |    max(CASE WHEN lag = 1 THEN acf END) AS r1,
-           |    max(CASE WHEN lag = 2 THEN acf END) AS r2,
-           |    max(CASE WHEN lag = 3 THEN acf END) AS r3,
-           |    bool_or(degenerate) AS deg
-           |  FROM r GROUP BY key),
-           |f AS (
-           |  SELECT key, n, r1, r2, r3, deg,
-           |    (r2 - r1 * r1) / nullif(1.0 - r1 * r1, 0.0) AS p2
-           |  FROM pv),
-           |f2 AS (
-           |  SELECT *, r1 * (1.0 - p2) AS phi21 FROM f),
-           |f3 AS (
-           |  SELECT *,
-           |    (r3 - phi21 * r2 - p2 * r1)
-           |      / nullif(1.0 - phi21 * r1 - p2 * r2, 0.0) AS p3
-           |  FROM f2),
-           |g AS (SELECT *,
-           |    (deg OR n <= 3 OR p2 IS NULL OR p3 IS NULL) AS degenerate
-           |  FROM f3)
-           |SELECT key, n,
-           |  CASE WHEN degenerate THEN 0.0
-           |    ELSE sign(r1) * (floor(abs(r1) * 1e4) / 1e4) + 0.0 END AS pacf1,
-           |  CASE WHEN degenerate THEN 0.0
-           |    ELSE sign(p2) * (floor(abs(p2) * 1e4) / 1e4) + 0.0 END AS pacf2,
-           |  CASE WHEN degenerate THEN 0.0
-           |    ELSE sign(p3) * (floor(abs(p3) * 1e4) / 1e4) + 0.0 END AS pacf3,
-           |  degenerate
-           |FROM g ORDER BY key""".stripMargin
-      }
+      "q_pacf",
+      s"""WITH ${acfChainSql(3)},
+         |r AS (
+         |  $acfSelectSql),
+         |pv AS (
+         |  SELECT key,
+         |    max(CASE WHEN lag = 1 THEN n_pairs + 1 END) AS n,
+         |    max(CASE WHEN lag = 1 THEN acf END) AS r1,
+         |    max(CASE WHEN lag = 2 THEN acf END) AS r2,
+         |    max(CASE WHEN lag = 3 THEN acf END) AS r3,
+         |    bool_or(degenerate) AS deg
+         |  FROM r GROUP BY key),
+         |f AS (
+         |  SELECT key, n, r1, r2, r3, deg,
+         |    (r2 - r1 * r1) / nullif(1.0 - r1 * r1, 0.0) AS p2
+         |  FROM pv),
+         |f2 AS (
+         |  SELECT *, r1 * (1.0 - p2) AS phi21 FROM f),
+         |f3 AS (
+         |  SELECT *,
+         |    (r3 - phi21 * r2 - p2 * r1)
+         |      / nullif(1.0 - phi21 * r1 - p2 * r2, 0.0) AS p3
+         |  FROM f2),
+         |g AS (SELECT *,
+         |    (deg OR n <= 3 OR p2 IS NULL OR p3 IS NULL) AS degenerate
+         |  FROM f3)
+         |SELECT key, n,
+         |  CASE WHEN degenerate THEN 0.0
+         |    ELSE sign(r1) * (floor(abs(r1) * 1e4) / 1e4) + 0.0 END AS pacf1,
+         |  CASE WHEN degenerate THEN 0.0
+         |    ELSE sign(p2) * (floor(abs(p2) * 1e4) / 1e4) + 0.0 END AS pacf2,
+         |  CASE WHEN degenerate THEN 0.0
+         |    ELSE sign(p3) * (floor(abs(p3) * 1e4) / 1e4) + 0.0 END AS pacf3,
+         |  degenerate
+         |FROM g ORDER BY key""".stripMargin
     ) { (s, dir) =>
       val dense = zeroFillHours(hourlyCounts(s, dir), "value")
       graft.operators.Stats.pacf(dense, col("key"), col("bucket"),
@@ -3484,25 +3349,9 @@ object ProfileQueries {
     // arithmetic, 0.463 the 5% level-test critical value.
     Q(
       "q_kpss",
-      """WITH b AS (
-        |  SELECT event_type AS key,
-        |    epoch_ns(ts) // 3600000000000 AS bucket,
-        |    CAST(count(*) AS DOUBLE) AS value
-        |  FROM events GROUP BY 1, 2),
-        |sp AS (SELECT key, min(bucket) AS lo, max(bucket) AS hi
-        |  FROM b GROUP BY 1),
-        |grid AS (SELECT key, unnest(range(lo, hi + 1)) AS bucket FROM sp),
-        |d AS (
-        |  SELECT g.key, g.bucket, coalesce(b.value, 0.0) AS value
-        |  FROM grid g LEFT JOIN b ON g.key = b.key AND g.bucket = b.bucket),
-        |mu AS (
-        |  SELECT key,
-        |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mu
-        |  FROM d GROUP BY 1),
-        |c AS (
-        |  SELECT d.key, d.bucket,
-        |    CAST((d.value - mu.mu) * 1e6 AS DECIMAL(18,0)) AS c6
-        |  FROM d JOIN mu ON d.key = mu.key),
+      s"""WITH $hourlyCountsSql,
+         |${zeroFillHoursSql("value")},
+         |$demeanSql,
         |s AS (
         |  SELECT key, bucket, c6,
         |    CAST(sum(c6) OVER (PARTITION BY key ORDER BY bucket
@@ -3533,40 +3382,8 @@ object ProfileQueries {
     // residuals of the per-key OLS trend line, lag-difference ratio.
     Q(
       "q_durbin_watson",
-      """WITH b AS (
-        |  SELECT event_type AS key,
-        |    CAST(epoch_ns(ts) // 3600000000000 AS DOUBLE) AS x,
-        |    CAST(count(*) AS DOUBLE) AS y
-        |  FROM events GROUP BY key, epoch_ns(ts) // 3600000000000),
-        |m AS (
-        |  SELECT key, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(x AS DECIMAL(19,6))) AS sx,
-        |    sum(CAST(y AS DECIMAL(19,6))) AS sy,
-        |    sum(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS sxy,
-        |    sum(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))) AS sxx
-        |  FROM b GROUP BY key),
-        |f AS (
-        |  SELECT key, n,
-        |    CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0 THEN 0.0
-        |      ELSE (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |        / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END AS slope,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0 AS flatx
-        |  FROM m),
-        |r AS (
-        |  SELECT b.key, b.x, f.n, f.flatx, b.y - f.slope * b.x AS e
-        |  FROM b JOIN f ON b.key = f.key),
-        |emu AS (
-        |  SELECT key,
-        |    CAST(sum(CAST(e AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mu
-        |  FROM r GROUP BY key),
-        |r6 AS (
-        |  SELECT r.key, r.x, r.n, r.flatx,
-        |    CAST((r.e - emu.mu) * 1e6 AS DECIMAL(18,0)) AS e6
-        |  FROM r JOIN emu ON r.key = emu.key),
+      s"""WITH $hourlyTrendSumsSql,
+         |$trendResidualsSql,
         |lagd AS (
         |  SELECT key, n, flatx, e6,
         |    CAST(e6 - lag(e6, 1) OVER (PARTITION BY key ORDER BY x, e6)
@@ -3599,40 +3416,8 @@ object ProfileQueries {
     // q_durbin_watson and q_cooks_distance.
     Q(
       "q_breusch_pagan",
-      """WITH b AS (
-        |  SELECT event_type AS key,
-        |    CAST(epoch_ns(ts) // 3600000000000 AS DOUBLE) AS x,
-        |    CAST(count(*) AS DOUBLE) AS y
-        |  FROM events GROUP BY key, epoch_ns(ts) // 3600000000000),
-        |m AS (
-        |  SELECT key, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(x AS DECIMAL(19,6))) AS sx,
-        |    sum(CAST(y AS DECIMAL(19,6))) AS sy,
-        |    sum(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS sxy,
-        |    sum(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))) AS sxx
-        |  FROM b GROUP BY key),
-        |f AS (
-        |  SELECT key, n,
-        |    CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0 THEN 0.0
-        |      ELSE (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |        / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END AS slope,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0 AS flatx
-        |  FROM m),
-        |r AS (
-        |  SELECT b.key, b.x, f.n, f.flatx, b.y - f.slope * b.x AS e
-        |  FROM b JOIN f ON b.key = f.key),
-        |emu AS (
-        |  SELECT key,
-        |    CAST(sum(CAST(e AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS mu
-        |  FROM r GROUP BY key),
-        |r6 AS (
-        |  SELECT r.key, r.x, r.n, r.flatx,
-        |    CAST((r.e - emu.mu) * 1e6 AS DECIMAL(18,0)) AS e6
-        |  FROM r JOIN emu ON r.key = emu.key),
+      s"""WITH $hourlyTrendSumsSql,
+         |$trendResidualsSql,
         |rz AS (
         |  SELECT key, x, n, flatx,
         |    floor(CAST(e6 AS DOUBLE) * CAST(e6 AS DOUBLE) / 1e12 * 1e6) / 1e6
@@ -3715,17 +3500,8 @@ object ProfileQueries {
     // MAE ratio on the dense hourly series: does a daily period HELP?
     Q(
       "q_forecastability",
-      """WITH b AS (
-        |  SELECT event_type AS key,
-        |    epoch_ns(ts) // 3600000000000 AS bucket,
-        |    CAST(count(*) AS DOUBLE) AS value
-        |  FROM events GROUP BY 1, 2),
-        |sp AS (SELECT key, min(bucket) AS lo, max(bucket) AS hi
-        |  FROM b GROUP BY 1),
-        |grid AS (SELECT key, unnest(range(lo, hi + 1)) AS bucket FROM sp),
-        |d AS (
-        |  SELECT g.key, g.bucket, coalesce(b.value, 0.0) AS value
-        |  FROM grid g LEFT JOIN b ON g.key = b.key AND g.bucket = b.bucket),
+      s"""WITH $hourlyCountsSql,
+         |${zeroFillHoursSql("value")},
         |v AS (
         |  SELECT key, bucket, CAST(value * 1e6 AS DECIMAL(18,0)) AS v6
         |  FROM d),
@@ -3767,18 +3543,7 @@ object ProfileQueries {
     // which hours own each event type's trend line; 4/n influence cut.
     Q(
       "q_cooks_distance",
-      """WITH b AS (
-        |  SELECT event_type AS key,
-        |    CAST(epoch_ns(ts) // 3600000000000 AS DOUBLE) AS x,
-        |    CAST(count(*) AS DOUBLE) AS y
-        |  FROM events GROUP BY key, epoch_ns(ts) // 3600000000000),
-        |m AS (
-        |  SELECT key, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(x AS DECIMAL(19,6))) AS sx,
-        |    sum(CAST(y AS DECIMAL(19,6))) AS sy,
-        |    sum(CAST(x AS DECIMAL(19,6)) * CAST(y AS DECIMAL(19,6))) AS sxy,
-        |    sum(CAST(x AS DECIMAL(19,6)) * CAST(x AS DECIMAL(19,6))) AS sxx
-        |  FROM b GROUP BY key),
+      s"""WITH $hourlyTrendSumsSql,
         |f AS (
         |  SELECT key, n, CAST(sx AS DOUBLE) / n AS mx,
         |    CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)

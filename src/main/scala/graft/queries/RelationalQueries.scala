@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -284,27 +285,9 @@ object RelationalQueries {
     // the sort order engine-independent).
     Q(
       "q_rollup",
-      """SELECT coalesce(n_name, '_all_') AS nation,
-        |  coalesce(c_mktsegment, '_all_') AS segment,
-        |  CAST(grouping(n_name) * 2 + grouping(c_mktsegment) AS INT) AS lvl,
-        |  CAST(count(*) AS BIGINT) AS n_cust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY ROLLUP (n_name, c_mktsegment)
-        |ORDER BY nation, segment""".stripMargin
+      segmentTotalsSql("ROLLUP", orderBy = "nation, segment")
     ) { (s, dir) =>
-      val c = table(s, dir, "customer")
-      val n = table(s, dir, "nation")
-      c.join(broadcast(n), $"c_nationkey" === $"n_nationkey")
-        .rollup($"n_name", $"c_mktsegment")
-        .agg(
-          (grouping($"n_name") * 2 + grouping($"c_mktsegment")).cast("int").as("lvl"),
-          count(lit(1)).as("n_cust"),
-          dsum($"c_acctbal").as("sum_bal"))
-        .select(
-          coalesce($"n_name", lit("_all_")).as("nation"),
-          coalesce($"c_mktsegment", lit("_all_")).as("segment"),
-          $"lvl", $"n_cust", $"sum_bal")
+      segmentTotals(customerNations(s, dir).rollup($"n_name", $"c_mktsegment"))
         .orderBy($"nation", $"segment")
     },
 
@@ -312,27 +295,9 @@ object RelationalQueries {
     // superset); grouping_id disambiguates the null-vs-_all_ levels.
     Q(
       "q_cube",
-      """SELECT coalesce(n_name, '_all_') AS nation,
-        |  coalesce(c_mktsegment, '_all_') AS segment,
-        |  CAST(grouping(n_name) * 2 + grouping(c_mktsegment) AS INT) AS lvl,
-        |  CAST(count(*) AS BIGINT) AS n_cust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY CUBE (n_name, c_mktsegment)
-        |ORDER BY lvl, nation, segment""".stripMargin
+      segmentTotalsSql("CUBE", orderBy = "lvl, nation, segment")
     ) { (s, dir) =>
-      val c = table(s, dir, "customer")
-      val n = table(s, dir, "nation")
-      c.join(broadcast(n), $"c_nationkey" === $"n_nationkey")
-        .cube($"n_name", $"c_mktsegment")
-        .agg(
-          (grouping($"n_name") * 2 + grouping($"c_mktsegment")).cast("int").as("lvl"),
-          count(lit(1)).as("n_cust"),
-          dsum($"c_acctbal").as("sum_bal"))
-        .select(
-          coalesce($"n_name", lit("_all_")).as("nation"),
-          coalesce($"c_mktsegment", lit("_all_")).as("segment"),
-          $"lvl", $"n_cust", $"sum_bal")
+      segmentTotals(customerNations(s, dir).cube($"n_name", $"c_mktsegment"))
         .orderBy($"lvl", $"nation", $"segment")
     },
 
@@ -547,6 +512,37 @@ object RelationalQueries {
         .orderBy($"zval", $"l_orderkey", $"l_linenumber")
     }
   )
+
+  /** `customer` ⋈ `nation` on the nation key. */
+  private def customerNations(s: SparkSession, dir: String): DataFrame =
+    table(s, dir, "customer")
+      .join(broadcast(table(s, dir, "nation")), $"c_nationkey" === $"n_nationkey")
+
+  /** q_rollup / q_cube: customer count and exact balance sum per
+    * (nation, segment) grouping set, the grouping level `lvl`, and
+    * '_all_' for a rolled-up key.
+    */
+  private def segmentTotals(grouped: RelationalGroupedDataset): DataFrame =
+    grouped
+      .agg(
+        (grouping($"n_name") * 2 + grouping($"c_mktsegment")).cast("int").as("lvl"),
+        count(lit(1)).as("n_cust"),
+        dsum($"c_acctbal").as("sum_bal"))
+      .select(
+        coalesce($"n_name", lit("_all_")).as("nation"),
+        coalesce($"c_mktsegment", lit("_all_")).as("segment"),
+        $"lvl", $"n_cust", $"sum_bal")
+
+  /** DuckDB twin of [[segmentTotals]] under `GROUP BY <groupingSets>`. */
+  private def segmentTotalsSql(groupingSets: String, orderBy: String): String =
+    s"""SELECT coalesce(n_name, '_all_') AS nation,
+       |  coalesce(c_mktsegment, '_all_') AS segment,
+       |  CAST(grouping(n_name) * 2 + grouping(c_mktsegment) AS INT) AS lvl,
+       |  CAST(count(*) AS BIGINT) AS n_cust,
+       |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
+       |FROM customer JOIN nation ON c_nationkey = n_nationkey
+       |GROUP BY $groupingSets (n_name, c_mktsegment)
+       |ORDER BY $orderBy""".stripMargin
 
   // $"..." sugar without a SparkSession-bound implicits import.
   private implicit class Sym(val sc: StringContext) {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsOf, Sessionize, Stats}
@@ -15,6 +16,119 @@ import graft.sources.Tables
   * against all three directories).
   */
 object TemporalQueries {
+
+  /** Survival subjects for the per-user activity spans, (cohort, dur,
+    * obs): cohort = the user's first event type, dur = whole hours
+    * between first and last event, obs = false (censored) when the
+    * last event falls inside the final 24 h of the feed.
+    */
+  private def survivalSubjects(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir).withColumn("ts_us", expr("ts_ns div 1000"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("user_id").orderBy("ts_us", "event_id")
+    val per = ev
+      .select(col("user_id"), col("ts_us"), col("event_id"), col("event_type"))
+      .withColumn("__rn", row_number().over(w))
+      .groupBy("user_id")
+      .agg(min("ts_us").as("f"), max("ts_us").as("l"),
+        max(when(col("__rn") === 1, col("event_type"))).as("cohort"))
+    val hz = ev.agg((max(col("ts_us")) - lit(86400000000L)).as("hz"))
+    per.crossJoin(broadcast(hz)).select(
+      col("cohort"), expr("(l - f) div 3600000000").as("dur"),
+      (col("l") < col("hz")).as("obs"))
+  }
+
+  /** DuckDB side of [[survivalSubjects]] up to the subjects: `e`,
+    * `per`(u, f, l, cohort) and the censoring horizon `h`(hz).
+    */
+  private val survivalSpansSql: String =
+    """e AS (
+      |  SELECT user_id AS u, epoch_us(ts) AS t, event_id AS eid,
+      |    event_type AS et
+      |  FROM events),
+      |per AS (
+      |  SELECT u, min(t) AS f, max(t) AS l,
+      |    max(CASE WHEN rn = 1 THEN et END) AS cohort
+      |  FROM (SELECT u, t, eid, et,
+      |          row_number() OVER (PARTITION BY u ORDER BY t, eid) AS rn
+      |        FROM e)
+      |  GROUP BY u),
+      |h AS (SELECT max(t) - 86400000000 AS hz FROM e)""".stripMargin
+
+  /** The q_funnel / q_funnel_windowed oracle: each step's completion
+    * is the user's earliest event of that type at-or-after the previous
+    * step's (and within `maxGapNs` of it, when given); per-step user
+    * counts and 6-dp truncated conversion.
+    */
+  private def funnelSql(maxGapNs: Option[Long]): String = {
+    val steps = Seq("signup", "view", "click", "purchase")
+    val chain = steps.zipWithIndex.tail.map { case (et, i) =>
+      val gap = maxGapNs.fold("")(g => s"\n         AND e.t <= s$i.t_r + $g")
+      s"""s${i + 1} AS (SELECT e.u, min(e.t) AS t_r FROM e
+         |       JOIN s$i ON e.u = s$i.u AND e.t >= s$i.t_r$gap
+         |       WHERE et = '$et' GROUP BY e.u),""".stripMargin
+    }.mkString("\n")
+    s"""WITH e AS (
+       |  SELECT user_id AS u, epoch_ns(ts) AS t, event_type AS et FROM events),
+       |s1 AS (SELECT u, min(t) AS t_r FROM e WHERE et = 'signup' GROUP BY u),
+       |$chain
+       |c AS (
+       |  SELECT 1 AS step, 'signup' AS event_type, count(*) AS n_users FROM s1
+       |  UNION ALL SELECT 2, 'view', count(*) FROM s2
+       |  UNION ALL SELECT 3, 'click', count(*) FROM s3
+       |  UNION ALL SELECT 4, 'purchase', count(*) FROM s4),
+       |b AS (SELECT n_users AS base FROM c WHERE step = 1)
+       |SELECT step, event_type, CAST(n_users AS BIGINT) AS n_users,
+       |  floor(n_users / base * 1e6) / 1e6 AS conversion
+       |FROM c CROSS JOIN b ORDER BY step""".stripMargin
+  }
+
+  /** Events per (event_type, hour), (event_type, bucket_s, n_events):
+    * bucket_s = the hour's start in epoch seconds.
+    */
+  private def hourlyEventCounts(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
+      .groupBy(col("event_type"),
+        (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
+      .agg(count(lit(1)).as("n_events"))
+
+  /** DuckDB side of [[hourlyEventCounts]]: the CTE `b`(key, bucket, n). */
+  private val hourlyEventCountsSql: String =
+    """b AS (
+      |  SELECT event_type AS key,
+      |    (epoch_ns(ts) // 3600000000000) * 3600 AS bucket, count(*) AS n
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** RFM inputs per user, `t`(user_id, recency_periods, frequency,
+    * monetary): whole days since the user's last event, measured from
+    * the feed's last event, the event count and the exact money sum.
+    */
+  private val rfmInputsSql: String =
+    """per AS (
+      |  SELECT user_id,
+      |    max(epoch_ns(ts)) AS last_ts,
+      |    CAST(count(*) AS BIGINT) AS frequency,
+      |    CAST(coalesce(sum(CAST(value AS DECIMAL(18,2))), 0) AS DOUBLE)
+      |      AS monetary
+      |  FROM events WHERE user_id IS NOT NULL
+      |  GROUP BY user_id),
+      |hz AS (SELECT max(last_ts) AS hz FROM per),
+      |t AS (
+      |  SELECT user_id,
+      |    (hz - last_ts) // 86400000000000 AS recency_periods,
+      |    frequency, monetary
+      |  FROM per, hz)""".stripMargin
+
+  /** [[hourlyEventCountsSql]]'s counts as 1e6 integer micro-lanes `vm`,
+    * numbered `rn` per key in bucket order: the recursive chart walks'
+    * input `v`.
+    */
+  private val hourlyMicroLanesSql: String =
+    """v AS (
+      |  SELECT key, bucket,
+      |    CAST(round(CAST(n AS DOUBLE) * 1e6) AS BIGINT) AS vm,
+      |    row_number() OVER (PARTITION BY key ORDER BY bucket) AS rn
+      |  FROM b)""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -255,27 +369,7 @@ object TemporalQueries {
     // truncated conversion.
     Q(
       "q_funnel",
-      """WITH e AS (
-        |  SELECT user_id AS u, epoch_ns(ts) AS t, event_type AS et FROM events),
-        |s1 AS (SELECT u, min(t) AS t_r FROM e WHERE et = 'signup' GROUP BY u),
-        |s2 AS (SELECT e.u, min(e.t) AS t_r FROM e
-        |       JOIN s1 ON e.u = s1.u AND e.t >= s1.t_r
-        |       WHERE et = 'view' GROUP BY e.u),
-        |s3 AS (SELECT e.u, min(e.t) AS t_r FROM e
-        |       JOIN s2 ON e.u = s2.u AND e.t >= s2.t_r
-        |       WHERE et = 'click' GROUP BY e.u),
-        |s4 AS (SELECT e.u, min(e.t) AS t_r FROM e
-        |       JOIN s3 ON e.u = s3.u AND e.t >= s3.t_r
-        |       WHERE et = 'purchase' GROUP BY e.u),
-        |c AS (
-        |  SELECT 1 AS step, 'signup' AS event_type, count(*) AS n_users FROM s1
-        |  UNION ALL SELECT 2, 'view', count(*) FROM s2
-        |  UNION ALL SELECT 3, 'click', count(*) FROM s3
-        |  UNION ALL SELECT 4, 'purchase', count(*) FROM s4),
-        |b AS (SELECT n_users AS base FROM c WHERE step = 1)
-        |SELECT step, event_type, CAST(n_users AS BIGINT) AS n_users,
-        |  floor(n_users / base * 1e6) / 1e6 AS conversion
-        |FROM c CROSS JOIN b ORDER BY step""".stripMargin
+      funnelSql(maxGapNs = None)
     ) { (s, dir) =>
       val ev = Tables.events(s, dir)
       graft.operators.Behavior.funnel(ev, col("user_id"), col("ts_ns"),
@@ -288,30 +382,7 @@ object TemporalQueries {
     // bound, so both engines agree exactly.
     Q(
       "q_funnel_windowed",
-      """WITH e AS (
-        |  SELECT user_id AS u, epoch_ns(ts) AS t, event_type AS et FROM events),
-        |s1 AS (SELECT u, min(t) AS t_r FROM e WHERE et = 'signup' GROUP BY u),
-        |s2 AS (SELECT e.u, min(e.t) AS t_r FROM e
-        |       JOIN s1 ON e.u = s1.u AND e.t >= s1.t_r
-        |         AND e.t <= s1.t_r + 172800000000000
-        |       WHERE et = 'view' GROUP BY e.u),
-        |s3 AS (SELECT e.u, min(e.t) AS t_r FROM e
-        |       JOIN s2 ON e.u = s2.u AND e.t >= s2.t_r
-        |         AND e.t <= s2.t_r + 172800000000000
-        |       WHERE et = 'click' GROUP BY e.u),
-        |s4 AS (SELECT e.u, min(e.t) AS t_r FROM e
-        |       JOIN s3 ON e.u = s3.u AND e.t >= s3.t_r
-        |         AND e.t <= s3.t_r + 172800000000000
-        |       WHERE et = 'purchase' GROUP BY e.u),
-        |c AS (
-        |  SELECT 1 AS step, 'signup' AS event_type, count(*) AS n_users FROM s1
-        |  UNION ALL SELECT 2, 'view', count(*) FROM s2
-        |  UNION ALL SELECT 3, 'click', count(*) FROM s3
-        |  UNION ALL SELECT 4, 'purchase', count(*) FROM s4),
-        |b AS (SELECT n_users AS base FROM c WHERE step = 1)
-        |SELECT step, event_type, CAST(n_users AS BIGINT) AS n_users,
-        |  floor(n_users / base * 1e6) / 1e6 AS conversion
-        |FROM c CROSS JOIN b ORDER BY step""".stripMargin
+      funnelSql(maxGapNs = Some(172800000000000L))
     ) { (s, dir) =>
       val ev = Tables.events(s, dir)
       graft.operators.Behavior.funnelWindowed(ev, col("user_id"), col("ts_ns"),
@@ -472,11 +543,7 @@ object TemporalQueries {
       "q_level_shift", {
         def t4z(e: String) = s"sign($e) * (floor(abs($e) * 1e4) / 1e4) + 0.0"
         val z = t4z("(post - pre) / sd")
-        s"""WITH b AS (
-           |  SELECT event_type AS key,
-           |    epoch_ns(ts) // 3600000000000 AS bucket,
-           |    CAST(count(*) AS DOUBLE) AS value
-           |  FROM events GROUP BY 1, 2),
+        s"""WITH ${ProfileQueries.hourlyCountsSql},
            |m AS (
            |  SELECT key, bucket, value,
            |    count(value) OVER wp AS np,
@@ -509,12 +576,8 @@ object TemporalQueries {
            |FROM d ORDER BY key, bucket""".stripMargin
       }
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type").as("key"),
-          expr("ts_ns div 3600000000000").as("bucket"))
-        .agg(count(lit(1)).cast("double").as("value"))
-      Stats.levelShift(buckets, col("key"), col("bucket"), col("value"),
-          width = 12, zThresh = 4.0)
+      Stats.levelShift(ProfileQueries.hourlyCounts(s, dir),
+          col("key"), col("bucket"), col("value"), width = 12, zThresh = 4.0)
         .orderBy("key", "bucket")
     },
 
@@ -561,10 +624,7 @@ object TemporalQueries {
         |FROM d
         |ORDER BY event_type, bucket_s""".stripMargin
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
-        .agg(count(lit(1)).as("n_events"))
+      val buckets = hourlyEventCounts(s, dir)
       Stats.rollingZ(buckets, col("event_type"), col("bucket_s"),
           col("n_events"), lookback = 24, zThresh = 3.0)
         .select(col("event_type"), col("bucket_s"), col("n_events"),
@@ -578,10 +638,7 @@ object TemporalQueries {
     // extrema and the threshold compare engine-exact, 4-dp floors.
     Q(
       "q_cusum",
-      """WITH b AS (
-        |  SELECT event_type AS key,
-        |    (epoch_ns(ts) // 3600000000000) * 3600 AS bucket, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $hourlyEventCountsSql,
         |p AS (
         |  SELECT key, bucket, n,
         |    sum(CAST(n AS DECIMAL(18,6)) - CAST(3.500000 AS DECIMAL(18,6)))
@@ -612,10 +669,7 @@ object TemporalQueries {
         |  cl > CAST(8.000000 AS DECIMAL(18,6)) AS alarm_lo
         |FROM c ORDER BY key, bucket""".stripMargin
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
-        .agg(count(lit(1)).as("n_events"))
+      val buckets = hourlyEventCounts(s, dir)
       Stats.cusum(buckets, col("event_type"), col("bucket_s"),
           col("n_events"), target = 3.0, slack = 0.5, threshold = 8.0)
         .orderBy("key", "bucket")
@@ -628,15 +682,8 @@ object TemporalQueries {
     // replays the identical integer walk in one recursive CTE.
     Q(
       "q_ewma",
-      """WITH RECURSIVE b AS (
-        |  SELECT event_type AS key,
-        |    (epoch_ns(ts) // 3600000000000) * 3600 AS bucket, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |v AS (
-        |  SELECT key, bucket,
-        |    CAST(round(CAST(n AS DOUBLE) * 1e6) AS BIGINT) AS vm,
-        |    row_number() OVER (PARTITION BY key ORDER BY bucket) AS rn
-        |  FROM b),
+      s"""WITH RECURSIVE $hourlyEventCountsSql,
+         |$hourlyMicroLanesSql,
         |walk(key, rn, bucket, vm, s, resid) AS (
         |  SELECT key, rn, bucket, vm, vm, CAST(NULL AS BIGINT)
         |  FROM v WHERE rn = 1
@@ -652,10 +699,7 @@ object TemporalQueries {
         |  coalesce(abs(resid) > 2000000, FALSE) AS alarm
         |FROM walk ORDER BY key, bucket""".stripMargin
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
-        .agg(count(lit(1)).as("n_events"))
+      val buckets = hourlyEventCounts(s, dir)
       Stats.ewmaChart(buckets, col("event_type"), col("bucket_s"),
           col("n_events"), alphaNum = 1, alphaDen = 4, band = 2.0)
         .orderBy("key", "bucket")
@@ -786,15 +830,8 @@ object TemporalQueries {
     // one recursive CTE (truncating division both engines).
     Q(
       "q_holt",
-      """WITH RECURSIVE b AS (
-        |  SELECT event_type AS key,
-        |    (epoch_ns(ts) // 3600000000000) * 3600 AS bucket, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |v AS (
-        |  SELECT key, bucket,
-        |    CAST(round(CAST(n AS DOUBLE) * 1e6) AS BIGINT) AS vm,
-        |    row_number() OVER (PARTITION BY key ORDER BY bucket) AS rn
-        |  FROM b),
+      s"""WITH RECURSIVE $hourlyEventCountsSql,
+         |$hourlyMicroLanesSql,
         |walk(key, rn, bucket, vm, s, t, resid) AS (
         |  SELECT key, rn, bucket, vm, vm, CAST(0 AS BIGINT), CAST(NULL AS BIGINT)
         |  FROM v WHERE rn = 1
@@ -812,10 +849,7 @@ object TemporalQueries {
         |  coalesce(abs(resid) > 2000000, FALSE) AS alarm
         |FROM walk ORDER BY key, bucket""".stripMargin
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
-        .agg(count(lit(1)).as("n_events"))
+      val buckets = hourlyEventCounts(s, dir)
       Stats.holtChart(buckets, col("event_type"), col("bucket_s"),
           col("n_events"), alphaNum = 1, alphaDen = 4,
           betaNum = 1, betaDen = 4, band = 2.0)
@@ -830,15 +864,8 @@ object TemporalQueries {
     Q(
       "q_holt_winters", {
         val zeros = Seq.fill(24)("0").mkString("[", ",", "]")
-        s"""WITH RECURSIVE b AS (
-           |  SELECT event_type AS key,
-           |    (epoch_ns(ts) // 3600000000000) * 3600 AS bucket, count(*) AS n
-           |  FROM events GROUP BY 1, 2),
-           |v AS (
-           |  SELECT key, bucket,
-           |    CAST(round(CAST(n AS DOUBLE) * 1e6) AS BIGINT) AS vm,
-           |    row_number() OVER (PARTITION BY key ORDER BY bucket) AS rn
-           |  FROM b),
+        s"""WITH RECURSIVE $hourlyEventCountsSql,
+           |$hourlyMicroLanesSql,
            |walk(key, rn, bucket, vm, s, t, cs, cnew, resid) AS (
            |  SELECT key, rn, bucket, vm, vm, CAST(0 AS BIGINT),
            |    CAST($zeros AS BIGINT[]), CAST(0 AS BIGINT), CAST(NULL AS BIGINT)
@@ -866,10 +893,7 @@ object TemporalQueries {
            |FROM walk ORDER BY key, bucket""".stripMargin
       }
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
-        .agg(count(lit(1)).as("n_events"))
+      val buckets = hourlyEventCounts(s, dir)
       Stats.holtWintersChart(buckets, col("event_type"), col("bucket_s"),
           col("n_events"), period = 24, alphaNum = 1, alphaDen = 4,
           betaNum = 1, betaDen = 4, gammaNum = 1, gammaDen = 4, band = 2.0)
@@ -917,10 +941,7 @@ object TemporalQueries {
         |FROM tot t LEFT JOIN (SELECT * FROM best WHERE r = 1) w ON w.key = t.key
         |ORDER BY t.key""".stripMargin
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
-        .agg(count(lit(1)).as("n_events"))
+      val buckets = hourlyEventCounts(s, dir)
       Stats.bestChangepoint(buckets, col("event_type"), col("bucket_s"),
           col("n_events"), minSeg = 2)
         .orderBy("key")
@@ -983,10 +1004,7 @@ object TemporalQueries {
            |FROM allc ORDER BY key, split_x""".stripMargin
       }
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
-        .agg(count(lit(1)).as("n_events"))
+      val buckets = hourlyEventCounts(s, dir)
       Stats.changepoints(buckets, col("event_type"), col("bucket_s"),
           col("n_events"), minSeg = 2, maxDepth = 3, minGain = 1.0)
         .orderBy("key", "split_x")
@@ -1082,10 +1100,7 @@ object TemporalQueries {
            |FROM e ORDER BY key, order_val""".stripMargin
       }
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
-        .agg(count(lit(1)).as("n_events"))
+      val buckets = hourlyEventCounts(s, dir)
       Stats.sprt(buckets, col("event_type"), col("bucket_s"),
           col("n_events") >= 3, p0 = 0.4, p1 = 0.6)
         .orderBy("key", "order_val")
@@ -1135,18 +1150,7 @@ object TemporalQueries {
     // exp(Σ trunc9 ln(1−d/n)) survival walk replay exactly.
     Q(
       "q_kaplan_meier",
-      """WITH e AS (
-        |  SELECT user_id AS u, epoch_us(ts) AS t, event_id AS eid,
-        |    event_type AS et
-        |  FROM events),
-        |per AS (
-        |  SELECT u, min(t) AS f, max(t) AS l,
-        |    max(CASE WHEN rn = 1 THEN et END) AS cohort
-        |  FROM (SELECT u, t, eid, et,
-        |          row_number() OVER (PARTITION BY u ORDER BY t, eid) AS rn
-        |        FROM e)
-        |  GROUP BY u),
-        |h AS (SELECT max(t) - 86400000000 AS hz FROM e),
+      s"""WITH $survivalSpansSql,
         |subj AS (
         |  SELECT cohort, (l - f) // 3600000000 AS dur, l < hz AS obs
         |  FROM per, h),
@@ -1178,21 +1182,8 @@ object TemporalQueries {
         |FROM sv WHERE n_event > 0
         |ORDER BY grp, t""".stripMargin
     ) { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("ts_ns div 1000"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("ts_us", "event_id")
-      val per = ev
-        .select(col("user_id"), col("ts_us"), col("event_id"), col("event_type"))
-        .withColumn("__rn", row_number().over(w))
-        .groupBy("user_id")
-        .agg(min("ts_us").as("f"), max("ts_us").as("l"),
-          max(when(col("__rn") === 1, col("event_type"))).as("cohort"))
-      val hz = ev.agg((max(col("ts_us")) - lit(86400000000L)).as("hz"))
-      val subj = per.crossJoin(broadcast(hz)).select(
-        col("cohort"), expr("(l - f) div 3600000000").as("dur"),
-        (col("l") < col("hz")).as("obs"))
-      graft.operators.Stats.kaplanMeier(subj, col("cohort"), col("dur"),
-          col("obs"))
+      graft.operators.Stats.kaplanMeier(survivalSubjects(s, dir),
+          col("cohort"), col("dur"), col("obs"))
         .orderBy("grp", "t")
     },
 
@@ -1202,18 +1193,7 @@ object TemporalQueries {
     // before the order-free sums, chi2 4-dp floored.
     Q(
       "q_logrank",
-      """WITH e AS (
-        |  SELECT user_id AS u, epoch_us(ts) AS t, event_id AS eid,
-        |    event_type AS et
-        |  FROM events),
-        |per AS (
-        |  SELECT u, min(t) AS f, max(t) AS l,
-        |    max(CASE WHEN rn = 1 THEN et END) AS cohort
-        |  FROM (SELECT u, t, eid, et,
-        |          row_number() OVER (PARTITION BY u ORDER BY t, eid) AS rn
-        |        FROM e)
-        |  GROUP BY u),
-        |h AS (SELECT max(t) - 86400000000 AS hz FROM e),
+      s"""WITH $survivalSpansSql,
         |subj AS (
         |  SELECT cohort, (l - f) // 3600000000 AS dur, l < hz AS obs
         |  FROM per, h
@@ -1268,21 +1248,8 @@ object TemporalQueries {
         |  (n_a = 0 OR n_b = 0 OR CAST(sv AS DOUBLE) <= 0.0) AS degenerate
         |FROM m, agg""".stripMargin
     ) { (s, dir) =>
-      val ev = Tables.events(s, dir).withColumn("ts_us", expr("ts_ns div 1000"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("ts_us", "event_id")
-      val per = ev
-        .select(col("user_id"), col("ts_us"), col("event_id"), col("event_type"))
-        .withColumn("__rn", row_number().over(w))
-        .groupBy("user_id")
-        .agg(min("ts_us").as("f"), max("ts_us").as("l"),
-          max(when(col("__rn") === 1, col("event_type"))).as("cohort"))
-      val hz = ev.agg((max(col("ts_us")) - lit(86400000000L)).as("hz"))
-      val subj = per.crossJoin(broadcast(hz)).select(
-        col("cohort"), expr("(l - f) div 3600000000").as("dur"),
-        (col("l") < col("hz")).as("obs"))
-      graft.operators.Stats.logRank(subj, col("cohort"), col("dur"),
-        col("obs"), groupA = "click", groupB = "view")
+      graft.operators.Stats.logRank(survivalSubjects(s, dir),
+        col("cohort"), col("dur"), col("obs"), groupA = "click", groupB = "view")
     },
 
     // C116: stationary distribution of the per-user behavior Markov
@@ -1349,10 +1316,7 @@ object TemporalQueries {
     // 6-dp term truncation, decimal running min — engine-exact.
     Q(
       "q_page_hinkley",
-      """WITH b AS (
-        |  SELECT event_type AS key,
-        |    (epoch_ns(ts) // 3600000000000) * 3600 AS bucket, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $hourlyEventCountsSql,
         |p AS (
         |  SELECT key, bucket, n,
         |    sum(CAST(round(CAST(n AS DOUBLE), 6) AS DECIMAL(18,6))) OVER cw AS cs,
@@ -1387,10 +1351,7 @@ object TemporalQueries {
         |  ph > CAST(8.000000 AS DECIMAL(24,6)) AS alarm
         |FROM c ORDER BY key, bucket""".stripMargin
     ) { (s, dir) =>
-      val buckets = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          (expr("ts_ns div 3600000000000") * 3600).as("bucket_s"))
-        .agg(count(lit(1)).as("n_events"))
+      val buckets = hourlyEventCounts(s, dir)
       graft.operators.Stats.pageHinkley(buckets, col("event_type"),
           col("bucket_s"), col("n_events"), delta = 0.5, lambda = 8.0)
         .orderBy("key", "bucket")
@@ -1402,20 +1363,7 @@ object TemporalQueries {
     // tiebreaks so boundary users land identically on both engines.
     Q(
       "q_rfm",
-      """WITH per AS (
-        |  SELECT user_id,
-        |    max(epoch_ns(ts)) AS last_ts,
-        |    CAST(count(*) AS BIGINT) AS frequency,
-        |    CAST(coalesce(sum(CAST(value AS DECIMAL(18,2))), 0) AS DOUBLE)
-        |      AS monetary
-        |  FROM events WHERE user_id IS NOT NULL
-        |  GROUP BY user_id),
-        |hz AS (SELECT max(last_ts) AS hz FROM per),
-        |t AS (
-        |  SELECT user_id,
-        |    (hz - last_ts) // 86400000000000 AS recency_periods,
-        |    frequency, monetary
-        |  FROM per, hz),
+      s"""WITH $rfmInputsSql,
         |sc AS (
         |  SELECT user_id, recency_periods, frequency, monetary,
         |    CAST(ntile(5) OVER (ORDER BY recency_periods DESC, user_id ASC)
@@ -1471,20 +1419,7 @@ object TemporalQueries {
             s" BETWEEN (${score(v, i => s"b.hi$p$i")})" +
             s" AND (${score(v, i => s"b.lo$p$i")}) AS ${p}_in_band"
         }.mkString(",\n  ")
-        s"""WITH per AS (
-          |  SELECT user_id,
-          |    max(epoch_ns(ts)) AS last_ts,
-          |    CAST(count(*) AS BIGINT) AS frequency,
-          |    CAST(coalesce(sum(CAST(value AS DECIMAL(18,2))), 0) AS DOUBLE)
-          |      AS monetary
-          |  FROM events WHERE user_id IS NOT NULL
-          |  GROUP BY user_id),
-          |hz AS (SELECT max(last_ts) AS hz FROM per),
-          |t AS (
-          |  SELECT user_id,
-          |    (hz - last_ts) // 86400000000000 AS recency_periods,
-          |    frequency, monetary
-          |  FROM per, hz),
+        s"""WITH $rfmInputsSql,
           |b AS (
           |  SELECT $boundAgg
           |  FROM t)

@@ -15,39 +15,41 @@ import graft.operators.{Sampling, TextMetrics}
   */
 object TextQueries {
 
-  private def inList(words: Seq[String]): String =
-    words.map(w => s"'$w'").mkString("(", ", ", ")")
-
   // planted foreign-script renditions for q_text_script — ONE literal
   // each, interpolated into both the Spark plan and the SQL twin
   private val plantRu = "привет мир это тестовый документ"
   private val plantZh = "你好世界这是一个测试文档"
   private val plantAr = "مرحبا بالعالم هذه وثيقة اختبار"
 
+  /** Term counts per source, `tf`(src, w, ct), with the per-source
+    * totals `srct`(src, st) and per-term totals `ttot`(w, c_t).
+    */
+  private val sourceTermCountsSql: String =
+    s"""tf AS (
+       |  SELECT src, w, CAST(count(*) AS BIGINT) AS ct
+       |  FROM (SELECT source AS src, unnest(${tkSql("text")}) AS w
+       |        FROM documents)
+       |  GROUP BY 1, 2),
+       |srct AS (SELECT src, CAST(sum(ct) AS BIGINT) AS st FROM tf GROUP BY 1),
+       |ttot AS (SELECT w, CAST(sum(ct) AS BIGINT) AS c_t FROM tf GROUP BY 1)""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // D8: marker-word language ID — argmax hit count with list-order
     // priority, zero hits → 'und'.
     Q(
-      "q_text_langid", {
-        val hitCols = TextMetrics.langMarkers.map { case (l, ms) =>
-          s"len(list_filter(tk, t -> t IN ${inList(ms)})) AS h_$l"
-        }.mkString(",\n          ")
-        val langs = TextMetrics.langMarkers.map(_._1)
-        val best = langs.map(l => s"h_$l").mkString("greatest(", ", ", ")")
-        val cases = langs.map(l => s"WHEN h_$l = best THEN '$l'").mkString(" ")
-        s"""WITH t AS (
-           |  SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
-           |h AS (
-           |  SELECT doc_id,
-           |          $hitCols
-           |  FROM t),
-           |b AS (SELECT *, $best AS best FROM h)
-           |SELECT doc_id,
-           |  CASE WHEN best = 0 THEN 'und' $cases END AS lang_pred,
-           |  CAST(best AS BIGINT) AS lang_hits
-           |FROM b ORDER BY doc_id""".stripMargin
-      }
+      "q_text_langid",
+      s"""WITH t AS (
+         |  SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
+         |h AS (
+         |  SELECT doc_id,
+         |          $langHitsSql
+         |  FROM t),
+         |b AS (SELECT *, $bestHitsSql AS best FROM h)
+         |SELECT doc_id,
+         |  CASE WHEN best = 0 THEN 'und' $langCasesSql END AS lang_pred,
+         |  CAST(best AS BIGINT) AS lang_hits
+         |FROM b ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
       TextMetrics.withLangId(table(s, dir, "documents"), col("text"))
         .select(col("doc_id"), col("lang_pred"), col("lang_hits").cast("long"))
@@ -104,37 +106,32 @@ object TextQueries {
     // D9: quality signals + composite score (C4/Gopher-style cheap
     // filters). Ratios are int/int double divisions → bit-identical.
     Q(
-      "q_text_quality", {
-        val stop = inList(TextMetrics.langMarkers.flatMap(_._2).distinct)
-        s"""WITH t AS (
-           |  SELECT doc_id, text, ${tkSql("text")} AS tk FROM documents),
-           |m AS (
-           |  SELECT doc_id,
-           |    len(tk) AS n_tokens,
-           |    CASE WHEN len(tk) > 0
-           |      THEN list_sum(list_transform(tk, t -> len(t))) * 1.0 / len(tk)
-           |      ELSE 0.0 END AS mean_tok_len,
-           |    CASE WHEN len(text) > 0
-           |      THEN (len(text) - len(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))) * 1.0 / len(text)
-           |      ELSE 0.0 END AS punct_ratio,
-           |    CASE WHEN len(text) > 0
-           |      THEN (len(text) - len(regexp_replace(text, '[A-Z]', '', 'g'))) * 1.0 / len(text)
-           |      ELSE 0.0 END AS upper_ratio,
-           |    CASE WHEN len(tk) > 0
-           |      THEN len(list_filter(tk, t -> t IN $stop)) * 1.0 / len(tk)
-           |      ELSE 0.0 END AS stop_ratio
-           |  FROM t)
-           |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-           |  round(mean_tok_len, 4) AS mean_tok_len,
-           |  round(punct_ratio, 4) AS punct_ratio,
-           |  round(upper_ratio, 4) AS upper_ratio,
-           |  round(stop_ratio, 4) AS stop_ratio,
-           |  CAST(round(CASE WHEN mean_tok_len >= 3 AND mean_tok_len <= 10 THEN 0.4 ELSE 0.0 END
-           |      + CASE WHEN stop_ratio >= 0.05 THEN 0.3 ELSE 0.0 END
-           |      + CASE WHEN punct_ratio <= 0.1 THEN 0.2 ELSE 0.0 END
-           |      + CASE WHEN n_tokens >= 10 AND n_tokens <= 10000 THEN 0.1 ELSE 0.0 END, 4) AS DOUBLE) AS quality
-           |FROM m ORDER BY doc_id""".stripMargin
-      }
+      "q_text_quality",
+      s"""WITH t AS (
+         |  SELECT doc_id, text, ${tkSql("text")} AS tk FROM documents),
+         |m AS (
+         |  SELECT doc_id,
+         |    len(tk) AS n_tokens,
+         |    CASE WHEN len(tk) > 0
+         |      THEN list_sum(list_transform(tk, t -> len(t))) * 1.0 / len(tk)
+         |      ELSE 0.0 END AS mean_tok_len,
+         |    CASE WHEN len(text) > 0
+         |      THEN (len(text) - len(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))) * 1.0 / len(text)
+         |      ELSE 0.0 END AS punct_ratio,
+         |    CASE WHEN len(text) > 0
+         |      THEN (len(text) - len(regexp_replace(text, '[A-Z]', '', 'g'))) * 1.0 / len(text)
+         |      ELSE 0.0 END AS upper_ratio,
+         |    CASE WHEN len(tk) > 0
+         |      THEN len(list_filter(tk, t -> t IN $stopListSql)) * 1.0 / len(tk)
+         |      ELSE 0.0 END AS stop_ratio
+         |  FROM t)
+         |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+         |  round(mean_tok_len, 4) AS mean_tok_len,
+         |  round(punct_ratio, 4) AS punct_ratio,
+         |  round(upper_ratio, 4) AS upper_ratio,
+         |  round(stop_ratio, 4) AS stop_ratio,
+         |  $qualityScoreSql AS quality
+         |FROM m ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
       TextMetrics.withQuality(table(s, dir, "documents"), col("text"))
         .select(col("doc_id"), col("n_tokens"), col("mean_tok_len"),
@@ -346,7 +343,7 @@ object TextQueries {
       "q_lang_consistency", {
         val langs = TextMetrics.langMarkers.map(_._1)
         def hitCols(tag: String) = TextMetrics.langMarkers.map { case (l, ms) =>
-          s"len(list_filter(${tag}tk, t -> t IN ${inList(ms)})) AS ${tag}h_$l"
+          s"len(list_filter(${tag}tk, t -> t IN ${inListSql(ms)})) AS ${tag}h_$l"
         }.mkString(",\n    ")
         def bestOf(tag: String) = langs.map(l => s"${tag}h_$l").mkString("greatest(", ", ", ")")
         def caseOf(tag: String) =
@@ -391,13 +388,13 @@ object TextQueries {
     // fingerprint group has exactly two members.
     Q(
       "q_fingerprint",
-      """WITH docs AS (
+      s"""WITH docs AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 1000000, upper(text) || ' , ' FROM documents),
         |f AS (
         |  SELECT doc_id,
-        |    md5(trim(regexp_replace(regexp_replace(lower(text), '[^\p{L}\p{Nd}\s]', ' ', 'g'), '\s+', ' ', 'g'))) AS fp
+         |    ${normFingerprintSql("text")} AS fp
         |  FROM docs)
         |SELECT fp, CAST(min(doc_id) AS BIGINT) AS keep_id,
         |  CAST(count(*) AS BIGINT) AS n_copies
@@ -853,47 +850,27 @@ object TextQueries {
     // and quality-gate pass counts per source. One scan, one partial-
     // aggregated groupBy.
     Q(
-      "q_source_report", {
-        val stop = inList(TextMetrics.langMarkers.flatMap(_._2).distinct)
-        val hitCols = TextMetrics.langMarkers.map { case (l, ms) =>
-          s"len(list_filter(tk, t -> t IN ${inList(ms)})) AS h_$l"
-        }.mkString(",\n    ")
-        val langs = TextMetrics.langMarkers.map(_._1)
-        val best = langs.map(l => s"h_$l").mkString("greatest(", ", ", ")")
-        val cases = langs.map(l => s"WHEN h_$l = best THEN '$l'").mkString(" ")
-        s"""WITH t AS (
-           |  SELECT source, text, ${tkSql("text")} AS tk FROM documents),
-           |m AS (
-           |  SELECT source,
-           |    len(tk) AS n_tokens,
-           |    CASE WHEN len(tk) > 0
-           |      THEN list_sum(list_transform(tk, t -> len(t))) * 1.0 / len(tk)
-           |      ELSE 0.0 END AS mean_tok_len,
-           |    CASE WHEN len(text) > 0
-           |      THEN (len(text) - len(regexp_replace(text, '[\\.,;:!\\?]', '', 'g'))) * 1.0 / len(text)
-           |      ELSE 0.0 END AS punct_ratio,
-           |    CASE WHEN len(tk) > 0
-           |      THEN len(list_filter(tk, t -> t IN $stop)) * 1.0 / len(tk)
-           |      ELSE 0.0 END AS stop_ratio,
-           |    $hitCols
-           |  FROM t),
-           |b AS (SELECT *, $best AS best FROM m),
-           |q AS (
-           |  SELECT source, n_tokens,
-           |    CAST(round(CASE WHEN mean_tok_len >= 3 AND mean_tok_len <= 10 THEN 0.4 ELSE 0.0 END
-           |        + CASE WHEN stop_ratio >= 0.05 THEN 0.3 ELSE 0.0 END
-           |        + CASE WHEN punct_ratio <= 0.1 THEN 0.2 ELSE 0.0 END
-           |        + CASE WHEN n_tokens >= 10 AND n_tokens <= 10000 THEN 0.1 ELSE 0.0 END, 4) AS DOUBLE) AS quality,
-           |    CASE WHEN best = 0 THEN 'und' $cases END AS lang_pred
-           |  FROM b)
-           |SELECT source,
-           |  CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-           |  round(CAST(sum(CAST(quality AS DECIMAL(18,4))) AS DOUBLE) / count(*), 4) AS avg_quality,
-           |  CAST(sum(CASE WHEN lang_pred = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
-           |  CAST(sum(CASE WHEN quality >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
-           |FROM q GROUP BY source ORDER BY source""".stripMargin
-      }
+      "q_source_report",
+      s"""WITH t AS (
+         |  SELECT source, text, ${tkSql("text")} AS tk FROM documents),
+         |m AS (
+         |  SELECT source,
+         |    $qualitySignalsSql,
+         |    $langHitsSql
+         |  FROM t),
+         |b AS (SELECT *, $bestHitsSql AS best FROM m),
+         |q AS (
+         |  SELECT source, n_tokens,
+         |    $qualityScoreSql AS quality,
+         |    CASE WHEN best = 0 THEN 'und' $langCasesSql END AS lang_pred
+         |  FROM b)
+         |SELECT source,
+         |  CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+         |  round(CAST(sum(CAST(quality AS DECIMAL(18,4))) AS DOUBLE) / count(*), 4) AS avg_quality,
+         |  CAST(sum(CASE WHEN lang_pred = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_en,
+         |  CAST(sum(CASE WHEN quality >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
+         |FROM q GROUP BY source ORDER BY source""".stripMargin
     ) { (s, dir) =>
       val scored = TextMetrics.withLangId(
         TextMetrics.withQuality(
@@ -942,39 +919,32 @@ object TextQueries {
     // + doc_id tiebreak on both sides so bucket boundaries are
     // engine-portable.
     Q(
-      "q_perplexity_buckets", {
-        val hitCols = TextMetrics.langMarkers.map { case (l, ms) =>
-          s"len(list_filter(tk, t -> t IN ${inList(ms)})) AS h_$l"
-        }.mkString(",\n          ")
-        val langs = TextMetrics.langMarkers.map(_._1)
-        val best = langs.map(l => s"h_$l").mkString("greatest(", ", ", ")")
-        val cases = langs.map(l => s"WHEN h_$l = best THEN '$l'").mkString(" ")
-        s"""WITH tk0 AS (
-           |  SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
-           |h AS (SELECT doc_id, $hitCols FROM tk0),
-           |b AS (SELECT *, $best AS best FROM h),
-           |langid AS (
-           |  SELECT doc_id,
-           |    CASE WHEN best = 0 THEN 'und' $cases END AS lang
-           |  FROM b),
-           |t AS (SELECT doc_id, unnest(tk) AS term FROM tk0),
-           |tf AS (SELECT term, count(*) AS n FROM t GROUP BY 1),
-           |tot AS (SELECT sum(n) AS n_total, count(*) AS vocab FROM tf),
-           |lp AS (
-           |  SELECT term,
-           |    CAST(round(ln((n + 1) * 1.0 / (n_total + vocab)), 7) AS DECIMAL(18,7)) AS lp
-           |  FROM tf CROSS JOIN tot),
-           |scored AS (
-           |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-           |    round(CAST(sum(lp) / count(*) AS DOUBLE), 4) AS avg_logprob
-           |  FROM t JOIN lp USING (term)
-           |  GROUP BY doc_id)
-           |SELECT s.doc_id, lang, n_tokens, avg_logprob,
-           |  CAST(ntile(4) OVER (PARTITION BY lang
-           |    ORDER BY avg_logprob DESC, s.doc_id) AS INT) AS bucket
-           |FROM scored s JOIN langid USING (doc_id)
-           |ORDER BY doc_id""".stripMargin
-      }
+      "q_perplexity_buckets",
+      s"""WITH tk0 AS (
+         |  SELECT doc_id, ${tkSql("text")} AS tk FROM documents),
+         |h AS (SELECT doc_id, $langHitsSql FROM tk0),
+         |b AS (SELECT *, $bestHitsSql AS best FROM h),
+         |langid AS (
+         |  SELECT doc_id,
+         |    CASE WHEN best = 0 THEN 'und' $langCasesSql END AS lang
+         |  FROM b),
+         |t AS (SELECT doc_id, unnest(tk) AS term FROM tk0),
+         |tf AS (SELECT term, count(*) AS n FROM t GROUP BY 1),
+         |tot AS (SELECT sum(n) AS n_total, count(*) AS vocab FROM tf),
+         |lp AS (
+         |  SELECT term,
+         |    CAST(round(ln((n + 1) * 1.0 / (n_total + vocab)), 7) AS DECIMAL(18,7)) AS lp
+         |  FROM tf CROSS JOIN tot),
+         |scored AS (
+         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+         |    round(CAST(sum(lp) / count(*) AS DOUBLE), 4) AS avg_logprob
+         |  FROM t JOIN lp USING (term)
+         |  GROUP BY doc_id)
+         |SELECT s.doc_id, lang, n_tokens, avg_logprob,
+         |  CAST(ntile(4) OVER (PARTITION BY lang
+         |    ORDER BY avg_logprob DESC, s.doc_id) AS INT) AS bucket
+         |FROM scored s JOIN langid USING (doc_id)
+         |ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
       TextMetrics.perplexityBuckets(table(s, dir, "documents"),
           col("doc_id"), col("text"), nBuckets = 4)
@@ -1820,13 +1790,7 @@ object TextQueries {
     // numerators over the bounded term×source grid.
     Q(
       "q_term_dispersion",
-      s"""WITH tf AS (
-         |  SELECT src, w, CAST(count(*) AS BIGINT) AS ct
-         |  FROM (SELECT source AS src, unnest(${tkSql("text")}) AS w
-         |        FROM documents)
-         |  GROUP BY 1, 2),
-         |srct AS (SELECT src, CAST(sum(ct) AS BIGINT) AS st FROM tf GROUP BY 1),
-         |ttot AS (SELECT w, CAST(sum(ct) AS BIGINT) AS c_t FROM tf GROUP BY 1),
+      s"""WITH $sourceTermCountsSql,
          |top AS (
          |  SELECT w, c_t FROM
          |    (SELECT w, c_t, row_number() OVER (ORDER BY c_t DESC, w) AS r
@@ -1860,13 +1824,7 @@ object TextQueries {
     // sum so both engines walk identical moments.
     Q(
       "q_burrows_delta",
-      s"""WITH tf AS (
-         |  SELECT src, w, CAST(count(*) AS BIGINT) AS ct
-         |  FROM (SELECT source AS src, unnest(${tkSql("text")}) AS w
-         |        FROM documents)
-         |  GROUP BY 1, 2),
-         |srct AS (SELECT src, CAST(sum(ct) AS BIGINT) AS st FROM tf GROUP BY 1),
-         |ttot AS (SELECT w, CAST(sum(ct) AS BIGINT) AS c_t FROM tf GROUP BY 1),
+      s"""WITH $sourceTermCountsSql,
          |top AS (
          |  SELECT w FROM
          |    (SELECT w, row_number() OVER (ORDER BY c_t DESC, w) AS r FROM ttot)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming surface (SURVEY §2.E): watermarked tumbling
   * windows and stateful gap sessionization over an event stream shaped
@@ -589,6 +589,33 @@ object EventStreams {
       }
   }
 
+  /** The skeleton every streaming sketch sink shares: per micro-batch,
+    * `build` sketches the batch, `union` merges that sketch with the
+    * last published snapshot, and the result publishes through
+    * [[SnapshotStore]] (write-audit-publish). The merged frame is
+    * checkpointed before publish because it reads the live snapshot
+    * version, and a replayed batch overwrites that same version
+    * directory.
+    */
+  private def sketchMaintained(
+      input: DataFrame,
+      snapshotPath: String,
+      checkpointPath: String)(
+      build: DataFrame => DataFrame)(
+      union: Seq[DataFrame] => DataFrame): StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", checkpointPath)
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val batchSketch = build(batch)
+        val merged = SnapshotStore.read(batch.sparkSession, snapshotPath) match {
+          case Some(prev) => union(Seq(prev, batchSketch))
+          case None => batchSketch
+        }
+        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
+      }
+      .start()
+
   /** E14: streaming Count-Min sketch maintenance — the frequency
     * monitor over an unbounded token stream: each micro-batch builds
     * its own CMS ([[graft.operators.Profile.countMinSketch]] — one
@@ -613,22 +640,10 @@ object EventStreams {
       snapshotPath: String,
       checkpointPath: String,
       width: Int = 1024,
-      depth: Int = 4): org.apache.spark.sql.streaming.StreamingQuery = {
-    keys.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val batchSketch = graft.operators.Profile.countMinSketch(
-          batch, col(keyCol), width, depth)
-        val merged = SnapshotStore.read(spark, snapshotPath) match {
-          case Some(prev) => graft.operators.Profile.cmsMerge(Seq(prev, batchSketch))
-          case None => batchSketch
-        }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
-      }
-      .start()
-  }
+      depth: Int = 4): StreamingQuery =
+    sketchMaintained(keys, snapshotPath, checkpointPath)(
+      graft.operators.Profile.countMinSketch(_, col(keyCol), width, depth))(
+      graft.operators.Profile.cmsMerge)
 
   /** E20: streaming KLL quantile-sketch maintenance — the QUANTILE
     * member of the streaming sketch pair next to E14's Count-Min
@@ -655,23 +670,10 @@ object EventStreams {
       valueCol: String,
       snapshotPath: String,
       checkpointPath: String,
-      k: Int = 200): org.apache.spark.sql.streaming.StreamingQuery = {
-    values.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val batchSketch = graft.operators.Profile.quantileSketch(
-          batch, col(groupCol), col(valueCol), k)
-        val merged = SnapshotStore.read(spark, snapshotPath) match {
-          case Some(prev) =>
-            graft.operators.Profile.quantileSketchUnion(Seq(prev, batchSketch), k)
-          case None => batchSketch
-        }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
-      }
-      .start()
-  }
+      k: Int = 200): StreamingQuery =
+    sketchMaintained(values, snapshotPath, checkpointPath)(
+      graft.operators.Profile.quantileSketch(_, col(groupCol), col(valueCol), k))(
+      graft.operators.Profile.quantileSketchUnion(_, k))
 
   case class FrameIn(video_id: Long, frame_idx: Int, features: Seq[Float])
 
@@ -1561,24 +1563,10 @@ object EventStreams {
       itemCol: String,
       snapshotPath: String,
       checkpointPath: String,
-      maxMapSize: Int = 1024): org.apache.spark.sql.streaming.StreamingQuery = {
-    items.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val batchSketch = graft.operators.Profile.freqSketchTable(
-          batch, col(groupCol), col(itemCol), maxMapSize)
-        val merged = SnapshotStore.read(spark, snapshotPath) match {
-          case Some(prev) =>
-            graft.operators.Profile.freqSketchUnion(
-              Seq(prev, batchSketch), maxMapSize)
-          case None => batchSketch
-        }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
-      }
-      .start()
-  }
+      maxMapSize: Int = 1024): StreamingQuery =
+    sketchMaintained(items, snapshotPath, checkpointPath)(
+      graft.operators.Profile.freqSketchTable(_, col(groupCol), col(itemCol), maxMapSize))(
+      graft.operators.Profile.freqSketchUnion(_, maxMapSize))
 
   /** E41: streaming THETA-sketch maintenance — the set-operation
     * member of the streaming sketch family next to E14 (CMS), E20
@@ -1598,24 +1586,10 @@ object EventStreams {
       itemCol: String,
       snapshotPath: String,
       checkpointPath: String,
-      lgK: Int = 12): org.apache.spark.sql.streaming.StreamingQuery = {
-    items.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val batchSketch = graft.operators.Profile.thetaSketchTable(
-          batch, col(groupCol), col(itemCol), lgK)
-        val merged = SnapshotStore.read(spark, snapshotPath) match {
-          case Some(prev) =>
-            graft.operators.Profile.thetaSketchUnion(
-              Seq(prev, batchSketch), lgK)
-          case None => batchSketch
-        }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
-      }
-      .start()
-  }
+      lgK: Int = 12): StreamingQuery =
+    sketchMaintained(items, snapshotPath, checkpointPath)(
+      graft.operators.Profile.thetaSketchTable(_, col(groupCol), col(itemCol), lgK))(
+      graft.operators.Profile.thetaSketchUnion(_, lgK))
 
   /** E45: streaming theta-diff ADMISSION gate — D138's a-not-b put to
     * work on arrivals: each micro-batch sketches itself per group,
@@ -2101,6 +2075,18 @@ object EventStreams {
       key: Long, bucket: Long, value: Double,
       baseline_n: Long, z: Double, anomaly: Boolean)
 
+  /** Exact 6-dp decimal of a double, for order-independent sums in
+    * the stateful series streams (the batch twins' decimal(18,6)).
+    */
+  private def dec(v: Double): BigDecimal =
+    BigDecimal.valueOf(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+
+  /** 4-dp truncation toward zero, `+ 0.0` folding -0.0 — the driver-side
+    * twin of `operators.Num.t4zero`.
+    */
+  private def t4zero(x: Double): Double =
+    math.signum(x) * (math.floor(math.abs(x) * 1e4) / 1e4) + 0.0
+
   /** E13: STREAMING rolling z-score anomaly monitor — the stateful
     * twin of [[graft.operators.Stats.rollingZ]]: per metric key, each
     * arriving (bucket, value) scores against the TRAILING `lookback`
@@ -2128,10 +2114,6 @@ object EventStreams {
     implicit val outEnc = Encoders.product[RzOut]
     implicit val stEnc = Encoders.kryo[Vector[Double]]
     implicit val longEnc = Encoders.scalaLong
-    def dec(v: Double): BigDecimal =
-      BigDecimal.valueOf(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-    def t4zero(x: Double): Double =
-      math.signum(x) * (math.floor(math.abs(x) * 1e4) / 1e4) + 0.0
     df.select(col("key").cast("long"), col("bucket").cast("long"),
         col("value").cast("double"))
       .as[RzIn]
@@ -2246,10 +2228,6 @@ object EventStreams {
     implicit val outEnc = Encoders.product[LsOut]
     implicit val stEnc = Encoders.kryo[Vector[(Long, Double)]]
     implicit val longEnc = Encoders.scalaLong
-    def dec(v: Double): BigDecimal =
-      BigDecimal.valueOf(v).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-    def t4zero(x: Double): Double =
-      math.signum(x) * (math.floor(math.abs(x) * 1e4) / 1e4) + 0.0
     df.select(col("key").cast("long"), col("bucket").cast("long"),
         col("value").cast("double"))
       .as[RzIn]

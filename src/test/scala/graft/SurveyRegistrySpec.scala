@@ -74,4 +74,27 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"engine code reads env/system properties:\n${offenders.mkString("\n")}")
   }
+
+  test("queries spell the tokenizer regex only in tkSql and normFingerprintSql") {
+    // every text oracle must replay the SAME cross-engine tokenizer and
+    // fingerprint; an inline copy of the character class is a twin
+    // that can drift from the others unnoticed
+    import scala.jdk.CollectionConverters._
+    val charClass = """'\[\^\\{1,2}p\{L\}\\{1,2}p\{Nd\}\\{1,2}s\]'""".r
+    val decl = """\s*(?:private(?:\[\w+\])? )?(?:def|val|lazy val) (\w+)\b.*""".r
+    val owners = Set("tkSql", "normFingerprintSql")
+    val walk = java.nio.file.Files.list(java.nio.file.Paths.get("src/main/scala/graft/queries"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val offenders = for {
+      f <- files
+      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      if charClass.findFirstIn(l).isDefined
+      owner = lines.take(i + 1).reverseIterator.collectFirst { case decl(n) => n }
+      if !(f.getFileName.toString == "package.scala" && owner.exists(owners))
+    } yield s"$f:${i + 1}: ${l.trim}"
+    assert(offenders.isEmpty,
+      s"inline tokenizer/fingerprint regex outside tkSql/normFingerprintSql:\n${offenders.mkString("\n")}")
+  }
 }
