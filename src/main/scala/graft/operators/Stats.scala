@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.streaming.EventStreams.{EwmaIn, EwmaOut, EwmaState, HoltOut, HoltState, HwOut, HwState}
 
 /** Experiment statistics — the A/B readout endpoint: compare a metric
   * between two groups with an unpooled two-sample z statistic, over
@@ -1557,67 +1560,97 @@ object Stats {
     * micro-lanes (the E34 contract) — values quantize once on entry
     * (round(x·1e6)), α enters as the RATIONAL aNum/aDen so the update
     * is a truncating integer division (toward zero — both Scala's `/`
-    * and DuckDB's `//`), and both engines (and the stream twin)
-    * replay the identical integer walk; outputs divide back to
-    * doubles (exact: micro values sit far under 2^53).
+    * and DuckDB's `//`), and both engines replay the identical integer
+    * walk; outputs divide back to doubles (exact: micro values sit far
+    * under 2^53). The step is written once ([[ewmaScan]]) and shared
+    * with the E39 stream twin, so the two cannot drift.
     *
     * Shape at scale: one repartition on key + partition-local linear
-    * scan (the justified loop-carried-state kernel class — a linear
-    * recurrence with per-step flooring has no window form); per-key
-    * chains are time-bucket-bounded (the E32 horizon contract), never
-    * event-volume-bounded. NULL key/bucket/value rows are excluded.
+    * scan ([[smoothingChart]] — the justified loop-carried-state kernel
+    * class: a linear recurrence with per-step flooring has no window
+    * form); per-key chains are time-bucket-bounded (the E32 horizon
+    * contract), never event-volume-bounded. NULL key/bucket/value rows
+    * are excluded.
     * Returns (key, bucket, value, ewma, resid, alarm) — resid NULL on
     * each key's first bucket (no forecast yet, never an alarm).
     */
   def ewmaChart(df: DataFrame, key: Column, bucket: Column, value: Column,
-      alphaNum: Int = 1, alphaDen: Int = 4, band: Double = 2.0): DataFrame = {
-    require(alphaDen > 0 && alphaNum > 0 && alphaNum <= alphaDen,
-      "alpha = alphaNum/alphaDen must be in (0, 1]")
+      alphaNum: Int = 1, alphaDen: Int = 4, band: Double = 2.0): DataFrame =
+    smoothingChart(df, key, bucket, value, band, ewmaScan(alphaNum, alphaDen, band),
+      "key STRING, bucket BIGINT, value DOUBLE, ewma DOUBLE, resid DOUBLE, alarm BOOLEAN") {
+      o => Row(o.key, o.bucket, o.value_micro / 1e6, o.ewma_micro / 1e6,
+        unmicro(o.resid_micro), o.alarm)
+    }
+
+  /** The smoothing charts' shared pieces. A [[SmoothScan]] is a chart's
+    * initial per-key state plus its ONE recurrence step over the
+    * micro-lane row — the step both the batch walk below and the
+    * stream twins ([[graft.streaming.EventStreams.ewmaStream]] …) run,
+    * emitting micro-unit outputs.
+    */
+  private[graft] type SmoothScan[S, O] = (S, (String, S, EwmaIn) => (S, Option[O]))
+
+  /** The smoothing input lane: (key string, b long, round(v·1e6) as
+    * vMicro), rows with a NULL key, bucket or value dropped.
+    */
+  private[graft] def microBuckets(df: DataFrame, key: Column, bucket: Column,
+      value: Column): Dataset[EwmaIn] =
+    df.select(key.cast("string").as("key"), bucket.cast("long").as("b"),
+        round(value.cast("double") * 1e6).cast("long").as("vMicro"))
+      .filter(col("key").isNotNull && col("b").isNotNull && col("vMicro").isNotNull)
+      .as(Encoders.product[EwmaIn])
+
+  /** A rational smoothing weight num/den in (0, 1]. */
+  private def requireRate(name: String, num: Int, den: Int): Unit =
+    require(den > 0 && num > 0 && num <= den,
+      s"$name = ${name}Num/${name}Den must be in (0, 1]")
+
+  private def unmicro(m: Option[Long]): java.lang.Double =
+    m.map(v => java.lang.Double.valueOf(v / 1e6)).orNull
+
+  /** The batch walk of a [[SmoothScan]]: one repartition on key, a
+    * partition-local sort on (key, bucket), and a linear scan that
+    * restarts from the initial state on each key change; each micro-unit
+    * output divides back to doubles through `row` under the `ddl`
+    * schema.
+    */
+  private def smoothingChart[S, O](df: DataFrame, key: Column, bucket: Column,
+      value: Column, band: Double, scan: SmoothScan[S, O], ddl: String)(
+      row: O => Row): DataFrame = {
     require(band >= 0, "band must be >= 0")
-    val bandMicro = math.round(band * 1e6)
-    val t = df.select(key.cast("string").as("key"),
-        bucket.cast("long").as("bucket"),
-        round(value.cast("double") * 1e6).cast("long").as("__vm"))
-      .filter(col("key").isNotNull && col("bucket").isNotNull
-        && col("__vm").isNotNull)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("ewma",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("resid",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("alarm",
-        org.apache.spark.sql.types.BooleanType)))
-    val (aN, aD) = (alphaNum.toLong, alphaDen.toLong)
-    t.repartition(col("key")).sortWithinPartitions("key", "bucket")
+    val (init, step) = scan
+    microBuckets(df, key, bucket, value)
+      .repartition(col("key")).sortWithinPartitions("key", "b")
       .mapPartitions { rows =>
         var curKey: String = null
-        var s = 0L
-        var started = false
-        rows.map { r =>
-          val k = r.getString(0)
-          val b = r.getLong(1)
-          val vm = r.getLong(2)
-          if (k != curKey) { curKey = k; started = false }
-          if (!started) {
-            started = true
-            s = vm
-            org.apache.spark.sql.Row(k, b, vm / 1e6, s / 1e6,
-              null.asInstanceOf[java.lang.Double], false)
-          } else {
-            val resid = vm - s
-            val alarm = math.abs(resid) > bandMicro
-            s = (aN * vm + (aD - aN) * s) / aD
-            org.apache.spark.sql.Row(k, b, vm / 1e6, s / 1e6,
-              resid / 1e6, alarm)
-          }
+        var st = init
+        rows.flatMap { r =>
+          if (r.key != curKey) { curKey = r.key; st = init }
+          val (next, out) = step(r.key, st, r)
+          st = next
+          out.map(row)
         }
-      }(org.apache.spark.sql.Encoders.row(schema))
+      }(Encoders.row(StructType.fromDDL(ddl)))
+  }
+
+  /** [[ewmaChart]]'s step: the first bucket seeds the level; each later
+    * one scores its residual against the level, then advances it.
+    */
+  private[graft] def ewmaScan(alphaNum: Int, alphaDen: Int,
+      band: Double): SmoothScan[EwmaState, EwmaOut] = {
+    requireRate("alpha", alphaNum, alphaDen)
+    val bandMicro = math.round(band * 1e6)
+    val (aN, aD) = (alphaNum.toLong, alphaDen.toLong)
+    (EwmaState(0L, started = false), (key, st, r) =>
+      if (!st.started)
+        (EwmaState(r.vMicro, started = true),
+          Some(EwmaOut(key, r.b, r.vMicro, r.vMicro, None, alarm = false)))
+      else {
+        val resid = r.vMicro - st.sMicro
+        val s = (aN * r.vMicro + (aD - aN) * st.sMicro) / aD
+        (EwmaState(s, started = true),
+          Some(EwmaOut(key, r.b, r.vMicro, s, Some(resid), math.abs(resid) > bandMicro)))
+      })
   }
 
   /** Holt linear-trend chart (double exponential smoothing) — the
@@ -1636,72 +1669,44 @@ object Stats {
     * on INTEGER 1e6 micro-lanes with rational α/β, TRUNCATING integer
     * division (toward zero — both Scala's `/` and DuckDB's `//`, so
     * negative trend lanes replay sign-exactly),
-    * so batch, the E40 stream twin, and the recursive-CTE oracle walk
-    * identical integers. Same kernel shape: one repartition on key +
-    * partition-local linear scan, per-key chains time-bucket-bounded.
+    * so batch and the recursive-CTE oracle walk identical integers; the
+    * step ([[holtScan]]) is shared with the E40 stream twin. Same kernel
+    * shape: one repartition on key + partition-local linear scan,
+    * per-key chains time-bucket-bounded.
     * Returns (key, bucket, value, level, trend, resid, alarm) — resid
     * NULL on each key's first bucket.
     */
   def holtChart(df: DataFrame, key: Column, bucket: Column, value: Column,
       alphaNum: Int = 1, alphaDen: Int = 4,
-      betaNum: Int = 1, betaDen: Int = 4, band: Double = 2.0): DataFrame = {
-    require(alphaDen > 0 && alphaNum > 0 && alphaNum <= alphaDen,
-      "alpha = alphaNum/alphaDen must be in (0, 1]")
-    require(betaDen > 0 && betaNum > 0 && betaNum <= betaDen,
-      "beta = betaNum/betaDen must be in (0, 1]")
-    require(band >= 0, "band must be >= 0")
+      betaNum: Int = 1, betaDen: Int = 4, band: Double = 2.0): DataFrame =
+    smoothingChart(df, key, bucket, value, band,
+      holtScan(alphaNum, alphaDen, betaNum, betaDen, band),
+      "key STRING, bucket BIGINT, value DOUBLE, level DOUBLE, trend DOUBLE, " +
+        "resid DOUBLE, alarm BOOLEAN") {
+      o => Row(o.key, o.bucket, o.value_micro / 1e6, o.level_micro / 1e6,
+        o.trend_micro / 1e6, unmicro(o.resid_micro), o.alarm)
+    }
+
+  /** [[holtChart]]'s step: level and trend advance together. */
+  private[graft] def holtScan(alphaNum: Int, alphaDen: Int, betaNum: Int,
+      betaDen: Int, band: Double): SmoothScan[HoltState, HoltOut] = {
+    requireRate("alpha", alphaNum, alphaDen)
+    requireRate("beta", betaNum, betaDen)
     val bandMicro = math.round(band * 1e6)
-    val t = df.select(key.cast("string").as("key"),
-        bucket.cast("long").as("bucket"),
-        round(value.cast("double") * 1e6).cast("long").as("__vm"))
-      .filter(col("key").isNotNull && col("bucket").isNotNull
-        && col("__vm").isNotNull)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("level",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("trend",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("resid",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("alarm",
-        org.apache.spark.sql.types.BooleanType)))
     val (aN, aD) = (alphaNum.toLong, alphaDen.toLong)
     val (bN, bD) = (betaNum.toLong, betaDen.toLong)
-    t.repartition(col("key")).sortWithinPartitions("key", "bucket")
-      .mapPartitions { rows =>
-        var curKey: String = null
-        var s = 0L
-        var b = 0L
-        var started = false
-        rows.map { r =>
-          val k = r.getString(0)
-          val bk = r.getLong(1)
-          val vm = r.getLong(2)
-          if (k != curKey) { curKey = k; started = false }
-          if (!started) {
-            started = true
-            s = vm
-            b = 0L
-            org.apache.spark.sql.Row(k, bk, vm / 1e6, s / 1e6, 0.0,
-              null.asInstanceOf[java.lang.Double], false)
-          } else {
-            val forecast = s + b
-            val resid = vm - forecast
-            val alarm = math.abs(resid) > bandMicro
-            val sPrev = s
-            s = (aN * vm + (aD - aN) * forecast) / aD
-            b = (bN * (s - sPrev) + (bD - bN) * b) / bD
-            org.apache.spark.sql.Row(k, bk, vm / 1e6, s / 1e6, b / 1e6,
-              resid / 1e6, alarm)
-          }
-        }
-      }(org.apache.spark.sql.Encoders.row(schema))
+    (HoltState(0L, 0L, started = false), (key, st, r) =>
+      if (!st.started)
+        (HoltState(r.vMicro, 0L, started = true),
+          Some(HoltOut(key, r.b, r.vMicro, r.vMicro, 0L, None, alarm = false)))
+      else {
+        val forecast = st.sMicro + st.bMicro
+        val resid = r.vMicro - forecast
+        val s = (aN * r.vMicro + (aD - aN) * forecast) / aD
+        val b = (bN * (s - st.sMicro) + (bD - bN) * st.bMicro) / bD
+        (HoltState(s, b, started = true),
+          Some(HoltOut(key, r.b, r.vMicro, s, b, Some(resid), math.abs(resid) > bandMicro)))
+      })
   }
 
   /** C97: Holt-Winters additive seasonal chart — the SEASONAL member
@@ -1718,8 +1723,9 @@ object Stats {
     * Initialization is DETERMINISTIC-SIMPLE on purpose: s_0 = x_0,
     * b_0 = 0, all seasonal components 0 — the chart warms up over the
     * first cycles instead of fitting an init window, and both engines
-    * (and any future stream twin) replay the identical walk from the
-    * same three literals. Same determinism contract as [[holtChart]]:
+    * replay the identical walk from the same three literals; the step
+    * ([[holtWintersScan]]) is shared with the E43 stream twin. Same
+    * determinism contract as [[holtChart]]:
     * INTEGER 1e6 micro-lanes, rational α/β/γ, truncating division
     * toward zero on both engines; the oracle carries the seasonal
     * RING as a p-slot list column through the recursive CTE (the FFD
@@ -1735,78 +1741,44 @@ object Stats {
   def holtWintersChart(df: DataFrame, key: Column, bucket: Column, value: Column,
       period: Int, alphaNum: Int = 1, alphaDen: Int = 4,
       betaNum: Int = 1, betaDen: Int = 4,
-      gammaNum: Int = 1, gammaDen: Int = 4, band: Double = 2.0): DataFrame = {
+      gammaNum: Int = 1, gammaDen: Int = 4, band: Double = 2.0): DataFrame =
+    smoothingChart(df, key, bucket, value, band, holtWintersScan(period,
+        alphaNum, alphaDen, betaNum, betaDen, gammaNum, gammaDen, band),
+      "key STRING, bucket BIGINT, value DOUBLE, level DOUBLE, trend DOUBLE, " +
+        "seasonal DOUBLE, resid DOUBLE, alarm BOOLEAN") {
+      o => Row(o.key, o.bucket, o.value_micro / 1e6, o.level_micro / 1e6,
+        o.trend_micro / 1e6, o.seasonal_micro / 1e6, unmicro(o.resid_micro), o.alarm)
+    }
+
+  /** [[holtWintersChart]]'s step: level, trend and this phase's slot of
+    * the seasonal ring advance; the cursor moves to the next phase. The
+    * first bucket's c_0 update is γ(x_0 − s_0) = 0 exactly, so it emits 0.
+    */
+  private[graft] def holtWintersScan(period: Int, alphaNum: Int, alphaDen: Int,
+      betaNum: Int, betaDen: Int, gammaNum: Int, gammaDen: Int,
+      band: Double): SmoothScan[HwState, HwOut] = {
     require(period >= 2, "period must be >= 2 (a 1-period season is a level)")
-    require(alphaDen > 0 && alphaNum > 0 && alphaNum <= alphaDen,
-      "alpha = alphaNum/alphaDen must be in (0, 1]")
-    require(betaDen > 0 && betaNum > 0 && betaNum <= betaDen,
-      "beta = betaNum/betaDen must be in (0, 1]")
-    require(gammaDen > 0 && gammaNum > 0 && gammaNum <= gammaDen,
-      "gamma = gammaNum/gammaDen must be in (0, 1]")
-    require(band >= 0, "band must be >= 0")
+    requireRate("alpha", alphaNum, alphaDen)
+    requireRate("beta", betaNum, betaDen)
+    requireRate("gamma", gammaNum, gammaDen)
     val bandMicro = math.round(band * 1e6)
-    val t = df.select(key.cast("string").as("key"),
-        bucket.cast("long").as("bucket"),
-        round(value.cast("double") * 1e6).cast("long").as("__vm"))
-      .filter(col("key").isNotNull && col("bucket").isNotNull
-        && col("__vm").isNotNull)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("level",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("trend",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("seasonal",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("resid",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("alarm",
-        org.apache.spark.sql.types.BooleanType)))
     val (aN, aD) = (alphaNum.toLong, alphaDen.toLong)
     val (bN, bD) = (betaNum.toLong, betaDen.toLong)
     val (gN, gD) = (gammaNum.toLong, gammaDen.toLong)
     val p = period
-    t.repartition(col("key")).sortWithinPartitions("key", "bucket")
-      .mapPartitions { rows =>
-        var curKey: String = null
-        var s = 0L
-        var b = 0L
-        var cs: Array[Long] = null
-        var idx = 0
-        var started = false
-        rows.map { r =>
-          val k = r.getString(0)
-          val bk = r.getLong(1)
-          val vm = r.getLong(2)
-          if (k != curKey) { curKey = k; started = false }
-          if (!started) {
-            started = true
-            s = vm; b = 0L; cs = new Array[Long](p); idx = 0
-            // c_0 update at phase 0: γ(x_0 − s_0) = 0 exactly — emit 0
-            idx = 1 % p
-            org.apache.spark.sql.Row(k, bk, vm / 1e6, s / 1e6, 0.0, 0.0,
-              null.asInstanceOf[java.lang.Double], false)
-          } else {
-            val cPrev = cs(idx)
-            val forecast = s + b + cPrev
-            val resid = vm - forecast
-            val alarm = math.abs(resid) > bandMicro
-            val sPrev = s
-            s = (aN * (vm - cPrev) + (aD - aN) * (sPrev + b)) / aD
-            b = (bN * (s - sPrev) + (bD - bN) * b) / bD
-            val cNew = (gN * (vm - s) + (gD - gN) * cPrev) / gD
-            cs(idx) = cNew
-            idx = (idx + 1) % p
-            org.apache.spark.sql.Row(k, bk, vm / 1e6, s / 1e6, b / 1e6,
-              cNew / 1e6, resid / 1e6, alarm)
-          }
-        }
-      }(org.apache.spark.sql.Encoders.row(schema))
+    (HwState(0L, 0L, Vector.fill(p)(0L), 0, started = false), (key, st, r) =>
+      if (!st.started)
+        (HwState(r.vMicro, 0L, Vector.fill(p)(0L), 1 % p, started = true),
+          Some(HwOut(key, r.b, r.vMicro, r.vMicro, 0L, 0L, None, alarm = false)))
+      else {
+        val cPrev = st.cs(st.idx)
+        val resid = r.vMicro - (st.sMicro + st.bMicro + cPrev)
+        val s = (aN * (r.vMicro - cPrev) + (aD - aN) * (st.sMicro + st.bMicro)) / aD
+        val b = (bN * (s - st.sMicro) + (bD - bN) * st.bMicro) / bD
+        val c = (gN * (r.vMicro - s) + (gD - gN) * cPrev) / gD
+        (HwState(s, b, st.cs.updated(st.idx, c), (st.idx + 1) % p, started = true),
+          Some(HwOut(key, r.b, r.vMicro, s, b, c, Some(resid), math.abs(resid) > bandMicro)))
+      })
   }
 
   /** C98: best single changepoint per key (binary-segmentation step 1)

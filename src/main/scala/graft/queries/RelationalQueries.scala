@@ -543,9 +543,4 @@ object RelationalQueries {
        |FROM customer JOIN nation ON c_nationkey = n_nationkey
        |GROUP BY $groupingSets (n_name, c_mktsegment)
        |ORDER BY $orderBy""".stripMargin
-
-  // $"..." sugar without a SparkSession-bound implicits import.
-  private implicit class Sym(val sc: StringContext) {
-    def $(args: Any*): org.apache.spark.sql.Column = col(sc.s(args: _*))
-  }
 }

@@ -507,8 +507,4 @@ object WranglingQueries {
         .orderBy("dir", "bin_id", "path")
     }
   )
-
-  private implicit class Sym(val sc: StringContext) {
-    def $(args: Any*): org.apache.spark.sql.Column = col(sc.s(args: _*))
-  }
 }

@@ -37,6 +37,11 @@ package object queries {
   def table(s: SparkSession, dir: String, name: String): DataFrame =
     sources.Tables.load(s, dir, name)
 
+  /** `$"name"` column sugar without a SparkSession-bound implicits import. */
+  implicit class Sym(val sc: StringContext) {
+    def $(args: Any*): Column = col(sc.s(args: _*))
+  }
+
   /** DuckDB expression for the shared tokenizer over column `c` — the
     * cross-engine contract behind every text oracle (lower → strip
     * non-letter/digit → split on whitespace → drop empties). ONE copy

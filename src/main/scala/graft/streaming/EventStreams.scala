@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -488,17 +490,63 @@ object EventStreams {
       .start()
   }
 
-  /** E2: stateful gap sessionization via flatMapGroupsWithState with
-    * event-time timeout. Emits one row per CLOSED session (append
-    * mode); open sessions close `gapUs` after their last event once the
-    * watermark passes. Batch twin: `q_sessionize`.
-    *
-    * Input needs a TimestampType `ts` column (for the watermark) plus
-    * the Event fields.
+  /** Encoders for the per-key scans below: every input, state and
+    * output case class (and tuple), plus the long and string keys.
+    * A scan whose state is a kryo blob declares that encoder locally.
     */
+  private object ScanEncoders {
+    implicit val longEnc: Encoder[Long] = Encoders.scalaLong
+    implicit val stringEnc: Encoder[String] = Encoders.STRING
+    implicit def productEnc[T <: Product : TypeTag]: Encoder[T] = Encoders.product[T]
+  }
+
+  /** The per-key ordered scan behind every stateful "live twin" below
+    * whose batch twin is a linear walk over each key's rows: rows group
+    * by `key`, each key's rows in the micro-batch sort by `order`, and
+    * `step` advances the key's state one row at a time — starting from
+    * the stored state, or `init` on the key's first batch — emitting
+    * that row's outputs. The final state is written back once per key
+    * per batch. Append output, no timeout: nothing is evicted, so the
+    * state holds exactly what `step` keeps.
+    *
+    * Ordering contract, shared by every operator built on this: the
+    * stream must deliver each key's rows in `order` order ACROSS
+    * batches — the shape of an append-only ingest with a monotonic
+    * arrival key, or of FINALIZED buckets (a bucket's value never
+    * changes once fed). Within a batch the sort here enforces it; the
+    * sort is stable (ties keep arrival order) and bounded by the
+    * micro-batch, not the stream's history. That contract given, the
+    * emitted rows equal the batch twin's over the union of all
+    * batches, whatever the split — which is what each operator's
+    * across-split spec proves. No watermark is needed: an emitted row
+    * never un-happens.
+    */
+  private def orderedScan[I, K: Encoder, T: Ordering, S: Encoder, O: Encoder](
+      in: Dataset[I])(key: I => K, order: I => T)(init: S)(
+      step: (K, S, I) => (S, IterableOnce[O])): Dataset[O] =
+    in.groupByKey(key)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (k: K, rows: Iterator[I], state: GroupState[S]) =>
+          var st = state.getOption.getOrElse(init)
+          val out = Vector.newBuilder[O]
+          rows.toSeq.sortBy(order).foreach { r =>
+            val (next, emitted) = step(k, st, r)
+            st = next
+            out ++= emitted
+          }
+          state.update(st)
+          out.result().iterator
+      }
+
   case class PackIn(id: Long, shard: Long, order_key: Long, n_tokens: Long)
   case class PackOut(
       id: Long, shard: Long, n_tokens: Long, seq_id: Long, tok_offset: Long)
+
+  private def packIn(docs: DataFrame): Dataset[PackIn] =
+    docs.select(col("id").cast("long"), col("shard").cast("long"),
+        col("order_key").cast("long"), col("n_tokens").cast("long"))
+      .as(Encoders.product[PackIn])
 
   /** E10: STREAMING sequence packing — the stateful twin of
     * [[graft.operators.Packing.packSequences]]: documents arriving on
@@ -507,40 +555,21 @@ object EventStreams {
     * O(1) state per shard, no watermark needed (nothing is ever
     * evicted; the counter is the whole history).
     *
-    * Ordering contract: concat-then-chunk is order-DEFINED, so the
-    * stream must deliver each shard's docs in `order_key` order
-    * across batches (the shape of an append-only ingest with a
-    * monotonic id/arrival key — within a batch rows are sorted here,
-    * enforcing it per batch). That contract given, the assignment is
-    * IDENTICAL to the batch operator's — which is what the spec
-    * proves across multi-batch delivery.
+    * Concat-then-chunk is order-DEFINED, so the [[orderedScan]]
+    * contract applies per shard in `order_key` order; given it, the
+    * assignment is IDENTICAL to the batch operator's — which is what
+    * the spec proves across multi-batch delivery.
     *
     * Input columns: (id, shard, order_key, n_tokens).
     * Output: (id, shard, n_tokens, seq_id, tok_offset).
     */
   def packStream(docs: DataFrame, budget: Long): Dataset[PackOut] = {
     require(budget > 0, "budget must be positive")
-    implicit val inEnc = Encoders.product[PackIn]
-    implicit val outEnc = Encoders.product[PackOut]
-    implicit val longEnc = Encoders.scalaLong
-    docs.select(col("id").cast("long"), col("shard").cast("long"),
-        col("order_key").cast("long"), col("n_tokens").cast("long"))
-      .as[PackIn]
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState[Long, PackOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (shard: Long, rows: Iterator[PackIn], state: GroupState[Long]) =>
-          var cum = state.getOption.getOrElse(0L)
-          // per-batch sort enforces the order contract within the
-          // batch; bounded by micro-batch size, not corpus size
-          val out = rows.toSeq.sortBy(_.order_key).map { r =>
-            val o = PackOut(r.id, shard, r.n_tokens, cum / budget, cum % budget)
-            cum += r.n_tokens
-            o
-          }
-          state.update(cum)
-          out.iterator
-      }
+    import ScanEncoders._
+    orderedScan(packIn(docs))(_.shard, _.order_key)(0L) { (shard, cum, r) =>
+      (cum + r.n_tokens,
+        Some(PackOut(r.id, shard, r.n_tokens, cum / budget, cum % budget)))
+    }
   }
 
   case class AdmitOut(id: Long, shard: Long, n_tokens: Long, tokens_before: Long)
@@ -554,39 +583,19 @@ object EventStreams {
     * counter never expires). The straddling doc is admitted
     * (tokens_before < budget), the batch operator's convention.
     *
-    * Same ordering contract as [[packStream]]: per-shard delivery in
-    * `order_key` order across batches (append-only ingest shape);
-    * within a batch rows are sorted here. Given that, the admitted
-    * set is IDENTICAL to the batch operator's on the union of all
-    * batches — which is what the spec proves.
+    * Same [[orderedScan]] contract as [[packStream]]; given it, the
+    * admitted set is IDENTICAL to the batch operator's on the union
+    * of all batches — which is what the spec proves.
     */
   def admitStream(docs: DataFrame, budget: Long): Dataset[AdmitOut] = {
     require(budget > 0, "budget must be positive")
-    implicit val inEnc = Encoders.product[PackIn]
-    implicit val outEnc = Encoders.product[AdmitOut]
-    implicit val longEnc = Encoders.scalaLong
-    docs.select(col("id").cast("long"), col("shard").cast("long"),
-        col("order_key").cast("long"), col("n_tokens").cast("long"))
-      .as[PackIn]
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState[Long, AdmitOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (shard: Long, rows: Iterator[PackIn], state: GroupState[Long]) =>
-          var cum = state.getOption.getOrElse(0L)
-          val out = Seq.newBuilder[AdmitOut]
-          // per-batch sort enforces the order contract within the
-          // batch; bounded by micro-batch size
-          rows.toSeq.sortBy(_.order_key).foreach { r =>
-            if (cum < budget) {
-              out += AdmitOut(r.id, shard, r.n_tokens, cum)
-              cum += r.n_tokens
-            }
-            // over-budget rows fall through unemitted; cum stays put,
-            // so the shard's tap remains closed for every later batch
-          }
-          state.update(cum)
-          out.result().iterator
-      }
+    import ScanEncoders._
+    orderedScan(packIn(docs))(_.shard, _.order_key)(0L) { (shard, cum, r) =>
+      // over-budget rows fall through unemitted; cum stays put, so the
+      // shard's tap remains closed for every later batch
+      if (cum < budget) (cum + r.n_tokens, Some(AdmitOut(r.id, shard, r.n_tokens, cum)))
+      else (cum, None)
+    }
   }
 
   /** The skeleton every streaming sketch sink shares: per micro-batch,
@@ -693,58 +702,45 @@ object EventStreams {
     * frame over the same frames (spec-proven across a batch split
     * INSIDE a scene and at the cut). Feature extraction runs upstream
     * ([[graft.operators.Multimodal.frameFeatures]] — stateless, the
-    * curateStream class). Ordering contract as funnelStream: per-key
-    * frame_idx order ACROSS batches; within a batch rows sort here.
-    * No watermark — a verdict never un-happens; TTL wrap for GC.
+    * curateStream class). [[orderedScan]] contract per video in
+    * frame_idx order. No watermark — a verdict never un-happens; TTL
+    * wrap for GC.
     */
   def sceneChangeStream(
       frames: DataFrame, dim: Int = 16,
       threshold: Double = 0.1): Dataset[SceneOut] = {
-    implicit val inEnc = Encoders.product[FrameIn]
-    implicit val outEnc = Encoders.product[SceneOut]
-    implicit val stEnc = Encoders.product[SceneState]
-    implicit val longEnc = Encoders.scalaLong
-    frames.select(col("video_id").cast("long"),
+    import ScanEncoders._
+    orderedScan(frames.select(col("video_id").cast("long"),
         col("frame_idx").cast("int"), col("features"))
       .filter(col("video_id").isNotNull)
-      .as[FrameIn]
-      .groupByKey(_.video_id)
-      .flatMapGroupsWithState[SceneState, SceneOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (vid: Long, rows: Iterator[FrameIn], state: GroupState[SceneState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[SceneOut]
-          rows.toSeq.sortBy(_.frame_idx).foreach { r =>
-            if (st == null) {
-              out += SceneOut(vid, r.frame_idx, None, scene_change = false)
-            } else {
-              // batch kernel replayed: 1/255-quantized integer lanes
-              // (round(f·255)), index-ascending |Δ|-sum, one division,
-              // 4-dp floor. The batch twin's features are length-dim
-              // by construction; here they arrive from the stream, so
-              // a wrong-dimension array must fail LOUDLY — a silent
-              // min-length fold divided by the dim param would
-              // mis-scale every distance and quietly diverge from the
-              // batch verdicts
-              require(r.features.length == dim && st.lastFeatures.length == dim,
-                s"sceneChangeStream: feature dim ${r.features.length} != configured dim $dim " +
-                  s"(video $vid frame ${r.frame_idx}) — pass dim= matching the feature extractor")
-              var s = 0.0
-              var i = 0
-              while (i < dim) {
-                s += math.abs(
-                  math.round(st.lastFeatures(i).toDouble * 255).toDouble -
-                    math.round(r.features(i).toDouble * 255).toDouble)
-                i += 1
-              }
-              val dist = math.floor(s / (dim * 255.0) * 1e4) / 1e4
-              out += SceneOut(vid, r.frame_idx, Some(dist), dist > threshold)
-            }
-            st = SceneState(r.frame_idx, r.features)
+      .as[FrameIn])(_.video_id, _.frame_idx)(null: SceneState) { (vid, st, r) =>
+      val out =
+        if (st == null) SceneOut(vid, r.frame_idx, None, scene_change = false)
+        else {
+          // batch kernel replayed: 1/255-quantized integer lanes
+          // (round(f·255)), index-ascending |Δ|-sum, one division,
+          // 4-dp floor. The batch twin's features are length-dim
+          // by construction; here they arrive from the stream, so
+          // a wrong-dimension array must fail LOUDLY — a silent
+          // min-length fold divided by the dim param would
+          // mis-scale every distance and quietly diverge from the
+          // batch verdicts
+          require(r.features.length == dim && st.lastFeatures.length == dim,
+            s"sceneChangeStream: feature dim ${r.features.length} != configured dim $dim " +
+              s"(video $vid frame ${r.frame_idx}) — pass dim= matching the feature extractor")
+          var s = 0.0
+          var i = 0
+          while (i < dim) {
+            s += math.abs(
+              math.round(st.lastFeatures(i).toDouble * 255).toDouble -
+                math.round(r.features(i).toDouble * 255).toDouble)
+            i += 1
           }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+          val dist = math.floor(s / (dim * 255.0) * 1e4) / 1e4
+          SceneOut(vid, r.frame_idx, Some(dist), dist > threshold)
+        }
+      (SceneState(r.frame_idx, r.features), Some(out))
+    }
   }
 
   case class TermIn(term: String, bucket: Long)
@@ -1006,37 +1002,21 @@ object EventStreams {
     * compare against the Wald bounds ·1e7 (the E30-cells/probe
     * split). Increments enter as the same
     * `BigDecimal(ln …).setScale(7)` values the batch operator and
-    * oracle share. Ordering contract as E26/E34: per-key order
-    * across batches; within a batch rows sort here.
+    * oracle share. [[orderedScan]] contract per key in `o` order.
     */
   def sprtStream(obs: DataFrame, p0: Double, p1: Double): Dataset[SprtOut] = {
     require(p0 > 0 && p0 < 1 && p1 > 0 && p1 < 1 && p0 != p1,
       "p0, p1 in (0,1), distinct")
-    implicit val inEnc = Encoders.product[SprtIn]
-    implicit val outEnc = Encoders.product[SprtOut]
-    implicit val stEnc = Encoders.product[SprtState]
-    implicit val strEnc = Encoders.STRING
-    def r7micro(x: Double): Long =
-      BigDecimal(x).setScale(7, BigDecimal.RoundingMode.HALF_UP)
-        .underlying().movePointRight(7).longValueExact()
-    val lw = r7micro(math.log(p1 / p0))
-    val ll = r7micro(math.log((1 - p1) / (1 - p0)))
-    obs.select(col("key").cast("string"), col("o").cast("long"),
+    import ScanEncoders._
+    val lw = scaledLong(math.log(p1 / p0), 7)
+    val ll = scaledLong(math.log((1 - p1) / (1 - p0)), 7)
+    orderedScan(obs.select(col("key").cast("string"), col("o").cast("long"),
         col("x").cast("boolean"))
       .filter(col("key").isNotNull && col("x").isNotNull)
-      .as[SprtIn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SprtState, SprtOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[SprtIn], state: GroupState[SprtState]) =>
-          var llr = state.getOption.map(_.llr7).getOrElse(0L)
-          val out = rows.toSeq.sortBy(_.o).map { r =>
-            llr += (if (r.x) lw else ll)
-            SprtOut(key, r.o, llr)
-          }
-          state.update(SprtState(llr))
-          out.iterator
-      }
+      .as[SprtIn])(_.key, _.o)(SprtState(0L)) { (key, st, r) =>
+      val llr = st.llr7 + (if (r.x) lw else ll)
+      (SprtState(llr), Some(SprtOut(key, r.o, llr)))
+    }
   }
 
   case class LinePair(fp: String, doc: Long)
@@ -1092,45 +1072,26 @@ object EventStreams {
     * bucket emits its cusum_hi/lo in micro-units, and the emitted
     * sequence equals the batch windows row for row (spec across a
     * split). Alarming stays a downstream compare against
-    * threshold·1e6 — the E30-cells/probe split. Ordering contract as
-    * E26: per-key bucket order ACROSS batches; within a batch rows
-    * sort here. No watermark — a bucket's count never un-happens
-    * (feed FINALIZED buckets, the rollingZ input contract).
+    * threshold·1e6 — the E30-cells/probe split. [[orderedScan]]
+    * contract per key in bucket order: feed FINALIZED buckets (the
+    * rollingZ input contract).
     */
   def cusumStream(buckets: DataFrame, target: Double,
       slack: Double): Dataset[CusumOut] = {
-    implicit val inEnc = Encoders.product[CusumIn]
-    implicit val outEnc = Encoders.product[CusumOut]
-    implicit val stEnc = Encoders.product[CusumState]
-    implicit val strEnc = Encoders.STRING
-    def micro(x: Double): Long =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .underlying().movePointRight(6).longValueExact()
-    val up = micro(target + slack)
-    val dn = micro(target - slack)
-    buckets.select(col("key").cast("string").as("key"),
-        col("b").cast("long").as("b"),
-        (org.apache.spark.sql.functions.round(col("v"), 6)
-          .cast("decimal(18,6)") * 1000000).cast("long").as("xMicro"))
+    import ScanEncoders._
+    val up = scaledLong(target + slack, 6)
+    val dn = scaledLong(target - slack, 6)
+    orderedScan(buckets.select(col("key").cast("string").as("key"),
+        col("b").cast("long").as("b"), decimalMicro(col("v")).as("xMicro"))
       .filter(col("key").isNotNull && col("xMicro").isNotNull)
-      .as[CusumIn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CusumState, CusumOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[CusumIn], state: GroupState[CusumState]) =>
-          var st = state.getOption.getOrElse(CusumState(0L, 0L, 0L, 0L))
-          val out = rows.toSeq.sortBy(_.b).map { r =>
-            val pHi = st.pHi + (r.xMicro - up)
-            val mHi = math.min(st.mHi, pHi)
-            val pLo = st.pLo + (dn - r.xMicro)
-            val mLo = math.min(st.mLo, pLo)
-            st = CusumState(pHi, mHi, pLo, mLo)
-            CusumOut(key, r.b,
-              pHi - math.min(mHi, 0L), pLo - math.min(mLo, 0L))
-          }
-          state.update(st)
-          out.iterator
-      }
+      .as[CusumIn])(_.key, _.b)(CusumState(0L, 0L, 0L, 0L)) { (key, st, r) =>
+      val pHi = st.pHi + (r.xMicro - up)
+      val mHi = math.min(st.mHi, pHi)
+      val pLo = st.pLo + (dn - r.xMicro)
+      val mLo = math.min(st.mLo, pLo)
+      (CusumState(pHi, mHi, pLo, mLo),
+        Some(CusumOut(key, r.b, pHi - math.min(mHi, 0L), pLo - math.min(mLo, 0L))))
+    }
   }
 
   case class PhIn(key: String, b: Long, x: Double, xMicro: Long)
@@ -1152,41 +1113,25 @@ object EventStreams {
     * (x − x̄ − δ) term to micros, and emits PH = m − min(minM, 0) in
     * micro-units; the emitted walk equals the batch frame row for row
     * (spec across a split). Alarming is a downstream compare against
-    * λ·1e6 (the E30-cells/probe split). Ordering contract as E26/E34:
-    * per-key bucket order ACROSS batches; within a batch rows sort
-    * here. No watermark — feed FINALIZED buckets.
+    * λ·1e6 (the E30-cells/probe split). [[orderedScan]] contract per
+    * key in bucket order: feed FINALIZED buckets.
     */
   def pageHinkleyStream(buckets: DataFrame,
       delta: Double = 0.0): Dataset[PhOut] = {
-    implicit val inEnc = Encoders.product[PhIn]
-    implicit val outEnc = Encoders.product[PhOut]
-    implicit val stEnc = Encoders.product[PhState]
-    implicit val strEnc = Encoders.STRING
-    buckets.select(col("key").cast("string").as("key"),
+    import ScanEncoders._
+    orderedScan(buckets.select(col("key").cast("string").as("key"),
         col("b").cast("long").as("b"),
-        col("v").cast("double").as("x"),
-        (org.apache.spark.sql.functions.round(col("v"), 6)
-          .cast("decimal(18,6)") * 1000000).cast("long").as("xMicro"))
+        col("v").cast("double").as("x"), decimalMicro(col("v")).as("xMicro"))
       .filter(col("key").isNotNull && col("xMicro").isNotNull)
-      .as[PhIn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[PhState, PhOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[PhIn], state: GroupState[PhState]) =>
-          var st = state.getOption.getOrElse(PhState(0L, 0L, 0L, 0L))
-          val out = rows.toSeq.sortBy(_.b).map { r =>
-            val cnt = st.cnt + 1
-            val cs = st.cs + r.xMicro
-            val mean = cs.toDouble / 1e6 / cnt.toDouble
-            val term = math.floor((r.x - mean - delta) * 1e6).toLong
-            val m = st.m + term
-            val minM = math.min(st.minM, m)
-            st = PhState(cnt, cs, m, minM)
-            PhOut(key, r.b, m - math.min(minM, 0L))
-          }
-          state.update(st)
-          out.iterator
-      }
+      .as[PhIn])(_.key, _.b)(PhState(0L, 0L, 0L, 0L)) { (key, st, r) =>
+      val cnt = st.cnt + 1
+      val cs = st.cs + r.xMicro
+      val mean = cs.toDouble / 1e6 / cnt.toDouble
+      val term = math.floor((r.x - mean - delta) * 1e6).toLong
+      val m = st.m + term
+      val minM = math.min(st.minM, m)
+      (PhState(cnt, cs, m, minM), Some(PhOut(key, r.b, m - math.min(minM, 0L))))
+    }
   }
 
   case class EwmaIn(key: String, b: Long, vMicro: Long)
@@ -1196,57 +1141,35 @@ object EventStreams {
   case class EwmaOut(key: String, bucket: Long, value_micro: Long,
       ewma_micro: Long, resid_micro: Option[Long], alarm: Boolean)
 
+  /** The smoothing family's stream shape: the batch chart's micro-lane
+    * input ([[graft.operators.Stats.microBuckets]] over (key, b, v))
+    * walked per key in bucket order by the chart's own recurrence step
+    * — one step, shared with the batch walk, so stream and batch
+    * cannot drift.
+    */
+  private def smoothingStream[S: Encoder, O: Encoder](buckets: DataFrame,
+      scan: graft.operators.Stats.SmoothScan[S, O]): Dataset[O] = {
+    import ScanEncoders.stringEnc
+    orderedScan(graft.operators.Stats.microBuckets(
+        buckets, col("key"), col("b"), col("v")))(_.key, _.b)(scan._1)(scan._2)
+  }
+
   /** E39: streaming EWMA control chart — the live twin of
     * [[graft.operators.Stats.ewmaChart]]: per key the state is ONE
     * long (the smoothed level on the exact 1e6 micro-lane — the E34
     * contract, ulp drift impossible) plus a started flag; each
     * finalized bucket scores its residual against the forecast, then
-    * advances the level with the SAME rational-α truncating
-    * division the batch kernel uses, so the emitted walk equals batch row for row
-    * (spec across a split). Micro-unit outputs; dividing back to
-    * doubles is a downstream projection (the E30-cells/probe split).
-    * Ordering contract as E26/E34: per-key bucket order ACROSS
-    * batches; within a batch rows sort here. No watermark — feed
-    * FINALIZED buckets.
+    * advances the level. The step is the batch chart's own
+    * ([[graft.operators.Stats.ewmaScan]]), so the emitted walk equals
+    * batch row for row (spec across a split). Micro-unit outputs;
+    * dividing back to doubles is a downstream projection (the
+    * E30-cells/probe split). [[orderedScan]] contract per key in
+    * bucket order: feed FINALIZED buckets.
     */
   def ewmaStream(buckets: DataFrame, alphaNum: Int = 1, alphaDen: Int = 4,
       band: Double = 2.0): Dataset[EwmaOut] = {
-    require(alphaDen > 0 && alphaNum > 0 && alphaNum <= alphaDen,
-      "alpha = alphaNum/alphaDen must be in (0, 1]")
-    implicit val inEnc = Encoders.product[EwmaIn]
-    implicit val outEnc = Encoders.product[EwmaOut]
-    implicit val stEnc = Encoders.product[EwmaState]
-    implicit val strEnc = Encoders.STRING
-    val bandMicro = math.round(band * 1e6)
-    val (aN, aD) = (alphaNum.toLong, alphaDen.toLong)
-    buckets.select(col("key").cast("string").as("key"),
-        col("b").cast("long").as("b"),
-        org.apache.spark.sql.functions.round(col("v").cast("double") * 1e6)
-          .cast("long").as("vMicro"))
-      .filter(col("key").isNotNull && col("b").isNotNull
-        && col("vMicro").isNotNull)
-      .as[EwmaIn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[EwmaState, EwmaOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[EwmaIn], state: GroupState[EwmaState]) =>
-          var st = state.getOption.getOrElse(EwmaState(0L, started = false))
-          val out = rows.toSeq.sortBy(_.b).map { r =>
-            if (!st.started) {
-              st = EwmaState(r.vMicro, started = true)
-              EwmaOut(key, r.b, r.vMicro, st.sMicro, None, alarm = false)
-            } else {
-              val resid = r.vMicro - st.sMicro
-              val alarm = math.abs(resid) > bandMicro
-              st = EwmaState(
-                (aN * r.vMicro + (aD - aN) * st.sMicro) / aD,
-                started = true)
-              EwmaOut(key, r.b, r.vMicro, st.sMicro, Some(resid), alarm)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    import ScanEncoders._
+    smoothingStream(buckets, graft.operators.Stats.ewmaScan(alphaNum, alphaDen, band))
   }
 
   case class HoltState(sMicro: Long, bMicro: Long, started: Boolean)
@@ -1260,55 +1183,18 @@ object EventStreams {
     * per key the state is TWO longs (level + trend on the exact 1e6
     * micro-lanes) plus a started flag; each finalized bucket scores
     * its residual against the level+trend forecast, then both lanes
-    * advance with the SAME rational-α/β truncating divisions as
-    * batch, so the emitted walk equals batch row for row (spec across
-    * a split through a trend change). E26/E34 ordering contract; no
-    * watermark — feed FINALIZED buckets.
+    * advance by the batch chart's own step
+    * ([[graft.operators.Stats.holtScan]]), so the emitted walk equals
+    * batch row for row (spec across a split through a trend change).
+    * [[orderedScan]] contract per key in bucket order.
     */
   def holtStream(buckets: DataFrame,
       alphaNum: Int = 1, alphaDen: Int = 4,
       betaNum: Int = 1, betaDen: Int = 4,
       band: Double = 2.0): Dataset[HoltOut] = {
-    require(alphaDen > 0 && alphaNum > 0 && alphaNum <= alphaDen,
-      "alpha = alphaNum/alphaDen must be in (0, 1]")
-    require(betaDen > 0 && betaNum > 0 && betaNum <= betaDen,
-      "beta = betaNum/betaDen must be in (0, 1]")
-    implicit val inEnc = Encoders.product[EwmaIn]
-    implicit val outEnc = Encoders.product[HoltOut]
-    implicit val stEnc = Encoders.product[HoltState]
-    implicit val strEnc = Encoders.STRING
-    val bandMicro = math.round(band * 1e6)
-    val (aN, aD) = (alphaNum.toLong, alphaDen.toLong)
-    val (bN, bD) = (betaNum.toLong, betaDen.toLong)
-    buckets.select(col("key").cast("string").as("key"),
-        col("b").cast("long").as("b"),
-        org.apache.spark.sql.functions.round(col("v").cast("double") * 1e6)
-          .cast("long").as("vMicro"))
-      .filter(col("key").isNotNull && col("b").isNotNull
-        && col("vMicro").isNotNull)
-      .as[EwmaIn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[HoltState, HoltOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[EwmaIn], state: GroupState[HoltState]) =>
-          var st = state.getOption.getOrElse(HoltState(0L, 0L, started = false))
-          val out = rows.toSeq.sortBy(_.b).map { r =>
-            if (!st.started) {
-              st = HoltState(r.vMicro, 0L, started = true)
-              HoltOut(key, r.b, r.vMicro, st.sMicro, 0L, None, alarm = false)
-            } else {
-              val forecast = st.sMicro + st.bMicro
-              val resid = r.vMicro - forecast
-              val alarm = math.abs(resid) > bandMicro
-              val sNew = (aN * r.vMicro + (aD - aN) * forecast) / aD
-              val bNew = (bN * (sNew - st.sMicro) + (bD - bN) * st.bMicro) / bD
-              st = HoltState(sNew, bNew, started = true)
-              HoltOut(key, r.b, r.vMicro, sNew, bNew, Some(resid), alarm)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    import ScanEncoders._
+    smoothingStream(buckets, graft.operators.Stats.holtScan(
+      alphaNum, alphaDen, betaNum, betaDen, band))
   }
 
   case class HwState(sMicro: Long, bMicro: Long, cs: Seq[Long], idx: Int,
@@ -1323,11 +1209,11 @@ object EventStreams {
     * seasonal sibling: per key the state is level + trend + the
     * p-slot seasonal RING (O(p) longs on the exact 1e6 micro-lanes)
     * plus the phase cursor; each finalized bucket scores its residual
-    * against level+trend+c_{t−p}, then all three lanes advance with
-    * the SAME rational-α/β/γ truncating divisions and zero-seasonal
-    * init as batch, so the emitted walk equals batch row for row
-    * (spec across a split landing mid-cycle). E26/E34 ordering
-    * contract; no watermark — feed FINALIZED buckets. Phase is
+    * against level+trend+c_{t−p}, then all three lanes advance by the
+    * batch chart's own step ([[graft.operators.Stats.holtWintersScan]],
+    * zero-seasonal init included), so the emitted walk equals batch
+    * row for row (spec across a split landing mid-cycle).
+    * [[orderedScan]] contract per key in bucket order. Phase is
     * row-based, so the dense-grid contract of the batch twin applies
     * per key ACROSS batches too.
     */
@@ -1336,56 +1222,9 @@ object EventStreams {
       betaNum: Int = 1, betaDen: Int = 4,
       gammaNum: Int = 1, gammaDen: Int = 4,
       band: Double = 2.0): Dataset[HwOut] = {
-    require(period >= 2, "period must be >= 2 (a 1-period season is a level)")
-    require(alphaDen > 0 && alphaNum > 0 && alphaNum <= alphaDen,
-      "alpha = alphaNum/alphaDen must be in (0, 1]")
-    require(betaDen > 0 && betaNum > 0 && betaNum <= betaDen,
-      "beta = betaNum/betaDen must be in (0, 1]")
-    require(gammaDen > 0 && gammaNum > 0 && gammaNum <= gammaDen,
-      "gamma = gammaNum/gammaDen must be in (0, 1]")
-    implicit val inEnc = Encoders.product[EwmaIn]
-    implicit val outEnc = Encoders.product[HwOut]
-    implicit val stEnc = Encoders.product[HwState]
-    implicit val strEnc = Encoders.STRING
-    val bandMicro = math.round(band * 1e6)
-    val (aN, aD) = (alphaNum.toLong, alphaDen.toLong)
-    val (bN, bD) = (betaNum.toLong, betaDen.toLong)
-    val (gN, gD) = (gammaNum.toLong, gammaDen.toLong)
-    val p = period
-    buckets.select(col("key").cast("string").as("key"),
-        col("b").cast("long").as("b"),
-        org.apache.spark.sql.functions.round(col("v").cast("double") * 1e6)
-          .cast("long").as("vMicro"))
-      .filter(col("key").isNotNull && col("b").isNotNull
-        && col("vMicro").isNotNull)
-      .as[EwmaIn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[HwState, HwOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[EwmaIn], state: GroupState[HwState]) =>
-          var st = state.getOption.getOrElse(
-            HwState(0L, 0L, Vector.fill(p)(0L), 0, started = false))
-          val out = rows.toSeq.sortBy(_.b).map { r =>
-            if (!st.started) {
-              st = HwState(r.vMicro, 0L, Vector.fill(p)(0L), 1 % p, started = true)
-              HwOut(key, r.b, r.vMicro, r.vMicro, 0L, 0L, None, alarm = false)
-            } else {
-              val cPrev = st.cs(st.idx)
-              val forecast = st.sMicro + st.bMicro + cPrev
-              val resid = r.vMicro - forecast
-              val alarm = math.abs(resid) > bandMicro
-              val sNew = (aN * (r.vMicro - cPrev)
-                + (aD - aN) * (st.sMicro + st.bMicro)) / aD
-              val bNew = (bN * (sNew - st.sMicro) + (bD - bN) * st.bMicro) / bD
-              val cNew = (gN * (r.vMicro - sNew) + (gD - gN) * cPrev) / gD
-              st = HwState(sNew, bNew, st.cs.updated(st.idx, cNew),
-                (st.idx + 1) % p, started = true)
-              HwOut(key, r.b, r.vMicro, sNew, bNew, cNew, Some(resid), alarm)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    import ScanEncoders._
+    smoothingStream(buckets, graft.operators.Stats.holtWintersScan(period,
+      alphaNum, alphaDen, betaNum, betaDen, gammaNum, gammaDen, band))
   }
 
   case class GapIn(key: String, t: Long, tb: Long)
@@ -1403,32 +1242,17 @@ object EventStreams {
     * PROFILE stays a batch/periodic aggregate over the emitted gaps —
     * exact rank percentiles are not incrementally maintainable, the
     * sketch tier (E20 KLL) is the streaming-quantile answer when an
-    * approximation is acceptable. Ordering contract as
-    * transitionPairStream: per-key (t, tiebreak) order ACROSS batches;
-    * within a batch rows sort here.
+    * approximation is acceptable. [[orderedScan]] contract per key in
+    * (t, tiebreak) order.
     */
   def interArrivalStream(events: DataFrame): Dataset[GapOut] = {
-    implicit val inEnc = Encoders.product[GapIn]
-    implicit val outEnc = Encoders.product[GapOut]
-    implicit val stEnc = Encoders.product[GapState]
-    implicit val strEnc = Encoders.STRING
-    events.select(col("key").cast("string"), col("t").cast("long"),
+    import ScanEncoders._
+    orderedScan(events.select(col("key").cast("string"), col("t").cast("long"),
         col("tb").cast("long"))
       .filter(col("key").isNotNull)
-      .as[GapIn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[GapState, GapOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: String, rows: Iterator[GapIn], state: GroupState[GapState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[GapOut]
-          rows.toSeq.sortBy(r => (r.t, r.tb)).foreach { r =>
-            if (st != null) out += GapOut(k, r.tb, r.t - st.lastT)
-            st = GapState(r.t, r.tb)
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+      .as[GapIn])(_.key, r => (r.t, r.tb))(null: GapState) { (k, st, r) =>
+      (GapState(r.t, r.tb), Option(st).map(prev => GapOut(k, r.tb, r.t - prev.lastT)))
+    }
   }
 
   case class TransIn(user_id: Long, ts_ns: Long, event_id: Long, event_type: String)
@@ -1446,33 +1270,19 @@ object EventStreams {
     * same events (spec-proven across a batch split mid-stream). The
     * MATRIX is a downstream counting aggregate over the pairs —
     * update-mode streaming agg or a batch groupBy over the sink,
-    * either way the same bounded |types|² grid. Ordering contract as
-    * funnelStream/sceneChangeStream: per-key (ts, event_id) order
-    * ACROSS batches; within a batch rows sort here. No watermark — a
-    * transition never un-happens.
+    * either way the same bounded |types|² grid. [[orderedScan]]
+    * contract per user in (ts, event_id) order.
     */
   def transitionPairStream(events: DataFrame): Dataset[TransOut] = {
-    implicit val inEnc = Encoders.product[TransIn]
-    implicit val outEnc = Encoders.product[TransOut]
-    implicit val stEnc = Encoders.product[TransState]
-    implicit val longEnc = Encoders.scalaLong
-    events.select(col("user_id").cast("long"), col("ts_ns").cast("long"),
+    import ScanEncoders._
+    orderedScan(events.select(col("user_id").cast("long"), col("ts_ns").cast("long"),
         col("event_id").cast("long"), col("event_type"))
       .filter(col("user_id").isNotNull)
-      .as[TransIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TransState, TransOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, rows: Iterator[TransIn], state: GroupState[TransState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[TransOut]
-          rows.toSeq.sortBy(r => (r.ts_ns, r.event_id)).foreach { r =>
-            if (st != null) out += TransOut(uid, st.lastEt, r.event_type)
-            st = TransState(r.ts_ns, r.event_id, r.event_type)
-          }
-          if (st != null) state.update(st)
-          out.iterator
-      }
+      .as[TransIn])(_.user_id, r => (r.ts_ns, r.event_id))(null: TransState) {
+      (uid, st, r) =>
+        (TransState(r.ts_ns, r.event_id, r.event_type),
+          Option(st).map(prev => TransOut(uid, prev.lastEt, r.event_type)))
+    }
   }
 
   case class AttrIn(
@@ -1501,10 +1311,9 @@ object EventStreams {
     * its conversion, the same reason the batch window works.
     *
     * An event whose type is BOTH a touch type and the conversion type
-    * self-pairs (tts = cts), exactly as the batch join does. Ordering
-    * contract as [[transitionPairStream]]: per-user (ts, event_id)
-    * order ACROSS batches; within a batch rows sort here. No
-    * watermark — state is bounded by eviction, not time-out.
+    * self-pairs (tts = cts), exactly as the batch join does.
+    * [[orderedScan]] contract per user in (ts, event_id) order; state
+    * is bounded by eviction, not time-out.
     */
   def attributionPairStream(
       events: DataFrame,
@@ -1514,36 +1323,24 @@ object EventStreams {
     require(touchTypes.nonEmpty, "at least one touch type")
     require(lookbackUs > 0, "lookbackUs must be positive")
     val touchSet = touchTypes.toSet
-    implicit val inEnc = Encoders.product[AttrIn]
-    implicit val outEnc = Encoders.product[AttrPair]
-    implicit val stEnc = Encoders.product[AttrState]
-    implicit val longEnc = Encoders.scalaLong
-    events.select(col("user_id").cast("long"), col("event_id").cast("long"),
+    import ScanEncoders._
+    orderedScan(events.select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("ts_us").cast("long"), col("event_type"),
         col("value").cast("double"))
       .filter(col("user_id").isNotNull)
-      .as[AttrIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrState, AttrPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[AttrIn], state: GroupState[AttrState]) =>
-          var touches = state.getOption.map(_.touches).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[AttrPair]
-          rows.toSeq.sortBy(r => (r.ts_us, r.event_id)).foreach { r =>
-            // evict first: anything older than the lookback from the
-            // newest event can never pair again (per-key ts order)
-            touches = touches.filter(_.ts >= r.ts_us - lookbackUs)
-            // touch before conversion: a dual-typed event self-pairs
-            if (touchSet(r.event_type))
-              touches = AttrTouch(r.event_id, r.ts_us, r.event_type) :: touches
-            if (r.event_type == conversionType)
-              touches.foreach { t =>
-                out += AttrPair(r.event_id, t.id, t.channel, t.ts, r.ts_us, r.value)
-              }
-          }
-          state.update(AttrState(touches))
-          out.iterator
-      }
+      .as[AttrIn])(_.user_id, r => (r.ts_us, r.event_id))(AttrState(Nil)) {
+      (_, st, r) =>
+        // evict first: anything older than the lookback from the
+        // newest event can never pair again (per-key ts order)
+        val live = st.touches.filter(_.ts >= r.ts_us - lookbackUs)
+        // touch before conversion: a dual-typed event self-pairs
+        val touches =
+          if (touchSet(r.event_type)) AttrTouch(r.event_id, r.ts_us, r.event_type) :: live
+          else live
+        (AttrState(touches),
+          if (r.event_type != conversionType) Nil
+          else touches.map(t => AttrPair(r.event_id, t.id, t.channel, t.ts, r.ts_us, r.value)))
+    }
   }
 
   /** E23: streaming frequent-items sketch maintenance — the TOP-K
@@ -2071,6 +1868,11 @@ object EventStreams {
   }
 
   case class RzIn(key: Long, bucket: Long, value: Double)
+
+  private def rzIn(df: DataFrame): Dataset[RzIn] =
+    df.select(col("key").cast("long"), col("bucket").cast("long"),
+        col("value").cast("double"))
+      .as(Encoders.product[RzIn])
   case class RzOut(
       key: Long, bucket: Long, value: Double,
       baseline_n: Long, z: Double, anomaly: Boolean)
@@ -2087,6 +1889,20 @@ object EventStreams {
   private def t4zero(x: Double): Double =
     math.signum(x) * (math.floor(math.abs(x) * 1e4) / 1e4) + 0.0
 
+  /** `x` rounded HALF_UP to `scale` decimals, as an exact count of
+    * 10^-scale units — a driver-side constant's entry onto the integer
+    * micro-lanes (scale 6 for CUSUM's μ±k, 7 for SPRT's log ratios).
+    */
+  private def scaledLong(x: Double, scale: Int): Long =
+    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
+      .underlying().movePointRight(scale).longValueExact()
+
+  /** A column's exact 6-dp decimal lane as integer micro-units (the
+    * batch operators' decimal(18,6) reduction).
+    */
+  private def decimalMicro(v: Column): Column =
+    (round(v, 6).cast("decimal(18,6)") * 1000000).cast("long")
+
   /** E13: STREAMING rolling z-score anomaly monitor — the stateful
     * twin of [[graft.operators.Stats.rollingZ]]: per metric key, each
     * arriving (bucket, value) scores against the TRAILING `lookback`
@@ -2098,10 +1914,8 @@ object EventStreams {
     * sequence, 4-dp toward-zero truncation — so multi-batch streaming
     * output equals the batch frame exactly (the spec's claim).
     *
-    * Ordering contract: per-key delivery in bucket order across
-    * batches ([[packStream]]'s append-only shape); within a batch
-    * rows are sorted here. One row per (key, bucket), the batch
-    * operator's contract.
+    * [[orderedScan]] contract per key in bucket order. One row per
+    * (key, bucket), the batch operator's contract.
     */
   def rollingZStream(
       df: DataFrame,
@@ -2110,39 +1924,25 @@ object EventStreams {
       minPeriods: Int = 3): Dataset[RzOut] = {
     require(lookback >= minPeriods && minPeriods >= 2,
       "need lookback >= minPeriods >= 2 trailing buckets for a stddev baseline")
-    implicit val inEnc = Encoders.product[RzIn]
-    implicit val outEnc = Encoders.product[RzOut]
-    implicit val stEnc = Encoders.kryo[Vector[Double]]
-    implicit val longEnc = Encoders.scalaLong
-    df.select(col("key").cast("long"), col("bucket").cast("long"),
-        col("value").cast("double"))
-      .as[RzIn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Vector[Double], RzOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[RzIn], state: GroupState[Vector[Double]]) =>
-          var window = state.getOption.getOrElse(Vector.empty[Double])
-          val out = rows.toSeq.sortBy(_.bucket).map { r =>
-            val n = window.length
-            val z =
-              if (n < minPeriods) 0.0
-              else {
-                val s = window.map(dec).sum
-                val ss = window.map(v => dec(v) * dec(v)).sum
-                val mean = s.toDouble / n
-                val variance = math.max(0.0,
-                  (ss.toDouble - s.toDouble * s.toDouble / n) / (n - 1))
-                val std = math.sqrt(variance)
-                if (std == 0.0) 0.0 else t4zero((r.value - mean) / std)
-              }
-            val o = RzOut(key, r.bucket, r.value, n.toLong, z,
-              math.abs(z) > zThresh && n >= minPeriods)
-            window = (window :+ r.value).takeRight(lookback)
-            o
-          }
-          state.update(window)
-          out.iterator
-      }
+    import ScanEncoders._
+    implicit val stEnc: Encoder[Vector[Double]] = Encoders.kryo[Vector[Double]]
+    orderedScan(rzIn(df))(_.key, _.bucket)(Vector.empty[Double]) { (key, window, r) =>
+      val n = window.length
+      val z =
+        if (n < minPeriods) 0.0
+        else {
+          val s = window.map(dec).sum
+          val ss = window.map(v => dec(v) * dec(v)).sum
+          val mean = s.toDouble / n
+          val variance = math.max(0.0,
+            (ss.toDouble - s.toDouble * s.toDouble / n) / (n - 1))
+          val std = math.sqrt(variance)
+          if (std == 0.0) 0.0 else t4zero((r.value - mean) / std)
+        }
+      ((window :+ r.value).takeRight(lookback),
+        Some(RzOut(key, r.bucket, r.value, n.toLong, z,
+          math.abs(z) > zThresh && n >= minPeriods)))
+    }
   }
 
   case class FunnelIn(user_id: Long, ts_us: Long, event_type: String)
@@ -2163,37 +1963,26 @@ object EventStreams {
     *
     * O(1) state per user (a step index + a timestamp), no watermark —
     * the funnel never un-advances, so there is nothing to evict;
-    * ordering contract as [[rollingZStream]] (per-key delivery in ts
-    * order across batches; within a batch rows sort here).
+    * [[orderedScan]] contract per user in ts order.
     */
   def funnelStream(
       events: DataFrame,
       steps: Seq[String]): Dataset[FunnelOut] = {
     require(steps.nonEmpty, "funnel needs at least one step")
-    implicit val inEnc = Encoders.product[FunnelIn]
-    implicit val outEnc = Encoders.product[FunnelOut]
-    implicit val stEnc = Encoders.product[(Int, Long)]
-    implicit val longEnc = Encoders.scalaLong
-    events.select(col("user_id").cast("long"), col("ts_us").cast("long"),
+    import ScanEncoders._
+    orderedScan(events.select(col("user_id").cast("long"), col("ts_us").cast("long"),
         col("event_type").cast("string"))
-      .as[FunnelIn]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Int, Long), FunnelOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, rows: Iterator[FunnelIn], state: GroupState[(Int, Long)]) =>
-          var (step, tReached) = state.getOption.getOrElse((0, Long.MinValue))
-          val out = Vector.newBuilder[FunnelOut]
-          rows.toSeq.sortBy(_.ts_us).foreach { r =>
-            while (step < steps.length && r.event_type == steps(step) &&
-                r.ts_us >= tReached) {
-              step += 1
-              tReached = r.ts_us
-              out += FunnelOut(uid, step, r.event_type, r.ts_us)
-            }
-          }
-          state.update((step, tReached))
-          out.result().iterator
+      .as[FunnelIn])(_.user_id, _.ts_us)((0, Long.MinValue)) { (uid, st, r) =>
+      var (step, tReached) = st
+      val out = Vector.newBuilder[FunnelOut]
+      while (step < steps.length && r.event_type == steps(step) &&
+          r.ts_us >= tReached) {
+        step += 1
+        tReached = r.ts_us
+        out += FunnelOut(uid, step, r.event_type, r.ts_us)
       }
+      ((step, tReached), out.result())
+    }
   }
 
   case class LsOut(
@@ -2215,60 +2004,53 @@ object EventStreams {
     * claim — same 6-dp HALF_UP decimal reduction, same double division
     * sequence, same 4-dp toward-zero truncation).
     *
-    * Ordering contract: per-key delivery in bucket order across
-    * batches ([[rollingZStream]]'s shape); within a batch rows sort
-    * here.
+    * [[orderedScan]] contract per key in bucket order.
     */
   def levelShiftStream(
       df: DataFrame,
       width: Int,
       zThresh: Double = 4.0): Dataset[LsOut] = {
     require(width >= 2, "width >= 2: a stddev baseline needs at least two points")
-    implicit val inEnc = Encoders.product[RzIn]
-    implicit val outEnc = Encoders.product[LsOut]
-    implicit val stEnc = Encoders.kryo[Vector[(Long, Double)]]
-    implicit val longEnc = Encoders.scalaLong
-    df.select(col("key").cast("long"), col("bucket").cast("long"),
-        col("value").cast("double"))
-      .as[RzIn]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Vector[(Long, Double)], LsOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[RzIn],
-            state: GroupState[Vector[(Long, Double)]]) =>
-          var buf = state.getOption.getOrElse(Vector.empty[(Long, Double)])
-          val out = Vector.newBuilder[LsOut]
-          rows.toSeq.sortBy(_.bucket).foreach { r =>
-            buf = buf :+ (r.bucket -> r.value)
-            if (buf.length == 2 * width) {
-              // entries [0, w) are the pre window, entry w the candidate,
-              // [w, 2w) its just-completed post window
-              val pre = buf.take(width).map(_._2)
-              val post = buf.drop(width).map(_._2)
-              val (tb, tv) = buf(width)
-              val sp = pre.map(dec).sum
-              val ssp = pre.map(v => dec(v) * dec(v)).sum
-              val sq = post.map(dec).sum
-              val preMean = sp.toDouble / width
-              val postMean = sq.toDouble / width
-              val variance = math.max(0.0,
-                (ssp.toDouble - sp.toDouble * sp.toDouble / width) / (width - 1))
-              val std = math.sqrt(variance)
-              val shift = postMean - preMean
-              val z = if (std > 0.0) t4zero(shift / std) else 0.0
-              val changepoint =
-                (std > 0.0 && math.abs(z) > zThresh) ||
-                (std == 0.0 && shift != 0.0)
-              out += LsOut(key, tb, tv, t4zero(preMean), t4zero(postMean),
-                t4zero(shift), z, changepoint)
-              buf = buf.drop(1)
-            }
-          }
-          state.update(buf)
-          out.result().iterator
-      }
+    import ScanEncoders._
+    implicit val stEnc: Encoder[Vector[(Long, Double)]] =
+      Encoders.kryo[Vector[(Long, Double)]]
+    orderedScan(rzIn(df))(_.key, _.bucket)(Vector.empty[(Long, Double)]) {
+      (key, prev, r) =>
+        val buf = prev :+ (r.bucket -> r.value)
+        if (buf.length < 2 * width) (buf, None)
+        else {
+          // entries [0, w) are the pre window, entry w the candidate,
+          // [w, 2w) its just-completed post window
+          val pre = buf.take(width).map(_._2)
+          val post = buf.drop(width).map(_._2)
+          val (tb, tv) = buf(width)
+          val sp = pre.map(dec).sum
+          val ssp = pre.map(v => dec(v) * dec(v)).sum
+          val sq = post.map(dec).sum
+          val preMean = sp.toDouble / width
+          val postMean = sq.toDouble / width
+          val variance = math.max(0.0,
+            (ssp.toDouble - sp.toDouble * sp.toDouble / width) / (width - 1))
+          val std = math.sqrt(variance)
+          val shift = postMean - preMean
+          val z = if (std > 0.0) t4zero(shift / std) else 0.0
+          val changepoint =
+            (std > 0.0 && math.abs(z) > zThresh) ||
+            (std == 0.0 && shift != 0.0)
+          (buf.drop(1), Some(LsOut(key, tb, tv, t4zero(preMean), t4zero(postMean),
+            t4zero(shift), z, changepoint)))
+        }
+    }
   }
 
+  /** E2: stateful gap sessionization via flatMapGroupsWithState with
+    * event-time timeout. Emits one row per CLOSED session (append
+    * mode); open sessions close `gapUs` after their last event once the
+    * watermark passes. Batch twin: `q_sessionize`.
+    *
+    * Input needs a TimestampType `ts` column (for the watermark) plus
+    * the Event fields.
+    */
   def sessionize(
       events: DataFrame,
       gapUs: Long = 43200000000L,

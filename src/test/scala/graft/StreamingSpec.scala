@@ -1417,6 +1417,70 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Runs `op` over a parquet file source once per batch: each batch's
+    * rows land as new files, then a FRESH query starts on the same
+    * checkpoint dir, drains, and stops — so every batch after the first
+    * resumes from state restored out of the checkpoint. Returns the
+    * file sink's rows over all runs.
+    */
+  private def restartedRuns(name: String, schema: String,
+      batches: Seq[org.apache.spark.sql.DataFrame])(
+      op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Dataset[_]) = {
+    val root = java.nio.file.Files.createTempDirectory(name).toString
+    batches.foreach { b =>
+      b.write.mode("append").parquet(s"$root/in")
+      val q = op(spark.readStream.schema(schema).parquet(s"$root/in"))
+        .writeStream.format("parquet").option("path", s"$root/out")
+        .option("checkpointLocation", s"$root/ckpt").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    spark.read.parquet(s"$root/out")
+  }
+
+  test("E34 cusumStream restarted from its checkpoint mid-burst equals the batch windows") {
+    import graft.operators.Stats
+    val vals = Seq(3.0, 3.0, 10.0, 10.0, 3.0, 3.0, 12.5, 3.0).zipWithIndex.map {
+      case (v, i) => ("k", i.toLong, v)
+    }
+    val streamed = restartedRuns("graft_e34_restart", "key STRING, b BIGINT, v DOUBLE",
+        Seq(vals.take(3).toDF("key", "b", "v"), vals.drop(3).toDF("key", "b", "v"))) {
+        EventStreams.cusumStream(_, target = 3.0, slack = 0.5)
+      }.orderBy("bucket").as[(String, Long, Long, Long)].collect()
+    val batch = Stats.cusum(vals.toDF("g", "b", "v"), col("g"), col("b"),
+        col("v"), target = 3.0, slack = 0.5, threshold = 8.0)
+      .orderBy("bucket").collect()
+    assert(streamed.map(_._2).toSeq == vals.map(_._2))
+    streamed.zip(batch).foreach { case ((_, sb, hi, lo), br) =>
+      assert(sb == br.getLong(1))
+      assert(hi / 100L / 1e4 == br.getDouble(3), s"hi at $sb")
+      assert(lo / 100L / 1e4 == br.getDouble(4), s"lo at $sb")
+    }
+    // the restored prefix sums carry the burst: hi keeps climbing past the cut
+    assert(streamed(3)._3 > streamed(2)._3 && streamed(2)._3 > 0L)
+  }
+
+  test("E13 rollingZStream restarted from its checkpoint (kryo state) equals batch rollingZ") {
+    val rows = for (k <- 0L to 1L; b <- 0L until 24L) yield
+      (k, b, if (b == 17 && k == 0) 500.0 else 4.0 + (b % 5) * 0.25 + k)
+    val streamed = restartedRuns("graft_e13_restart", "key BIGINT, bucket BIGINT, value DOUBLE",
+        Seq(rows.filter(_._2 < 12), rows.filter(_._2 >= 12)).map(_.toDF("key", "bucket", "value"))) {
+        EventStreams.rollingZStream(_, lookback = 10, zThresh = 3.0, minPeriods = 3)
+      }.select("key", "bucket", "value", "baseline_n", "z", "anomaly")
+      .as[(Long, Long, Double, Long, Double, Boolean)].collect().toSet
+    val batch = graft.operators.Stats.rollingZ(
+        rows.toDF("key", "bucket", "value"),
+        col("key"), col("bucket"), col("value"),
+        lookback = 10, zThresh = 3.0, minPeriods = 3)
+      .select(col("key"), col("bucket"), col("value"),
+        col("baseline_n"), col("z"), col("anomaly"))
+      .as[(Long, Long, Double, Long, Double, Boolean)].collect().toSet
+    assert(streamed == batch,
+      s"onlyStream=${(streamed -- batch).take(3)} onlyBatch=${(batch -- streamed).take(3)}")
+    // the first bucket after the restart scores against a full restored window
+    assert(streamed.exists(r => r._1 == 0L && r._2 == 12L && r._4 == 10L))
+    assert(streamed.exists(r => r._1 == 0L && r._2 == 17L && r._6))
+  }
+
   test("E44 pageHinkleyStream: emitted micro walk equals batch pageHinkley across a split") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.Stats

@@ -97,4 +97,31 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"inline tokenizer/fingerprint regex outside tkSql/normFingerprintSql:\n${offenders.mkString("\n")}")
   }
+
+  test("stateful streams share one ordered-scan skeleton and one copy of each smoothing recurrence") {
+    // a hand-copied per-key scan or recurrence is a batch/stream twin
+    // that can drift from the other copy unnoticed
+    import scala.jdk.CollectionConverters._
+    def scalaFiles(dir: String) = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val recurrence = scalaFiles("src/main").filter(f =>
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8").contains("(aD - aN)"))
+    assert(recurrence.size == 1,
+      s"the smoothing recurrence is spelled in ${recurrence.size} files: ${recurrence.mkString(", ")}")
+    val decl = """\s*(?:private(?:\[\w+\])? )?def (\w+)\b.*""".r
+    val owners = Set("EventStreams.scala" -> "orderedScan", "ChatStreams.scala" -> "validateStream")
+    val offenders = for {
+      f <- scalaFiles("src/main/scala/graft/streaming")
+      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      if l.contains(".toSeq.sortBy(")
+      owner = lines.take(i + 1).reverseIterator.collectFirst { case decl(n) => n }
+      if !owner.exists(o => owners(f.getFileName.toString -> o))
+    } yield s"$f:${i + 1}: ${l.trim}"
+    assert(offenders.isEmpty,
+      s"per-batch sort outside EventStreams.orderedScan:\n${offenders.mkString("\n")}")
+  }
 }
