@@ -241,16 +241,49 @@ object Similarity {
       k: Int): DataFrame = {
     val c = corpus.select(corpusId.as("id"), corpusVec.as("v"))
     val q = queries.select(queryId.as("query_id"), queryVec.as("qv"))
+    cosineTopK(c.crossJoin(broadcast(q))
+      .filter(col("id") =!= col("query_id")), k)
+  }
+
+  /** The ranking tail of every cosine top-k here: over candidate
+    * (query_id, qv, id, v) rows, exact cosine, rank per query DESCENDING
+    * on the 6-dp rounded similarity with id tiebreak (the
+    * engine-reproducible order), keep ranks ≤ k, and report
+    * (query_id, rank, vec_id, cos_sim) with cos_sim at 4 dp. `band`
+    * keeps only candidates whose rounded similarity lies in
+    * [lo, hi) before ranking.
+    */
+  private def cosineTopK(cand: DataFrame, k: Int,
+      band: Option[(Double, Double)] = None): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim_key").desc, col("id").asc)
-    c.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("query_id"))
+    val keyed = cand
       .withColumn("cos_sim", cosine(col("v"), col("qv")))
       .withColumn("sim_key", round(col("cos_sim"), 6))
+    band.fold(keyed) { case (lo, hi) =>
+        keyed.filter(col("sim_key") >= lo && col("sim_key") < hi)
+      }
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank").cast("int").as("rank"),
         col("id").as("vec_id"), round(col("cos_sim"), 4).as("cos_sim"))
+  }
+
+  /** Each query's `nProbe` nearest IVF cells: (query_id, qv, cluster)
+    * for query (query_id, qv) rows, centroids ranked by
+    * [[centroidScores]] with cluster-index tiebreak. The probe side of
+    * every IVF search here — it stays small and broadcasts.
+    */
+  private def probeCells(queries: DataFrame, centroids: Array[Array[Double]],
+      nProbe: Int): DataFrame = {
+    val probeW = Window.partitionBy(col("query_id")).orderBy(col("__s").asc, col("cluster").asc)
+    queries
+      .withColumn("__scores", centroidScores(col("qv"), centroids))
+      .select(col("query_id"), col("qv"),
+        posexplode(col("__scores")).as(Seq("cluster", "__s")))
+      .withColumn("__pr", row_number().over(probeW))
+      .filter(col("__pr") <= nProbe)
+      .select(col("query_id"), col("qv"), col("cluster"))
   }
 
   /** D133: margin-based bitext match scoring (Artetxe & Schwenk,
@@ -597,24 +630,10 @@ object Similarity {
       queryVec: Column,
       k: Int,
       nProbe: Int): DataFrame = {
-    val probeW = Window.partitionBy(col("query_id")).orderBy(col("__s").asc, col("cluster").asc)
-    val q = queries.select(queryId.as("query_id"), queryVec.as("qv"))
-      .withColumn("__scores", centroidScores(col("qv"), centroids))
-      .select(col("query_id"), col("qv"),
-        posexplode(col("__scores")).as(Seq("cluster", "__s")))
-      .withColumn("__pr", row_number().over(probeW))
-      .filter(col("__pr") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cluster"))
-    val rankW = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim_key").desc, col("id").asc)
-    index.join(broadcast(q), "cluster")
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("cos_sim", cosine(col("v"), col("qv")))
-      .withColumn("sim_key", round(col("cos_sim"), 6))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("id").as("vec_id"), round(col("cos_sim"), 4).as("cos_sim"))
+    val q = probeCells(queries.select(queryId.as("query_id"), queryVec.as("qv")),
+      centroids, nProbe)
+    cosineTopK(index.join(broadcast(q), "cluster")
+      .filter(col("id") =!= col("query_id")), k)
   }
 
   /** Hard-negative mining for contrastive/embedding training: per
@@ -641,25 +660,10 @@ object Similarity {
       k: Int,
       nProbe: Int): DataFrame = {
     require(simLo < simHi, "need simLo < simHi")
-    val probeW = Window.partitionBy(col("query_id")).orderBy(col("__s").asc, col("cluster").asc)
-    val q = queries.select(queryId.as("query_id"), queryVec.as("qv"))
-      .withColumn("__scores", centroidScores(col("qv"), centroids))
-      .select(col("query_id"), col("qv"),
-        posexplode(col("__scores")).as(Seq("cluster", "__s")))
-      .withColumn("__pr", row_number().over(probeW))
-      .filter(col("__pr") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cluster"))
-    val rankW = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim_key").desc, col("id").asc)
-    index.join(broadcast(q), "cluster")
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("cos_sim", cosine(col("v"), col("qv")))
-      .withColumn("sim_key", round(col("cos_sim"), 6))
-      .filter(col("sim_key") >= simLo && col("sim_key") < simHi)
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("id").as("vec_id"), round(col("cos_sim"), 4).as("cos_sim"))
+    val q = probeCells(queries.select(queryId.as("query_id"), queryVec.as("qv")),
+      centroids, nProbe)
+    cosineTopK(index.join(broadcast(q), "cluster")
+      .filter(col("id") =!= col("query_id")), k, Some((simLo, simHi)))
   }
 
   /** ANN top-k via IVF (inverted-file index): corpus vectors are
@@ -713,16 +717,8 @@ object Similarity {
       hyperplaneBucket(corpusVec, dim, nPlanes, seed).as("bucket"))
     val q = queries.select(queryId.as("query_id"), queryVec.as("qv"),
       hyperplaneBucket(queryVec, dim, nPlanes, seed).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim_key").desc, col("id").asc)
-    c.join(broadcast(q), "bucket")
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("cos_sim", cosine(col("v"), col("qv")))
-      .withColumn("sim_key", round(col("cos_sim"), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("id").as("vec_id"), round(col("cos_sim"), 4).as("cos_sim"))
+    cosineTopK(c.join(broadcast(q), "bucket")
+      .filter(col("id") =!= col("query_id")), k)
   }
 
   /** MULTI-PROBE hyperplane LSH top-k (Lv et al., VLDB'07): each query
@@ -755,24 +751,16 @@ object Similarity {
       base.bitwiseXOR(lit(1L << i)))): _*)
     val q = queries.select(queryId.as("query_id"), queryVec.as("qv"),
       explode(probeBuckets).as("bucket"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim_key").desc, col("id").asc)
     // dedup multi-probe hits on the slim (query, id) pair BEFORE
     // vectors attach — a candidate found via two probes pays one cosine
     val cand = c.select(col("id"), col("bucket"))
       .join(broadcast(q.select(col("query_id"), col("bucket"))), "bucket")
       .filter(col("id") =!= col("query_id"))
       .select("query_id", "id").distinct()
-    cand
+    cosineTopK(cand
       .join(c.select(col("id"), col("v")), "id")
       .join(broadcast(queries.select(queryId.as("query_id"), queryVec.as("qv"))),
-        "query_id")
-      .withColumn("cos_sim", cosine(col("v"), col("qv")))
-      .withColumn("sim_key", round(col("cos_sim"), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank").cast("int").as("rank"),
-        col("id").as("vec_id"), round(col("cos_sim"), 4).as("cos_sim"))
+        "query_id"), k)
   }
 
   /** Per-group embedding centroids in LONG format (group, dim, mean_v)
@@ -1058,13 +1046,8 @@ object Similarity {
       k: Int,
       nProbe: Int): DataFrame = {
     val centLit = array(centroids.map(c => array(c.map(lit): _*)): _*)
-    val probeW = Window.partitionBy(col("query_id")).orderBy(col("__s").asc, col("cluster").asc)
-    val q = queries.select(queryId.as("query_id"), queryVec.as("qv"))
-      .withColumn("__scores", centroidScores(col("qv"), centroids))
-      .select(col("query_id"), col("qv"),
-        posexplode(col("__scores")).as(Seq("cluster", "__s")))
-      .withColumn("__pr", row_number().over(probeW))
-      .filter(col("__pr") <= nProbe)
+    val q = probeCells(queries.select(queryId.as("query_id"), queryVec.as("qv")),
+        centroids, nProbe)
       .select(col("query_id"), col("cluster"),
         pqLut(
           zip_with(col("qv"), element_at(centLit, col("cluster") + 1), (a, b) => a - b),

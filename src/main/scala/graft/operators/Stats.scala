@@ -3842,6 +3842,46 @@ object Stats {
       bad.as("degenerate"))
   }
 
+  /** The per-key OLS residual lane of the C125/C130/C133 diagnostics:
+    * ONE pass of exact decimal moments fits y = a + b·x per key (the C55
+    * kernel), then every (key, __x, __y) row carries the key's n, mean
+    * `__mx`, slope `__b`, centered square sum `__sxxc`, flat-regressor
+    * flag `__flatx` and `__e6`, its residual quantized ONCE to a 6-dp
+    * integer lane. The residual is e'_t = y − b·x then explicit
+    * demeaning: the fitted intercept is exactly mean(e'), so
+    * e' − mean(e') IS the intercept-fitted residual — one join instead
+    * of a second moment pass for the intercept.
+    */
+  private def olsResiduals(df: DataFrame, key: Column, x: Column, y: Column): DataFrame = {
+    val t = df.filter(x.isNotNull && y.isNotNull)
+      .select(key.as("key"), x.cast("double").as("__x"),
+        y.cast("double").as("__y"))
+    val m = t.groupBy("key").agg(
+      count(lit(1)).as("n"),
+      sum(Num.dec(col("__x"))).as("__sx"),
+      sum(Num.dec(col("__y"))).as("__sy"),
+      sum(Num.dec(col("__x")) * Num.dec(col("__y"))).as("__sxy"),
+      sum(Num.dec(col("__x")) * Num.dec(col("__x"))).as("__sxx"))
+    val nD = col("n").cast("double")
+    val varX = nD * col("__sxx").cast("double") -
+      col("__sx").cast("double") * col("__sx").cast("double")
+    val fit = m.select(col("key"), col("n"),
+      (col("__sx").cast("double") / nD).as("__mx"),
+      when(varX === 0.0, 0.0)
+        .otherwise((nD * col("__sxy").cast("double") -
+          col("__sx").cast("double") * col("__sy").cast("double")) / varX)
+        .as("__b"),
+      (varX / nD).as("__sxxc"), // Sxx = Σ(x−x̄)² = varX/n
+      (varX === 0.0).as("__flatx"))
+    val r = t.join(fit, Seq("key"))
+      .withColumn("__e0", col("__y") - col("__b") * col("__x"))
+    val mu = r.groupBy("key").agg(
+      (sum(Num.dec(col("__e0"))).cast("double") / count(lit(1))).as("__mu"))
+    r.join(mu, Seq("key"))
+      .withColumn("__e6",
+        ((col("__e0") - col("__mu")) * 1e6).cast("decimal(18,0)"))
+  }
+
   /** C125: Durbin-Watson statistic per key — residual serial
     * correlation of the per-key OLS trend line ([[trendFit]]'s fit,
     * diagnosed): DW = Σ(e_t − e_{t−1})² / Σe_t², ≈ 2(1−ρ̂). The
@@ -3869,35 +3909,7 @@ object Stats {
       key: Column,
       x: Column,
       y: Column): DataFrame = {
-    val t = df.filter(x.isNotNull && y.isNotNull)
-      .select(key.as("key"), x.cast("double").as("__x"),
-        y.cast("double").as("__y"))
-    val m = t.groupBy("key").agg(
-      count(lit(1)).as("n"),
-      sum(Num.dec(col("__x"))).as("__sx"),
-      sum(Num.dec(col("__y"))).as("__sy"),
-      sum(Num.dec(col("__x")) * Num.dec(col("__y"))).as("__sxy"),
-      sum(Num.dec(col("__x")) * Num.dec(col("__x"))).as("__sxx"))
-    val nD = col("n").cast("double")
-    val varX = nD * col("__sxx").cast("double") -
-      col("__sx").cast("double") * col("__sx").cast("double")
-    val fit = m.select(col("key"), col("n"),
-      when(varX === 0.0, 0.0)
-        .otherwise((nD * col("__sxy").cast("double") -
-          col("__sx").cast("double") * col("__sy").cast("double")) / varX)
-        .as("__b"),
-      (varX === 0.0).as("__flatx"))
-    // residual via e'_t = y − b·x then explicit demeaning: the fitted
-    // intercept is exactly mean(e'), so e' − mean(e') IS the
-    // intercept-fitted residual — one join instead of a second
-    // moment pass for the intercept
-    val r = t.join(fit, Seq("key"))
-      .withColumn("__e", col("__y") - col("__b") * col("__x"))
-    val mu = r.groupBy("key").agg(
-      (sum(Num.dec(col("__e"))).cast("double") / count(lit(1))).as("__mu"))
-    val r6 = r.join(mu, Seq("key"))
-      .withColumn("__e6",
-        ((col("__e") - col("__mu")) * 1e6).cast("decimal(18,0)"))
+    val r6 = olsResiduals(df, key, x, y)
     // tiebreak on the quantized residual: duplicate (key, x) rows
     // would otherwise make lag() ordering nondeterministic, and since
     // tied-x rows carry DIFFERENT residuals, Σ(e_t−e_{t−1})² would
@@ -4012,32 +4024,8 @@ object Stats {
       x: Column,
       y: Column,
       critical: Double = 3.841): DataFrame = {
-    val t = df.filter(x.isNotNull && y.isNotNull)
-      .select(key.as("key"), x.cast("double").as("__x"),
-        y.cast("double").as("__y"))
-    val m = t.groupBy("key").agg(
-      count(lit(1)).as("n"),
-      sum(Num.dec(col("__x"))).as("__sx"),
-      sum(Num.dec(col("__y"))).as("__sy"),
-      sum(Num.dec(col("__x")) * Num.dec(col("__y"))).as("__sxy"),
-      sum(Num.dec(col("__x")) * Num.dec(col("__x"))).as("__sxx"))
-    val nD = col("n").cast("double")
-    val varX = nD * col("__sxx").cast("double") -
-      col("__sx").cast("double") * col("__sx").cast("double")
-    val fit = m.select(col("key"), col("n"),
-      when(varX === 0.0, 0.0)
-        .otherwise((nD * col("__sxy").cast("double") -
-          col("__sx").cast("double") * col("__sy").cast("double")) / varX)
-        .as("__b"),
-      (varX === 0.0).as("__flatx"))
-    val r = t.join(fit, Seq("key"))
-      .withColumn("__e0", col("__y") - col("__b") * col("__x"))
-    val mu = r.groupBy("key").agg(
-      (sum(Num.dec(col("__e0"))).cast("double") / count(lit(1))).as("__mu"))
     // e² on re-quantized 6-dp lanes: the auxiliary regressand
-    val r6 = r.join(mu, Seq("key"))
-      .withColumn("__e6",
-        ((col("__e0") - col("__mu")) * 1e6).cast("decimal(18,0)"))
+    val r6 = olsResiduals(df, key, x, y)
       .withColumn("__z",
         floor(col("__e6").cast("double") * col("__e6").cast("double") / 1e12
           * 1e6) / 1e6)
@@ -4199,33 +4187,7 @@ object Stats {
       key: Column,
       x: Column,
       y: Column): DataFrame = {
-    val t = df.filter(x.isNotNull && y.isNotNull)
-      .select(key.as("key"), x.cast("double").as("__x"),
-        y.cast("double").as("__y"))
-    val m = t.groupBy("key").agg(
-      count(lit(1)).as("n"),
-      sum(Num.dec(col("__x"))).as("__sx"),
-      sum(Num.dec(col("__y"))).as("__sy"),
-      sum(Num.dec(col("__x")) * Num.dec(col("__y"))).as("__sxy"),
-      sum(Num.dec(col("__x")) * Num.dec(col("__x"))).as("__sxx"))
-    val nD = col("n").cast("double")
-    val varX = nD * col("__sxx").cast("double") -
-      col("__sx").cast("double") * col("__sx").cast("double")
-    val fit = m.select(col("key"), col("n"),
-      (col("__sx").cast("double") / nD).as("__mx"),
-      when(varX === 0.0, 0.0)
-        .otherwise((nD * col("__sxy").cast("double") -
-          col("__sx").cast("double") * col("__sy").cast("double")) / varX)
-        .as("__b"),
-      (varX / nD).as("__sxxc"), // Sxx = Σ(x−x̄)² = varX/n
-      (varX === 0.0).as("__flatx"))
-    val r = t.join(fit, Seq("key"))
-      .withColumn("__e0", col("__y") - col("__b") * col("__x"))
-    val mu = r.groupBy("key").agg(
-      (sum(Num.dec(col("__e0"))).cast("double") / count(lit(1))).as("__mu"))
-    val r6 = r.join(mu, Seq("key"))
-      .withColumn("__e6",
-        ((col("__e0") - col("__mu")) * 1e6).cast("decimal(18,0)"))
+    val r6 = olsResiduals(df, key, x, y)
     val sse = r6.groupBy("key").agg(
       sum((col("__e6").cast("decimal(38,0)") * col("__e6"))
         .cast("decimal(38,0)")).as("__sse12"))

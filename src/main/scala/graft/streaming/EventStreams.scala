@@ -5,6 +5,7 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 /** Structured Streaming surface (SURVEY §2.E): watermarked tumbling
   * windows and stateful gap sessionization over an event stream shaped
@@ -299,14 +300,12 @@ object EventStreams {
     * [[dedupStreamAgainstIndex]], whose intra-stream memory is
     * watermark-bounded).
     *
-    * Delivery: each batch lands in its OWN `batch_id=<N>` directory on
-    * both sides, written with overwrite — a `foreachBatch` replay of
-    * batch N rewrites exactly the same two directories with the same
-    * deterministic content instead of appending duplicates, so
-    * at-least-once replay yields exactly-once output. A crash mid-write
-    * leaves only an uncommitted `_temporary` dir (invisible to parquet
-    * readers of the root); the replay overwrites it. On a real lake the
-    * two writes sit in one table-format transaction (Iceberg/Delta
+    * Delivery: both sides are [[BatchLog]]s, so a `foreachBatch`
+    * replay of batch N reads the index of batches before N only and
+    * rewrites the same two directories with the same content —
+    * exactly-once output (unfenced, the replay would reject every row
+    * as a repeat of itself and land the batch EMPTY). On a real lake
+    * the two writes sit in one table-format transaction (Iceberg/Delta
     * commit), which stays the documented seam for multi-writer setups.
     *
     * Returns the started query (caller owns stop()).
@@ -322,40 +321,14 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // bootstrap when no batch directory has COMMITTED yet (the
-        // _SUCCESS marker is the committer's audit); a root that exists
-        // with only a crashed write's _temporary leftovers is still
-        // bootstrap, but a root with committed batches that fails to
-        // READ is corruption and must propagate — a silent empty-index
-        // restart would re-admit the whole corpus
-        val rootP = new org.apache.hadoop.fs.Path(indexPath)
-        val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasCommitted = hfs.exists(rootP) &&
-          hfs.globStatus(new org.apache.hadoop.fs.Path(indexPath, "batch_id=*/_SUCCESS"))
-            .nonEmpty
-        // a crash AFTER this batch's index write but BEFORE the
-        // checkpoint commit replays the batch with its OWN
-        // fingerprints already on disk — unfiltered, the replay would
-        // reject every row and overwrite the output dir EMPTY (data
-        // loss). Replays only ever see strictly-older batches.
-        val index =
-          if (hasCommitted) spark.read.parquet(indexPath)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          else
-            spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("fp",
-                  org.apache.spark.sql.types.StringType))))
-        // one computation feeds both writes; per-batch directories with
-        // overwrite make a replayed batch rewrite its own output
-        // instead of duplicating it
+        val index = BatchLog.readBefore(batch.sparkSession, indexPath, batchId,
+          StructType.fromDDL("fp STRING"))
+        // one computation feeds both writes
         val accepted = graft.operators.Dedup.exactIncremental(
           batch, col(textCol), col(idCol), index, col("fp")).localCheckpoint()
-        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        graft.operators.Dedup.fingerprintIndex(accepted, col(textCol))
-          .write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
+        BatchLog.write(accepted, outPath, batchId)
+        BatchLog.write(graft.operators.Dedup.fingerprintIndex(accepted, col(textCol)),
+          indexPath, batchId)
       }
       .start()
   }
@@ -372,14 +345,10 @@ object EventStreams {
     * WITHIN-batch near-dup clusters to their min-id winner
     * (`Dedup.minHashLSH` + `clusterDuplicates` — batch-sized work),
     * (4) lands accepted rows and their signatures in per-batch
-    * `batch_id=<N>` dirs with overwrite. The seeded hash family makes
-    * a replayed batch byte-identical, so at-least-once replay yields
-    * exactly-once output (E7's delivery contract); bootstrap keys off
-    * committed `_SUCCESS` markers, and a committed-but-unreadable
-    * index propagates the error rather than silently re-admitting
-    * near-dups of the whole corpus. Ids must be integral
-    * (clusterDuplicates' contract). Table-format transactions remain
-    * the multi-writer seam.
+    * [[BatchLog]]s. The seeded hash family makes a replayed batch
+    * byte-identical, so at-least-once replay yields exactly-once output
+    * (E7's delivery contract). Ids must be integral (clusterDuplicates'
+    * contract). Table-format transactions remain the multi-writer seam.
     */
   def ingestNearDedupMaintained(
       records: DataFrame,
@@ -396,47 +365,52 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val rootP = new org.apache.hadoop.fs.Path(sigPath)
-        val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasCommitted = hfs.exists(rootP) &&
-          hfs.globStatus(new org.apache.hadoop.fs.Path(sigPath, "batch_id=*/_SUCCESS"))
-            .nonEmpty
-        // exclude this batch's own signatures on replay (crash between
-        // the sig write and the checkpoint commit) — same data-loss
-        // mode as E7: the batch would otherwise near-dup-match ITSELF
-        // and land empty
-        val index =
-          if (hasCommitted) spark.read.parquet(sigPath)
-            .filter(col("batch_id") < batchId).drop("batch_id")
-          else
-            spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("id",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("sig",
-                  org.apache.spark.sql.types.ArrayType(
-                    org.apache.spark.sql.types.LongType, containsNull = false)))))
-        val hits = graft.operators.Dedup.minHashLSHIncremental(
-            batch, col(idCol), col(textCol), index,
-            numHashes, bands, shingleSize, threshold)
-          .select(col("shard_id").as("__drop")).distinct()
-        val survivors = batch.join(hits, col(idCol) === col("__drop"), "left_anti")
-        val pairs = graft.operators.Dedup.minHashLSH(
-          survivors, col(idCol), col(textCol),
+        nearDupAccept(batch, batchId, textCol, idCol, sigPath, outPath,
           numHashes, bands, shingleSize, threshold)
-        val drops = graft.operators.Dedup.clusterDuplicates(
-          pairs, col("id_a"), col("id_b"))
-        val accepted = survivors
-          .join(drops, col(idCol) === col("drop_id"), "left_anti")
-          .localCheckpoint()
-        accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        graft.operators.Dedup.minHashSignatures(
-            accepted, col(idCol), col(textCol), numHashes, shingleSize)
-          .write.mode("overwrite").parquet(s"$sigPath/batch_id=$batchId")
+        ()
       }
       .start()
+  }
+
+  /** The near-dup accept step of E11 and E46: `rows` drop whatever
+    * near-dups a doc of the signature log's batches before `batchId`
+    * (`Dedup.minHashLSHIncremental` — bipartite, the corpus is never
+    * re-signed), within-batch clusters resolve to their min-id winner
+    * (`Dedup.minHashLSH` + `clusterDuplicates`), and the accepted rows
+    * and their signatures land as batch `batchId` of the two
+    * [[BatchLog]]s. Returns the accepted rows, materialized.
+    */
+  private def nearDupAccept(
+      rows: DataFrame,
+      batchId: Long,
+      textCol: String,
+      idCol: String,
+      sigPath: String,
+      outPath: String,
+      numHashes: Int,
+      bands: Int,
+      shingleSize: Int,
+      threshold: Double): DataFrame = {
+    val index = BatchLog.readBefore(rows.sparkSession, sigPath, batchId,
+      new StructType().add("id", LongType)
+        .add("sig", ArrayType(LongType, containsNull = false)))
+    val hits = graft.operators.Dedup.minHashLSHIncremental(
+        rows, col(idCol), col(textCol), index,
+        numHashes, bands, shingleSize, threshold)
+      .select(col("shard_id").as("__drop")).distinct()
+    val survivors = rows.join(hits, col(idCol) === col("__drop"), "left_anti")
+    val pairs = graft.operators.Dedup.minHashLSH(
+      survivors, col(idCol), col(textCol),
+      numHashes, bands, shingleSize, threshold)
+    val drops = graft.operators.Dedup.clusterDuplicates(
+      pairs, col("id_a"), col("id_b"))
+    val accepted = survivors
+      .join(drops, col(idCol) === col("drop_id"), "left_anti")
+      .localCheckpoint()
+    BatchLog.write(accepted, outPath, batchId)
+    BatchLog.write(graft.operators.Dedup.minHashSignatures(
+      accepted, col(idCol), col(textCol), numHashes, shingleSize), sigPath, batchId)
+    accepted
   }
 
   /** E8: streaming CDC apply — the streaming twin of batch
@@ -447,11 +421,9 @@ object EventStreams {
     * changes, materialize (`localCheckpoint` — the overwrite below
     * invalidates the files the plan would lazily re-read), overwrite.
     *
-    * Delivery: `foreachBatch` replays under retry are IDEMPOTENT here
-    * — re-applying an identical change set to the already-merged
-    * snapshot is a fixpoint (latest-wins picks the same rows, deletes
-    * of absent keys no-op) — so at-least-once replay yields an
-    * effectively-exactly-once snapshot. Requirement: versions must be
+    * Delivery: the batch merges into the snapshot version before it
+    * ([[SnapshotStore.readBefore]]), so a `foreachBatch` replay of
+    * batch N rewrites the same `v<N>`. Requirement: versions must be
     * monotone per key ACROSS batches (the standard ordered-CDC-feed
     * contract); the snapshot keeps no version history to reorder
     * stragglers (within one batch, any order is fine).
@@ -475,17 +447,14 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val payload = batch.columns.filterNot(c => c == versionCol || c == opCol)
-        // SnapshotStore.read resolves the last PUBLISHED version — a
-        // crashed write's orphan dir (no _SUCCESS, pointer untouched)
-        // is never mistaken for live state, and first-batch bootstrap
-        // is the None case, explicitly
-        val snap = SnapshotStore.read(spark, snapshotPath)
+        // a crashed write's orphan dir (no _SUCCESS) is never read as
+        // state; first-batch bootstrap is the None case
+        val snap = SnapshotStore.readBefore(batch.sparkSession, snapshotPath, batchId)
           .getOrElse(batch.select(payload.map(col): _*).limit(0))
         val merged = graft.operators.Merge.applyChanges(
           snap, batch, keys, col(versionCol), col(opCol)).localCheckpoint()
-        SnapshotStore.publish(merged, snapshotPath, batchId)
+        SnapshotStore.publish(merged, snapshotPath, batchId, SnapshotStore.ReplayKeep)
       }
       .start()
   }
@@ -598,13 +567,17 @@ object EventStreams {
     }
   }
 
-  /** The skeleton every streaming sketch sink shares: per micro-batch,
-    * `build` sketches the batch, `union` merges that sketch with the
-    * last published snapshot, and the result publishes through
-    * [[SnapshotStore]] (write-audit-publish). The merged frame is
-    * checkpointed before publish because it reads the live snapshot
-    * version, and a replayed batch overwrites that same version
-    * directory.
+  /** The skeleton every mergeable snapshot sink shares (the sketches
+    * E14/E20/E23/E41 and the E47/E49 partial aggregates): per
+    * micro-batch, `build` summarizes the batch, `union` merges that
+    * summary into the snapshot version before the batch
+    * ([[SnapshotStore.readBefore]]), and the result publishes as version
+    * `batchId` through [[SnapshotStore]] (write-audit-publish). A
+    * replayed batch therefore merges into the same pre-batch state and
+    * republishes the same version — it never counts twice. `build` must already have the snapshot's schema: the first
+    * batch publishes it unmerged. The merged frame is checkpointed
+    * before publish because a replay overwrites the version directory
+    * it would lazily re-read.
     */
   private def sketchMaintained(
       input: DataFrame,
@@ -617,11 +590,12 @@ object EventStreams {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val batchSketch = build(batch)
-        val merged = SnapshotStore.read(batch.sparkSession, snapshotPath) match {
+        val merged = SnapshotStore.readBefore(batch.sparkSession, snapshotPath, batchId) match {
           case Some(prev) => union(Seq(prev, batchSketch))
           case None => batchSketch
         }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
+        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId,
+          SnapshotStore.ReplayKeep)
       }
       .start()
 
@@ -636,12 +610,8 @@ object EventStreams {
     * to one batch over their union — the spec's claim — and the
     * snapshot answers [[graft.operators.Profile.cmsEstimate]] point
     * queries at any moment without touching the stream's history.
-    *
-    * Delivery: foreachBatch replays are NOT idempotent for a merge
-    * (re-adding a batch double-counts) — the checkpoint's batch
-    * tracking provides effectively-once per epoch; a stricter lake
-    * would stamp batch ids into the snapshot (documented seam, as in
-    * E7/E8).
+    * Delivery: [[sketchMaintained]]'s replay fence — a replayed batch
+    * merges into the pre-batch snapshot, never twice.
     */
   def cmsMaintained(
       keys: DataFrame,
@@ -666,12 +636,8 @@ object EventStreams {
     * [[graft.operators.Profile.quantileMerge]] at any moment without
     * touching stream history; below k absorbed values per group the
     * estimates are EXACT and batch-split-invariant (the spec's
-    * claim), above it the published rank envelope holds.
-    *
-    * Delivery: same effectively-once-per-epoch contract as E14
-    * (foreachBatch replay of a merge double-counts; the checkpoint's
-    * batch tracking guards it, batch-id stamping is the documented
-    * stricter seam).
+    * claim), above it the published rank envelope holds. Delivery:
+    * E14's replay fence.
     */
   def kllMaintained(
       values: DataFrame,
@@ -1352,7 +1318,8 @@ object EventStreams {
     * without stream history. Under-capacity sketches merge EXACTLY
     * (spec-pinned, the E14/E20 batch-split-invariance contract); past
     * capacity the library's error bounds apply with the
-    * NO_FALSE_NEGATIVES read guarantee intact.
+    * NO_FALSE_NEGATIVES read guarantee intact. Delivery: E14's replay
+    * fence.
     */
   def freqMaintained(
       items: DataFrame,
@@ -1375,7 +1342,8 @@ object EventStreams {
     * (`theta_intersect_estimate` across rows) at any moment without
     * stream history — the live twin of the D129 source-overlap
     * matrix. Under-capacity sketches merge EXACTLY (spec-pinned, the
-    * E23 batch-split-invariance contract).
+    * E23 batch-split-invariance contract). Delivery: E14's replay
+    * fence.
     */
   def thetaMaintained(
       items: DataFrame,
@@ -1393,13 +1361,18 @@ object EventStreams {
     * scores "how much of this shard is NEW vs the corpus"
     * (`theta_diff_estimate(batch, corpus)`) BEFORE merging into the
     * persisted corpus sketch, and appends one verdict row per
-    * (batch, group) to E7-style per-batch dirs — replay-idempotent,
-    * no state store (both sketches are kilobyte blobs; the corpus is
-    * never re-read). The novelty ratio est_new/est_batch is the
-    * dedup-worthiness signal: a shard that is 95% old skips the
-    * expensive dedup tiers entirely. Estimates are EXACT under
-    * nominal capacity (the D138 library contract) and overcount-only
-    * above it — an all-old shard can never read as new.
+    * (batch, group) to a [[BatchLog]] — no state store (both sketches
+    * are kilobyte blobs; the corpus is never re-read). The novelty
+    * ratio est_new/est_batch is the dedup-worthiness signal: a shard
+    * that is 95% old skips the expensive dedup tiers entirely.
+    * Estimates are EXACT under nominal capacity (the D138 library
+    * contract) and overcount-only above it — an all-old shard can
+    * never read as new.
+    *
+    * Delivery: the batch scores against and merges into the corpus
+    * version before it ([[SnapshotStore.readBefore]]), so a replayed
+    * batch rewrites its own verdict unchanged — scored against a corpus
+    * that already held it, every item would read as old.
     */
   def thetaAdmitStream(
       items: DataFrame,
@@ -1413,39 +1386,45 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val batchSketch = graft.operators.Profile.thetaSketchTable(
           batch, col(groupCol), col(itemCol), lgK).localCheckpoint()
-        val prev = SnapshotStore.read(spark, snapshotPath)
-        val verdict = prev match {
-          case Some(corpus) =>
-            batchSketch.as("b").join(
-                corpus.withColumnRenamed("sketch", "__cs").as("c"),
-                Seq("grp"), "left")
-              .select(col("grp"),
-                graft.functions.ThetaSketch.thetaEstimate(col("sketch"))
-                  .as("est_batch"),
-                when(col("__cs").isNull,
-                  graft.functions.ThetaSketch.thetaEstimate(col("sketch")))
-                  .otherwise(graft.functions.ThetaSketch.thetaDiffEstimate(
-                    col("sketch"), col("__cs"))).as("est_new"))
-          case None =>
-            batchSketch.select(col("grp"),
-              graft.functions.ThetaSketch.thetaEstimate(col("sketch"))
-                .as("est_batch"),
-              graft.functions.ThetaSketch.thetaEstimate(col("sketch"))
-                .as("est_new"))
-        }
-        verdict.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+        val prev = SnapshotStore.readBefore(batch.sparkSession, snapshotPath, batchId)
+        BatchLog.write(thetaNovelty(batchSketch, prev).withColumn("batch_id", lit(batchId)),
+          outPath, batchId)
         val merged = prev match {
           case Some(corpus) => graft.operators.Profile.thetaSketchUnion(
             Seq(corpus, batchSketch), lgK)
           case None => batchSketch
         }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId)
+        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId,
+          SnapshotStore.ReplayKeep)
       }
       .start()
+  }
+
+  /** Per-group novelty of a batch's theta sketch (grp, sketch) against
+    * the corpus sketch: (grp, est_batch, est_new), where est_new is
+    * `theta_diff_estimate(batch, corpus)` — the whole batch estimate
+    * for a group the corpus lacks, or with no corpus yet. The scoring
+    * of E45 and E46's admission step.
+    */
+  private def thetaNovelty(batchSketch: DataFrame, corpus: Option[DataFrame]): DataFrame = {
+    import graft.functions.ThetaSketch
+    corpus match {
+      case Some(c) =>
+        batchSketch.as("b").join(
+            c.withColumnRenamed("sketch", "__cs").as("c"),
+            Seq("grp"), "left")
+          .select(col("grp"),
+            ThetaSketch.thetaEstimate(col("sketch")).as("est_batch"),
+            when(col("__cs").isNull, ThetaSketch.thetaEstimate(col("sketch")))
+              .otherwise(ThetaSketch.thetaDiffEstimate(col("sketch"), col("__cs")))
+              .as("est_new"))
+      case None =>
+        batchSketch.select(col("grp"),
+          ThetaSketch.thetaEstimate(col("sketch")).as("est_batch"),
+          ThetaSketch.thetaEstimate(col("sketch")).as("est_new"))
+    }
   }
 
   /** E46: the streaming COMPOSED flagship — the E-family analogue of
@@ -1477,13 +1456,13 @@ object EventStreams {
     *     publishes as snapshot version N.
     *
     * Replay determinism (at-least-once → exactly-once output): every
-    * read of mutable state is version-fenced to strictly-older batches
-    * — the theta snapshot reads the newest version < N (publish keeps
-    * 2 versions so the predecessor survives its successor's GC) and
-    * the signature index filters `batch_id < N` — so a crash between
-    * the artifact writes and the checkpoint commit replays batch N
-    * against exactly the pre-N state and rewrites byte-identical
-    * output (seeded hash family, deterministic winners).
+    * read of mutable state is fenced to strictly-older batches — the
+    * theta snapshot through [[SnapshotStore.readBefore]], the
+    * signature index through [[BatchLog.readBefore]] — so a crash
+    * between the artifact writes and the checkpoint commit replays
+    * batch N against exactly the pre-N state and rewrites
+    * byte-identical output (seeded hash family, deterministic
+    * winners).
     *
     * 100 TB shape: admission is kilobyte sketch blobs (no state
     * store), the gate is stateless, dedup work is bounded by
@@ -1542,38 +1521,17 @@ object EventStreams {
       shingleSize: Int = 5,
       threshold: Double = 0.5,
       lgK: Int = 12): Unit = {
-    val spark = batch.sparkSession
-    import graft.functions.ThetaSketch
-
     // ---- 1. ADMIT: per-group novelty vs the version-fenced corpus sketch
     val batchSketch = graft.operators.Profile.thetaSketchTable(
       batch, col(groupCol), col(textCol), lgK).localCheckpoint()
-    val prev = SnapshotStore.versions(spark, thetaSnapshotPath)
-      .filter(_ < batchId).lastOption
-      .flatMap(v => SnapshotStore.readVersion(spark, thetaSnapshotPath, v))
-    val scored = prev match {
-      case Some(corpus) =>
-        batchSketch.as("b").join(
-            corpus.withColumnRenamed("sketch", "__cs").as("c"),
-            Seq("grp"), "left")
-          .select(col("grp"),
-            ThetaSketch.thetaEstimate(col("sketch")).as("est_batch"),
-            when(col("__cs").isNull, ThetaSketch.thetaEstimate(col("sketch")))
-              .otherwise(ThetaSketch.thetaDiffEstimate(col("sketch"), col("__cs")))
-              .as("est_new"))
-      case None =>
-        batchSketch.select(col("grp"),
-          ThetaSketch.thetaEstimate(col("sketch")).as("est_batch"),
-          ThetaSketch.thetaEstimate(col("sketch")).as("est_new"))
-    }
-    val verdict = scored
+    val prev = SnapshotStore.readBefore(batch.sparkSession, thetaSnapshotPath, batchId)
+    val verdict = thetaNovelty(batchSketch, prev)
       .select(col("grp"), col("est_batch"), col("est_new"),
         coalesce(try_divide(col("est_new"), col("est_batch")), lit(0.0))
           .as("novelty"))
       .withColumn("admitted", col("novelty") >= minNovelty)
       .localCheckpoint()
-    verdict.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").parquet(s"$verdictPath/batch_id=$batchId")
+    BatchLog.write(verdict.withColumn("batch_id", lit(batchId)), verdictPath, batchId)
     val admitted = batch.join(
       broadcast(verdict.filter(col("admitted")).select(col("grp").as("__adm"))),
       col(groupCol) === col("__adm"), "left_semi")
@@ -1582,40 +1540,8 @@ object EventStreams {
     val gated = curateStream(admitted, textCol, minQuality)
 
     // ---- 3. DEDUP: vs the batch-fenced signature index, then in-batch
-    val rootP = new org.apache.hadoop.fs.Path(sigPath)
-    val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasCommitted = hfs.exists(rootP) &&
-      hfs.globStatus(new org.apache.hadoop.fs.Path(sigPath, "batch_id=*/_SUCCESS"))
-        .nonEmpty
-    val index =
-      if (hasCommitted) spark.read.parquet(sigPath)
-        .filter(col("batch_id") < batchId).drop("batch_id")
-      else
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("sig",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.LongType, containsNull = false)))))
-    val hits = graft.operators.Dedup.minHashLSHIncremental(
-        gated, col(idCol), col(textCol), index,
-        numHashes, bands, shingleSize, threshold)
-      .select(col("shard_id").as("__drop")).distinct()
-    val survivors = gated.join(hits, col(idCol) === col("__drop"), "left_anti")
-    val pairs = graft.operators.Dedup.minHashLSH(
-      survivors, col(idCol), col(textCol),
+    val accepted = nearDupAccept(gated, batchId, textCol, idCol, sigPath, outPath,
       numHashes, bands, shingleSize, threshold)
-    val drops = graft.operators.Dedup.clusterDuplicates(
-      pairs, col("id_a"), col("id_b"))
-    val accepted = survivors
-      .join(drops, col(idCol) === col("drop_id"), "left_anti")
-      .localCheckpoint()
-    accepted.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-    graft.operators.Dedup.minHashSignatures(
-        accepted, col(idCol), col(textCol), numHashes, shingleSize)
-      .write.mode("overwrite").parquet(s"$sigPath/batch_id=$batchId")
 
     // ---- 4. MAINTAIN: corpus sketch tracks the ACCEPTED corpus
     val accSketch = graft.operators.Profile.thetaSketchTable(
@@ -1625,10 +1551,8 @@ object EventStreams {
         graft.operators.Profile.thetaSketchUnion(Seq(corpus, accSketch), lgK)
       case None => accSketch
     }
-    // keepLast = 2: the predecessor must survive this publish's GC so
-    // a replay of THIS batch can still read it (the version fence)
-    SnapshotStore.publish(merged.localCheckpoint(), thetaSnapshotPath,
-      batchId, keepLast = 2)
+    SnapshotStore.publish(merged.localCheckpoint(), thetaSnapshotPath, batchId,
+      SnapshotStore.ReplayKeep)
   }
 
   /** E48: streaming duplicated-n-gram COVERAGE gate — D146's ONION
@@ -1662,31 +1586,16 @@ object EventStreams {
       .option("checkpointLocation", checkpointPath)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val base = batch.select(col(idCol).as("doc_id"),
             graft.functions.shingles(
               graft.functions.tokens(col(textCol)), n).as("__sh"))
           .localCheckpoint()
         val occ = base.select(col("doc_id"), explode(col("__sh")).as("sh"))
-        val rootP = new org.apache.hadoop.fs.Path(dfPath)
-        val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val hasCommitted = hfs.exists(rootP) &&
-          hfs.globStatus(new org.apache.hadoop.fs.Path(dfPath, "batch_id=*/_SUCCESS"))
-            .nonEmpty
-        // per-batch PARTIAL df counts land in batch_id dirs; the live
-        // df of a shingle is the SUM over committed batches < N
-        val dfTable =
-          if (hasCommitted)
-            spark.read.parquet(dfPath).filter(col("batch_id") < batchId)
-              .groupBy("sh").agg(sum(col("df")).as("df"))
-          else
-            spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("sh",
-                  org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("df",
-                  org.apache.spark.sql.types.LongType))))
+        // per-batch PARTIAL df counts land in a BatchLog; the live df
+        // of a shingle is the SUM over committed batches < N
+        val dfTable = BatchLog.readBefore(batch.sparkSession, dfPath, batchId,
+            StructType.fromDDL("sh STRING, df BIGINT"))
+          .groupBy("sh").agg(sum(col("df")).as("df"))
         val dupSet = dfTable.filter(col("df") >= minDf).select("sh")
         val perDoc = occ.join(dupSet, Seq("sh"), "left_semi")
           .groupBy("doc_id").agg(count(lit(1)).as("n_dup_grams"))
@@ -1699,11 +1608,9 @@ object EventStreams {
             coalesce(floor(try_divide(col("n_dup_grams").cast("double"),
               col("n_grams").cast("double")) * 1e4) / 1e4, lit(0.0)))
           .withColumn("flagged", col("dup_coverage") > maxCoverage)
-        scored.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        occ.select(col("doc_id"), col("sh")).distinct()
-          .groupBy("sh").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$dfPath/batch_id=$batchId")
+        BatchLog.write(scored.withColumn("batch_id", lit(batchId)), outPath, batchId)
+        BatchLog.write(occ.select(col("doc_id"), col("sh")).distinct()
+          .groupBy("sh").agg(count(lit(1)).as("df")), dfPath, batchId)
       }
       .start()
   }
@@ -1724,11 +1631,10 @@ object EventStreams {
     * ([[graft.operators.Behavior.rfmScoresSketched]]) — the snapshot
     * contract is unchanged either way.
     *
-    * Replay-safe the E46 way: reads the newest snapshot version
-    * strictly below the current batch id (publish keeps 2), so a
-    * crash between publish and checkpoint-commit replays batch N
-    * against the pre-N state. State is |users| rows of fixed width on
-    * disk — no state store, mergeable at any scale.
+    * Replay-safe through [[sketchMaintained]]'s fence: a crash
+    * between publish and checkpoint-commit replays batch N against the
+    * pre-N state. State is |users| rows of fixed width on disk — no
+    * state store, mergeable at any scale.
     */
   def rfmMaintained(
       events: DataFrame,
@@ -1736,36 +1642,20 @@ object EventStreams {
       tsNsCol: String,
       valueCol: String,
       snapshotPath: String,
-      checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    events.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch
-          .filter(col(userCol).isNotNull && col(tsNsCol).isNotNull)
-          .groupBy(col(userCol).as("user_id"))
-          .agg(
-            max(col(tsNsCol).cast("long")).as("__last"),
-            count(lit(1)).as("frequency"),
-            coalesce(sum(col(valueCol).cast("decimal(18,2)")),
-              lit(0).cast("decimal(18,2)")).as("monetary"))
-        val prev = SnapshotStore.versions(spark, snapshotPath)
-          .filter(_ < batchId).lastOption
-          .flatMap(v => SnapshotStore.readVersion(spark, snapshotPath, v))
-        val merged = (prev match {
-          case Some(p) => p.unionByName(b)
-          case None => b
-        }).groupBy("user_id")
-          .agg(
-            max(col("__last")).as("__last"),
-            sum(col("frequency")).as("frequency"),
-            sum(col("monetary")).cast("decimal(18,2)").as("monetary"))
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath,
-          batchId, keepLast = 2)
-      }
-      .start()
-  }
+      checkpointPath: String): StreamingQuery =
+    sketchMaintained(events, snapshotPath, checkpointPath)(
+      _.filter(col(userCol).isNotNull && col(tsNsCol).isNotNull)
+        .groupBy(col(userCol).as("user_id"))
+        .agg(
+          max(col(tsNsCol).cast("long")).as("__last"),
+          count(lit(1)).as("frequency"),
+          coalesce(sum(col(valueCol).cast("decimal(18,2)")),
+            lit(0).cast("decimal(18,2)")).cast("decimal(18,2)").as("monetary")))(
+      _.reduce(_ unionByName _).groupBy("user_id")
+        .agg(
+          max(col("__last")).as("__last"),
+          sum(col("frequency")).as("frequency"),
+          sum(col("monetary")).cast("decimal(18,2)").as("monetary")))
 
   /** E49: streaming CALIBRATION snapshot maintenance — the C137
     * Hosmer-Lemeshow monitor kept live: a production gate classifier
@@ -1779,9 +1669,9 @@ object EventStreams {
     * [[graft.operators.Stats.hosmerLemeshowFixed]]'s shared tail over
     * the snapshot — the IDENTICAL code path the batch operator uses
     * (the E47 discipline; the spec proves stream-maintained == batch
-    * over the full feed). Replay-safe the E46 way: reads the newest
-    * snapshot version strictly below the current batch id. State is
-    * ≤ |edges|+1 rows of three integers — no state store.
+    * over the full feed). Replay-safe through [[sketchMaintained]]'s
+    * fence. State is ≤ |edges|+1 rows of three integers — no state
+    * store.
     */
   def hlMaintained(
       scores: DataFrame,
@@ -1789,28 +1679,13 @@ object EventStreams {
       labelCol: String,
       edges: Seq[Double],
       snapshotPath: String,
-      checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointPath: String): StreamingQuery = {
     require(edges.nonEmpty && edges == edges.sorted, "edges sorted, nonempty")
-    scores.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = graft.operators.Stats.hlBins(
-          batch, col(scoreCol), col(labelCol), edges)
-        val prev = SnapshotStore.versions(spark, snapshotPath)
-          .filter(_ < batchId).lastOption
-          .flatMap(v => SnapshotStore.readVersion(spark, snapshotPath, v))
-        val merged = (prev match {
-          case Some(p) => p.unionByName(b)
-          case None => b
-        }).groupBy("__bin")
-          .agg(sum(col("__n")).as("__n"), sum(col("__o")).as("__o"),
-            sum(col("__se")).as("__se"))
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath,
-          batchId, keepLast = 2)
-      }
-      .start()
+    sketchMaintained(scores, snapshotPath, checkpointPath)(
+      graft.operators.Stats.hlBins(_, col(scoreCol), col(labelCol), edges))(
+      _.reduce(_ unionByName _).groupBy("__bin")
+        .agg(sum(col("__n")).as("__n"), sum(col("__o")).as("__o"),
+          sum(col("__se")).as("__se")))
   }
 
   /** E15: streaming PSI drift monitor — per event-time window, the
@@ -1860,9 +1735,8 @@ object EventStreams {
               nBins)
             .withColumn("window_start_us", lit(ws))
         }.reduceOption(_ unionByName _)
-        out.foreach(_.select(col("window_start_us"), col("n_before"),
-            col("n_after"), col("psi"))
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId"))
+        out.foreach(o => BatchLog.write(o.select(col("window_start_us"),
+          col("n_before"), col("n_after"), col("psi")), outPath, batchId))
       }
       .start()
   }

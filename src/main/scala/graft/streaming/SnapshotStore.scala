@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Write-audit-publish snapshot layout for the streaming maintenance
   * sinks (E7/E8) on a PLAIN filesystem — the crash-safety tier below a
@@ -41,6 +43,24 @@ object SnapshotStore {
   private val Pointer = "_CURRENT"
   private val CommitLog = "_commits"
   private val Staging = "_staging"
+  private val Owner = "_QUERY"
+
+  private def readText(hfs: org.apache.hadoop.fs.FileSystem, p: Path): String = {
+    val in = hfs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
+  }
+
+  /** Replace small file `p` with `text` via `tmp` + rename: readers see
+    * the old content, or for the rename instant none, never a partial
+    * write. False when the rename fails.
+    */
+  private def swapText(hfs: org.apache.hadoop.fs.FileSystem, p: Path, tmp: Path,
+      text: String): Boolean = {
+    val out = hfs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    hfs.delete(p, false)
+    hfs.rename(tmp, p)
+  }
 
   /** The live version directory, or None before the first publish.
     *
@@ -64,14 +84,10 @@ object SnapshotStore {
     if (!hfs.exists(rootP)) return None
     val ptr = new Path(rootP, Pointer)
     val fromPointer =
-      if (hfs.exists(ptr)) {
-        val in = hfs.open(ptr)
-        val name =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        Some(new Path(rootP, name)).filter(hfs.exists(_))
+      if (hfs.exists(ptr))
+        Some(new Path(rootP, readText(hfs, ptr))).filter(hfs.exists(_))
           .map(_.getName.drop(1).toLong)
-      } else None
+      else None
     val fromLog = committedVersions(spark, root).maxOption
     (fromPointer ++ fromLog).maxOption
       .map(v => new Path(rootP, s"v$v").toString)
@@ -119,6 +135,53 @@ object SnapshotStore {
       .sorted
   }
 
+  /** The replay fence for a `foreachBatch` sink that keeps its state
+    * here: the newest audited version strictly below `batchId`, or None
+    * before the first publish. Spark delivers `foreachBatch` at least
+    * once — a crash after the sink publishes version N but before the
+    * checkpoint commits batch N re-runs batch N — so a sink that merged
+    * batch N into the LIVE version would merge it twice. Read through
+    * this fence, a replay sees exactly the pre-N state and republishes
+    * the same `v<N>`, which turns at-least-once delivery into
+    * exactly-once state. Every sink that reads here publishes with
+    * `keepLast = ReplayKeep` (2): Spark itself only re-runs the newest
+    * uncommitted batch, whose predecessor one kept version covers; the
+    * second covers a replay of batch N after N + 1 has landed, as when
+    * a checkpoint is restored from a copy one batch old.
+    *
+    * Version numbers are batch ids, so they mean something only to the
+    * streaming query that wrote them. A query started on a FRESH
+    * checkpoint restarts its batch ids at 0; fenced below 0 it would
+    * bootstrap empty and publish over the live state. So the first
+    * fenced read in a query stamps that query's id — stable across
+    * restarts of one checkpoint — into `root/_QUERY`, and a query with
+    * another id fails here, before it writes, on a root that holds
+    * versions. Reads outside a streaming query are not checked, and a
+    * root without a stamp (written before stamps existed, or only by
+    * [[publish]] callers outside a stream) is claimed by the first query
+    * that reads it.
+    */
+  private[graft] def readBefore(spark: SparkSession, root: String,
+      batchId: Long): Option[DataFrame] = {
+    Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")).foreach { id =>
+      val hfs = fs(spark, root)
+      val stamp = new Path(new Path(root), Owner)
+      val owner = if (hfs.exists(stamp)) Some(readText(hfs, stamp)) else None
+      require(owner.forall(_ == id) || versions(spark, root).isEmpty,
+        s"snapshot root $root holds versions numbered by streaming query " +
+        s"${owner.get}, not by this query ($id): a fresh checkpoint restarts " +
+        "the batch ids, so restore that query's checkpoint or give this one a new root")
+      if (!owner.contains(id))
+        require(swapText(hfs, stamp, new Path(new Path(root), s"$Owner.tmp-$id"), id),
+          s"could not stamp $root for query $id")
+    }
+    versions(spark, root).filter(_ < batchId).lastOption
+      .flatMap(readVersion(spark, root, _))
+  }
+
+  /** Retention of a sink that reads through [[readBefore]]. */
+  private[graft] val ReplayKeep = 2
+
   /** Time-travel read of a specific AUDITED version, or None if that
     * version never published, failed its audit, or has been GC'd
     * (retention is `publish`'s `keepLast`). Version directories are
@@ -147,12 +210,8 @@ object SnapshotStore {
     df.write.mode("overwrite").parquet(versionDir.toString)
     require(hfs.exists(new Path(versionDir, "_SUCCESS")),
       s"snapshot audit failed: no _SUCCESS marker in $versionDir")
-    val tmp = new Path(rootP, s"$Pointer.tmp$version")
-    val out = hfs.create(tmp, true)
-    try out.write(s"v$version".getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(rootP, Pointer)
-    hfs.delete(ptr, false)
-    require(hfs.rename(tmp, ptr), s"pointer publish failed for $versionDir")
+    require(swapText(hfs, new Path(rootP, Pointer), new Path(rootP, s"$Pointer.tmp$version"),
+      s"v$version"), s"pointer publish failed for $versionDir")
     // GC: keep the newly published version and its newest `keepLast`
     // AUDITED predecessors; everything else — older versions and
     // crashed writes' unaudited orphans — goes
@@ -262,19 +321,13 @@ object SnapshotStore {
       val ptr = new Path(rootP, Pointer)
       if (!hfs.exists(ptr)) -1L
       else {
-        val in = hfs.open(ptr)
-        val name = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
+        val name = readText(hfs, ptr)
         if (name.matches("v\\d+")) name.drop(1).toLong else -1L
       }
     }
-    if (ptrVersion < landed) {
-      val tmp = new Path(rootP, s"$Pointer.tmp$landed-$stagingId")
-      val out = hfs.create(tmp, true)
-      try out.write(s"v$landed".getBytes("UTF-8")) finally out.close()
-      hfs.delete(new Path(rootP, Pointer), false)
-      hfs.rename(tmp, new Path(rootP, Pointer))
-    }
+    if (ptrVersion < landed)
+      swapText(hfs, new Path(rootP, Pointer), new Path(rootP, s"$Pointer.tmp$landed-$stagingId"),
+        s"v$landed")
     // GC: retention over audited predecessors (publish's policy), plus
     // abandoned staging from crashed committers
     val others = hfs.listStatus(rootP).toSeq
@@ -308,4 +361,47 @@ object SnapshotStore {
     }
     landed
   }
+}
+
+/** The per-batch log layout of the append-shaped `foreachBatch` sinks
+  * (E7, E11, E15, E45, E46, E48): micro-batch N lands in its own
+  * `root/batch_id=N` directory, written with overwrite, and the root
+  * reads as one parquet table partitioned by `batch_id`.
+  *
+  * Replay contract, the [[SnapshotStore.readBefore]] fence for logs: a
+  * crash between a batch's writes and the checkpoint commit re-runs
+  * batch N with its own rows already on disk. [[write]] overwrites the
+  * same directory with the same deterministic content instead of
+  * appending duplicates, and [[readBefore]] shows the batch only the
+  * rows of batches before N — so a dedup index never matches a
+  * replayed batch against itself and lands it empty. A crash mid-write
+  * leaves only an uncommitted `_temporary` dir, invisible to readers of
+  * the root; the replay overwrites it.
+  */
+private[graft] object BatchLog {
+
+  /** Rows of the batches strictly before `batchId`, without the
+    * `batch_id` column. Bootstrap (the `empty` schema) while no batch
+    * directory has committed its `_SUCCESS` marker — a root holding
+    * only a crashed write's leftovers is still bootstrap — but a root
+    * with committed batches that fails to READ is corruption and
+    * propagates: a silent empty restart would re-admit the whole
+    * corpus.
+    */
+  def readBefore(spark: SparkSession, root: String, batchId: Long,
+      empty: StructType): DataFrame = {
+    val rootP = new Path(root)
+    val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasCommitted = hfs.exists(rootP) &&
+      hfs.globStatus(new Path(root, "batch_id=*/_SUCCESS")).nonEmpty
+    if (hasCommitted)
+      spark.read.parquet(root).filter(col("batch_id") < batchId).drop("batch_id")
+    else spark.createDataFrame(new java.util.ArrayList[Row](), empty)
+  }
+
+  /** Land `df` as batch `batchId` of the log, replacing a replay's
+    * earlier attempt.
+    */
+  def write(df: DataFrame, root: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$root/batch_id=$batchId")
 }

@@ -1481,6 +1481,104 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.exists(r => r._1 == 0L && r._2 == 17L && r._6))
   }
 
+  /** Runs a `foreachBatch` sink over a parquet file source, one fresh
+    * query per batch on the same checkpoint dir, then deletes the last
+    * batch's commit entry and restarts once more: Spark re-runs that
+    * batch with its offsets as logged — the crash between the sink's
+    * writes and the checkpoint commit. `inspect` sees the sink's root
+    * just before the replay. Returns the root.
+    */
+  private def replayedLastBatch(name: String, schema: String,
+      batches: Seq[org.apache.spark.sql.DataFrame])(
+      start: (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery)(
+      inspect: String => Unit): String = {
+    val root = java.nio.file.Files.createTempDirectory(name).toString
+    def drain(): Unit = {
+      val q = start(spark.readStream.schema(schema).parquet(s"$root/in"), root)
+      try q.processAllAvailable() finally q.stop()
+    }
+    batches.foreach { b => b.write.mode("append").parquet(s"$root/in"); drain() }
+    inspect(root)
+    val last = batches.length - 1
+    Seq(s"$last", s".$last.crc").foreach(f =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/ckpt/commits/$f")))
+    drain()
+    root
+  }
+
+  test("E14 cmsMaintained replayed before its checkpoint commit counts the batch once") {
+    val words = (0 until 2000).map(i => s"w${i % 300}")
+    val root = replayedLastBatch("graft_e14_replay", "term STRING",
+        Seq(words.take(800).toDF("term"), words.drop(800).toDF("term"))) {
+        (in, r) => EventStreams.cmsMaintained(in, "term", s"$r/snap", s"$r/ckpt",
+          width = 512, depth = 4)
+      }(_ => ())
+    val snap = SnapshotStore.read(spark, s"$root/snap").get
+      .as[(Int, Int, Long)].collect().toSet
+    val oneShot = graft.operators.Profile.countMinSketch(
+        words.toDF("term"), col("term"), width = 512, depth = 4)
+      .as[(Int, Int, Long)].collect().toSet
+    assert(snap == oneShot, "the replayed batch was merged twice")
+  }
+
+  test("E45 thetaAdmitStream replayed before its checkpoint commit rewrites the same verdict") {
+    def verdict(root: String) = spark.read.parquet(s"$root/out/batch_id=1")
+      .select("grp", "est_batch", "est_new").as[(String, Double, Double)].collect().toSet
+    var first = Set.empty[(String, Double, Double)]
+    val root = replayedLastBatch("graft_e45_replay", "g STRING, it STRING",
+        Seq((0 until 200).map(i => ("a", s"item$i")).toDF("g", "it"),
+          (150 until 300).map(i => ("a", s"item$i")).toDF("g", "it"))) {
+        (in, r) => EventStreams.thetaAdmitStream(in, "g", "it",
+          s"$r/snap", s"$r/out", s"$r/ckpt")
+      }(r => first = verdict(r))
+    assert(first == Set(("a", 150.0, 100.0)), first.toString)
+    assert(verdict(root) == first, "the replay scored the batch against itself")
+    val est = SnapshotStore.read(spark, s"$root/snap").get
+      .select(graft.functions.ThetaSketch.thetaEstimate(col("sketch"))).as[Double].head()
+    assert(est == 300.0, s"corpus estimate $est")
+  }
+
+  test("E8 and E14 on a fresh checkpoint refuse a root another query numbered, keeping its live state") {
+    // a fresh checkpoint restarts the batch ids at 0: fenced below 0,
+    // the sink would bootstrap empty and publish over the live state
+    val dir = java.nio.file.Files.createTempDirectory("graft_fresh_ckpt").toString
+    def run[T](input: MemoryStream[T], q: org.apache.spark.sql.streaming.StreamingQuery,
+        batches: Seq[T]*): Unit =
+      try batches.foreach { b => input.addData(b); q.processAllAvailable() } finally q.stop()
+    def refused(body: => Unit): Unit = {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](body)
+      assert(e.getMessage.contains("numbered by streaming query"), e.getMessage)
+    }
+
+    val cdc = s"$dir/cdc"
+    def cdcRun(ckpt: String, batches: Seq[(Long, String, String, Int)]*): Unit = {
+      val input = MemoryStream[(Long, String, String, Int)](spark)
+      run(input, EventStreams.applyChangesMaintained(input.toDF().toDF("k", "v", "op", "ver"),
+        Seq("k"), "ver", "op", cdc, ckpt), batches: _*)
+    }
+    def table() = SnapshotStore.read(spark, cdc).get
+      .select("k", "v").as[(Long, String)].collect().toSet
+    cdcRun(s"$dir/cdc_ckpt1", Seq((1L, "a", "I", 1), (2L, "b", "I", 1)),
+      Seq((2L, "b2", "U", 2)))
+    refused(cdcRun(s"$dir/cdc_ckpt2", Seq((3L, "c", "I", 1))))
+    assert(table() == Set((1L, "a"), (2L, "b2")), "the CDC table was reset")
+
+    val cms = s"$dir/cms"
+    val words = (0 until 600).map(i => s"w${i % 90}")
+    def cmsRun(ckpt: String, batches: Seq[String]*): Unit = {
+      val input = MemoryStream[String](spark)
+      run(input, EventStreams.cmsMaintained(input.toDF().toDF("term"), "term", cms, ckpt,
+        width = 256, depth = 3), batches: _*)
+    }
+    cmsRun(s"$dir/cms_ckpt1", words.take(250), words.drop(250))
+    refused(cmsRun(s"$dir/cms_ckpt2", Seq("w1")))
+    val cells = SnapshotStore.read(spark, cms).get.as[(Int, Int, Long)].collect().toSet
+    val oneShot = graft.operators.Profile.countMinSketch(
+        words.toDF("term"), col("term"), width = 256, depth = 3)
+      .as[(Int, Int, Long)].collect().toSet
+    assert(cells == oneShot, "the sketch was reset")
+  }
+
   test("E44 pageHinkleyStream: emitted micro walk equals batch pageHinkley across a split") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.Stats

@@ -124,4 +124,33 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"per-batch sort outside EventStreams.orderedScan:\n${offenders.mkString("\n")}")
   }
+
+  test("foreachBatch sinks read prior state only through the SnapshotStore replay fences") {
+    // a hand-placed read of a sink's own state is where a replayed
+    // batch sees itself: these spellings live in the two readBefore
+    // helpers and nowhere else under streaming/ (comments aside)
+    import scala.jdk.CollectionConverters._
+    val needles = Seq("batch_id=*/_SUCCESS", "filter(_ < batchId)", "SnapshotStore.read(")
+    val decl = """\s*(?:private(?:\[\w+\])? )?def (\w+)\b.*""".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/streaming"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val hits = for {
+      f <- files
+      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      code = l.split("//", 2)(0)
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      needle <- needles
+      if code.contains(needle)
+      owner = lines.take(i + 1).reverseIterator.collectFirst { case decl(n) => n }
+    } yield (f.getFileName.toString, owner, needle, s"$f:${i + 1}: ${l.trim}")
+    val offenders = hits.filterNot(h => h._1 == "SnapshotStore.scala" && h._2.contains("readBefore"))
+    assert(offenders.isEmpty,
+      s"prior-state read outside SnapshotStore.readBefore / BatchLog.readBefore:\n${offenders.map(_._4).mkString("\n")}")
+    // and each spelling is really there, so a renamed helper cannot
+    // make this check vacuous
+    assert(needles.filterNot(_ == "SnapshotStore.read(").forall(n => hits.exists(_._3 == n)),
+      s"a fence spelling moved: ${hits.map(_._4)}")
+  }
 }
