@@ -25,11 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * two hash aggregations and a join — at corpus scale that is a
   * multi-hundred-GB shuffle for a computation that needs none (the
   * r10 bench-honesty find: count() had silently pruned that whole
-  * pipeline, hiding its cost). Here each row sorts its own gram index
-  * arrays (O(maxN · L log L), comparing code points in place — no
-  * per-gram String allocation) and merges run-lengths for the clipped
-  * count. CodegenFallback is acceptable: the surrounding projection
-  * stays codegen'd and the loop is allocation-light.
+  * pipeline, hiding its cost). Here each row runs [[ClippedGrams]]
+  * over its code points (O(maxN · L log L), comparing code points in
+  * place — no per-gram String allocation). CodegenFallback is
+  * acceptable: the surrounding projection stays codegen'd and the loop
+  * is allocation-light.
   *
   * NULL contract: a NULL side counts as EMPTY (no grams — dc/dr = 0,
   * the unmeasurable-order NULL surfaces downstream), so the output
@@ -50,66 +50,9 @@ case class ChrFStats(left: Expression, right: Expression, maxN: Int)
     }
     val a = cps(left)
     val b = cps(right)
-    val out = new Array[Long](3 * maxN)
-    var n = 1
-    while (n <= maxN) {
-      val ka = a.length - n + 1
-      val kb = b.length - n + 1
-      val dc = math.max(ka, 0)
-      val dr = math.max(kb, 0)
-      val m = if (dc > 0 && dr > 0) clipped(a, sortedGrams(a, n), b, sortedGrams(b, n), n)
-              else 0L
-      out(3 * (n - 1)) = m
-      out(3 * (n - 1) + 1) = dc.toLong
-      out(3 * (n - 1) + 2) = dr.toLong
-      n += 1
-    }
-    ArrayData.toArrayData(out)
-  }
-
-  /** Gram start offsets sorted by code-point-lexicographic gram content. */
-  private def sortedGrams(cp: Array[Int], n: Int): Array[Integer] = {
-    val k = cp.length - n + 1
-    val idx = new Array[Integer](k)
-    var i = 0
-    while (i < k) { idx(i) = Integer.valueOf(i); i += 1 }
-    java.util.Arrays.sort(idx, (x: Integer, y: Integer) => cmp(cp, x, cp, y, n))
-    idx
-  }
-
-  private def cmp(cpA: Array[Int], ia: Int, cpB: Array[Int], ib: Int, n: Int): Int = {
-    var t = 0
-    while (t < n) {
-      val d = java.lang.Integer.compare(cpA(ia + t), cpB(ib + t))
-      if (d != 0) return d
-      t += 1
-    }
-    0
-  }
-
-  /** Two-pointer merge over the sorted gram lists: per shared distinct
-    * gram, add min(run length A, run length B).
-    */
-  private def clipped(cpA: Array[Int], ia: Array[Integer],
-      cpB: Array[Int], ib: Array[Integer], n: Int): Long = {
-    var i = 0
-    var j = 0
-    var m = 0L
-    while (i < ia.length && j < ib.length) {
-      val d = cmp(cpA, ia(i), cpB, ib(j), n)
-      if (d < 0) i += 1
-      else if (d > 0) j += 1
-      else {
-        var ri = i + 1
-        while (ri < ia.length && cmp(cpA, ia(ri), cpA, ia(i), n) == 0) ri += 1
-        var rj = j + 1
-        while (rj < ib.length && cmp(cpB, ib(rj), cpB, ib(j), n) == 0) rj += 1
-        m += math.min(ri - i, rj - j).toLong
-        i = ri
-        j = rj
-      }
-    }
-    m
+    val cp = Array.concat(a, b)
+    ArrayData.toArrayData(ClippedGrams.stats(a.length, b.length, maxN,
+      (i: Int, j: Int) => java.lang.Integer.compare(cp(i), cp(j))))
   }
 
   override protected def withNewChildrenInternal(
@@ -119,7 +62,7 @@ case class ChrFStats(left: Expression, right: Expression, maxN: Int)
 
 object ChrFStats {
   /** Column wrapper: chrF gram stats of two string columns. */
-  def chrfStats(cand: Column, ref: Column, maxN: Int): Column =
+  def chrfStats(cand: Column, ref: Column, maxN: Int = 6): Column =
     Shims.toColumn(ChrFStats(
       Shims.toExpression(cand.cast("string")),
       Shims.toExpression(ref.cast("string")), maxN))

@@ -29,8 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * docs).
   */
 case class DeflateLen(child: Expression) extends UnaryExpression {
-  // No ExpectsInputTypes (private[sql] in Spark 4); the Column wrapper
-  // and the SQL builder both cast the child to string.
+  // No ExpectsInputTypes (private[sql] in Spark 4); the Column wrapper,
+  // which the SQL name builds through, casts the child to string.
   override def dataType: DataType = IntegerType
   override def prettyName: String = "deflate_len"
 

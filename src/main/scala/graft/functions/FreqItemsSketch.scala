@@ -7,13 +7,29 @@ import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+/** The frequent-items byte format: string items through the
+  * library's string serde; the persisted bytes carry their own map
+  * size, so a decoded sketch is a heap instance of the writer's size.
+  */
+private[functions] final case class FreqCodec(maxMapSize: Int)
+    extends SketchCodec[ItemsSketch[String]] {
+  def empty: ItemsSketch[String] = new ItemsSketch[String](maxMapSize)
+  def toBytes(s: ItemsSketch[String]): Array[Byte] = s.toByteArray(FreqCodec.serde)
+  def fromBytes(bytes: Array[Byte]): ItemsSketch[String] = FreqCodec.wrap(bytes)
+  def merge(into: ItemsSketch[String], other: ItemsSketch[String]): Unit = into.merge(other)
+}
+
+private[functions] object FreqCodec {
+  private val serde = new ArrayOfStringsSerDe
+  def wrap(bytes: Array[Byte]): ItemsSketch[String] =
+    ItemsSketch.getInstance(Memory.wrap(bytes), serde)
+}
 
 /** Mergeable frequent-items sketches (the Misra-Gries family as
   * implemented by DataSketches' `ItemsSketch` — Anderson et al.'s
@@ -38,34 +54,13 @@ case class FreqSketchAgg(
     maxMapSize: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ItemsSketch[String]] with UnaryLike[Expression] {
+  extends SketchAgg[ItemsSketch[String]] {
 
-  @transient private lazy val serde = new ArrayOfStringsSerDe
+  @transient override protected lazy val codec: FreqCodec = FreqCodec(maxMapSize)
 
-  override def createAggregationBuffer(): ItemsSketch[String] =
-    new ItemsSketch[String](maxMapSize)
+  override protected def absorb(buffer: ItemsSketch[String], value: Any): Unit =
+    buffer.update(value.toString)
 
-  override def update(buffer: ItemsSketch[String], input: InternalRow): ItemsSketch[String] = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.toString)
-    buffer
-  }
-
-  override def merge(buffer: ItemsSketch[String], other: ItemsSketch[String]): ItemsSketch[String] = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: ItemsSketch[String]): Any = buffer.toByteArray(serde)
-
-  override def serialize(buffer: ItemsSketch[String]): Array[Byte] =
-    buffer.toByteArray(serde)
-
-  override def deserialize(bytes: Array[Byte]): ItemsSketch[String] =
-    ItemsSketch.getInstance(Memory.wrap(bytes), serde)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "freq_sketch_agg"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): FreqSketchAgg =
@@ -77,43 +72,20 @@ case class FreqSketchAgg(
 }
 
 /** Union of persisted frequent-items sketch BYTES — the shard-merge
-  * aggregate (KllMergeAgg's shape). Null inputs skipped.
+  * aggregate (KllMergeAgg's shape).
   */
 case class FreqMergeAgg(
     child: Expression,
     maxMapSize: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ItemsSketch[String]] with UnaryLike[Expression] {
+  extends SketchAgg[ItemsSketch[String]] {
 
-  @transient private lazy val serde = new ArrayOfStringsSerDe
+  @transient override protected lazy val codec: FreqCodec = FreqCodec(maxMapSize)
 
-  override def createAggregationBuffer(): ItemsSketch[String] =
-    new ItemsSketch[String](maxMapSize)
+  override protected def absorb(buffer: ItemsSketch[String], value: Any): Unit =
+    buffer.merge(FreqCodec.wrap(value.asInstanceOf[Array[Byte]]))
 
-  override def update(buffer: ItemsSketch[String], input: InternalRow): ItemsSketch[String] = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.merge(ItemsSketch.getInstance(
-        Memory.wrap(v.asInstanceOf[Array[Byte]]), serde))
-    buffer
-  }
-
-  override def merge(buffer: ItemsSketch[String], other: ItemsSketch[String]): ItemsSketch[String] = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: ItemsSketch[String]): Any = buffer.toByteArray(serde)
-
-  override def serialize(buffer: ItemsSketch[String]): Array[Byte] =
-    buffer.toByteArray(serde)
-
-  override def deserialize(bytes: Array[Byte]): ItemsSketch[String] =
-    ItemsSketch.getInstance(Memory.wrap(bytes), serde)
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "freq_merge_agg"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): FreqMergeAgg =
@@ -132,7 +104,6 @@ case class FreqMergeAgg(
   */
 case class FreqTopItems(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
-  @transient private lazy val serde = new ArrayOfStringsSerDe
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("item", StringType),
@@ -143,8 +114,7 @@ case class FreqTopItems(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def nullSafeEval(sketchBytes: Any, maxItems: Any): Any = {
-    val s = ItemsSketch.getInstance(
-      Memory.wrap(sketchBytes.asInstanceOf[Array[Byte]]), serde)
+    val s = FreqCodec.wrap(sketchBytes.asInstanceOf[Array[Byte]])
     val rows = s.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES)
       .take(maxItems.asInstanceOf[Int])
       .map { r =>
@@ -169,7 +139,6 @@ case class FreqTopItems(left: Expression, right: Expression)
   */
 case class FreqBounds(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
-  @transient private lazy val serde = new ArrayOfStringsSerDe
   override def dataType: DataType = StructType(Seq(
     StructField("estimate", LongType),
     StructField("lower_bound", LongType),
@@ -177,8 +146,7 @@ case class FreqBounds(left: Expression, right: Expression)
   override def prettyName: String = "freq_bounds"
 
   override def nullSafeEval(sketchBytes: Any, item: Any): Any = {
-    val s = ItemsSketch.getInstance(
-      Memory.wrap(sketchBytes.asInstanceOf[Array[Byte]]), serde)
+    val s = FreqCodec.wrap(sketchBytes.asInstanceOf[Array[Byte]])
     val it = item.toString
     InternalRow(s.getEstimate(it), s.getLowerBound(it), s.getUpperBound(it))
   }
@@ -191,14 +159,11 @@ case class FreqBounds(left: Expression, right: Expression)
 /** Scalar point estimate for one item from a serialized sketch. */
 case class FreqEstimate(left: Expression, right: Expression)
     extends BinaryExpression with CodegenFallback {
-  @transient private lazy val serde = new ArrayOfStringsSerDe
   override def dataType: DataType = LongType
   override def prettyName: String = "freq_estimate"
 
   override def nullSafeEval(sketchBytes: Any, item: Any): Any =
-    ItemsSketch.getInstance(
-      Memory.wrap(sketchBytes.asInstanceOf[Array[Byte]]), serde)
-      .getEstimate(item.toString)
+    FreqCodec.wrap(sketchBytes.asInstanceOf[Array[Byte]]).getEstimate(item.toString)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FreqEstimate =
@@ -206,22 +171,29 @@ case class FreqEstimate(left: Expression, right: Expression)
 }
 
 object FreqItemsSketch {
+  private def requirePow2(maxMapSize: Int): Unit =
+    require(maxMapSize >= 2 && (maxMapSize & (maxMapSize - 1)) == 0,
+      s"maxMapSize must be a power of two >= 2, got $maxMapSize")
+
   /** Aggregate: absorb a string column into a frequent-items sketch
     * (`maxMapSize` a power of two) → binary.
     */
   def freqSketch(item: Column, maxMapSize: Int = 1024): Column = {
-    require(maxMapSize >= 2 && (maxMapSize & (maxMapSize - 1)) == 0,
-      "maxMapSize must be a power of two")
+    requirePow2(maxMapSize)
     Shims.toColumn(
       FreqSketchAgg(Shims.toExpression(item.cast("string")), maxMapSize)
         .toAggregateExpression())
   }
 
-  /** Aggregate: union serialized sketches → binary. */
-  def freqMerge(sketch: Column, maxMapSize: Int = 1024): Column =
+  /** Aggregate: union serialized sketches (`maxMapSize` a power of
+    * two) → binary.
+    */
+  def freqMerge(sketch: Column, maxMapSize: Int = 1024): Column = {
+    requirePow2(maxMapSize)
     Shims.toColumn(
       FreqMergeAgg(Shims.toExpression(sketch), maxMapSize)
         .toAggregateExpression())
+  }
 
   /** Scalar: top heavy hitters with bounds from a serialized sketch. */
   def freqTopItems(sketch: Column, maxItems: Int): Column =

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.graftshim.Shims
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
 /** SQL-name registration for graft's custom Catalyst expressions, so
   * `spark.sql("SELECT simhash64(tokens), ...")` works exactly like the
@@ -33,223 +33,142 @@ object GraftFunctions {
 
   private def intArg(e: Expression, what: String): Int = longArg(e, what).toInt
 
-  // the SQL entry points must enforce the SAME argument contracts as
-  // the Column wrappers — otherwise spark.sql("freq_sketch(x, 100)")
-  // passes plan-time checks and dies at execution inside the sketch
-  // library where the Column path fails fast with a clear message
-  private def pow2Arg(e: Expression, what: String): Int = {
-    val v = intArg(e, what)
-    if (v < 2 || (v & (v - 1)) != 0)
-      throw new IllegalArgumentException(s"$what must be a power of two >= 2, got $v")
-    v
-  }
-
   private def binaryArg(e: Expression, what: String): Array[Byte] = e match {
     case Literal(v: Array[Byte], BinaryType) if v != null => v
     case other => throw new IllegalArgumentException(
       s"$what must be a binary literal, got $other")
   }
 
-  // The kernels read raw ArrayData/UTF8String, so the SQL builders must
-  // coerce exactly like the Column wrappers do (.cast("array<double>")
-  // etc.) — otherwise dot_product(array(1,2), array(3,4)) over int
-  // arrays would call getDouble on int-backed data: silently wrong
-  // values instead of an analysis-time cast.
-  private def asStringArray(e: Expression): Expression = Cast(e, ArrayType(StringType))
-  private def asDoubleArray(e: Expression): Expression = Cast(e, ArrayType(DoubleType))
-  private def asLongArray(e: Expression): Expression = Cast(e, ArrayType(LongType))
-  private def asString(e: Expression): Expression = Cast(e, StringType)
+  private def c(e: Expression): Column = Shims.toColumn(e)
+
+  /** One SQL name. `build` reads the literal arguments and calls the
+    * Column wrapper, which is the only statement of the function's
+    * casts, defaults and argument checks — so `spark.sql` and the
+    * Column API build the same expression by construction (pinned per
+    * name and arity in SqlFunctionsSpec). Any other arity fails with
+    * `usage`. The wrapper's casts of the arguments are coercions, not
+    * casts the SQL user wrote, so they lose the user-cast tag and stay
+    * out of an unaliased call's column name (`chrf_stats(cand, ref)`).
+    */
+  private def fn(name: String, cls: Class[_], usage: String)(
+      build: PartialFunction[Seq[Expression], Column])
+      : (String, ExpressionInfo, Seq[Expression] => Expression) =
+    (name, new ExpressionInfo(cls.getName, name), (args: Seq[Expression]) => {
+      val e = Shims.toCatalyst(build.applyOrElse(args,
+        (_: Seq[Expression]) => throw new IllegalArgumentException(usage)))
+      e.foreach {
+        case coerce: Cast if args.exists(_ eq coerce.child) =>
+          coerce.unsetTagValue(Cast.USER_SPECIFIED_CAST)
+        case _ =>
+      }
+      e
+    })
 
   val all: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("simhash64",
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (args: Seq[Expression]) => args match {
-        case Seq(tokens) => SimHash64(asStringArray(tokens))
-        case Seq(tokens, seed) => SimHash64(asStringArray(tokens), longArg(seed, "seed"))
-        case _ => throw new IllegalArgumentException("simhash64(tokens[, seed])")
-      }),
-    ("winnow_fingerprint",
-      new ExpressionInfo(classOf[RollingHashWinnow].getName, "winnow_fingerprint"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => RollingHashWinnow(asString(text))
-        case Seq(text, k, w) =>
-          RollingHashWinnow(asString(text), intArg(k, "k"), intArg(w, "w"))
-        case _ => throw new IllegalArgumentException("winnow_fingerprint(text[, k, w])")
-      }),
-    ("dot_product",
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => DotProduct(asDoubleArray(a), asDoubleArray(b))
-        case _ => throw new IllegalArgumentException("dot_product(a, b)")
-      }),
-    ("array_agree_count",
-      new ExpressionInfo(classOf[ArrayAgreeCount].getName, "array_agree_count"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => ArrayAgreeCount(asLongArray(a), asLongArray(b))
-        case _ => throw new IllegalArgumentException("array_agree_count(a, b)")
-      }),
-    ("minhash_signature",
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-      (args: Seq[Expression]) => args match {
-        case Seq(tokens) => MinHashSignature(asStringArray(tokens))
-        case Seq(tokens, numHashes, shingleSize) =>
-          MinHashSignature(asStringArray(tokens),
-            intArg(numHashes, "numHashes"), intArg(shingleSize, "shingleSize"))
-        case Seq(tokens, numHashes, shingleSize, seed) =>
-          MinHashSignature(asStringArray(tokens),
-            intArg(numHashes, "numHashes"), intArg(shingleSize, "shingleSize"),
-            longArg(seed, "seed"))
-        case _ => throw new IllegalArgumentException(
-          "minhash_signature(tokens[, numHashes, shingleSize[, seed]])")
-      }),
-    ("unicode_normalize",
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "unicode_normalize"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => UnicodeNormalize(asString(text), "NFC")
-        case Seq(text, form) =>
-          val f = stringArg(form, "form").toUpperCase
-          if (!UnicodeNormalize.forms(f)) throw new IllegalArgumentException(
-            s"unicode_normalize form must be one of ${UnicodeNormalize.forms}, got $f")
-          UnicodeNormalize(asString(text), f)
-        case _ => throw new IllegalArgumentException("unicode_normalize(text[, form])")
-      }),
-    ("deflate_len",
-      new ExpressionInfo(classOf[DeflateLen].getName, "deflate_len"),
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => DeflateLen(asString(text))
-        case _ => throw new IllegalArgumentException("deflate_len(text)")
-      }),
-    ("lcs_len",
-      new ExpressionInfo(classOf[LcsLen].getName, "lcs_len"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => LcsLen(asStringArray(a), asStringArray(b))
-        case _ => throw new IllegalArgumentException("lcs_len(cand_tokens, ref_tokens)")
-      }),
-    ("chrf_stats",
-      new ExpressionInfo(classOf[ChrFStats].getName, "chrf_stats"),
-      (args: Seq[Expression]) => args match {
-        case Seq(cand, ref) => ChrFStats(asString(cand), asString(ref), 6)
-        case Seq(cand, ref, n) =>
-          ChrFStats(asString(cand), asString(ref), intArg(n, "maxN"))
-        case _ => throw new IllegalArgumentException("chrf_stats(cand, ref[, maxN])")
-      }),
-    ("token_gram_stats",
-      new ExpressionInfo(classOf[TokenGramStats].getName, "token_gram_stats"),
-      (args: Seq[Expression]) => args match {
-        case Seq(cand, ref) =>
-          TokenGramStats(asStringArray(cand), asStringArray(ref), 4)
-        case Seq(cand, ref, n) =>
-          TokenGramStats(asStringArray(cand), asStringArray(ref), intArg(n, "maxN"))
-        case _ => throw new IllegalArgumentException(
-          "token_gram_stats(cand_tokens, ref_tokens[, maxN])")
-      }),
-    // the filter rides a BINARY LITERAL (the persisted `BloomFilter`
-    // bytes, e.g. read back from the index table a pipeline wrote) so
-    // SQL users get the same broadcast-free pre-filter as the Column API
-    ("bloom_might_contain",
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (args: Seq[Expression]) => args match {
-        case Seq(key, filter) => BloomMightContain(
-          Cast(key, org.apache.spark.sql.types.LongType),
-          binaryArg(filter, "filter"))
-        case _ => throw new IllegalArgumentException(
-          "bloom_might_contain(key, filterBytesLiteral)")
-      }),
-    ("kll_sketch",
-      new ExpressionInfo(classOf[KllSketchAgg].getName, "kll_sketch"),
-      (args: Seq[Expression]) => args match {
-        case Seq(v) => KllSketchAgg(Cast(v, DoubleType), 200).toAggregateExpression()
-        case Seq(v, k) =>
-          KllSketchAgg(Cast(v, DoubleType), intArg(k, "k")).toAggregateExpression()
-        case _ => throw new IllegalArgumentException("kll_sketch(value[, k])")
-      }),
-    ("kll_merge",
-      new ExpressionInfo(classOf[KllMergeAgg].getName, "kll_merge"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s) => KllMergeAgg(s, 200).toAggregateExpression()
-        case Seq(s, k) => KllMergeAgg(s, intArg(k, "k")).toAggregateExpression()
-        case _ => throw new IllegalArgumentException("kll_merge(sketch[, k])")
-      }),
-    ("kll_quantile",
-      new ExpressionInfo(classOf[KllQuantile].getName, "kll_quantile"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s, r) => KllQuantile(s, Cast(r, DoubleType))
-        case _ => throw new IllegalArgumentException("kll_quantile(sketch, rank)")
-      }),
-    ("kll_count",
-      new ExpressionInfo(classOf[KllCount].getName, "kll_count"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s) => KllCount(s)
-        case _ => throw new IllegalArgumentException("kll_count(sketch)")
-      }),
-    ("freq_sketch",
-      new ExpressionInfo(classOf[FreqSketchAgg].getName, "freq_sketch"),
-      (args: Seq[Expression]) => args match {
-        case Seq(v) => FreqSketchAgg(asString(v), 1024).toAggregateExpression()
-        case Seq(v, m) =>
-          FreqSketchAgg(asString(v), pow2Arg(m, "maxMapSize")).toAggregateExpression()
-        case _ => throw new IllegalArgumentException("freq_sketch(item[, maxMapSize])")
-      }),
-    ("freq_merge",
-      new ExpressionInfo(classOf[FreqMergeAgg].getName, "freq_merge"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s) => FreqMergeAgg(s, 1024).toAggregateExpression()
-        case Seq(s, m) =>
-          FreqMergeAgg(s, pow2Arg(m, "maxMapSize")).toAggregateExpression()
-        case _ => throw new IllegalArgumentException("freq_merge(sketch[, maxMapSize])")
-      }),
-    ("freq_top_items",
-      new ExpressionInfo(classOf[FreqTopItems].getName, "freq_top_items"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s, n) => FreqTopItems(s, Literal(intArg(n, "maxItems")))
-        case _ => throw new IllegalArgumentException("freq_top_items(sketch, maxItems)")
-      }),
-    ("freq_estimate",
-      new ExpressionInfo(classOf[FreqEstimate].getName, "freq_estimate"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s, item) => FreqEstimate(s, asString(item))
-        case _ => throw new IllegalArgumentException("freq_estimate(sketch, item)")
-      }),
-    ("freq_bounds",
-      new ExpressionInfo(classOf[FreqBounds].getName, "freq_bounds"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s, item) => FreqBounds(s, asString(item))
-        case _ => throw new IllegalArgumentException("freq_bounds(sketch, item)")
-      }),
-    ("theta_sketch",
-      new ExpressionInfo(classOf[ThetaSketchAgg].getName, "theta_sketch"),
-      (args: Seq[Expression]) => args match {
-        case Seq(v) => ThetaSketchAgg(asString(v), 12).toAggregateExpression()
-        case Seq(v, k) =>
-          ThetaSketchAgg(asString(v), intArg(k, "lgK")).toAggregateExpression()
-        case _ => throw new IllegalArgumentException("theta_sketch(item[, lgK])")
-      }),
-    ("theta_union",
-      new ExpressionInfo(classOf[ThetaUnionAgg].getName, "theta_union"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s) => ThetaUnionAgg(s, 12).toAggregateExpression()
-        case Seq(s, k) =>
-          ThetaUnionAgg(s, intArg(k, "lgK")).toAggregateExpression()
-        case _ => throw new IllegalArgumentException("theta_union(sketch[, lgK])")
-      }),
-    ("theta_estimate",
-      new ExpressionInfo(classOf[ThetaEstimate].getName, "theta_estimate"),
-      (args: Seq[Expression]) => args match {
-        case Seq(s) => ThetaEstimate(s)
-        case _ => throw new IllegalArgumentException("theta_estimate(sketch)")
-      }),
-    ("theta_intersect_estimate",
-      new ExpressionInfo(classOf[ThetaIntersectEstimate].getName, "theta_intersect_estimate"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => ThetaIntersectEstimate(a, b)
-        case _ => throw new IllegalArgumentException("theta_intersect_estimate(a, b)")
-      }),
-    ("theta_diff_estimate",
-      new ExpressionInfo(classOf[ThetaDiffEstimate].getName, "theta_diff_estimate"),
-      (args: Seq[Expression]) => args match {
-        case Seq(a, b) => ThetaDiffEstimate(a, b)
-        case _ => throw new IllegalArgumentException("theta_diff_estimate(a, b)")
-      }))
+    fn("simhash64", classOf[SimHash64], "simhash64(tokens[, seed])") {
+      case Seq(tokens) => SimHash64.simhash64(c(tokens))
+      case Seq(tokens, seed) => SimHash64.simhash64(c(tokens), longArg(seed, "seed"))
+    },
+    fn("winnow_fingerprint", classOf[RollingHashWinnow], "winnow_fingerprint(text[, k, w])") {
+      case Seq(text) => RollingHashWinnow.winnowFingerprint(c(text))
+      case Seq(text, k, w) =>
+        RollingHashWinnow.winnowFingerprint(c(text), intArg(k, "k"), intArg(w, "w"))
+    },
+    fn("dot_product", classOf[DotProduct], "dot_product(a, b)") {
+      case Seq(a, b) => DotProduct.dotProduct(c(a), c(b))
+    },
+    fn("array_agree_count", classOf[ArrayAgreeCount], "array_agree_count(a, b)") {
+      case Seq(a, b) => ArrayAgreeCount.arrayAgreeCount(c(a), c(b))
+    },
+    fn("minhash_signature", classOf[MinHashSignature],
+        "minhash_signature(tokens[, numHashes, shingleSize[, seed]])") {
+      case Seq(tokens) => MinHashSignature.minhashSignature(c(tokens))
+      case Seq(tokens, numHashes, shingleSize) =>
+        MinHashSignature.minhashSignature(c(tokens),
+          intArg(numHashes, "numHashes"), intArg(shingleSize, "shingleSize"))
+      case Seq(tokens, numHashes, shingleSize, seed) =>
+        MinHashSignature.minhashSignature(c(tokens),
+          intArg(numHashes, "numHashes"), intArg(shingleSize, "shingleSize"),
+          longArg(seed, "seed"))
+    },
+    fn("unicode_normalize", classOf[UnicodeNormalize], "unicode_normalize(text[, form])") {
+      case Seq(text) => UnicodeNormalize.normalize(c(text))
+      case Seq(text, form) => UnicodeNormalize.normalize(c(text), stringArg(form, "form"))
+    },
+    fn("deflate_len", classOf[DeflateLen], "deflate_len(text)") {
+      case Seq(text) => DeflateLen.deflateLen(c(text))
+    },
+    fn("lcs_len", classOf[LcsLen], "lcs_len(cand_tokens, ref_tokens)") {
+      case Seq(a, b) => LcsLen.lcsLen(c(a), c(b))
+    },
+    fn("chrf_stats", classOf[ChrFStats], "chrf_stats(cand, ref[, maxN])") {
+      case Seq(cand, ref) => ChrFStats.chrfStats(c(cand), c(ref))
+      case Seq(cand, ref, n) => ChrFStats.chrfStats(c(cand), c(ref), intArg(n, "maxN"))
+    },
+    fn("token_gram_stats", classOf[TokenGramStats],
+        "token_gram_stats(cand_tokens, ref_tokens[, maxN])") {
+      case Seq(cand, ref) => TokenGramStats.tokenGramStats(c(cand), c(ref))
+      case Seq(cand, ref, n) =>
+        TokenGramStats.tokenGramStats(c(cand), c(ref), intArg(n, "maxN"))
+    },
+    // own constructor: SQL passes the persisted `BloomFilter` BYTES as
+    // a binary literal, where the wrapper takes a `BloomFilter` object
+    fn("bloom_might_contain", classOf[BloomMightContain],
+        "bloom_might_contain(key, filterBytesLiteral)") {
+      case Seq(key, filter) => c(BloomMightContain(
+        Shims.toCatalyst(c(key).cast("long")), binaryArg(filter, "filter")))
+    },
+    fn("kll_sketch", classOf[KllSketchAgg], "kll_sketch(value[, k])") {
+      case Seq(v) => KllQuantileSketch.kllSketch(c(v))
+      case Seq(v, k) => KllQuantileSketch.kllSketch(c(v), intArg(k, "k"))
+    },
+    fn("kll_merge", classOf[KllMergeAgg], "kll_merge(sketch[, k])") {
+      case Seq(s) => KllQuantileSketch.kllMerge(c(s))
+      case Seq(s, k) => KllQuantileSketch.kllMerge(c(s), intArg(k, "k"))
+    },
+    // own constructor: SQL accepts a column-valued rank, where the
+    // wrapper takes a Double
+    fn("kll_quantile", classOf[KllQuantile], "kll_quantile(sketch, rank)") {
+      case Seq(s, r) => c(KllQuantile(s, Shims.toCatalyst(c(r).cast("double"))))
+    },
+    fn("kll_count", classOf[KllCount], "kll_count(sketch)") {
+      case Seq(s) => KllQuantileSketch.kllCount(c(s))
+    },
+    fn("freq_sketch", classOf[FreqSketchAgg], "freq_sketch(item[, maxMapSize])") {
+      case Seq(v) => FreqItemsSketch.freqSketch(c(v))
+      case Seq(v, m) => FreqItemsSketch.freqSketch(c(v), intArg(m, "maxMapSize"))
+    },
+    fn("freq_merge", classOf[FreqMergeAgg], "freq_merge(sketch[, maxMapSize])") {
+      case Seq(s) => FreqItemsSketch.freqMerge(c(s))
+      case Seq(s, m) => FreqItemsSketch.freqMerge(c(s), intArg(m, "maxMapSize"))
+    },
+    fn("freq_top_items", classOf[FreqTopItems], "freq_top_items(sketch, maxItems)") {
+      case Seq(s, n) => FreqItemsSketch.freqTopItems(c(s), intArg(n, "maxItems"))
+    },
+    fn("freq_estimate", classOf[FreqEstimate], "freq_estimate(sketch, item)") {
+      case Seq(s, item) => FreqItemsSketch.freqEstimate(c(s), c(item))
+    },
+    fn("freq_bounds", classOf[FreqBounds], "freq_bounds(sketch, item)") {
+      case Seq(s, item) => FreqItemsSketch.freqBounds(c(s), c(item))
+    },
+    fn("theta_sketch", classOf[ThetaSketchAgg], "theta_sketch(item[, lgK])") {
+      case Seq(v) => ThetaSketch.thetaSketch(c(v))
+      case Seq(v, k) => ThetaSketch.thetaSketch(c(v), intArg(k, "lgK"))
+    },
+    fn("theta_union", classOf[ThetaUnionAgg], "theta_union(sketch[, lgK])") {
+      case Seq(s) => ThetaSketch.thetaUnion(c(s))
+      case Seq(s, k) => ThetaSketch.thetaUnion(c(s), intArg(k, "lgK"))
+    },
+    fn("theta_estimate", classOf[ThetaEstimate], "theta_estimate(sketch)") {
+      case Seq(s) => ThetaSketch.thetaEstimate(c(s))
+    },
+    fn("theta_intersect_estimate", classOf[ThetaIntersectEstimate],
+        "theta_intersect_estimate(a, b)") {
+      case Seq(a, b) => ThetaSketch.thetaIntersectEstimate(c(a), c(b))
+    },
+    fn("theta_diff_estimate", classOf[ThetaDiffEstimate], "theta_diff_estimate(a, b)") {
+      case Seq(a, b) => ThetaSketch.thetaDiffEstimate(c(a), c(b))
+    })
 
   def registerAll(spark: SparkSession): Unit =
     all.foreach { case (name, info, builder) =>

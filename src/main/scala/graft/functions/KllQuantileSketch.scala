@@ -5,13 +5,28 @@ import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.graftshim.Shims
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
+
+/** KLL's byte format: a heap sketch of `k` starts each group, and a
+  * heap copy is rebuilt by merging the wrapped bytes into a fresh one.
+  */
+private[functions] final case class KllCodec(k: Int) extends SketchCodec[KllDoublesSketch] {
+  def empty: KllDoublesSketch = KllDoublesSketch.newHeapInstance(k)
+  def toBytes(s: KllDoublesSketch): Array[Byte] = s.toByteArray
+  def fromBytes(bytes: Array[Byte]): KllDoublesSketch = {
+    val s = empty
+    s.merge(KllCodec.wrap(bytes))
+    s
+  }
+  def merge(into: KllDoublesSketch, other: KllDoublesSketch): Unit = into.merge(other)
+}
+
+private[functions] object KllCodec {
+  def wrap(bytes: Array[Byte]): KllDoublesSketch = KllDoublesSketch.wrap(Memory.wrap(bytes))
+}
 
 /** Mergeable KLL quantile sketches (Karnin-Lang-Liberty, FOCS'16;
   * Apache DataSketches' `KllDoublesSketch`, already on every Spark
@@ -23,11 +38,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   * ~1.65%/~0.8% at k=200/400 with high probability; a sketch holding
   * fewer than k values is EXACT.
   *
-  * `TypedImperativeAggregate` (the engine's own `hll_sketch_agg`
-  * shape): the sketch object IS the aggregation buffer, partial
-  * results move as the sketch's compact byte form, and merge is the
-  * library's own — associative and commutative, so shard arrival
-  * order never changes the estimate class. Compaction uses the
+  * The aggregation protocol is [[SketchAgg]]'s. Compaction uses the
   * library's internal coin flips, so sketch BYTES are not run-stable
   * above k values (estimates stay within the published bounds);
   * exactness-tier tests pin n ≤ k, bound-tier tests assert the
@@ -38,34 +49,13 @@ case class KllSketchAgg(
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
+  extends SketchAgg[KllDoublesSketch] {
 
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
+  @transient override protected lazy val codec: KllCodec = KllCodec(k)
 
-  override def update(buffer: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.asInstanceOf[Double])
-    buffer
-  }
+  override protected def absorb(buffer: KllDoublesSketch, value: Any): Unit =
+    buffer.update(value.asInstanceOf[Double])
 
-  override def merge(buffer: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: KllDoublesSketch): Any = buffer.toByteArray
-
-  override def serialize(buffer: KllDoublesSketch): Array[Byte] = buffer.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch = {
-    val s = KllDoublesSketch.newHeapInstance(k)
-    s.merge(KllDoublesSketch.wrap(Memory.wrap(bytes)))
-    s
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "kll_sketch_agg"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KllSketchAgg =
@@ -77,43 +67,20 @@ case class KllSketchAgg(
 }
 
 /** Union of persisted KLL sketch BYTES (binary column) into one
-  * sketch — the shard-merge aggregate. Null inputs (groups that never
-  * built a sketch) are skipped.
+  * sketch — the shard-merge aggregate.
   */
 case class KllMergeAgg(
     child: Expression,
     k: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] with UnaryLike[Expression] {
+  extends SketchAgg[KllDoublesSketch] {
 
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
+  @transient override protected lazy val codec: KllCodec = KllCodec(k)
 
-  override def update(buffer: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.merge(KllDoublesSketch.wrap(Memory.wrap(v.asInstanceOf[Array[Byte]])))
-    buffer
-  }
+  override protected def absorb(buffer: KllDoublesSketch, value: Any): Unit =
+    buffer.merge(KllCodec.wrap(value.asInstanceOf[Array[Byte]]))
 
-  override def merge(buffer: KllDoublesSketch, other: KllDoublesSketch): KllDoublesSketch = {
-    buffer.merge(other)
-    buffer
-  }
-
-  override def eval(buffer: KllDoublesSketch): Any = buffer.toByteArray
-
-  override def serialize(buffer: KllDoublesSketch): Array[Byte] = buffer.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): KllDoublesSketch = {
-    val s = KllDoublesSketch.newHeapInstance(k)
-    s.merge(KllDoublesSketch.wrap(Memory.wrap(bytes)))
-    s
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "kll_merge_agg"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KllMergeAgg =
@@ -137,7 +104,7 @@ case class KllQuantile(left: Expression, right: Expression)
   override def nullable: Boolean = true
 
   override def nullSafeEval(sketchBytes: Any, rank: Any): Any = {
-    val s = KllDoublesSketch.wrap(Memory.wrap(sketchBytes.asInstanceOf[Array[Byte]]))
+    val s = KllCodec.wrap(sketchBytes.asInstanceOf[Array[Byte]])
     if (s.isEmpty) null
     else s.getQuantile(rank.asInstanceOf[Double], QuantileSearchCriteria.INCLUSIVE)
   }
@@ -156,7 +123,7 @@ case class KllCount(child: Expression)
   override def prettyName: String = "kll_count"
 
   override def nullSafeEval(sketchBytes: Any): Any =
-    KllDoublesSketch.wrap(Memory.wrap(sketchBytes.asInstanceOf[Array[Byte]])).getN
+    KllCodec.wrap(sketchBytes.asInstanceOf[Array[Byte]]).getN
 
   override protected def withNewChildInternal(newChild: Expression): KllCount =
     copy(child = newChild)

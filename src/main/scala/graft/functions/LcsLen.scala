@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.Shims
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Longest-common-subsequence length of two TOKEN arrays (custom
@@ -32,19 +32,8 @@ case class LcsLen(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
   override def prettyName: String = "lcs_len"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"lcs_len expects two array<string> arguments, got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
+  // No ExpectsInputTypes (private[sql] in Spark 4); construction goes
+  // through the wrapper below, which casts both sides to array<string>.
 
   override def eval(input: InternalRow): Any = {
     def toks(e: Expression): Array[UTF8String] = e.eval(input) match {
@@ -92,5 +81,7 @@ case class LcsLen(left: Expression, right: Expression)
 object LcsLen {
   /** Column wrapper: LCS length of two array<string> columns. */
   def lcsLen(cand: Column, ref: Column): Column =
-    Shims.toColumn(LcsLen(Shims.toExpression(cand), Shims.toExpression(ref)))
+    Shims.toColumn(LcsLen(
+      Shims.toExpression(cand.cast("array<string>")),
+      Shims.toExpression(ref.cast("array<string>"))))
 }

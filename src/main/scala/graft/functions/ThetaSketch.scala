@@ -1,16 +1,32 @@
 package graft.functions
 
 import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{SetOperation, Sketches, Union}
+import org.apache.datasketches.theta.{SetOperation, Sketch, Sketches, Union}
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftshim.Shims
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
+
+/** The theta byte format: the aggregation buffer is a `Union` of
+  * nominal size 2^lgK, persisted as its compact result; a decoded
+  * buffer is a fresh union over the wrapped compact sketch.
+  */
+private[functions] final case class ThetaCodec(lgK: Int) extends SketchCodec[Union] {
+  def empty: Union = SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
+  def toBytes(u: Union): Array[Byte] = u.getResult.toByteArray
+  def fromBytes(bytes: Array[Byte]): Union = {
+    val u = empty
+    u.union(ThetaCodec.wrap(bytes))
+    u
+  }
+  def merge(into: Union, other: Union): Unit = into.union(other.getResult)
+}
+
+private[functions] object ThetaCodec {
+  def wrap(bytes: Array[Byte]): Sketch = Sketches.wrapSketch(Memory.wrap(bytes))
+}
 
 /** Mergeable THETA sketches (DataSketches) — the SET-OPERATION member
   * of the sketch family: where HLL (C35) answers only "how many
@@ -37,35 +53,13 @@ case class ThetaSketchAgg(
     lgK: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
+  extends SketchAgg[Union] {
 
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
+  @transient override protected lazy val codec: ThetaCodec = ThetaCodec(lgK)
 
-  override def update(buffer: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.toString)
-    buffer
-  }
+  override protected def absorb(buffer: Union, value: Any): Unit =
+    buffer.update(value.toString)
 
-  override def merge(buffer: Union, other: Union): Union = {
-    buffer.union(other.getResult)
-    buffer
-  }
-
-  override def eval(buffer: Union): Any = buffer.getResult.toByteArray
-
-  override def serialize(buffer: Union): Array[Byte] =
-    buffer.getResult.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-    u.union(Sketches.wrapSketch(Memory.wrap(bytes)))
-    u
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "theta_sketch_agg"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
@@ -77,43 +71,20 @@ case class ThetaSketchAgg(
 }
 
 /** Union of persisted theta-sketch BYTES — the shard-merge aggregate
-  * ([[KllMergeAgg]]'s shape). Null inputs skipped.
+  * ([[KllMergeAgg]]'s shape).
   */
 case class ThetaUnionAgg(
     child: Expression,
     lgK: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] with UnaryLike[Expression] {
+  extends SketchAgg[Union] {
 
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
+  @transient override protected lazy val codec: ThetaCodec = ThetaCodec(lgK)
 
-  override def update(buffer: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null)
-      buffer.union(Sketches.wrapSketch(Memory.wrap(v.asInstanceOf[Array[Byte]])))
-    buffer
-  }
+  override protected def absorb(buffer: Union, value: Any): Unit =
+    buffer.union(ThetaCodec.wrap(value.asInstanceOf[Array[Byte]]))
 
-  override def merge(buffer: Union, other: Union): Union = {
-    buffer.union(other.getResult)
-    buffer
-  }
-
-  override def eval(buffer: Union): Any = buffer.getResult.toByteArray
-
-  override def serialize(buffer: Union): Array[Byte] =
-    buffer.getResult.toByteArray
-
-  override def deserialize(bytes: Array[Byte]): Union = {
-    val u = SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-    u.union(Sketches.wrapSketch(Memory.wrap(bytes)))
-    u
-  }
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "theta_union_agg"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): ThetaUnionAgg =
@@ -131,7 +102,7 @@ case class ThetaEstimate(child: Expression)
   override def prettyName: String = "theta_estimate"
 
   override def nullSafeEval(bytes: Any): Any =
-    Sketches.wrapSketch(Memory.wrap(bytes.asInstanceOf[Array[Byte]])).getEstimate
+    ThetaCodec.wrap(bytes.asInstanceOf[Array[Byte]]).getEstimate
 
   override protected def withNewChildInternal(newChild: Expression): ThetaEstimate =
     copy(child = newChild)
@@ -147,8 +118,8 @@ case class ThetaIntersectEstimate(left: Expression, right: Expression)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val i = SetOperation.builder().buildIntersection()
-    i.intersect(Sketches.wrapSketch(Memory.wrap(a.asInstanceOf[Array[Byte]])))
-    i.intersect(Sketches.wrapSketch(Memory.wrap(b.asInstanceOf[Array[Byte]])))
+    i.intersect(ThetaCodec.wrap(a.asInstanceOf[Array[Byte]]))
+    i.intersect(ThetaCodec.wrap(b.asInstanceOf[Array[Byte]]))
     i.getResult.getEstimate
   }
 
@@ -172,8 +143,8 @@ case class ThetaDiffEstimate(left: Expression, right: Expression)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val op = SetOperation.builder().buildANotB()
-    op.setA(Sketches.wrapSketch(Memory.wrap(a.asInstanceOf[Array[Byte]])))
-    op.notB(Sketches.wrapSketch(Memory.wrap(b.asInstanceOf[Array[Byte]])))
+    op.setA(ThetaCodec.wrap(a.asInstanceOf[Array[Byte]]))
+    op.notB(ThetaCodec.wrap(b.asInstanceOf[Array[Byte]]))
     op.getResult(true).getEstimate
   }
 

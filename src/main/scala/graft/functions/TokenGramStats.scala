@@ -18,9 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Same rationale as ChrFStats: candidate and reference live on the
   * SAME ROW, so the explode → hash-agg → full-outer-join pipeline
   * shuffles ~2·maxN rows per token for a computation that needs no
-  * shuffle. Each row sorts its own gram index arrays (comparing
+  * shuffle. Each row runs [[ClippedGrams]] over its tokens (comparing
   * UTF8String tokens in place, no per-gram concatenation or
-  * allocation) and merge-counts run lengths. Distinct token SEQUENCES
+  * allocation). Distinct token SEQUENCES
   * compare exactly (element count then element-wise bytes) — no
   * separator-collision risk, unlike joining tokens with a delimiter.
   *
@@ -52,61 +52,9 @@ case class TokenGramStats(left: Expression, right: Expression, maxN: Int)
     }
     val a = toks(left)
     val b = toks(right)
-    val out = new Array[Long](3 * maxN)
-    var n = 1
-    while (n <= maxN) {
-      val dc = math.max(a.length - n + 1, 0)
-      val dr = math.max(b.length - n + 1, 0)
-      val m = if (dc > 0 && dr > 0) clipped(a, sortedGrams(a, n), b, sortedGrams(b, n), n)
-              else 0L
-      out(3 * (n - 1)) = m
-      out(3 * (n - 1) + 1) = dc.toLong
-      out(3 * (n - 1) + 2) = dr.toLong
-      n += 1
-    }
-    ArrayData.toArrayData(out)
-  }
-
-  private def sortedGrams(tk: Array[UTF8String], n: Int): Array[Integer] = {
-    val k = tk.length - n + 1
-    val idx = new Array[Integer](k)
-    var i = 0
-    while (i < k) { idx(i) = Integer.valueOf(i); i += 1 }
-    java.util.Arrays.sort(idx, (x: Integer, y: Integer) => cmp(tk, x, tk, y, n))
-    idx
-  }
-
-  private def cmp(ta: Array[UTF8String], ia: Int,
-      tb: Array[UTF8String], ib: Int, n: Int): Int = {
-    var t = 0
-    while (t < n) {
-      val d = ta(ia + t).compareTo(tb(ib + t))
-      if (d != 0) return d
-      t += 1
-    }
-    0
-  }
-
-  private def clipped(ta: Array[UTF8String], ia: Array[Integer],
-      tb: Array[UTF8String], ib: Array[Integer], n: Int): Long = {
-    var i = 0
-    var j = 0
-    var m = 0L
-    while (i < ia.length && j < ib.length) {
-      val d = cmp(ta, ia(i), tb, ib(j), n)
-      if (d < 0) i += 1
-      else if (d > 0) j += 1
-      else {
-        var ri = i + 1
-        while (ri < ia.length && cmp(ta, ia(ri), ta, ia(i), n) == 0) ri += 1
-        var rj = j + 1
-        while (rj < ib.length && cmp(tb, ib(rj), tb, ib(j), n) == 0) rj += 1
-        m += math.min(ri - i, rj - j).toLong
-        i = ri
-        j = rj
-      }
-    }
-    m
+    val tk = Array.concat(a, b)
+    ArrayData.toArrayData(ClippedGrams.stats(a.length, b.length, maxN,
+      (x: Int, y: Int) => tk(x).compareTo(tk(y))))
   }
 
   override protected def withNewChildrenInternal(
@@ -116,7 +64,7 @@ case class TokenGramStats(left: Expression, right: Expression, maxN: Int)
 
 object TokenGramStats {
   /** Column wrapper: word n-gram stats of two array<string> columns. */
-  def tokenGramStats(cand: Column, ref: Column, maxN: Int): Column =
+  def tokenGramStats(cand: Column, ref: Column, maxN: Int = 4): Column =
     Shims.toColumn(TokenGramStats(
       Shims.toExpression(cand.cast("array<string>")),
       Shims.toExpression(ref.cast("array<string>")), maxN))

@@ -24,13 +24,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * with zero allocation — the String round-trip is paid only by rows
   * that actually need rewriting.
   *
-  * `form` is validated at construction (Column wrapper and SQL builder
-  * both), so analysis rejects bad forms instead of failing per-row.
+  * `form` is validated by the Column wrapper (the SQL name builds
+  * through it), so analysis rejects bad forms instead of failing
+  * per-row.
   */
 case class UnicodeNormalize(child: Expression, form: String)
     extends UnaryExpression {
   // No ExpectsInputTypes (private[sql] in Spark 4); construction goes
-  // through the typed wrapper / SQL builder, which cast to string.
+  // through the typed wrapper, which casts to string.
   @transient private lazy val normForm = Normalizer.Form.valueOf(form)
 
   override def dataType: DataType = StringType
@@ -63,10 +64,13 @@ case class UnicodeNormalize(child: Expression, form: String)
 object UnicodeNormalize {
   val forms: Set[String] = Set("NFC", "NFD", "NFKC", "NFKD")
 
-  /** Column wrapper: normalize a string column to the given form. */
+  /** Column wrapper: normalize a string column to the given form
+    * (case-insensitive: "nfc" is NFC).
+    */
   def normalize(text: Column, form: String = "NFC"): Column = {
-    require(forms(form), s"form must be one of $forms, got $form")
-    Shims.toColumn(UnicodeNormalize(Shims.toExpression(text.cast("string")), form))
+    val f = form.toUpperCase(java.util.Locale.ROOT)
+    require(forms(f), s"unicode_normalize form must be one of $forms, got $f")
+    Shims.toColumn(UnicodeNormalize(Shims.toExpression(text.cast("string")), f))
   }
 
   def nfc(text: Column): Column = normalize(text, "NFC")

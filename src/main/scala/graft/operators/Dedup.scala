@@ -828,19 +828,33 @@ object Dedup {
       text: Column,
       n: Int = 5,
       dfCap: Int = 20,
-      threshold: Double = 0.5): DataFrame = {
+      threshold: Double = 0.5): DataFrame =
+    jaccardAbove(cappedOverlap(df, id, text, n, dfCap), threshold)
+
+  /** (id, sh) postings: each document's distinct word `n`-gram shingles,
+    * keyed by xxhash64 right after the explode — every downstream
+    * shuffle/sort/join then works on 8-byte longs instead of multi-word
+    * strings (measured 2× on the whole query; 64-bit collisions are
+    * ~1e-8 at web scale and only perturb one count). Input (id, __text).
+    */
+  private def hashedShingles(projected: DataFrame, n: Int): DataFrame =
+    scaleOut(projected)
+      .select(col("id"), explode(array_distinct(shingles(tokens(col("__text")), n))).as("__s"))
+      .select(col("id"), xxhash64(col("__s")).as("sh"))
+
+  /** The df-capped shingle overlap under [[ngramJaccard]] and
+    * [[ngramContainment]]: per candidate pair (id_a < id_b sharing a
+    * shingle held by 2..`dfCap` documents) the shared-shingle count
+    * n_inter and both full distinct-shingle set sizes n_a, n_b.
+    */
+  private def cappedOverlap(df: DataFrame, id: Column, text: Column, n: Int,
+      dfCap: Int): DataFrame = {
     // One repartition by shingle materializes the tokenize+shingle
     // work behind a shuffle: the inverted-index groupBy, the semi-join,
     // and the per-doc size count all read the SAME exchange
     // (ReusedExchange) instead of re-running the interpreted HOF scan
     // 3×. At 100 TB that is one pass over the corpus, not three.
-    // Shingles are keyed by xxhash64 right after the explode: every
-    // downstream shuffle/sort/join then works on 8-byte longs instead
-    // of multi-word strings (measured 2× on the whole query; 64-bit
-    // collisions are ~1e-8 at web scale and only perturb one count).
-    val sh = scaleOut(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), explode(array_distinct(shingles(tokens(col("__text")), n))).as("__s"))
-      .select(col("id"), xxhash64(col("__s")).as("sh"))
+    val sh = hashedShingles(df.select(id.as("id"), text.as("__text")), n)
       .repartition(col("sh"))
     // df-cap via a count window over the shingle partitioning the
     // exchange already provides: ONE pass tags each posting with its
@@ -853,16 +867,25 @@ object Dedup {
       .join(indexed.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_inter"))
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
+    withSizes(inter, sh.groupBy("id").agg(count(lit(1)).as("n_sh")))
+  }
+
+  /** Pair counts (id_a, id_b, n_inter) joined to both sides' set sizes. */
+  private def withSizes(inter: DataFrame, sizes: DataFrame): DataFrame =
     inter
       .join(sizes.select(col("id").as("id_a"), col("n_sh").as("n_a")), "id_a")
       .join(sizes.select(col("id").as("id_b"), col("n_sh").as("n_b")), "id_b")
+
+  /** Jaccard |∩| / (|A| + |B| − |∩|) of each scored pair, kept at or
+    * above `threshold`: (id_a, id_b, jaccard).
+    */
+  private def jaccardAbove(scored: DataFrame, threshold: Double): DataFrame =
+    scored
       .withColumn("jaccard",
         round(col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")), 4))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
 
   /** DIRECTIONAL n-gram containment pairs (asymmetric Jaccard) — the
     * quote detector symmetric similarity can't be: a 300-word article
@@ -890,21 +913,7 @@ object Dedup {
       n: Int = 5,
       dfCap: Int = 20,
       threshold: Double = 0.8): DataFrame = {
-    val sh = scaleOut(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), explode(array_distinct(shingles(tokens(col("__text")), n))).as("__s"))
-      .select(col("id"), xxhash64(col("__s")).as("sh"))
-      .repartition(col("sh"))
-    val wSh = org.apache.spark.sql.expressions.Window.partitionBy("sh")
-    val indexed = sh.withColumn("__df", count(lit(1)).over(wSh))
-      .filter(col("__df") >= 2 && col("__df") <= dfCap).drop("__df")
-    val inter = indexed.as("a")
-      .join(indexed.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val scored = inter
-      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("n_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("n_b")), "id_b")
+    val scored = cappedOverlap(df, id, text, n, dfCap)
     val ab = scored.select(
       col("id_a").as("id_inner"), col("id_b").as("id_outer"),
       col("n_a").as("n_inner"), col("n_b").as("n_outer"),
@@ -957,9 +966,7 @@ object Dedup {
     val projected = df.select(id.as("id"), text.as("__text"))
     requireIntegralId(projected.schema("id").dataType,
       "prefixFilterJaccard", "map ids through a long surrogate first")
-    val base = scaleOut(projected.select(col("id").cast("long").as("id"), col("__text")))
-      .select(col("id"), explode(array_distinct(shingles(tokens(col("__text")), n))).as("__s"))
-      .select(col("id"), xxhash64(col("__s")).as("sh"))
+    val base = hashedShingles(projected.select(col("id").cast("long").as("id"), col("__text")), n)
       .localCheckpoint()
     val sizes = base.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val dfreq = base.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -985,14 +992,7 @@ object Dedup {
       .join(base.select(col("id").as("id_a"), col("sh")).hint("shuffle_hash"), "id_a")
       .join(base.select(col("id").as("id_b"), col("sh")).hint("shuffle_hash"), Seq("id_b", "sh"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("n_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("n_b")), "id_b")
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    jaccardAbove(withSizes(inter, sizes), threshold)
   }
 
   /** Winnowing near-copy pairs: documents sharing at least `minShared`

@@ -399,8 +399,7 @@ object Profile {
       group: Column,
       value: Column,
       lgConfigK: Int = 12): DataFrame =
-    df.groupBy(group.as("grp"))
-      .agg(hll_sketch_agg(value, lit(lgConfigK)).as("sketch"))
+    sketchTable(df, group, hll_sketch_agg(value, lit(lgConfigK)))
 
   /** Union persisted HLL sketches (one or many per group) into a
     * distinct-count estimate per group. Sketch union is associative
@@ -425,8 +424,7 @@ object Profile {
       group: Column,
       value: Column,
       k: Int = 200): DataFrame =
-    df.groupBy(group.as("grp"))
-      .agg(graft.functions.KllQuantileSketch.kllSketch(value, k).as("sketch"))
+    sketchTable(df, group, graft.functions.KllQuantileSketch.kllSketch(value, k))
 
   /** Union persisted KLL sketches per group and read off quantile
     * estimates (plus the exact absorbed count n carried in the sketch
@@ -452,11 +450,17 @@ object Profile {
     * sketch form (for persistence); [[quantileMerge]] is the
     * estimate-reading tier above it.
     */
-  def quantileSketchUnion(sketches: Seq[DataFrame], k: Int = 200): DataFrame = {
+  def quantileSketchUnion(sketches: Seq[DataFrame], k: Int = 200): DataFrame =
+    sketchUnion(sketches, graft.functions.KllQuantileSketch.kllMerge(col("sketch"), k))
+
+  /** One (grp, sketch) frame: `build` aggregated per `group`. */
+  private def sketchTable(df: DataFrame, group: Column, build: Column): DataFrame =
+    df.groupBy(group.as("grp")).agg(build.as("sketch"))
+
+  /** Sketch FRAMES unioned per grp through the family's merge aggregate. */
+  private def sketchUnion(sketches: Seq[DataFrame], merge: Column): DataFrame = {
     require(sketches.nonEmpty, "at least one sketch frame")
-    sketches.reduce(_ unionByName _)
-      .groupBy("grp")
-      .agg(graft.functions.KllQuantileSketch.kllMerge(col("sketch"), k).as("sketch"))
+    sketches.reduce(_ unionByName _).groupBy("grp").agg(merge.as("sketch"))
   }
 
   /** Per-group frequent-items sketches ([[graft.functions.FreqItemsSketch]]
@@ -468,22 +472,15 @@ object Profile {
       group: Column,
       item: Column,
       maxMapSize: Int = 1024): DataFrame =
-    df.groupBy(group.as("grp"))
-      .agg(graft.functions.FreqItemsSketch.freqSketch(item, maxMapSize)
-        .as("sketch"))
+    sketchTable(df, group, graft.functions.FreqItemsSketch.freqSketch(item, maxMapSize))
 
   /** Union per-group frequent-items sketch FRAMES into one sketch
     * frame (grp, sketch) — [[quantileSketchUnion]]'s shape for the
     * top-k sketch; [[freqTop]] is the reading tier above it.
     */
   def freqSketchUnion(
-      sketches: Seq[DataFrame], maxMapSize: Int = 1024): DataFrame = {
-    require(sketches.nonEmpty, "at least one sketch frame")
-    sketches.reduce(_ unionByName _)
-      .groupBy("grp")
-      .agg(graft.functions.FreqItemsSketch.freqMerge(col("sketch"), maxMapSize)
-        .as("sketch"))
-  }
+      sketches: Seq[DataFrame], maxMapSize: Int = 1024): DataFrame =
+    sketchUnion(sketches, graft.functions.FreqItemsSketch.freqMerge(col("sketch"), maxMapSize))
 
   /** Per-group THETA sketches ([[graft.functions.ThetaSketch]] — the
     * SET-OPERATION member of the sketch family): one partial-agg pass
@@ -496,20 +493,14 @@ object Profile {
       group: Column,
       item: Column,
       lgK: Int = 12): DataFrame =
-    df.groupBy(group.as("grp"))
-      .agg(graft.functions.ThetaSketch.thetaSketch(item, lgK).as("sketch"))
+    sketchTable(df, group, graft.functions.ThetaSketch.thetaSketch(item, lgK))
 
   /** Union per-group theta sketch FRAMES into one sketch frame
     * (grp, sketch) — [[freqSketchUnion]]'s shape for the theta
     * family.
     */
-  def thetaSketchUnion(sketches: Seq[DataFrame], lgK: Int = 12): DataFrame = {
-    require(sketches.nonEmpty, "at least one sketch frame")
-    sketches.reduce(_ unionByName _)
-      .groupBy("grp")
-      .agg(graft.functions.ThetaSketch.thetaUnion(col("sketch"), lgK)
-        .as("sketch"))
-  }
+  def thetaSketchUnion(sketches: Seq[DataFrame], lgK: Int = 12): DataFrame =
+    sketchUnion(sketches, graft.functions.ThetaSketch.thetaUnion(col("sketch"), lgK))
 
   /** Read the top heavy hitters per group off a sketch frame, LONG
     * format: (grp, rank, item, estimate, lower_bound, upper_bound).

@@ -50,6 +50,29 @@ object SnapshotStore {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
   }
 
+  /** Numbers of the `v<N>` directories under `rootP`, audited or not. */
+  private def versionDirs(hfs: org.apache.hadoop.fs.FileSystem, rootP: Path): Seq[Long] =
+    if (!hfs.exists(rootP)) Seq.empty
+    else hfs.listStatus(rootP).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
+      .map(_.getPath.getName.drop(1).toLong)
+
+  private def audited(hfs: org.apache.hadoop.fs.FileSystem, rootP: Path, v: Long): Boolean =
+    hfs.exists(new Path(rootP, s"v$v/_SUCCESS"))
+
+  /** Post-landing GC of [[publish]] and [[commit]]: keep `version` and
+    * its newest `keepLast` audited predecessors, and delete every other
+    * version directory — older versions and crashed writes' unaudited
+    * orphans — that `spare` does not hold back.
+    */
+  private def retain(hfs: org.apache.hadoop.fs.FileSystem, rootP: Path, version: Long,
+      keepLast: Int, spare: Long => Boolean = _ => false): Unit = {
+    val others = versionDirs(hfs, rootP).filter(_ != version)
+    val keep = others.filter(audited(hfs, rootP, _)).sorted.takeRight(keepLast).toSet
+    others.filterNot(v => keep(v) || spare(v)).foreach(v =>
+      hfs.delete(new Path(rootP, s"v$v"), true))
+  }
+
   /** Replace small file `p` with `text` via `tmp` + rename: readers see
     * the old content, or for the rename instant none, never a partial
     * write. False when the rename fails.
@@ -89,15 +112,8 @@ object SnapshotStore {
           .map(_.getName.drop(1).toLong)
       else None
     val fromLog = committedVersions(spark, root).maxOption
-    (fromPointer ++ fromLog).maxOption
+    (fromPointer ++ fromLog).maxOption.orElse(versions(spark, root).lastOption)
       .map(v => new Path(rootP, s"v$v").toString)
-      .orElse {
-        val audited = hfs.listStatus(rootP).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-          .filter(s => hfs.exists(new Path(s.getPath, "_SUCCESS")))
-          .sortBy(s => s.getPath.getName.drop(1).toLong)
-        audited.lastOption.map(_.getPath.toString)
-      }
   }
 
   /** Versions with a commit-log entry AND an audited directory —
@@ -127,12 +143,7 @@ object SnapshotStore {
   def versions(spark: SparkSession, root: String): Seq[Long] = {
     val hfs = fs(spark, root)
     val rootP = new Path(root)
-    if (!hfs.exists(rootP)) return Seq.empty
-    hfs.listStatus(rootP).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-      .map(_.getPath.getName.drop(1).toLong)
-      .filter(v => hfs.exists(new Path(rootP, s"v$v/_SUCCESS")))
-      .sorted
+    versionDirs(hfs, rootP).filter(audited(hfs, rootP, _)).sorted
   }
 
   /** The replay fence for a `foreachBatch` sink that keeps its state
@@ -149,35 +160,44 @@ object SnapshotStore {
     * second covers a replay of batch N after N + 1 has landed, as when
     * a checkpoint is restored from a copy one batch old.
     *
-    * Version numbers are batch ids, so they mean something only to the
-    * streaming query that wrote them. A query started on a FRESH
-    * checkpoint restarts its batch ids at 0; fenced below 0 it would
-    * bootstrap empty and publish over the live state. So the first
-    * fenced read in a query stamps that query's id — stable across
-    * restarts of one checkpoint — into `root/_QUERY`, and a query with
-    * another id fails here, before it writes, on a root that holds
-    * versions. Reads outside a streaming query are not checked, and a
-    * root without a stamp (written before stamps existed, or only by
-    * [[publish]] callers outside a stream) is claimed by the first query
-    * that reads it.
+    * Version numbers are batch ids, so [[claim]] keeps a query on a
+    * fresh checkpoint from reading (and then overwriting) a root whose
+    * versions another query numbered.
     */
   private[graft] def readBefore(spark: SparkSession, root: String,
       batchId: Long): Option[DataFrame] = {
+    claim(spark, root, versions(spark, root).nonEmpty)
+    versions(spark, root).filter(_ < batchId).lastOption
+      .flatMap(readVersion(spark, root, _))
+  }
+
+  /** Numbers in a sink root (snapshot versions, log batch ids) are batch
+    * ids, so they mean something only to the streaming query that wrote
+    * them. A query started on a FRESH checkpoint restarts its batch ids
+    * at 0: a snapshot fenced below 0 would bootstrap empty and publish
+    * over the live state, and a log would show batch 0 none of the old
+    * rows and overwrite the old `batch_id=0`. So the first fenced read or
+    * log write in a query stamps that query's id — stable across restarts
+    * of one checkpoint — into `root/_QUERY`, and a query with another id
+    * fails here, before it writes, on a root that `holdsState`. Calls
+    * outside a streaming query are not checked, and a root without a
+    * stamp (written before stamps existed, or only outside a stream) is
+    * claimed by the first query that reaches it.
+    */
+  private[streaming] def claim(spark: SparkSession, root: String,
+      holdsState: => Boolean): Unit =
     Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")).foreach { id =>
       val hfs = fs(spark, root)
       val stamp = new Path(new Path(root), Owner)
       val owner = if (hfs.exists(stamp)) Some(readText(hfs, stamp)) else None
-      require(owner.forall(_ == id) || versions(spark, root).isEmpty,
-        s"snapshot root $root holds versions numbered by streaming query " +
+      require(owner.forall(_ == id) || !holdsState,
+        s"sink root $root holds state numbered by streaming query " +
         s"${owner.get}, not by this query ($id): a fresh checkpoint restarts " +
         "the batch ids, so restore that query's checkpoint or give this one a new root")
       if (!owner.contains(id))
         require(swapText(hfs, stamp, new Path(new Path(root), s"$Owner.tmp-$id"), id),
           s"could not stamp $root for query $id")
     }
-    versions(spark, root).filter(_ < batchId).lastOption
-      .flatMap(readVersion(spark, root, _))
-  }
 
   /** Retention of a sink that reads through [[readBefore]]. */
   private[graft] val ReplayKeep = 2
@@ -212,17 +232,7 @@ object SnapshotStore {
       s"snapshot audit failed: no _SUCCESS marker in $versionDir")
     require(swapText(hfs, new Path(rootP, Pointer), new Path(rootP, s"$Pointer.tmp$version"),
       s"v$version"), s"pointer publish failed for $versionDir")
-    // GC: keep the newly published version and its newest `keepLast`
-    // AUDITED predecessors; everything else — older versions and
-    // crashed writes' unaudited orphans — goes
-    val others = hfs.listStatus(rootP).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-      .map(s => s.getPath.getName.drop(1).toLong)
-      .filter(_ != version)
-    val keep = others.filter(v =>
-      hfs.exists(new Path(rootP, s"v$v/_SUCCESS"))).sorted.takeRight(keepLast).toSet
-    others.filterNot(keep.contains).foreach(v =>
-      hfs.delete(new Path(rootP, s"v$v"), true))
+    retain(hfs, rootP, version, keepLast)
   }
 
   /** Create-exclusive: the CAS under [[commit]]. Local filesystems go
@@ -329,29 +339,21 @@ object SnapshotStore {
       swapText(hfs, new Path(rootP, Pointer), new Path(rootP, s"$Pointer.tmp$landed-$stagingId"),
         s"v$landed")
     // GC: retention over audited predecessors (publish's policy), plus
-    // abandoned staging from crashed committers
-    val others = hfs.listStatus(rootP).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
-      .map(s => s.getPath.getName.drop(1).toLong)
-      .filter(_ != landed)
-    val keep = others.filter(v =>
-      hfs.exists(new Path(rootP, s"v$v/_SUCCESS"))).sorted.takeRight(keepLast).toSet
-    // in-flight guard: a v<N> with a live commit-log entry but no
-    // _SUCCESS yet is a CONCURRENT committer mid-landing on a store
-    // where rename is a non-atomic copy — sweeping it would destroy a
-    // commit whose log claim already exists. Treat it as in-flight
-    // until the staleStagingMs age cutoff (the same abandonment clock
-    // staging dirs get); past that it's a crashed landing and GC-able.
+    // abandoned staging from crashed committers. In-flight guard: a
+    // v<N> with a live commit-log entry but no _SUCCESS yet is a
+    // CONCURRENT committer mid-landing on a store where rename is a
+    // non-atomic copy — sweeping it would destroy a commit whose log
+    // claim already exists. Treat it as in-flight until the
+    // staleStagingMs age cutoff (the same abandonment clock staging
+    // dirs get); past that it's a crashed landing and GC-able.
     val gcCutoff = System.currentTimeMillis() - staleStagingMs
-    val inFlight = others.filterNot(keep.contains).filter { v =>
+    retain(hfs, rootP, landed, keepLast, spare = v => {
       val d = new Path(rootP, s"v$v")
-      !hfs.exists(new Path(d, "_SUCCESS")) &&
+      !audited(hfs, rootP, v) &&
         hfs.exists(new Path(logDir, v.toString)) &&
         (try hfs.getFileStatus(d).getModificationTime >= gcCutoff
          catch { case _: java.io.FileNotFoundException => false })
-    }.toSet
-    others.filterNot(v => keep.contains(v) || inFlight.contains(v)).foreach(v =>
-      hfs.delete(new Path(rootP, s"v$v"), true))
+    })
     val stagingRoot = new Path(rootP, Staging)
     if (hfs.exists(stagingRoot)) {
       val cutoff = System.currentTimeMillis() - staleStagingMs
@@ -390,18 +392,26 @@ private[graft] object BatchLog {
     */
   def readBefore(spark: SparkSession, root: String, batchId: Long,
       empty: StructType): DataFrame = {
-    val rootP = new Path(root)
-    val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasCommitted = hfs.exists(rootP) &&
-      hfs.globStatus(new Path(root, "batch_id=*/_SUCCESS")).nonEmpty
+    val hasCommitted = committed(spark, root)
+    SnapshotStore.claim(spark, root, hasCommitted)
     if (hasCommitted)
       spark.read.parquet(root).filter(col("batch_id") < batchId).drop("batch_id")
     else spark.createDataFrame(new java.util.ArrayList[Row](), empty)
   }
 
   /** Land `df` as batch `batchId` of the log, replacing a replay's
-    * earlier attempt.
+    * earlier attempt — never another query's batch of that number
+    * ([[SnapshotStore.claim]]).
     */
-  def write(df: DataFrame, root: String, batchId: Long): Unit =
+  def write(df: DataFrame, root: String, batchId: Long): Unit = {
+    SnapshotStore.claim(df.sparkSession, root, committed(df.sparkSession, root))
     df.write.mode("overwrite").parquet(s"$root/batch_id=$batchId")
+  }
+
+  /** Whether any batch directory has committed its `_SUCCESS` marker. */
+  private def committed(spark: SparkSession, root: String): Boolean = {
+    val rootP = new Path(root)
+    val hfs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    hfs.exists(rootP) && hfs.globStatus(new Path(root, "batch_id=*/_SUCCESS")).nonEmpty
+  }
 }

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Column ↔ Expression bridge for graft's custom Catalyst expressions.
   *
@@ -16,6 +16,13 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Shims {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A Column as the fully converted Catalyst tree the Dataset API
+    * hands the analyzer. [[toExpression]] leaves Column nodes nested in
+    * a wrapped expression (a `.cast` over an argument) to that later
+    * conversion, which a SQL function builder's result never gets.
+    */
+  def toCatalyst(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
   /** Wrap a custom LogicalPlan node as a DataFrame (the classic
     * `Dataset.ofRows` is `private[sql]` in Spark 4 — same bridging

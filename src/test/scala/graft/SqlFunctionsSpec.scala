@@ -254,4 +254,111 @@ class SqlFunctionsSpec extends SparkSpec {
       .select(lcsLen($"ca", $"cb")).as[Long].head()
     assert(n == 0L)
   }
+
+  test("every SQL name and arity builds exactly its Column wrapper's expression") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, Expression, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
+    import org.apache.spark.util.sketch.BloomFilter
+    import graft.functions._
+    val bloom = BloomFilter.create(100, 0.01)
+    bloom.putLong(7L)
+    val bloomBytes = { val o = new java.io.ByteArrayOutputStream(); bloom.writeTo(o); o.toByteArray }
+    val hex = bloomBytes.map(b => f"$b%02X").mkString
+    val df = Seq((7L, Seq("a", "b", "c"), "abc", 1.5, Seq(1.0), Seq(1L), Array[Byte](1)))
+      .toDF("id", "toks", "text", "v", "vec", "sig", "sk")
+    // (SQL call, the same call through the Column wrapper): both must
+    // analyze to one expression tree, or both must be rejected
+    val cases: Seq[(String, () => Column)] = Seq(
+      "simhash64(toks)" -> (() => SimHash64.simhash64($"toks")),
+      "simhash64(toks, 7)" -> (() => SimHash64.simhash64($"toks", 7L)),
+      "winnow_fingerprint(text)" -> (() => RollingHashWinnow.winnowFingerprint($"text")),
+      "winnow_fingerprint(text, 4, 8)" ->
+        (() => RollingHashWinnow.winnowFingerprint($"text", 4, 8)),
+      "dot_product(vec, vec)" -> (() => DotProduct.dotProduct($"vec", $"vec")),
+      "array_agree_count(sig, sig)" -> (() => ArrayAgreeCount.arrayAgreeCount($"sig", $"sig")),
+      "minhash_signature(toks)" -> (() => MinHashSignature.minhashSignature($"toks")),
+      "minhash_signature(toks, 16, 2)" ->
+        (() => MinHashSignature.minhashSignature($"toks", 16, 2)),
+      "minhash_signature(toks, 16, 2, 7)" ->
+        (() => MinHashSignature.minhashSignature($"toks", 16, 2, 7L)),
+      "unicode_normalize(text)" -> (() => UnicodeNormalize.normalize($"text")),
+      "unicode_normalize(text, 'nfkc')" -> (() => UnicodeNormalize.normalize($"text", "nfkc")),
+      "unicode_normalize(text, 'NFX')" -> (() => UnicodeNormalize.normalize($"text", "NFX")),
+      "deflate_len(text)" -> (() => DeflateLen.deflateLen($"text")),
+      "lcs_len(toks, toks)" -> (() => LcsLen.lcsLen($"toks", $"toks")),
+      "chrf_stats(text, text)" -> (() => ChrFStats.chrfStats($"text", $"text")),
+      "chrf_stats(text, text, 2)" -> (() => ChrFStats.chrfStats($"text", $"text", 2)),
+      "token_gram_stats(toks, toks)" -> (() => TokenGramStats.tokenGramStats($"toks", $"toks")),
+      "token_gram_stats(toks, toks, 2)" ->
+        (() => TokenGramStats.tokenGramStats($"toks", $"toks", 2)),
+      s"bloom_might_contain(id, X'$hex')" -> (() => BloomMightContain.mightContain($"id", bloom)),
+      "kll_sketch(v)" -> (() => KllQuantileSketch.kllSketch($"v")),
+      "kll_sketch(v, 400)" -> (() => KllQuantileSketch.kllSketch($"v", 400)),
+      "kll_merge(sk)" -> (() => KllQuantileSketch.kllMerge($"sk")),
+      "kll_merge(sk, 400)" -> (() => KllQuantileSketch.kllMerge($"sk", 400)),
+      "kll_quantile(sk, 0.5D)" -> (() => KllQuantileSketch.kllQuantile($"sk", 0.5)),
+      "kll_count(sk)" -> (() => KllQuantileSketch.kllCount($"sk")),
+      "freq_sketch(text)" -> (() => FreqItemsSketch.freqSketch($"text")),
+      "freq_sketch(text, 64)" -> (() => FreqItemsSketch.freqSketch($"text", 64)),
+      "freq_sketch(text, 100)" -> (() => FreqItemsSketch.freqSketch($"text", 100)),
+      "freq_merge(sk)" -> (() => FreqItemsSketch.freqMerge($"sk")),
+      "freq_merge(sk, 64)" -> (() => FreqItemsSketch.freqMerge($"sk", 64)),
+      "freq_merge(sk, 100)" -> (() => FreqItemsSketch.freqMerge($"sk", 100)),
+      "freq_top_items(sk, 3)" -> (() => FreqItemsSketch.freqTopItems($"sk", 3)),
+      "freq_estimate(sk, v)" -> (() => FreqItemsSketch.freqEstimate($"sk", $"v")),
+      "freq_bounds(sk, v)" -> (() => FreqItemsSketch.freqBounds($"sk", $"v")),
+      "theta_sketch(text)" -> (() => ThetaSketch.thetaSketch($"text")),
+      "theta_sketch(text, 10)" -> (() => ThetaSketch.thetaSketch($"text", 10)),
+      "theta_union(sk)" -> (() => ThetaSketch.thetaUnion($"sk")),
+      "theta_union(sk, 10)" -> (() => ThetaSketch.thetaUnion($"sk", 10)),
+      "theta_estimate(sk)" -> (() => ThetaSketch.thetaEstimate($"sk")),
+      "theta_intersect_estimate(sk, sk)" -> (() => ThetaSketch.thetaIntersectEstimate($"sk", $"sk")),
+      "theta_diff_estimate(sk, sk)" -> (() => ThetaSketch.thetaDiffEstimate($"sk", $"sk")))
+
+    def projected(plan: LogicalPlan): Expression = (plan match {
+      case p: Project => p.projectList.head
+      case a: Aggregate => a.aggregateExpressions.head
+    }) match { case Alias(e, _) => e }
+    // constant casts fold (kll_quantile's SQL rank is a column that
+    // happens to be a literal here), and equal filter bytes compare
+    // equal (a byte array field compares by reference)
+    val interned = scala.collection.mutable.Map.empty[Seq[Byte], Array[Byte]]
+    def norm(e: Expression): Expression = e.transform {
+      case c: Cast if c.foldable => Literal.create(c.eval(), c.dataType)
+      case b: BloomMightContain =>
+        b.copy(filterBytes = interned.getOrElseUpdate(b.filterBytes.toSeq, b.filterBytes))
+    }
+    def built(plan: => LogicalPlan) = scala.util.Try(norm(projected(plan)))
+    val mismatches = cases.flatMap { case (call, wrapper) =>
+      val viaSql = built(df.selectExpr(call).queryExecution.analyzed)
+      val viaCol = built(df.select(wrapper()).queryExecution.analyzed)
+      (viaSql, viaCol) match {
+        // the wrapper's coercions stay out of an unaliased column name
+        case (scala.util.Success(_), _) if df.selectExpr(call).columns.head.contains("CAST(") =>
+          Some(s"$call: names its column ${df.selectExpr(call).columns.head}")
+        case (scala.util.Success(a), scala.util.Success(b)) if a.semanticEquals(b) => None
+        case (scala.util.Failure(_), scala.util.Failure(_)) => None
+        case _ => Some(s"$call: SQL $viaSql vs Column $viaCol")
+      }
+    }
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
+
+    // the table covers every registered name in every arity its
+    // builder accepts: any other arity is the usage error
+    val arities = cases.map { case (call, _) =>
+      spark.sessionState.sqlParser.parseExpression(call) match {
+        case f: UnresolvedFunction => (f.nameParts.last, f.arguments.size)
+      }
+    }.groupBy(_._1).map { case (n, as) => n -> as.map(_._2).toSet }
+    GraftFunctions.all.foreach { case (name, _, builder) =>
+      val covered = arities.getOrElse(name, Set.empty)
+      assert(covered.nonEmpty, s"$name has no SQL == Column case")
+      (0 to 5).filterNot(covered).foreach { n =>
+        val e = intercept[IllegalArgumentException](builder(Seq.fill(n)(Literal(1))))
+        assert(e.getMessage.startsWith(s"$name("), s"$name accepts $n arguments untested")
+      }
+    }
+  }
 }

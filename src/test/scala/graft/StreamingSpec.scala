@@ -1579,6 +1579,30 @@ class StreamingSpec extends SparkSpec {
     assert(cells == oneShot, "the sketch was reset")
   }
 
+  test("E7 on a fresh checkpoint refuses the batch logs another query numbered, keeping their rows") {
+    // a fresh checkpoint restarts the batch ids at 0: the index log
+    // would show batch 0 none of the old fingerprints (re-admitting a
+    // re-arrival) and the output log's batch_id=0 would be overwritten
+    val dir = java.nio.file.Files.createTempDirectory("graft_e7_fresh").toString
+    val (idx, out) = (s"$dir/index", s"$dir/out")
+    def e7Run(ckpt: String, batches: Seq[(Long, String)]*): Unit = {
+      val input = MemoryStream[(Long, String)](spark)
+      val q = EventStreams.ingestDedupMaintained(input.toDF().toDF("event_id", "payload"),
+        "payload", "event_id", idx, out, ckpt)
+      try batches.foreach { b => input.addData(b); q.processAllAvailable() } finally q.stop()
+    }
+    def rows() = spark.read.parquet(out).select("batch_id", "event_id", "payload")
+      .as[(Int, Long, String)].collect().toSet
+    e7Run(s"$dir/ckpt1", Seq((1L, "a"), (2L, "b")), Seq((3L, "c")))
+    val before = rows()
+    assert(before == Set((0, 1L, "a"), (0, 2L, "b"), (1, 3L, "c")), before)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      e7Run(s"$dir/ckpt2", Seq((4L, "a"), (5L, "d"))))
+    assert(e.getMessage.contains("numbered by streaming query"), e.getMessage)
+    assert(rows() == before, "the output log was overwritten")
+    assert(spark.read.parquet(idx).count() == 3L, "the index log was overwritten")
+  }
+
   test("E44 pageHinkleyStream: emitted micro walk equals batch pageHinkley across a split") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.Stats

@@ -145,12 +145,43 @@ class SurveyRegistrySpec extends AnyFunSuite {
       if code.contains(needle)
       owner = lines.take(i + 1).reverseIterator.collectFirst { case decl(n) => n }
     } yield (f.getFileName.toString, owner, needle, s"$f:${i + 1}: ${l.trim}")
-    val offenders = hits.filterNot(h => h._1 == "SnapshotStore.scala" && h._2.contains("readBefore"))
+    // BatchLog.committed is the log's holds-state probe, shared by its
+    // readBefore and the claim in BatchLog.write
+    val offenders = hits.filterNot(h => h._1 == "SnapshotStore.scala" &&
+      h._2.exists(o => o == "readBefore" || o == "committed"))
     assert(offenders.isEmpty,
       s"prior-state read outside SnapshotStore.readBefore / BatchLog.readBefore:\n${offenders.map(_._4).mkString("\n")}")
     // and each spelling is really there, so a renamed helper cannot
     // make this check vacuous
     assert(needles.filterNot(_ == "SnapshotStore.read(").forall(n => hits.exists(_._3 == n)),
       s"a fence spelling moved: ${hits.map(_._4)}")
+  }
+
+  test("functions/ states each custom-function contract once") {
+    // a second aggregate protocol, an in-place sketch decode or a
+    // SQL-side cast is a copy of a contract that can drift from the
+    // Column wrapper's (comments aside)
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.list(java.nio.file.Paths.get("src/main/scala/graft/functions"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val owner = """\b(?:object|class|trait) (\w+)""".r
+    val code = for {
+      f <- files
+      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      c = l.split("//", 2)(0)
+      if !c.trim.startsWith("*") && !c.trim.startsWith("/*")
+      o = lines.take(i + 1).reverseIterator.flatMap(owner.findFirstMatchIn(_)).nextOption()
+    } yield (f.getFileName.toString, o.map(_.group(1)).getOrElse(""), c, s"$f:${i + 1}: ${l.trim}")
+    val protocol = code.filter(_._3.contains("TypedImperativeAggregate["))
+    assert(protocol.map(_._1) == Seq("SketchAgg.scala"),
+      s"the aggregate protocol is spelled outside SketchAgg:\n${protocol.map(_._4).mkString("\n")}")
+    val decodes = code.filter(_._3.contains("Memory.wrap("))
+    assert(decodes.map(_._2).sorted == Seq("FreqCodec", "KllCodec", "ThetaCodec"),
+      s"sketch bytes decoded outside the three codecs:\n${decodes.map(_._4).mkString("\n")}")
+    val casts = code.filter(h => h._1 == "GraftFunctions.scala" && h._3.contains("Cast("))
+    assert(casts.isEmpty,
+      s"a SQL builder casts instead of its Column wrapper:\n${casts.map(_._4).mkString("\n")}")
   }
 }
