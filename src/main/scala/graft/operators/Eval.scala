@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import Num.{b13, b19}
+
 /** Model-evaluation & annotation analytics — the measurement side of
   * the training-data loop next to [[Preference]]: estimate pass@k from
   * sampled rollouts, aggregate self-consistency votes, compare two
@@ -316,18 +318,14 @@ object Eval {
     // doubled midrank of each row within its rater: 2·cum + cnt + 1
     // over the rater-local VALUE frame (spearman's bounded-pass trick)
     val vf = t.groupBy("__r", "__s").agg(count(lit(1)).as("__cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__r").orderBy("__s").rowsBetween(Long.MinValue, -1)
     val ranked = vf
-      .withColumn("__cum", coalesce(sum(col("__cnt")).over(w), lit(0L)))
+      .withColumn("__cum", Stats.cumBefore("__cnt", "__s", "__r"))
       .select(col("__r"), col("__s"),
-        (col("__cum") * 2 + col("__cnt") + 1).as("__rr"), col("__cnt"))
+        Stats.midRank2(col("__cum"), col("__cnt")).as("__rr"), col("__cnt"))
     val rows = t.join(ranked, Seq("__r", "__s"))
-    def big(c: Column): Column = c.cast("decimal(19,0)")
     val perItem = rows.groupBy("__i")
-      .agg(sum(big(col("__rr"))).as("__ri"), count(lit(1)).as("__m"))
+      .agg(sum(b19(col("__rr"))).as("__ri"), count(lit(1)).as("__m"))
     // tie correction per rater from the value frame
-    def b13(c: Column): Column = c.cast("decimal(13,0)")
     val ties = vf.groupBy("__r")
       .agg(sum(b13(col("__cnt")) * b13(col("__cnt")) * b13(col("__cnt"))
         - b13(col("__cnt"))).cast("decimal(38,0)").as("__t"))
@@ -767,7 +765,6 @@ object Eval {
     val t = df.filter(s.isNotNull && item.isNotNull && system.isNotNull)
       .select(item.as("__i"), system.as("__s"), when(s, 1L).otherwise(0L).as("__x"))
     val kRow = t.agg(countDistinct(col("__s")).as("__k"))
-    def b19(c: Column): Column = c.cast("decimal(19,0)")
     val perItem = t.groupBy("__i").agg(
       count(lit(1)).as("__n"), sum(col("__x")).as("__l"))
     val items = perItem.crossJoin(broadcast(kRow))
@@ -799,6 +796,33 @@ object Eval {
       degenerate.as("degenerate"))
   }
 
+  /** The complete-block split of [[friedman]] and [[pageTrend]] over
+    * a (`__i` item, `arm`, `__v`) frame: k = the distinct arms, and an
+    * item is a complete block when it carries k rows (the cochranQ
+    * contract). Returns the one-row `__k`, the one-row block counts
+    * (`n_items`, `n_excluded`) and the rows of the complete blocks.
+    */
+  private def completeBlocks(t: DataFrame, arm: String): (DataFrame, DataFrame, DataFrame) = {
+    val kRow = t.agg(countDistinct(col(arm)).as("__k"))
+    val perItem = t.groupBy("__i").agg(count(lit(1)).as("__n"))
+    val flagged = perItem.crossJoin(broadcast(kRow))
+      .select(col("__i"), (col("__n") === col("__k")).as("__complete"))
+    val counts = flagged.agg(
+      coalesce(sum(when(col("__complete"), 1L)), lit(0L)).as("n_items"),
+      coalesce(sum(when(!col("__complete"), 1L)), lit(0L)).as("n_excluded"))
+    val r = t.join(flagged.filter(col("__complete")).select("__i"),
+      Seq("__i"), "left_semi")
+    (kRow, counts, r)
+  }
+
+  /** Within-item tie groups of [[completeBlocks]]' rows: (`__i`, `__v`)
+    * with its size `__t` and `__cum`, the item's rows strictly below —
+    * every window frame is one item's k rows.
+    */
+  private def blockRanks(r: DataFrame): DataFrame =
+    r.groupBy("__i", "__v").agg(count(lit(1)).as("__t"))
+      .withColumn("__cum", Stats.cumBefore("__t", "__v", "__i"))
+
   /** Friedman test — [[cochranQ]]'s CONTINUOUS-score sibling: k
     * systems score the same items, each item ranks its k scores
     * (mid-ranks on ties), and the rank-sum dispersion across systems
@@ -825,29 +849,13 @@ object Eval {
     val t = df.filter(score.isNotNull && item.isNotNull && system.isNotNull)
       .select(item.as("__i"), system.as("__s"),
         round(score.cast("double"), dp).as("__v"))
-    val kRow = t.agg(countDistinct(col("__s")).as("__k"))
-    val perItem = t.groupBy("__i").agg(count(lit(1)).as("__n"))
-    val flagged = perItem.crossJoin(broadcast(kRow))
-      .select(col("__i"), (col("__n") === col("__k")).as("__complete"))
-    val counts = flagged.agg(
-      coalesce(sum(when(col("__complete"), 1L)), lit(0L)).as("n_items"),
-      coalesce(sum(when(!col("__complete"), 1L)), lit(0L)).as("n_excluded"))
-    val r = t.join(flagged.filter(col("__complete")).select("__i"),
-      Seq("__i"), "left_semi")
-    def b13(c: Column): Column = c.cast("decimal(13,0)")
-    val vg = r.groupBy("__i", "__v").agg(count(lit(1)).as("__t"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__i").orderBy(col("__v")).rowsBetween(Long.MinValue, -1)
-    val vc = vg
-      .withColumn("__cum", coalesce(sum(col("__t")).over(w), lit(0L)))
-      .withColumn("__tc",
-        (b13(col("__t")) * b13(col("__t")) * b13(col("__t")) - col("__t"))
-          .cast("decimal(38,0)"))
+    val (kRow, counts, r) = completeBlocks(t, "__s")
+    val vc = blockRanks(r).withColumn("__tc", Stats.tieCube(col("__t")))
     val ties = vc.agg(
       coalesce(sum(col("__tc")), lit(0).cast("decimal(38,0)")).as("__sumtc"))
     val perSys = r.join(vc.select(col("__i"), col("__v"), col("__cum"), col("__t")),
         Seq("__i", "__v"))
-      .select(col("__s"), (col("__cum") * 2 + col("__t") + 1).as("__r2"))
+      .select(col("__s"), Stats.midRank2(col("__cum"), col("__t")).as("__r2"))
       .groupBy("__s").agg(sum(col("__r2")).as("__sr2"))
     val term7 = (floor(col("__sr2").cast("double") * col("__sr2").cast("double")
       / 4.0 * 1e7) / 1e7).cast("decimal(30,7)")
@@ -900,32 +908,21 @@ object Eval {
     val t = df.filter(score.isNotNull && item.isNotNull && ord.isNotNull)
       .select(item.as("__i"), ord.cast("long").as("__j"),
         round(score.cast("double"), dp).as("__v"))
-    val kRow = t.agg(countDistinct(col("__j")).as("__k"))
-    val perItem = t.groupBy("__i").agg(count(lit(1)).as("__n"))
-    val flagged = perItem.crossJoin(broadcast(kRow))
-      .select(col("__i"), (col("__n") === col("__k")).as("__complete"))
-    val counts = flagged.agg(
-      coalesce(sum(when(col("__complete"), 1L)), lit(0L)).as("n_items"),
-      coalesce(sum(when(!col("__complete"), 1L)), lit(0L)).as("n_excluded"))
-    val r = t.join(flagged.filter(col("__complete")).select("__i"),
-      Seq("__i"), "left_semi")
+    val (kRow, counts, r) = completeBlocks(t, "__j")
     // the caller's ordinal values need not be 1..k — DENSE-rank them
     // into the canonical 1..k weights on the (bounded, ≤k-row)
     // distinct-ordinal frame, broadcast back
     val ordMap = r.select(col("__j")).distinct()
       .withColumn("__w", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy(col("__j"))))
-    val vg = r.groupBy("__i", "__v").agg(count(lit(1)).as("__t"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("__i").orderBy(col("__v")).rowsBetween(Long.MinValue, -1)
-    val vc = vg.withColumn("__cum", coalesce(sum(col("__t")).over(w), lit(0L)))
+    val vc = blockRanks(r)
     // 2·rank lanes joined back to rows, weighted by the canonical
     // ordinal: L2 = Σ w·(2·rank) exact
     val l2 = r.join(vc.select(col("__i"), col("__v"), col("__cum"), col("__t")),
         Seq("__i", "__v"))
       .join(broadcast(ordMap), Seq("__j"))
-      .select((col("__w").cast("decimal(19,0)") *
-        (col("__cum") * 2 + col("__t") + 1)).cast("decimal(38,0)").as("__lw"))
+      .select((b19(col("__w")) *
+        Stats.midRank2(col("__cum"), col("__t"))).cast("decimal(38,0)").as("__lw"))
       .agg(coalesce(sum(col("__lw")), lit(0).cast("decimal(38,0)")).as("__l2"))
     val nd = col("n_items").cast("double")
     val kd = col("__k").cast("double")

@@ -129,19 +129,12 @@ object Reshape {
       df: DataFrame,
       orderBy: Seq[Column]): DataFrame = {
     require(orderBy.nonEmpty, "promoteFirstRowToHeader: orderBy must be non-empty")
-    // col.desc/asc is a SortOrder node: in Spark 4 it reaches us as a
-    // lazy ColumnNodeExpression wrapping an internal SortOrder (the
-    // catalyst instanceof check never sees it), so inspect the node's
-    // rendered form. Non-evaluable inside the min_by struct = "not a
-    // value column" — reject loudly instead of promoting a wrong row.
-    val sortLike = orderBy.exists { c =>
-      scala.util.Try(org.apache.spark.sql.graftshim.Shims.toExpression(c)) match {
-        case scala.util.Success(e) =>
-          e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SortOrder] ||
-            e.toString.contains("SortOrder(")
-        case scala.util.Failure(_) => true
-      }
-    }
+    // col.desc/asc converts to a SortOrder node: non-evaluable inside
+    // the min_by struct = "not a value column" — reject loudly instead
+    // of promoting a wrong row
+    val sortLike = orderBy.exists(c =>
+      org.apache.spark.sql.graftshim.Shims.toCatalyst(c)
+        .isInstanceOf[org.apache.spark.sql.catalyst.expressions.SortOrder])
     require(!sortLike,
       "promoteFirstRowToHeader: orderBy takes value columns, not col.asc/desc — " +
         "the minimum key tuple is promoted; invert the key (e.g. -col) for max")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.streaming.EventStreams.{EwmaIn, EwmaOut, EwmaState, HoltOut, HoltState, HwOut, HwState}
+import Num.{b13, b19}
 
 /** Experiment statistics — the A/B readout endpoint: compare a metric
   * between two groups with an unpooled two-sample z statistic, over
@@ -13,7 +14,191 @@ import graft.streaming.EventStreams.{EwmaIn, EwmaOut, EwmaState, HoltOut, HoltSt
   */
 object Stats {
 
-  /** Welch-style two-sample z: `(meanA − meanB) / sqrt(vA/nA + vB/nB)`
+  // ---- the shared building blocks of the two-sample, rank and
+  // contingency tests: one copy each, so the operators (and the
+  // DuckDB twins that replay them) cannot drift apart ----
+
+  /** The conditional two-group moments of [[twoSampleZ]] and
+    * [[effectSize]]: ONE groupBy-less aggregate over the non-null
+    * values with, per side, `__n_<tag>`, `__s_<tag>` = Σx and
+    * `__ss_<tag>` = Σx² in exact decimals (tags a and b). The n's are
+    * coalesced: an EMPTY input aggregates every sum to NULL, and the
+    * n's must come back 0 so the degenerate branch (not a NULL
+    * cascade) decides the output.
+    */
+  private def twoGroupMoments(df: DataFrame, group: Column, value: Column,
+      groupA: String, groupB: String): DataFrame = {
+    def side(label: String, tag: String) = Seq(
+      coalesce(sum(when(group === label, 1L).otherwise(0L)), lit(0L)).as(s"__n_$tag"),
+      sum(when(group === label, Num.dec(value)).otherwise(lit(null))).as(s"__s_$tag"),
+      sum(when(group === label, Num.dec(value) * Num.dec(value)).otherwise(lit(null)))
+        .as(s"__ss_$tag"))
+    val aggs = side(groupA, "a") ++ side(groupB, "b")
+    df.filter(value.isNotNull).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The quantized two-sided value frame of the rank and ECDF tests:
+    * `kept`'s values round to `dp` decimals and ONE partial-aggregated
+    * groupBy collapses them to a ≤ 10^dp+1-row frame (`__v`, per-side
+    * counts `__na`/`__nb` as conditional sums), so every ordered pass
+    * after it runs over that bounded frame — never a global window
+    * over rows, the scale-killer PlanSpec hunts.
+    */
+  private def quantizedSides(kept: DataFrame, value: Column, dp: Int,
+      inA: Column, inB: Column): DataFrame = {
+    require(dp >= 0 && dp <= 7, "dp in [0, 7]: the quantization bounds the ordered pass")
+    kept.groupBy(round(value.cast("double"), dp).as("__v"))
+      .agg(
+        sum(when(inA, 1L).otherwise(0L)).as("__na"),
+        sum(when(inB, 1L).otherwise(0L)).as("__nb"))
+  }
+
+  /** Rows strictly below each value of a bounded value frame (within
+    * `partition`), 0 for the first: the cumulative count every rank
+    * lane reads off the aggregated frame.
+    */
+  private[operators] def cumBefore(cnt: String, v: String, partition: String*): Column =
+    coalesce(sum(col(cnt)).over(Window.partitionBy(partition.map(col): _*)
+      .orderBy(col(v)).rowsBetween(Long.MinValue, -1)), lit(0L))
+
+  /** Doubled mid-rank of a tie group of `t` rows with `cum` rows below
+    * it: 2·(cum + (t+1)/2) stays an exact integer, so halves never
+    * touch a double.
+    */
+  private[operators] def midRank2(cum: Column, t: Column): Column = cum * 2 + t + 1
+
+  /** A tie group's t³ − t on 13-digit factor lanes (never a long
+    * overflow).
+    */
+  private[operators] def tieCube(t: Column): Column =
+    (b13(t) * b13(t) * b13(t) - t).cast("decimal(38,0)")
+
+  /** Side b's count strictly below each value of [[quantizedSides]]'
+    * frame, the `__cumb` that [[twiceU]] reads.
+    */
+  private def withCumB(g: DataFrame): DataFrame = g.withColumn("__cumb", cumBefore("__nb", "__v"))
+
+  /** 2U at one value: na·(2·cumB + nb) counts every (a > b) pair twice
+    * and every tie once, so Σ 2U is an exact integer (half-credits
+    * never touch a double).
+    */
+  private val twiceU: Column =
+    (b19(col("__na")) * (b19(col("__cumb")) * 2 + b19(col("__nb"))))
+      .cast("decimal(38,0)")
+
+  /** The ECDF lanes of [[quantizedSides]]' frame: `__ca`/`__cb`, each
+    * side's count at or below the value, and the one-row totals
+    * `__ta`/`__tb`. The totals are groupBy-less, so even an EMPTY input
+    * yields exactly one (degenerate-zero) row, twoSampleZ's contract.
+    */
+  private def ecdf(g: DataFrame): (DataFrame, DataFrame) = {
+    val w = Window.orderBy(col("__v")).rowsBetween(Long.MinValue, 0)
+    val cum = g
+      .withColumn("__ca", sum(col("__na")).over(w))
+      .withColumn("__cb", sum(col("__nb")).over(w))
+    val tot = g.agg(
+      coalesce(sum(col("__na")), lit(0L)).as("__ta"),
+      coalesce(sum(col("__nb")), lit(0L)).as("__tb"))
+    (cum, tot)
+  }
+
+  /** The ECDF gap |F_a − F_b| scaled by NA·NB: |cumA·NB − cumB·NA| as
+    * an exact integer (the products overflow long at corpus scale), so
+    * comparisons of it are engine-independent.
+    */
+  private val ecdfGap: Column =
+    abs(b19(col("__ca")) * b19(col("__tb"))
+      - b19(col("__cb")) * b19(col("__ta"))).cast("decimal(38,0)")
+
+  /** The pooled rank frame of [[kruskalWallis]] and [[dunnTest]]: values
+    * quantize to `dp` decimals, one partial-aggregated
+    * groupBy(value, group) collapses the input to a bounded frame,
+    * mid-ranks come from the cumulative window over its per-value
+    * totals, and per group `__n` and `__r2` = 2·Σranks accumulate in
+    * exact integer lanes. Returns that k-row frame (`__g`, `__n`,
+    * `__r2`) and the one-row tie sum `__sumtc` = Σ(t³ − t).
+    */
+  private def pooledRankSums(df: DataFrame, group: Column, value: Column,
+      dp: Int): (DataFrame, DataFrame) = {
+    require(dp >= 0 && dp <= 7, "dp in [0, 7]: the quantization bounds the rank frame")
+    val t = df.filter(value.isNotNull && group.isNotNull)
+      .select(group.cast("string").as("__g"),
+        round(value.cast("double"), dp).as("__v"))
+    val vg = t.groupBy("__v", "__g").agg(count(lit(1)).as("__nvg"))
+    val vtc = vg.groupBy("__v").agg(sum(col("__nvg")).as("__t"))
+      .withColumn("__cum", cumBefore("__t", "__v"))
+      .withColumn("__tc", tieCube(col("__t")))
+    val perG = vg.join(vtc, "__v")
+      .groupBy("__g").agg(
+        sum(col("__nvg")).as("__n"),
+        sum((b19(col("__nvg")) * midRank2(b19(col("__cum")), col("__t")))
+          .cast("decimal(38,0)")).as("__r2"))
+    val ties = vtc.agg(
+      coalesce(sum(col("__tc")), lit(0).cast("decimal(38,0)")).as("__sumtc"))
+    (perG, ties)
+  }
+
+  /** The contingency frame of [[chiSquared]] and [[gTest]]: one
+    * partial-aggregated groupBy(a, b) to the ≤ r·c cell frame, margins
+    * from null-safe broadcast joins over THAT BOUNDED FRAME (never the
+    * corpus). Null is a real level: groupBy keeps it and the `<=>`
+    * joins do — collect_set/count(DISTINCT) would silently drop it
+    * (the psiByGroup lesson). Expected counts derive in double with a
+    * fixed operation order (rowTot·colTot then /N — the oracles replay
+    * it textually) and `cellTerm(exp)` is each cell's 7-dp decimal
+    * term. Returns ONE row — groupBy-less aggregates crossJoined, so
+    * even an EMPTY input has one: `__tot`, `n_cells`, `__r`, `__c` and
+    * `__s` = Σ terms (NULL on an empty table).
+    */
+  private def contingency(df: DataFrame, a: Column, b: Column)(
+      cellTerm: Column => Column): DataFrame = {
+    val cells = df.groupBy(a.as("__a"), b.as("__b"))
+      .agg(count(lit(1)).as("__n"))
+      .localCheckpoint() // 4 consumers below; never rescan the corpus
+    val ra = cells.groupBy(col("__a")).agg(sum(col("__n")).as("__rt"))
+    val rb = cells.groupBy(col("__b")).agg(sum(col("__n")).as("__ct"))
+    val g = cells
+      .join(broadcast(ra.withColumnRenamed("__a", "__ka")),
+        col("__a") <=> col("__ka"))
+      .join(broadcast(rb.withColumnRenamed("__b", "__kb")),
+        col("__b") <=> col("__kb"))
+    val tot = cells.agg(
+      coalesce(sum(col("__n")), lit(0L)).as("__tot"),
+      count(lit(1)).as("n_cells"))
+    val nr = ra.agg(count(lit(1)).as("__r"))
+    val nc = rb.agg(count(lit(1)).as("__c"))
+    val exp = col("__rt").cast("double") * col("__ct").cast("double") /
+      col("__tot").cast("double")
+    val s = g.crossJoin(broadcast(tot.select(col("__tot"))))
+      .select(cellTerm(exp).as("__t7"))
+      .agg(sum(col("__t7")).as("__s"))
+    tot.crossJoin(nr).crossJoin(nc).crossJoin(s)
+  }
+
+  /** [[contingency]]'s dof (r−1)(c−1); (0−1)·(0−1) = 1 on an empty
+    * table, so it pins to 0 there.
+    */
+  private val contingencyDof: Column =
+    when(col("__r") === 0 || col("__c") === 0, lit(0L))
+      .otherwise((col("__r") - 1) * (col("__c") - 1))
+
+  /** The demeaned 6-dp micro lanes of the per-key series statistics:
+    * each `(value, out)` lane's per-key mean `__mu<value>` from one
+    * exact decimal sum, joined back, and the centered value quantized
+    * ONCE to a decimal(18,0) of 1e-6 units in `out` — every product
+    * and sum after it is exact integer arithmetic.
+    */
+  private def demeanedMicro(t: DataFrame, lanes: (String, String)*): DataFrame = {
+    val means = lanes.map { case (v, _) =>
+      (sum(Num.dec(col(v))).cast("double") / count(lit(1))).as(s"__mu$v")
+    }
+    lanes.foldLeft(t.join(t.groupBy("key").agg(means.head, means.tail: _*), Seq("key"))) {
+      case (acc, (v, out)) =>
+        acc.withColumn(out, ((col(v) - col(s"__mu$v")) * 1e6).cast("decimal(18,0)"))
+    }
+  }
+
+  /** Welch-style two-sample z:`(meanA − meanB) / sqrt(vA/nA + vB/nB)`
     * with sample variances from exact decimal sums. Returns ONE row:
     * (n_a, mean_a, n_b, mean_b, z, significant) where `significant`
     * is |z| > 1.96 (the two-sided 5% gate). Means are truncated at
@@ -38,17 +223,7 @@ object Stats {
       groupA: String,
       groupB: String): DataFrame = {
     def t4(c: Column): Column = Num.t4zero(c)
-    def dec(c: Column): Column = Num.dec(c)
-    // coalesce: an EMPTY input aggregates every sum to NULL — the n's
-    // must come back 0 so the degenerate branch (not a NULL cascade)
-    // decides the output
-    def side(label: String, tag: String) = Seq(
-      coalesce(sum(when(group === label, 1L).otherwise(0L)), lit(0L)).as(s"__n_$tag"),
-      sum(when(group === label, dec(value)).otherwise(lit(null))).as(s"__s_$tag"),
-      sum(when(group === label, dec(value) * dec(value)).otherwise(lit(null)))
-        .as(s"__ss_$tag"))
-    val aggs = side(groupA, "a") ++ side(groupB, "b")
-    val m = df.filter(value.isNotNull).agg(aggs.head, aggs.tail: _*)
+    val m = twoGroupMoments(df, group, value, groupA, groupB)
     def mean(t: String) = col(s"__s_$t").cast("double") / col(s"__n_$t")
     def variance(t: String) = greatest(lit(0.0),
       (col(s"__ss_$t").cast("double") -
@@ -93,14 +268,7 @@ object Stats {
       groupA: String,
       groupB: String): DataFrame = {
     def t4(c: Column): Column = Num.t4zero(c)
-    def dec(c: Column): Column = Num.dec(c)
-    def side(label: String, tag: String) = Seq(
-      coalesce(sum(when(group === label, 1L).otherwise(0L)), lit(0L)).as(s"__n_$tag"),
-      sum(when(group === label, dec(value)).otherwise(lit(null))).as(s"__s_$tag"),
-      sum(when(group === label, dec(value) * dec(value)).otherwise(lit(null)))
-        .as(s"__ss_$tag"))
-    val aggs = side(groupA, "a") ++ side(groupB, "b")
-    val m = df.filter(value.isNotNull).agg(aggs.head, aggs.tail: _*)
+    val m = twoGroupMoments(df, group, value, groupA, groupB)
     // try_divide lanes: whole-stage codegen CSE hoists these
     // subexpressions UNCONDITIONALLY, so the degenerate guard cannot
     // rely on when()-laziness — two singleton groups would ANSI-throw
@@ -324,33 +492,21 @@ object Stats {
       score: Column,
       label: Column,
       dp: Int = 6): DataFrame = {
-    require(dp >= 0 && dp <= 7, "dp in [0, 7]: the quantization bounds the ordered pass")
+    // positives are side a, negatives side b
     val y = label.cast("boolean")
-    val g = df.filter(score.isNotNull && label.isNotNull)
-      .groupBy(round(score.cast("double"), dp).as("__s"))
-      .agg(
-        sum(when(y, 1L).otherwise(0L)).as("__np"),
-        sum(when(!y, 1L).otherwise(0L)).as("__nn"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__s")).rowsBetween(Long.MinValue, -1)
-    def big(c: Column): Column = c.cast("decimal(19,0)")
-    val contrib = g
-      .withColumn("__cumneg", coalesce(sum(col("__nn")).over(w), lit(0L)))
-      .select(
-        (big(col("__np")) * (big(col("__cumneg")) * 2 + big(col("__nn"))))
-          .cast("decimal(38,0)").as("__num2"),
-        col("__np"), col("__nn"))
+    val g = quantizedSides(df.filter(score.isNotNull && label.isNotNull), score, dp, y, !y)
+    val contrib = withCumB(g).select(twiceU.as("__u2"), col("__na"), col("__nb"))
     val m = contrib.agg(
-      sum(col("__num2")).as("__num2"),
-      coalesce(sum(col("__np")), lit(0L)).as("__np"),
-      coalesce(sum(col("__nn")), lit(0L)).as("__nn"))
-    val denom = lit(2.0) * col("__np").cast("double") * col("__nn").cast("double")
+      sum(col("__u2")).as("__u2"),
+      coalesce(sum(col("__na")), lit(0L)).as("__na"),
+      coalesce(sum(col("__nb")), lit(0L)).as("__nb"))
+    val denom = lit(2.0) * col("__na").cast("double") * col("__nb").cast("double")
     m.select(
-      (col("__np") + col("__nn")).as("n"),
-      col("__np").as("n_pos"),
-      col("__nn").as("n_neg"),
-      when(col("__np") === 0 || col("__nn") === 0, 0.5)
-        .otherwise(floor(col("__num2").cast("double") / denom * 1e6) / 1e6)
+      (col("__na") + col("__nb")).as("n"),
+      col("__na").as("n_pos"),
+      col("__nb").as("n_neg"),
+      when(col("__na") === 0 || col("__nb") === 0, 0.5)
+        .otherwise(floor(col("__u2").cast("double") / denom * 1e6) / 1e6)
         .as("auc"))
   }
 
@@ -382,27 +538,20 @@ object Stats {
     val t = df.filter(a.isNotNull && b.isNotNull)
       .select(round(a.cast("double"), dp).as("__a"),
         round(b.cast("double"), dp).as("__b"))
-    def rankMap(vCol: String): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col(vCol)).rowsBetween(Long.MinValue, -1)
+    def rankMap(vCol: String): DataFrame =
       t.groupBy(vCol).agg(count(lit(1)).as("__cnt"))
-        .withColumn("__cum", coalesce(sum(col("__cnt")).over(w), lit(0L)))
-        // doubled midrank: 2·(cum + (cnt+1)/2) stays integral
-        .select(col(vCol), (col("__cum") * 2 + col("__cnt") + 1).as(s"__r$vCol"))
-    }
+        .withColumn("__cum", cumBefore("__cnt", vCol))
+        .select(col(vCol), midRank2(col("__cum"), col("__cnt")).as(s"__r$vCol"))
     val ranked = t
       .join(rankMap("__a"), Seq("__a"))
       .join(rankMap("__b"), Seq("__b"))
-    // 19-digit factors ([[ksTest]]'s lanes): a 38×38 product would
-    // overflow the decimal space in both engines
-    def big(c: Column): Column = c.cast("decimal(19,0)")
     val m = ranked.agg(
       count(lit(1)).as("n"),
-      sum(big(col("__r__a"))).as("__sa"),
-      sum(big(col("__r__b"))).as("__sb"),
-      sum(big(col("__r__a")) * big(col("__r__a"))).as("__saa"),
-      sum(big(col("__r__b")) * big(col("__r__b"))).as("__sbb"),
-      sum(big(col("__r__a")) * big(col("__r__b"))).as("__sab"))
+      sum(b19(col("__r__a"))).as("__sa"),
+      sum(b19(col("__r__b"))).as("__sb"),
+      sum(b19(col("__r__a")) * b19(col("__r__a"))).as("__saa"),
+      sum(b19(col("__r__b")) * b19(col("__r__b"))).as("__sbb"),
+      sum(b19(col("__r__a")) * b19(col("__r__b"))).as("__sab"))
     val n = col("n").cast("double")
     def d(c: Column): Column = c.cast("double")
     val cov = n * d(col("__sab")) - d(col("__sa")) * d(col("__sb"))
@@ -722,11 +871,7 @@ object Stats {
     val t = df.select(key.as("key"), bucket.cast("long").as("bucket"),
         value.cast("double").as("__v"))
       .filter(col("__v").isNotNull)
-    val mu = t.groupBy("key").agg(
-      (sum(Num.dec(col("__v"))).cast("double") / count(lit(1))).as("__mu"))
-    val c = t.join(mu, Seq("key"))
-      .withColumn("__c6",
-        ((col("__v") - col("__mu")) * 1e6).cast("decimal(18,0)"))
+    val c = demeanedMicro(t, "__v" -> "__c6")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("key").orderBy("bucket")
     // window lags as plain columns FIRST — a window expression inside
@@ -774,12 +919,7 @@ object Stats {
     val t = df.select(key.as("key"), bucket.cast("long").as("bucket"),
         x.cast("double").as("__x"), y.cast("double").as("__y"))
       .filter(col("__x").isNotNull && col("__y").isNotNull)
-    val mu = t.groupBy("key").agg(
-      (sum(Num.dec(col("__x"))).cast("double") / count(lit(1))).as("__mx"),
-      (sum(Num.dec(col("__y"))).cast("double") / count(lit(1))).as("__my"))
-    val c = t.join(mu, Seq("key"))
-      .withColumn("__cx6", ((col("__x") - col("__mx")) * 1e6).cast("decimal(18,0)"))
-      .withColumn("__cy6", ((col("__y") - col("__my")) * 1e6).cast("decimal(18,0)"))
+    val c = demeanedMicro(t, "__x" -> "__cx6", "__y" -> "__cy6")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("key").orderBy("bucket")
     val lags = (-maxLag to maxLag)
@@ -828,25 +968,10 @@ object Stats {
       value: Column,
       inGroupA: Column,
       dp: Int = 6): DataFrame = {
-    require(dp >= 0 && dp <= 7, "dp in [0, 7]")
     val a = inGroupA.cast("boolean")
-    val g = df.filter(value.isNotNull && inGroupA.isNotNull)
-      .groupBy(round(value.cast("double"), dp).as("__v"))
-      .agg(
-        sum(when(a, 1L).otherwise(0L)).as("__na"),
-        sum(when(!a, 1L).otherwise(0L)).as("__nb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__v")).rowsBetween(Long.MinValue, -1)
-    def big(c: Column): Column = c.cast("decimal(19,0)")
-    // 13-digit factors for the CUBE: 19³ would blow past the decimal
-    // space at the type level; a tie group ≤ 10^13 rows is the bound
-    def b13(c: Column): Column = c.cast("decimal(13,0)")
+    val g = quantizedSides(df.filter(value.isNotNull && inGroupA.isNotNull), value, dp, a, !a)
     val t = col("__na") + col("__nb")
-    val contrib = g
-      .withColumn("__cumb", coalesce(sum(col("__nb")).over(w), lit(0L)))
-      .select(
-        (big(col("__na")) * (big(col("__cumb")) * 2 + big(col("__nb"))))
-          .cast("decimal(38,0)").as("__u2"),
+    val contrib = withCumB(g).select(twiceU.as("__u2"),
         (b13(t) * b13(t) * b13(t) - b13(t)).cast("decimal(38,0)").as("__tc"),
         col("__na"), col("__nb"))
     val m = contrib.agg(
@@ -858,8 +983,10 @@ object Stats {
     val nb = col("__nb").cast("double")
     val n = na + nb
     val u = col("__u2").cast("double") / 2.0
+    // try_divide BY CONSTRUCTION: varU sits in the degenerate guard, so
+    // it evaluates on an empty or one-row input, where n(n−1) = 0
     val varU = na * nb / 12.0 *
-      ((n + 1.0) - col("__tc").cast("double") / (n * (n - 1.0)))
+      ((n + 1.0) - try_divide(col("__tc").cast("double"), n * (n - 1.0)))
     val degenerate = col("__na") === 0 || col("__nb") === 0 || varU <= 0.0
     val z = when(degenerate, lit(0.0))
       .otherwise(Num.t4zero((u - na * nb / 2.0) / sqrt(varU)))
@@ -895,30 +1022,12 @@ object Stats {
       groupA: String,
       groupB: String,
       dp: Int = 4): DataFrame = {
-    require(dp >= 0 && dp <= 7, "dp in [0, 7]: the quantization bounds the ordered pass")
-    val v = round(value.cast("double"), dp)
-    val g = df.filter(value.isNotNull && (group === groupA || group === groupB))
-      .groupBy(v.as("__v"))
-      .agg(
-        sum(when(group === groupA, 1L).otherwise(0L)).as("__na"),
-        sum(when(group === groupB, 1L).otherwise(0L)).as("__nb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__v")).rowsBetween(Long.MinValue, 0)
-    def big(c: Column): Column = c.cast("decimal(19,0)")
-    val cum = g
-      .withColumn("__ca", sum(col("__na")).over(w))
-      .withColumn("__cb", sum(col("__nb")).over(w))
+    val (cum, tot) = ecdf(quantizedSides(
+      df.filter(value.isNotNull && (group === groupA || group === groupB)),
+      value, dp, group === groupA, group === groupB))
     // the numerator needs both totals, which the per-row frame doesn't
-    // have yet — broadcast the 1-row totals back onto the bounded
-    // frame; the aggregates are groupBy-less so even an EMPTY input
-    // yields exactly one (degenerate-zero) output row, twoSampleZ's
-    // contract
-    val tot = g.agg(
-      coalesce(sum(col("__na")), lit(0L)).as("__ta"),
-      coalesce(sum(col("__nb")), lit(0L)).as("__tb"))
-    val supNum = cum.crossJoin(broadcast(tot))
-      .agg(max(abs(big(col("__ca")) * big(col("__tb"))
-        - big(col("__cb")) * big(col("__ta"))).cast("decimal(38,0)")).as("__sup"))
+    // have yet — broadcast the 1-row totals back onto the bounded frame
+    val supNum = cum.crossJoin(broadcast(tot)).agg(max(ecdfGap).as("__sup"))
     val ta = col("__ta").cast("double")
     val tb = col("__tb").cast("double")
     val degenerate = col("__ta") === 0 || col("__tb") === 0 || col("__sup").isNull
@@ -952,47 +1061,21 @@ object Stats {
     * (single row or column level) yields chi2 = 0, v = 0.
     */
   def chiSquared(df: DataFrame, a: Column, b: Column): DataFrame = {
-    val cells = df.groupBy(a.as("__a"), b.as("__b"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint() // 4 consumers below; never rescan the corpus
-    // margins keep null as a real level: groupBy does, and the
-    // null-safe (<=>) joins below do — collect_set/count(DISTINCT)
-    // would silently drop it (the psiByGroup lesson)
-    val ra = cells.groupBy(col("__a")).agg(sum(col("__n")).as("__rt"))
-    val rb = cells.groupBy(col("__b")).agg(sum(col("__n")).as("__ct"))
-    val g = cells
-      .join(broadcast(ra.withColumnRenamed("__a", "__ka")),
-        col("__a") <=> col("__ka"))
-      .join(broadcast(rb.withColumnRenamed("__b", "__kb")),
-        col("__b") <=> col("__kb"))
-    // groupBy-less aggregates: one row each even on EMPTY input
-    // (twoSampleZ's degenerate contract), crossJoined back together
-    val tot = cells.agg(
-      coalesce(sum(col("__n")), lit(0L)).as("__tot"),
-      count(lit(1)).as("n_cells"))
-    val nr = ra.agg(count(lit(1)).as("__r"))
-    val nc = rb.agg(count(lit(1)).as("__c"))
-    val exp = col("__rt").cast("double") * col("__ct").cast("double") /
-      col("__tot").cast("double")
-    val term = (col("__n").cast("double") - exp) * (col("__n").cast("double") - exp) / exp
-    val chiSum = g.crossJoin(broadcast(tot.select(col("__tot"))))
-      .select((floor(term * 1e7) / 1e7).cast("decimal(20,7)").as("__t7"))
-      .agg(sum(col("__t7")).as("__chi2"))
-    val m = tot.crossJoin(nr).crossJoin(nc).crossJoin(chiSum)
-    // (0−1)·(0−1) = 1 on an empty table — pin dof to 0 there
-    val dof = when(col("__r") === 0 || col("__c") === 0, lit(0L))
-      .otherwise((col("__r") - 1) * (col("__c") - 1))
-    val degenerate = dof === 0 || col("__chi2").isNull
+    val m = contingency(df, a, b) { exp =>
+      val term = (col("__n").cast("double") - exp) * (col("__n").cast("double") - exp) / exp
+      (floor(term * 1e7) / 1e7).cast("decimal(20,7)")
+    }
+    val degenerate = contingencyDof === 0 || col("__s").isNull
     val mink = least(col("__r") - 1, col("__c") - 1).cast("double")
     m.select(
       col("__tot").as("n"),
       col("n_cells").as("n_cells"),
-      dof.as("dof"),
+      contingencyDof.as("dof"),
       when(degenerate, 0.0)
-        .otherwise(floor(col("__chi2").cast("double") * 1e4) / 1e4).as("chi2"),
+        .otherwise(floor(col("__s").cast("double") * 1e4) / 1e4).as("chi2"),
       when(degenerate, 0.0)
         .otherwise(floor(
-          sqrt(col("__chi2").cast("double") / (col("__tot").cast("double") * mink)) * 1e4)
+          sqrt(col("__s").cast("double") / (col("__tot").cast("double") * mink)) * 1e4)
           / 1e4).as("cramers_v"))
   }
 
@@ -1427,26 +1510,7 @@ object Stats {
     */
   def kruskalWallis(df: DataFrame, group: Column, value: Column,
       dp: Int = 6): DataFrame = {
-    require(dp >= 0 && dp <= 7, "dp in [0, 7]: the quantization bounds the rank frame")
-    val t = df.filter(value.isNotNull && group.isNotNull)
-      .select(group.cast("string").as("__g"),
-        round(value.cast("double"), dp).as("__v"))
-    val vg = t.groupBy("__v", "__g").agg(count(lit(1)).as("__nvg"))
-    val vt = vg.groupBy("__v").agg(sum(col("__nvg")).as("__t"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__v")).rowsBetween(Long.MinValue, -1)
-    def b13(c: Column): Column = c.cast("decimal(13,0)")
-    def b19(c: Column): Column = c.cast("decimal(19,0)")
-    val vtc = vt
-      .withColumn("__cum", coalesce(sum(col("__t")).over(w), lit(0L)))
-      .withColumn("__tc",
-        (b13(col("__t")) * b13(col("__t")) * b13(col("__t")) - col("__t"))
-          .cast("decimal(38,0)"))
-    val perGRaw = vg.join(vtc, "__v")
-      .groupBy("__g").agg(
-        sum(col("__nvg")).as("__n"),
-        sum((b19(col("__nvg")) * (b19(col("__cum")) * 2 + col("__t") + 1))
-          .cast("decimal(38,0)")).as("__r2"))
+    val (perGRaw, ties) = pooledRankSums(df, group, value, dp)
     // LOUD lane-bound guard (r14 advice): past r2 ≈ 10^15.5 the
     // r2²·10⁷ product exceeds 38 decimal digits (and past 10^19 the
     // b19 cast itself), where non-ANSI casts go NULL and sum()
@@ -1479,8 +1543,6 @@ object Stats {
       coalesce(sum(col("__n")), lit(0L)).as("__nn"),
       count(lit(1)).as("__k"),
       sum(termInt).as("__s"))
-    val ties = vtc.agg(
-      coalesce(sum(col("__tc")), lit(0).cast("decimal(38,0)")).as("__sumtc"))
     val nd = col("__nn").cast("double")
     val h = greatest(lit(0.0),
       lit(12.0) / (nd * (nd + 1.0)) * (col("__s").cast("double") / 1e7)
@@ -2372,19 +2434,18 @@ object Stats {
     val dec = seasonalDecompose(df, key, bucket, value, period)
       .filter(col("residual").isNotNull)
     def lane(c: Column): Column = round(c * 1e4).cast("long")
-    def big(c: Column): Column = c.cast("decimal(19,0)")
     val t = dec.select(col("key"),
       lane(col("residual")).as("__r"),
       lane(col("trend") + col("residual")).as("__tr"),
       lane(col("seasonal") + col("residual")).as("__sr"))
     val m = t.groupBy("key").agg(
       count(lit(1)).as("n"),
-      sum(big(col("__r"))).as("__r1"),
-      sum(big(col("__r")) * big(col("__r"))).as("__r2"),
-      sum(big(col("__tr"))).as("__t1"),
-      sum(big(col("__tr")) * big(col("__tr"))).as("__t2"),
-      sum(big(col("__sr"))).as("__s1"),
-      sum(big(col("__sr")) * big(col("__sr"))).as("__s2"))
+      sum(b19(col("__r"))).as("__r1"),
+      sum(b19(col("__r")) * b19(col("__r"))).as("__r2"),
+      sum(b19(col("__tr"))).as("__t1"),
+      sum(b19(col("__tr")) * b19(col("__tr"))).as("__t2"),
+      sum(b19(col("__sr"))).as("__s1"),
+      sum(b19(col("__sr")) * b19(col("__sr"))).as("__s2"))
     def d(c: Column): Column = c.cast("double")
     def vn(s1: String, s2: String): Column =
       d(col("n")) * d(col(s2)) - d(col(s1)) * d(col(s1))
@@ -3101,27 +3162,14 @@ object Stats {
       value: Column,
       inGroupA: Column,
       dp: Int = 6): DataFrame = {
-    require(dp >= 0 && dp <= 7, "dp in [0, 7]")
     val a = inGroupA.cast("boolean")
-    val g = df.filter(value.isNotNull && inGroupA.isNotNull)
-      .groupBy(round(value.cast("double"), dp).as("__v"))
-      .agg(
-        sum(when(a, 1L).otherwise(0L)).as("__na"),
-        sum(when(!a, 1L).otherwise(0L)).as("__nb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__v")).rowsBetween(Long.MinValue, -1)
-    def big(c: Column): Column = c.cast("decimal(19,0)")
-    val contrib = g
-      .withColumn("__cumb", coalesce(sum(col("__nb")).over(w), lit(0L)))
-      .select(
-        (big(col("__na")) * (big(col("__cumb")) * 2 + big(col("__nb"))))
-          .cast("decimal(38,0)").as("__u2"),
-        col("__na"), col("__nb"))
+    val g = quantizedSides(df.filter(value.isNotNull && inGroupA.isNotNull), value, dp, a, !a)
+    val contrib = withCumB(g).select(twiceU.as("__u2"), col("__na"), col("__nb"))
     val m = contrib.agg(
       coalesce(sum(col("__u2")), lit(0L).cast("decimal(38,0)")).as("__u2"),
       coalesce(sum(col("__na")), lit(0L)).as("__na"),
       coalesce(sum(col("__nb")), lit(0L)).as("__nb"))
-    val prod = (big(col("__na")) * big(col("__nb"))).cast("decimal(38,0)")
+    val prod = (b19(col("__na")) * b19(col("__nb"))).cast("decimal(38,0)")
     val degenerate = col("__na") === 0 || col("__nb") === 0
     val delta = when(degenerate, lit(0.0)).otherwise(
       Num.t4zero((col("__u2") - prod).cast("double") /
@@ -3158,30 +3206,18 @@ object Stats {
       groupA: String,
       groupB: String,
       dp: Int = 4): DataFrame = {
-    require(dp >= 0 && dp <= 7, "dp in [0, 7]")
-    val v = round(value.cast("double"), dp)
-    val g = df.filter(value.isNotNull && (group === groupA || group === groupB))
-      .groupBy(v.as("__v"))
-      .agg(
-        sum(when(group === groupA, 1L).otherwise(0L)).as("__na"),
-        sum(when(group === groupB, 1L).otherwise(0L)).as("__nb"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy("__v")
-    val cumW = w.rowsBetween(Long.MinValue, 0)
-    def big(c: Column): Column = c.cast("decimal(19,0)")
-    val cum = g
-      .withColumn("__ca", sum(col("__na")).over(cumW))
-      .withColumn("__cb", sum(col("__nb")).over(cumW))
-      .withColumn("__gap", lead(col("__v"), 1).over(w) - col("__v"))
-    val tot = g.agg(
-      coalesce(sum(col("__na")), lit(0L)).as("__ta"),
-      coalesce(sum(col("__nb")), lit(0L)).as("__tb"))
-    val num = abs(big(col("__ca")) * big(col("__tb"))
-      - big(col("__cb")) * big(col("__ta"))).cast("decimal(38,0)")
-    val terms = cum.filter(col("__gap").isNotNull)
+    val (cum, tot) = ecdf(quantizedSides(
+      df.filter(value.isNotNull && (group === groupA || group === groupB)),
+      value, dp, group === groupA, group === groupB))
+    // try_divide BY CONSTRUCTION: with one side empty these rows still
+    // evaluate (the degenerate guard is downstream) and NA·NB = 0
+    val terms = cum
+      .withColumn("__gap", lead(col("__v"), 1).over(Window.orderBy("__v")) - col("__v"))
+      .filter(col("__gap").isNotNull)
       .crossJoin(broadcast(tot))
       .select((floor(
-        num.cast("double") /
-          (col("__ta").cast("double") * col("__tb").cast("double")) *
+        try_divide(ecdfGap.cast("double"),
+          col("__ta").cast("double") * col("__tb").cast("double")) *
           col("__gap") * 1e9) / 1e9).cast("decimal(28,9)").as("__t"))
     val s = terms.agg(
       coalesce(sum(col("__t")), lit(0).cast("decimal(28,9)")).as("__s"))
@@ -3804,10 +3840,12 @@ object Stats {
         sum(Num.dec(value)).as("__s"),
         sum(Num.dec(value) * Num.dec(value)).as("__ss"))
     val ni = col("ni").cast("double")
-    // sample variance from exact moments: (n·Σx² − (Σx)²) / (n(n−1))
-    val s2 = (ni * col("__ss").cast("double") -
-      col("__s").cast("double") * col("__s").cast("double")) /
-      (ni * (ni - 1.0))
+    // sample variance from exact moments: (n·Σx² − (Σx)²) / (n(n−1)).
+    // try_divide BY CONSTRUCTION: codegen CSE hoists s2 out from behind
+    // the ni >= 2 guards, and a one-row group makes n(n−1) = 0
+    val s2 = try_divide(ni * col("__ss").cast("double") -
+      col("__s").cast("double") * col("__s").cast("double"),
+      ni * (ni - 1.0))
     val terms = g.select(
       col("ni"),
       (floor(coalesce(
@@ -3873,13 +3911,8 @@ object Stats {
         .as("__b"),
       (varX / nD).as("__sxxc"), // Sxx = Σ(x−x̄)² = varX/n
       (varX === 0.0).as("__flatx"))
-    val r = t.join(fit, Seq("key"))
-      .withColumn("__e0", col("__y") - col("__b") * col("__x"))
-    val mu = r.groupBy("key").agg(
-      (sum(Num.dec(col("__e0"))).cast("double") / count(lit(1))).as("__mu"))
-    r.join(mu, Seq("key"))
-      .withColumn("__e6",
-        ((col("__e0") - col("__mu")) * 1e6).cast("decimal(18,0)"))
+    demeanedMicro(t.join(fit, Seq("key"))
+      .withColumn("__e0", col("__y") - col("__b") * col("__x")), "__e0" -> "__e6")
   }
 
   /** C125: Durbin-Watson statistic per key — residual serial
@@ -3969,11 +4002,7 @@ object Stats {
     val t = df.select(key.as("key"), bucket.cast("long").as("bucket"),
         value.cast("double").as("__v"))
       .filter(col("__v").isNotNull)
-    val mu = t.groupBy("key").agg(
-      (sum(Num.dec(col("__v"))).cast("double") / count(lit(1))).as("__mu"))
-    val c = t.join(mu, Seq("key"))
-      .withColumn("__c6",
-        ((col("__v") - col("__mu")) * 1e6).cast("decimal(18,0)"))
+    val c = demeanedMicro(t, "__v" -> "__c6")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("key").orderBy("bucket")
       .rowsBetween(Long.MinValue, 0)
@@ -4339,41 +4368,21 @@ object Stats {
     * 4-dp floored; single-row/column tables report 0 + degenerate.
     */
   def gTest(df: DataFrame, a: Column, b: Column): DataFrame = {
-    val cells = df.groupBy(a.as("__a"), b.as("__b"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint()
-    val ra = cells.groupBy(col("__a")).agg(sum(col("__n")).as("__rt"))
-    val rb = cells.groupBy(col("__b")).agg(sum(col("__n")).as("__ct"))
-    val g = cells
-      .join(broadcast(ra.withColumnRenamed("__a", "__ka")),
-        col("__a") <=> col("__ka"))
-      .join(broadcast(rb.withColumnRenamed("__b", "__kb")),
-        col("__b") <=> col("__kb"))
-    val tot = cells.agg(
-      coalesce(sum(col("__n")), lit(0L)).as("__tot"),
-      count(lit(1)).as("n_cells"))
-    val nr = ra.agg(count(lit(1)).as("__r"))
-    val nc = rb.agg(count(lit(1)).as("__c"))
-    val exp = col("__rt").cast("double") * col("__ct").cast("double") /
-      col("__tot").cast("double")
-    val term = col("__n").cast("double") *
-      log(col("__n").cast("double") / exp)
-    val gSum = g.crossJoin(broadcast(tot.select(col("__tot"))))
-      .select(when(col("__n") > 0,
+    val m = contingency(df, a, b) { exp =>
+      val term = col("__n").cast("double") *
+        log(col("__n").cast("double") / exp)
+      when(col("__n") > 0,
         (floor(term * 1e7) / 1e7).cast("decimal(20,7)"))
-        .otherwise(lit(0).cast("decimal(20,7)")).as("__t7"))
-      .agg(sum(col("__t7")).as("__g2"))
-    val m = tot.crossJoin(nr).crossJoin(nc).crossJoin(gSum)
-    val dof = when(col("__r") === 0 || col("__c") === 0, lit(0L))
-      .otherwise((col("__r") - 1) * (col("__c") - 1))
-    val degenerate = dof === 0 || col("__g2").isNull
+        .otherwise(lit(0).cast("decimal(20,7)"))
+    }
+    val degenerate = contingencyDof === 0 || col("__s").isNull
     m.select(
       col("__tot").as("n"),
       col("n_cells").as("n_cells"),
-      dof.as("dof"),
+      contingencyDof.as("dof"),
       when(degenerate, 0.0)
         .otherwise(floor(greatest(lit(0.0),
-          col("__g2").cast("double") * 2.0) * 1e4) / 1e4).as("g_stat"),
+          col("__s").cast("double") * 2.0) * 1e4) / 1e4).as("g_stat"),
       degenerate.as("degenerate"))
   }
 
@@ -4471,32 +4480,17 @@ object Stats {
       groupB: String,
       dp: Int = 4,
       critical: Double = 0.461): DataFrame = {
-    require(dp >= 0 && dp <= 7, "dp in [0, 7]: the quantization bounds the ordered pass")
-    val v = round(value.cast("double"), dp)
-    val g = df.filter(value.isNotNull && (group === groupA || group === groupB))
-      .groupBy(v.as("__v"))
-      .agg(
-        sum(when(group === groupA, 1L).otherwise(0L)).as("__na"),
-        sum(when(group === groupB, 1L).otherwise(0L)).as("__nb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__v")).rowsBetween(Long.MinValue, 0)
-    def big(c: Column): Column = c.cast("decimal(19,0)")
-    val cum = g
-      .withColumn("__ca", sum(col("__na")).over(w))
-      .withColumn("__cb", sum(col("__nb")).over(w))
-    val tot = g.agg(
-      coalesce(sum(col("__na")), lit(0L)).as("__ta"),
-      coalesce(sum(col("__nb")), lit(0L)).as("__tb"))
+    val (cum, tot) = ecdf(quantizedSides(
+      df.filter(value.isNotNull && (group === groupA || group === groupB)),
+      value, dp, group === groupA, group === groupB))
     val ta = col("__ta").cast("double")
     val tb = col("__tb").cast("double")
     // gap as exact integer then ONE fixed-order double chain:
     // (d/ta/tb)²·weight, 9-dp truncated per value. try_divide BY
     // CONSTRUCTION: an empty side makes ta or tb 0 and these rows
     // still evaluate (the degenerate guard is downstream)
-    val dInt = abs(big(col("__ca")) * big(col("__tb"))
-      - big(col("__cb")) * big(col("__ta"))).cast("decimal(38,0)")
     val ratio = coalesce(
-      try_divide(try_divide(dInt.cast("double"), ta), tb), lit(0.0))
+      try_divide(try_divide(ecdfGap.cast("double"), ta), tb), lit(0.0))
     val term = (col("__na") + col("__nb")).cast("double") * ratio * ratio
     val sumT = cum.crossJoin(broadcast(tot))
       .select((floor(term * 1e9) / 1e9).cast("decimal(28,9)").as("__t9"))
@@ -4651,37 +4645,18 @@ object Stats {
     */
   def dunnTest(df: DataFrame, group: Column, value: Column,
       dp: Int = 6, critical: Double = 2.394): DataFrame = {
-    require(dp >= 0 && dp <= 7, "dp in [0, 7]: the quantization bounds the rank frame")
-    val t = df.filter(value.isNotNull && group.isNotNull)
-      .select(group.cast("string").as("__g"),
-        round(value.cast("double"), dp).as("__v"))
-    val vg = t.groupBy("__v", "__g").agg(count(lit(1)).as("__nvg"))
-    val vt = vg.groupBy("__v").agg(sum(col("__nvg")).as("__t"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("__v")).rowsBetween(Long.MinValue, -1)
-    def b13(c: Column): Column = c.cast("decimal(13,0)")
-    def b19(c: Column): Column = c.cast("decimal(19,0)")
-    val vtc = vt
-      .withColumn("__cum", coalesce(sum(col("__t")).over(w), lit(0L)))
-      .withColumn("__tc",
-        (b13(col("__t")) * b13(col("__t")) * b13(col("__t")) - col("__t"))
-          .cast("decimal(38,0)"))
     // __r2 = 2·Σranks per group (exact integer lanes, the KW recipe)
-    val perG = vg.join(vtc, "__v")
-      .groupBy("__g").agg(
-        sum(col("__nvg")).as("__n"),
-        sum((b19(col("__nvg")) * (b19(col("__cum")) * 2 + col("__t") + 1))
-          .cast("decimal(38,0)")).as("__r2"))
-    val ties = vtc.agg(
-      coalesce(sum(col("__tc")), lit(0).cast("decimal(38,0)")).as("__sumtc"))
+    val (perG, ties) = pooledRankSums(df, group, value, dp)
     val tot = perG.agg(coalesce(sum(col("__n")), lit(0L)).as("__nn"),
       count(lit(1)).as("__k"))
     val withS = tot.crossJoin(ties)
     val nn = col("__nn").cast("double")
     // S² in one fixed double order; ties saturating S² ≤ 0 (all
-    // values equal) flags degenerate downstream
+    // values equal) flags degenerate downstream. try_divide BY
+    // CONSTRUCTION: the broadcast side evaluates S² even when no pair
+    // exists, and N − 1 = 0 on a one-row input
     val s2 = (nn * (nn + 1.0) -
-      col("__sumtc").cast("double") / (nn - 1.0)) / 12.0
+      try_divide(col("__sumtc").cast("double"), nn - 1.0)) / 12.0
     val aSide = perG.select(col("__g").as("g_a"), col("__n").as("__na"),
       col("__r2").as("__r2a"))
     val bSide = perG.select(col("__g").as("g_b"), col("__n").as("__nb"),

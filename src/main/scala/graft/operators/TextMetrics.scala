@@ -1631,13 +1631,12 @@ object TextMetrics {
     // window here would single-partition-sort the whole vocabulary
     val top = termTot.orderBy(col("c_t").desc, col("w").asc).limit(k)
     val total = srcTot.agg(sum(col("st")).as("t_tot"))
-    def big(c: Column): Column = c.cast("decimal(19,0)")
     val grid = broadcast(top).crossJoin(srcTot)
       .join(tf, Seq("w", "src"), "left")
       .withColumn("ct", coalesce(col("ct"), lit(0L)))
       .crossJoin(broadcast(total))
       .select(col("w"), col("c_t"), col("t_tot"),
-        abs(big(col("st")) * big(col("c_t")) - big(col("ct")) * big(col("t_tot")))
+        abs(Num.b19(col("st")) * Num.b19(col("c_t")) - Num.b19(col("ct")) * Num.b19(col("t_tot")))
           .cast("decimal(38,0)").as("__num"))
     grid.groupBy("w", "c_t", "t_tot")
       .agg(sum(col("__num")).as("__s"))

@@ -36,6 +36,18 @@ package object operators {
 
     /** Exact 6-dp decimal reduction for order-independent sums. */
     def dec(c: Column): Column = c.cast("decimal(18,6)")
+
+    /** 19-digit integer factor of an exact product: two of them land
+      * at the 38-digit decimal width, where a 38×38 product would
+      * overflow the TYPE (not the value) in both engines.
+      */
+    def b19(c: Column): Column = c.cast("decimal(19,0)")
+
+    /** 13-digit integer factor for a CUBE (tie corrections t³ − t):
+      * 19³ would blow past the decimal space at the type level; a tie
+      * group ≤ 10^13 rows is the bound.
+      */
+    def b13(c: Column): Column = c.cast("decimal(13,0)")
   }
 
   /** Materialize several INDEPENDENT DataFrames as local checkpoints

@@ -105,6 +105,28 @@ class DiagnosticsSpec extends SparkSpec {
     assert(c.getAs[Boolean]("degenerate") && c.getAs[Double]("chi2") == 0.0)
   }
 
+  test("bartlett: a one-row group reports the degenerate row") {
+    // n(n−1) = 0 in that group's variance: flagged, not an ANSI throw
+    val one = Stats.bartlett(Seq(("a", 1.0)).toDF("g", "v"), col("g"), col("v")).collect()
+    assert(one.toSeq.map(_.toSeq) == Seq(Seq(1L, 1L, 0.0, 0L, false, true)))
+    val mixed = Stats.bartlett(Seq(("a", 1.0), ("b", 1.0), ("b", 2.0), ("b", 4.0))
+      .toDF("g", "v"), col("g"), col("v")).collect()
+    assert(mixed.toSeq.map(_.toSeq) == Seq(Seq(2L, 4L, 0.0, 1L, false, true)))
+  }
+
+  test("wasserstein1d: one empty side reports emd 0") {
+    // NA·NB = 0 under every interval term: the row must come back
+    val out = Stats.wasserstein1d(Seq(("a", 1.0), ("a", 2.0), ("a", 5.0)).toDF("g", "v"),
+      col("g"), col("v"), "a", "b").collect()
+    assert(out.toSeq.map(_.toSeq) == Seq(Seq(3L, 0L, 0.0)))
+  }
+
+  test("dunnTest: a one-row input has no pairs and does not throw") {
+    // N − 1 = 0 in the pooled rank variance
+    assert(Stats.dunnTest(Seq(("a", 1.0)).toDF("g", "v"), col("g"), col("v"))
+      .collect().isEmpty)
+  }
+
   test("durbinWatson: alternation reads high, smooth walk low, perfect fit degenerate") {
     val alt = (0 until 30).map(i =>
       ("a", i.toDouble, (if (i % 2 == 0) 1.0 else -1.0))).toDF("k", "x", "y")

@@ -7,16 +7,19 @@ import graft.operators.{Behavior, Bpe, Dedup, Eval, Sampling, Stats, TextMetrics
 
 /** Degenerate inputs the unit specs miss: every case builds one
   * operator over an empty input, a singleton, a one-group key,
-  * all-equal values or a short series, then forces the frame. Pass =
+  * all-equal values or a short series, then forces every row. Pass =
   * the frame materializes without throwing (an ANSI arithmetic error,
   * a raw NPE or an empty-reduce crash fails the case).
   */
 class EdgeInputsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** One named case: build the operator's frame and force it. */
+  /** One named case: build the operator's frame and force every
+    * column of every row — `count()` would let column pruning drop the
+    * output projection, where the degenerate divisions live.
+    */
   private def edge(name: String)(frame: => DataFrame): Unit =
-    test(name) { frame.count() }
+    test(name) { frame.collect() }
 
   // (g, b, v) series shapes; thunks, so no frame is built before its test
   private val series: Seq[(String, () => DataFrame)] = Seq(
@@ -172,6 +175,11 @@ class EdgeInputsSpec extends SparkSpec {
     Seq(("g", 1.0), ("g", 2.0)).toDF("g", "v"), col("g"), col("v")))
   edge("dunn all-tied")(Stats.dunnTest(
     Seq(("a", 5.0), ("b", 5.0)).toDF("g", "v"), col("g"), col("v")))
+  edge("dunn single")(Stats.dunnTest(Seq(("a", 1.0)).toDF("g", "v"), col("g"), col("v")))
+  edge("mannWhitney empty")(Stats.mannWhitney(
+    Seq.empty[(Double, Boolean)].toDF("v", "a"), col("v"), col("a")))
+  edge("mannWhitney single")(Stats.mannWhitney(
+    Seq((1.0, true)).toDF("v", "a"), col("v"), col("a")))
   edge("page empty")(Eval.pageTrend(
     Seq.empty[(String, Long, Double)].toDF("i", "j", "v"), col("i"), col("j"), col("v")))
   edge("page k2")(Eval.pageTrend(

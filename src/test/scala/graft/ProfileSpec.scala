@@ -494,6 +494,18 @@ class ProfileSpec extends SparkSpec {
     assert(!s3.getAs[Boolean]("significant"))
   }
 
+  test("mannWhitney: empty and one-row inputs report the degenerate row") {
+    import graft.operators.Stats
+    // n(n−1) = 0 in the tie correction: the row must come back, not an
+    // ANSI divide-by-zero
+    val empty = Stats.mannWhitney(Seq.empty[(Double, Boolean)].toDF("v", "a"),
+      col("v"), col("a")).collect()
+    assert(empty.toSeq.map(_.toSeq) == Seq(Seq(0L, 0L, 0.0, 0.0, false, true)))
+    val single = Stats.mannWhitney(Seq((1.0, true)).toDF("v", "a"),
+      col("v"), col("a")).collect()
+    assert(single.toSeq.map(_.toSeq) == Seq(Seq(1L, 0L, 0.0, 0.0, false, true)))
+  }
+
   test("gini: 0 on uniform masses, hand value on skew, 0 on a single group") {
     import graft.operators.Profile
     val uniform = Seq("a", "a", "b", "b", "c", "c").toDF("g")

@@ -184,4 +184,36 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(casts.isEmpty,
       s"a SQL builder casts instead of its Column wrapper:\n${casts.map(_._4).mkString("\n")}")
   }
+
+  test("operators spell the doubled mid-rank and the quantized two-sided frame only in their helpers") {
+    // a hand-copied rank lane is where the copies drift (one guards a
+    // division, the next does not): these spellings live in
+    // Stats.midRank2 and Stats.quantizedSides and nowhere else under
+    // operators/ (comments aside)
+    import scala.jdk.CollectionConverters._
+    val spellings = Seq(
+      "midRank2" -> """\* 2 \+ \S+ \+ 1\b""".r,
+      "quantizedSides" -> """groupBy\((?:round\(|v\.as\()""".r)
+    val decl = """\s*(?:private(?:\[\w+\])? )?def (\w+)\b.*""".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/operators"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val hits = for {
+      f <- files
+      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      code = l.split("//", 2)(0)
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      (helper, spelling) <- spellings
+      if spelling.findFirstIn(code).isDefined
+      owner = lines.take(i + 1).reverseIterator.collectFirst { case decl(n) => n }
+    } yield (helper, f.getFileName.toString, owner, s"$f:${i + 1}: ${l.trim}")
+    val offenders = hits.filterNot(h => h._2 == "Stats.scala" && h._3.contains(h._1))
+    assert(offenders.isEmpty,
+      s"a rank lane spelled outside its helper:\n${offenders.map(_._4).mkString("\n")}")
+    // and each helper really spells it, so a rewording cannot make
+    // this check vacuous
+    assert(spellings.forall { case (helper, _) => hits.exists(_._1 == helper) },
+      s"a helper spelling moved: ${hits.map(_._4)}")
+  }
 }
