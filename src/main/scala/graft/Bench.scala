@@ -74,11 +74,15 @@ object Bench {
         val t0 = System.nanoTime()
         val ok = try { exec(fn(spark, sfDir)); true } catch { case _: Throwable => false }
         val t = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        // per-query isolation: several operators localCheckpoint
-        // intermediates (cluster propagation, IVF k-means, incremental
-        // indexes); those blocks otherwise pile up and tax every LATER
-        // query with GC pressure — r03 measured q_epe_shape_b at 9.0 s
-        // mid-suite vs 1.0 s isolated. blocking = true: an async
+        // per-query isolation: several operators pin intermediates
+        // through `operators.materialize` (cluster propagation, IVF
+        // k-means, incremental indexes). A local seam is a persisted
+        // RDD, which `clearCache` does not see, so the unpersist loop
+        // below drops its blocks; a reliable seam (checkpoint dir set)
+        // leaves files there that neither call removes. Kept blocks
+        // pile up and tax every LATER query with GC pressure — r03
+        // measured q_epe_shape_b at 9.0 s mid-suite vs 1.0 s
+        // isolated. blocking = true: an async
         // unpersist races the next timed query and contaminates its
         // measurement (r7 judge measured up to 12× inflation on
         // q_cms_heavy from exactly this line)

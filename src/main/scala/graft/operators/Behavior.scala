@@ -72,7 +72,7 @@ object Behavior {
     // join rounds
     var reached = e.filter(col("et") === steps.head)
       .groupBy("u").agg(min(col("t")).as("t_r"))
-      .localCheckpoint()
+      .transform(materialize(_))
     var stepFrames = Vector((1, steps.head, reached))
     for ((s, i) <- steps.tail.zipWithIndex) {
       val within = maxGapNs
@@ -82,7 +82,7 @@ object Behavior {
         .join(reached.select(col("u"), col("t_r").as("t_prev")), "u")
         .filter(within)
         .groupBy("u").agg(min(col("t")).as("t_r"))
-        .localCheckpoint()
+        .transform(materialize(_))
       stepFrames :+= ((i + 2, s, reached))
     }
     val counts = stepFrames.map { case (i, s, df) =>
@@ -422,7 +422,7 @@ object Behavior {
     *
     * `sketchAbove` is the scale escape hatch: when set (default
     * Long.MaxValue = never, zero overhead on the exact path) the
-    * frame is localCheckpoint-ed, counted once, and a user count
+    * frame is pinned by `materialize`, counted once, and a user count
     * above the threshold routes scoring through
     * [[rfmScoresSketched]] — the exact ntile path is a
     * single-partition total-order sort, correct but a
@@ -436,7 +436,7 @@ object Behavior {
       else {
         // seam first so the routing count() doesn't recompute the
         // upstream aggregation a second time for the scoring pass
-        val p = per0.localCheckpoint()
+        val p = per0.transform(materialize(_))
         (p, p.count() > sketchAbove)
       }
     if (sketched) return rfmScoresSketched(per, periodNs)

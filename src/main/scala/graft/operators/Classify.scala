@@ -25,13 +25,13 @@ import graft.functions.tokens
   * `Similarity.trainIvfCentroids`, whose k×dim centroids are
   * config-sized by construction).
   *
-  * Per-round shape: docterm (tokenized ONCE, localCheckpoint'd) joins
+  * Per-round shape: docterm (tokenized ONCE, pinned by `materialize`) joins
   * the weight table on term [exchange 1: by term], partial-aggregates
   * per-doc logits [exchange 2: by id], residuals join back to docterm
   * [reuses the by-id exchange] and partial-aggregate per-term
   * gradients [by term], which full-outer-merge into the next weight
   * table. O(iters) rounds, each O(tokens) work — the pageRank cost
-  * model, with the same per-round `localCheckpoint` lineage cut.
+  * model, with the same per-round `materialize` lineage cut.
   *
   * Determinism (trainable twice → identical bytes): residuals round
   * to 7 dp and become exact decimals, so gradient sums are
@@ -91,14 +91,14 @@ object Classify {
     val docterm = tokRows.unionByName(
         tokRows.select(col("id"), col("y")).distinct()
           .select(col("id"), col("y"), lit(BiasTerm).as("term"), lit(1L).as("cnt")))
-      .localCheckpoint()
+      .transform(materialize(_))
     val n = docterm.filter(col("term") === BiasTerm).count()
     require(n > 0, "no trainable docs: every doc tokenized to zero tokens")
     val lrOverN = learningRate / n
     // all-zero init over the observed vocabulary (+ bias row)
     var weights = docterm.select(col("term")).distinct()
       .withColumn("w", lit(BigDecimal(0)).cast("decimal(20,10)"))
-      .localCheckpoint()
+      .transform(materialize(_))
     // Model-vs-corpus join sides (r17, guide §3.1): each GD round joins
     // the big (id, term, cnt) nonzeros frame against the WEIGHTS (one
     // row per vocab term) and against the RESIDUALS (one row per doc).
@@ -132,7 +132,7 @@ object Classify {
           round(col("w").cast("double") * (if (decay < 1.0) decay else 1.0)
               - lit(lrOverN) * coalesce(col("__g"), lit(0)).cast("double"), 10)
             .cast("decimal(20,10)").as("w"))
-        .localCheckpoint()
+        .transform(materialize(_))
     }
     weights.select(col("term"), col("w").cast("double").as("weight"))
   }

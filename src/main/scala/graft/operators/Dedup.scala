@@ -118,7 +118,7 @@ object Dedup {
       corpusIndex: DataFrame,
       corpusFp: Column,
       fpp: Double = 0.01): DataFrame = {
-    val idx = corpusIndex.select(corpusFp.as("fp")).localCheckpoint()
+    val idx = corpusIndex.select(corpusFp.as("fp")).transform(materialize(_))
     val n = math.max(idx.count(), 1000L)
     // the sketch keys on xxhash64 of the fp string (BloomFilter's long
     // path); the probe hashes identically
@@ -127,7 +127,7 @@ object Dedup {
     // filters below would otherwise re-run the whole upstream shard
     // pipeline + fingerprint window apiece (the very cost exactKeep's
     // window form exists to avoid)
-    val kept = exactKeep(shard, text, id).localCheckpoint()
+    val kept = exactKeep(shard, text, id).transform(materialize(_))
     val definitelyNew = kept.filter(
       !graft.functions.BloomMightContain.mightContain(xxhash64(md5(text)), bloom))
     val needConfirm = kept.filter(
@@ -948,7 +948,7 @@ object Dedup {
     * instead of by cap.
     *
     * Shape at scale: one (id, shingle-hash) frame materialized once
-    * (`localCheckpoint` — five consumers) → tiny df aggregate joined
+    * (`materialize` — five consumers) → tiny df aggregate joined
     * back → per-doc ranking window (partitioned by id, never global)
     * → candidate equi-join on prefix hashes with the Jaccard length
     * bound (t·|A| ≤ |B| ∧ t·|B| ≤ |A|) pruning before verification →
@@ -967,7 +967,7 @@ object Dedup {
     requireIntegralId(projected.schema("id").dataType,
       "prefixFilterJaccard", "map ids through a long surrogate first")
     val base = hashedShingles(projected.select(col("id").cast("long").as("id"), col("__text")), n)
-      .localCheckpoint()
+      .transform(materialize(_))
     val sizes = base.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val dfreq = base.groupBy("sh").agg(count(lit(1)).as("df"))
     val wId = org.apache.spark.sql.expressions.Window
@@ -1179,7 +1179,7 @@ object Dedup {
     // one materialization: training, assignment and the pair join all
     // read the projected (id, v) blocks instead of re-deriving the
     // input (often a union + perturbation/cast projection) per job
-    val vecs = df.select(id.as("id"), vec.as("v")).localCheckpoint()
+    val vecs = df.select(id.as("id"), vec.as("v")).transform(materialize(_))
     // fail FAST on non-integral ids: the cluster pipeline labels nodes
     // with long ids (connectedComponents), and a string/UUID id would
     // cast to null — the anti-join below would then match nothing and
@@ -1219,7 +1219,7 @@ object Dedup {
     * each round takes the min label across itself and its neighbors;
     * fixpoint in O(component diameter) rounds. Each round is one
     * equi-join + partial-aggregated groupBy (no cartesian work), and
-    * `localCheckpoint` truncates lineage so round N's plan does not
+    * `materialize` truncates lineage so round N's plan does not
     * replay rounds 1..N-1 — the standard iterative-algorithm shape on
     * Spark. Near-dup graphs have tiny diameters (clusters are
     * renditions of one document), so rounds stay single-digit; the
@@ -1253,11 +1253,11 @@ object Dedup {
     // and whole-stage-codegen-compiled twice on the driver, stored
     // twice in the checkpoint blocks. Deriving the swapped direction
     // from the checkpointed single copy is a trivial projection.
-    val e0c = e0.localCheckpoint(false)
+    val e0c = e0.transform(materialize(_, eager = false))
     val sym = e0c.unionByName(e0c.select(col("b").as("a"), col("a").as("b")))
     var labels = sym.select(col("a").as("id")).distinct()
       .withColumn("comp", col("id"))
-      .localCheckpoint(false)
+      .transform(materialize(_, eager = false))
     // FRONTIER propagation (r17, guide §2.3/§2.4 — process only what
     // can still change): comp_i(v) = min(comp_{i-1}(v), min over
     // neighbors u of comp_{i-1}(u)); a neighbor whose label did NOT
@@ -1278,7 +1278,7 @@ object Dedup {
         .join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("comp"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp_new"))
-        .localCheckpoint(false) // materialized by the count below — one job per round
+        .transform(materialize(_, eager = false)) // materialized by the count below — one job per round
       frontier = updated.filter(col("comp_new") < col("comp"))
         .select(col("id"), col("comp_new").as("comp"))
       changed = frontier.count()
@@ -1305,7 +1305,7 @@ object Dedup {
     *
     * Each round is two keyed join+aggregate passes over the edge list
     * (same shuffle shape as one min-label round — no cartesian work,
-    * `localCheckpoint` truncating lineage per round):
+    * `materialize` truncating lineage per round):
     *  - large-star: every node attaches its strictly-LARGER neighbors
     *    to the minimum of its neighborhood (incl. itself) — long
     *    tails fold toward minima without growing any star's depth;
@@ -1332,7 +1332,7 @@ object Dedup {
     // eager = false: the edgeSig agg right below materializes the
     // checkpoint in its own job (see the minlabel twin for the rule)
     var edges = canon(raw.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"))).localCheckpoint(false)
+      col("b").cast("long").as("b"))).transform(materialize(_, eager = false))
     // (count, xor-of-row-hash) edge-set signature: one partial-agg
     // scan instead of the old count()+exceptAll() pair per round. The
     // edge list is distinct by canon(), so differing signatures PROVE
@@ -1366,7 +1366,7 @@ object Dedup {
       val next = canon(
         withM.select(col("v").as("a"), col("m").as("b"))
           .unionByName(withM.select(col("u").as("a"), col("m").as("b"))))
-        .localCheckpoint(false) // materialized by edgeSig below — one job per round
+        .transform(materialize(_, eager = false)) // materialized by edgeSig below — one job per round
       // fixpoint test: signature mismatch proves non-convergence with
       // one agg scan; the exceptAll confirmation runs only on a match
       val nSig = edgeSig(next)
@@ -1479,7 +1479,7 @@ object Dedup {
     // The saturation guard lives on a SEPARATE 1-row branch cross-
     // joined onto the result, NOT as per-row asserts inside the join
     // inputs: entangling the guard lineage with the self-join either
-    // recomputes it per side or (localCheckpoint-seamed) breaks
+    // recomputes it per side or (`materialize`-seamed) breaks
     // whole-stage codegen for the levenshtein kernel — measured 7.6x
     // / 12x on the 10x replica. The 1-row broadcast keeps the hot
     // path byte-identical to the unguarded plan; dropping the guard
@@ -1640,7 +1640,7 @@ object Dedup {
     * a duplicated suffix-array interval of length ≥ k is witnessed by
     * its duplicated k-gram prefixes).
     *
-    * Shape at scale: one tokenize pass (localCheckpoint'd for its two
+    * Shape at scale: one tokenize pass (pinned by `materialize` for its two
     * consumers), one shingle-partitioned window (count + first-
     * occurrence rank — never global; partition size = occurrences of
     * one shingle), position expansion (×k) paid ONLY on loser spans —
@@ -1660,7 +1660,7 @@ object Dedup {
     require(k >= 2, "k must be >= 2: unigram spans would strip every repeated word")
     val tk = graft.operators.scaleOut(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), tokens(col("__text")).as("tk"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val spans = tk.filter(size(col("tk")) >= k)
       .select(col("id"), posexplode(shingles(col("tk"), k)).as(Seq("start", "shingle")))
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))
@@ -1746,7 +1746,7 @@ object Dedup {
       n: Int): (DataFrame, DataFrame) = {
     val tk = scaleOut(docs.select(id.as("id"), text.as("__text")))
       .select(col("id"), tokens(col("__text")).as("tk"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val docSh = tk.filter(size(col("tk")) >= n)
       .select(col("id"), posexplode(shingles(col("tk"), n)).as(Seq("start", "s")))
       .select(col("id"), col("start"), xxhash64(col("s")).as("sh"))
@@ -1957,7 +1957,7 @@ object Dedup {
     * all of them into the semi-join. Only true hits + the fpp share of
     * misses reach the confirm-join.
     *
-    * The probe shingle set is localCheckpoint'd: it feeds two jobs
+    * The probe shingle set is pinned by `materialize`: it feeds two jobs
     * (sketch build + confirm join) and is benchmark-suite-sized by
     * assumption — the reason a bloom pre-filter wins in the first
     * place.
@@ -1999,7 +1999,7 @@ object Dedup {
       .select(explode(array_distinct(shingles(tokens(col("__text")), n))).as("s"))
       .select(xxhash64(col("s")).as("sh"))
       .distinct()
-      .localCheckpoint()
+      .transform(materialize(_))
     val nProbe = math.max(probeSh.count(), 1000L)
     val bloom = probeSh.stat.bloomFilter("sh", nProbe, fpp)
     val tot = docSh.groupBy("id").agg(count(lit(1)).as("n_shingles"))
@@ -2061,7 +2061,7 @@ object Dedup {
     * instead of surviving into cluster formation.
     *
     * Shape at scale: candidates are materialized once
-    * (`localCheckpoint` — three consumers), only candidate DOCUMENTS
+    * (`materialize` — three consumers), only candidate DOCUMENTS
     * are re-shingled (semi-join first: at web scale candidates are a
     * vanishing fraction of the corpus), and the exact Jaccard is
     * array_intersect/array_union over each pair's distinct shingle
@@ -2085,7 +2085,7 @@ object Dedup {
     val base = df.select(id.as("id"), text.as("__text"))
     val cand = minHashLSH(base, col("id"), col("__text"),
       numHashes, bands, shingleSize, estThreshold, maxBucket, seed)
-      .localCheckpoint()
+      .transform(materialize(_))
     val candIds = cand.select(col("id_a").as("id"))
       .unionByName(cand.select(col("id_b").as("id")))
       .distinct()
@@ -2321,7 +2321,7 @@ object Dedup {
     * df), covered positions by a bounded explode (n per hit), rebuild
     * by the maskContamination position-anti-join — no window over
     * corpus rows, no driver data. The tokens frame feeds three
-    * consumers and is localCheckpoint-ed once.
+    * consumers and is pinned by `materialize` once.
     *
     * Returns one row per doc: (doc_id, n_tokens, n_dropped,
     * drop_ratio, trimmed_text) — drop_ratio 4-dp floored; docs
@@ -2338,7 +2338,7 @@ object Dedup {
     val tk = scaleOut(docs.select(id.as("doc_id"), text.as("__text")))
       .select(col("doc_id"),
         graft.functions.tokens(col("__text")).as("tk"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val occ = tk.filter(size(col("tk")) >= n)
       .select(col("doc_id"),
         posexplode(graft.functions.shingles(col("tk"), n))

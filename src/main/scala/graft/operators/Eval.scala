@@ -195,7 +195,7 @@ object Eval {
     val t = df.select(labelA.cast("string").as("__la"),
       labelB.cast("string").as("__lb"))
     val cells = t.groupBy("__la", "__lb").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // three consumers: margins × 2 + diagonal
+      .transform(materialize(_)) // three consumers: margins × 2 + diagonal
     val rows = cells.groupBy("__la").agg(sum(col("cnt")).as("row_n"))
     val cols = cells.groupBy("__lb").agg(sum(col("cnt")).as("col_n"))
     val chance = rows.join(cols, rows("__la") <=> cols("__lb"))
@@ -247,12 +247,12 @@ object Eval {
         category.cast("string").as("__c"))
       .where(col("__i").isNotNull && col("__c").isNotNull)
     val cells = t.groupBy("__i", "__c").agg(count(lit(1)).as("nij"))
-      .localCheckpoint() // two consumers: per-item stats + marginals
+      .transform(materialize(_)) // two consumers: per-item stats + marginals
     val items = cells.groupBy("__i").agg(
         sum(col("nij")).as("ni"),
         sum(col("nij") * col("nij")).as("ssq"))
       .where(col("ni") >= 2)
-      .localCheckpoint() // two consumers: P̄ + the retained-item filter
+      .transform(materialize(_)) // two consumers: P̄ + the retained-item filter
     val pbar = items.select(
         ((col("ssq") - col("ni")).cast("double") /
           (col("ni") * (col("ni") - lit(1L))).cast("double")).as("pi"))
@@ -383,12 +383,12 @@ object Eval {
         category.cast("string").as("__c"))
       .where(col("__i").isNotNull && col("__c").isNotNull)
     val cells = t.groupBy("__i", "__c").agg(count(lit(1)).as("nic"))
-      .localCheckpoint() // two consumers: per-item mass + margins
+      .transform(materialize(_)) // two consumers: per-item mass + margins
     val items = cells.groupBy("__i").agg(
         sum(col("nic")).as("ni"),
         sum(col("nic") * (col("nic") - lit(1L))).as("diagNum"))
       .where(col("ni") >= 2)
-      .localCheckpoint() // two consumers: A lanes + the pairable filter
+      .transform(materialize(_)) // two consumers: A lanes + the pairable filter
     val aAgg = items.select(
         ((col("diagNum")).cast("double") / (col("ni") - lit(1L)).cast("double"))
           .as("ai"))
@@ -441,7 +441,7 @@ object Eval {
         predicted.cast("string").as("__p"))
       .where(col("__y").isNotNull && col("__p").isNotNull)
     val cells = t.groupBy("__y", "__p").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // three consumers: truth/pred margins + total
+      .transform(materialize(_)) // three consumers: truth/pred margins + total
     val byTrue = cells.groupBy("__y").agg(
       sum(col("cnt")).as("n_true"),
       coalesce(sum(when(col("__y") === col("__p"), col("cnt"))), lit(0L))
@@ -464,7 +464,7 @@ object Eval {
         when(col("__pr") + col("__rc") === 0d, lit(0.0))
           .otherwise(lit(2.0) * col("__pr") * col("__rc")
             / (col("__pr") + col("__rc")))))
-      .localCheckpoint() // two consumers: report rows + macro lanes
+      .transform(materialize(_)) // two consumers: report rows + macro lanes
     def lane(c: Column): Column =
       (floor(coalesce(c, lit(0.0)) * 1e7) / 1e7).cast("decimal(18,7)")
     val summary = per.agg(

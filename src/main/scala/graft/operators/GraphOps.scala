@@ -14,7 +14,7 @@ object GraphOps {
     * Per round: contributions `r(u)/outdeg(u)` flow along edges, each
     * node collects `(1-d)/N + d·Σ contrib`. One equi-join + one
     * partial-aggregated groupBy per round — never a product — with
-    * `localCheckpoint` truncating lineage exactly like
+    * `materialize` truncating lineage exactly like
     * `connectedComponents` (the standard iterative shape on Spark).
     * Mass from sink nodes (no out-edges) leaks rather than
     * redistributing — the common simplification; ranks still order
@@ -39,17 +39,17 @@ object GraphOps {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(src.cast("long").as("src"), dst.cast("long").as("dst"))
       .distinct()
-      .localCheckpoint()
+      .transform(materialize(_))
     val nodes = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v")))
       .distinct()
-      .localCheckpoint()
+      .transform(materialize(_))
     val nTotal = nodes.agg(count(lit(1)).as("cnt"))
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // 7-dp truncation (see determinism contract above)
     var ranks = nodes.crossJoin(broadcast(nTotal))
       .select(col("v"), Num.t7floor(lit(1.0) / col("cnt")).as("r"))
-      .localCheckpoint()
+      .transform(materialize(_))
     for (_ <- 1 to iterations) {
       val inbound = e
         .join(ranks.withColumnRenamed("v", "src"), "src")
@@ -63,7 +63,7 @@ object GraphOps {
             lit(1.0 - damping) / col("cnt") +
               lit(damping) * coalesce(col("m").cast("double"), lit(0.0)))
             .as("r"))
-        .localCheckpoint()
+        .transform(materialize(_))
     }
     ranks.select(col("v").as("node"), col("r").as("rank"))
   }

@@ -74,29 +74,29 @@ object Preference {
     * contract: per-pair terms TRUNCATED at 7 dp, summed over exact
     * decimals, each round's rating truncated at 7 dp (floor of an
     * identical IEEE double is repr-independent; round() is not).
-    * `localCheckpoint` truncates iteration lineage.
+    * `materialize` truncates iteration lineage.
     */
   def bradleyTerry(games: DataFrame, winner: Column, loser: Column,
       iterations: Int = 3): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val g = games.select(winner.cast("long").as("w"), loser.cast("long").as("l"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val players = g.select(col("w").as("player"))
       .unionByName(g.select(col("l").as("player")))
       .distinct()
-      .localCheckpoint()
+      .transform(materialize(_))
     val k = players.agg(count(lit(1)).as("cnt"))
     val wins = g.groupBy(col("w").as("player")).agg(count(lit(1)).as("wins"))
     val base = players.join(wins, Seq("player"), "left")
       .select(col("player"),
         (coalesce(col("wins"), lit(0L)) + lit(0.5)).as("wsm"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val pairs = g
       .select(least(col("w"), col("l")).as("a"), greatest(col("w"), col("l")).as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("n"))
     val e = pairs.select(col("a").as("i"), col("b").as("j"), col("n"))
       .unionByName(pairs.select(col("b").as("i"), col("a").as("j"), col("n")))
-      .localCheckpoint()
+      .transform(materialize(_))
     var r = players.select(col("player"), lit(1.0).as("r"))
     for (_ <- 1 to iterations) {
       val ri = r.select(col("player").as("i"), col("r").as("ri"))
@@ -111,7 +111,7 @@ object Preference {
       r = raw.crossJoin(broadcast(tot)).crossJoin(broadcast(k))
         .select(col("player"),
           Num.t7floor(col("r") * col("cnt") / col("s").cast("double")).as("r"))
-        .localCheckpoint()
+        .transform(materialize(_))
     }
     r.select(col("player"), col("r").as("rating"))
   }

@@ -295,7 +295,7 @@ object Profile {
     // join onto the COMPLETE grid: histogram omits empty bins, but a
     // bin empty on both sides still carries a nonzero smoothed term
     // when the totals differ — dropping it would understate the
-    // documented sum over all k bins. localCheckpoint: the <=nBins-row
+    // documented sum over all k bins. materialize: the <=nBins-row
     // frame feeds the totals AND the final sum; without it both
     // snapshot scans would run twice.
     val grid = spark.range(nBins)
@@ -303,7 +303,7 @@ object Profile {
     val joined = grid
       .join(hb, Seq("bin"), "left").join(ha, Seq("bin"), "left")
       .select(coalesce(col("nb"), lit(0L)).as("nb"), coalesce(col("na"), lit(0L)).as("na"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val tot = joined.agg(sum(col("nb")).as("tb"), sum(col("na")).as("ta"))
     val k = lit(nBins.toDouble)
     val p = (col("nb") + 0.5) / (col("tb") + lit(0.5) * k)
@@ -370,7 +370,7 @@ object Profile {
         col("grp") <=> col("__ag") && col("bin") === col("__ab"), "left")
       .select(col("grp"),
         coalesce(col("nb"), lit(0L)).as("nb"), coalesce(col("na"), lit(0L)).as("na"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val tot = joined.groupBy("grp")
       .agg(sum(col("nb")).as("tb"), sum(col("na")).as("ta"))
     val k = lit(nBins.toDouble)

@@ -156,7 +156,7 @@ object Similarity {
     val mean = meanOf(v, "__v", d)
     val mLit = array(mean.map(lit): _*)
     val c = v.select(zip_with(col("__v"), mLit, (a, b) => a - b).as("__c"))
-      .localCheckpoint() // consumed once per round + once for moments
+      .transform(materialize(_)) // consumed once per round + once for moments
     val (w, eigen) = powerIterate(c, d, rounds)
     val totals = c.agg(
       sum(lane7(graft.functions.dot(col("__c"), col("__c")))).as("ss"),
@@ -197,7 +197,7 @@ object Similarity {
     val mLit = array(mean.map(lit): _*)
     var work = base.select(col("id"),
       zip_with(col("__v"), mLit, (a, b) => a - b).as("__c"))
-      .localCheckpoint()
+      .transform(materialize(_))
     for (_ <- 1 to nComponents) {
       // deflated frames stay centered, so the core runs directly —
       // no redundant mean pass or extra centered replica per round
@@ -211,7 +211,7 @@ object Similarity {
           graft.functions.dot(col("__c"), uLit).as("__p"))
         .select(col("id"),
           zip_with(col("__c"), uLit, (a, b) => a - b * col("__p")).as("__c"))
-        .localCheckpoint()
+        .transform(materialize(_))
     }
     // removed_share against the ORIGINAL (uncentered) squared norm;
     // negative means centering GREW this vector's norm (a vector far
@@ -473,7 +473,7 @@ object Similarity {
     * FAISS recipe at scale: a coarse quantizer needs only enough
     * vectors per centroid to estimate means, so at 100 TB you train on
     * a sliver and pay the full-corpus scan ONCE for assignment, not
-    * once per Lloyd round. The training set is localCheckpoint'd so the
+    * once per Lloyd round. The training set is pinned by `materialize` so the
     * rounds iterate over materialized blocks, not a re-decoded parquet
     * scan.
     */
@@ -487,7 +487,7 @@ object Similarity {
     require(trainFraction > 0 && trainFraction <= 1, "trainFraction in (0,1]")
     val all = corpus.select(id.as("id"), vec.as("v"))
     val base = (if (trainFraction < 1.0) Sampling.hashSample(all, col("id"), trainFraction)
-                else all).localCheckpoint()
+                else all).transform(materialize(_))
     var centroids = base.groupBy(col("v")).agg(min(col("id")).as("id"))
       .orderBy(xxhash64(col("id")).asc, col("id").asc).limit(nCentroids)
       .select(col("v")).collect()
@@ -594,7 +594,7 @@ object Similarity {
       (floor(col("__a") * 1e7) / 1e7).cast("decimal(18,7)").as("__ad"))
     val perCluster = si.groupBy("cluster").agg(count(lit(1)).as("n"),
         sum(col("__sd")).as("__ssum"), sum(col("__ad")).as("__asum"))
-      .localCheckpoint() // two consumers: the DB pair join + the report
+      .transform(materialize(_)) // two consumers: the DB pair join + the report
     val withSig = perCluster
       .join(broadcast(centroidsToDf(spark, centroids)), "cluster")
       .select(col("cluster"),
@@ -825,7 +825,7 @@ object Similarity {
     val sliced = base.select(col("id"), explode(array((0 until m).map(s =>
         struct(lit(s).as("sub"), slice(col("v"), s * d + 1, d).as("sv"))): _*)).as("e"))
       .select(col("id"), col("e.sub").as("sub"), col("e.sv").as("sv"))
-      .localCheckpoint()
+      .transform(materialize(_))
     // seeded init: the k distinct vectors with the lowest
     // xxhash64(min id), sliced per subspace (hash-ordered over the
     // distinct pool for the same geometry-decorrelation and
@@ -1118,7 +1118,7 @@ object Similarity {
     * together: anti-join the selected set, one bounded join to the
     * per-query selected vectors for max-sim (≤ N×k rows per query),
     * one window pick — so cost is k plans of candidate-frame size,
-    * independent of corpus scale, with a localCheckpoint lineage cut
+    * independent of corpus scale, with a `materialize` lineage cut
     * per round (pageRank contract).
     *
     * Determinism: cosine rounds to 6 dp before the max; ties break on
@@ -1139,7 +1139,7 @@ object Similarity {
     val cand = candidates.select(queryId.as("query_id"), docId.as("doc_id"),
         relevance.cast("double").as("rel"),
         transform(vec, x => x.cast("double")).as("__v"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("__score").desc, col("doc_id").asc)
     var selected = cand
@@ -1147,7 +1147,7 @@ object Similarity {
       .withColumn("__rk", row_number().over(w)).filter(col("__rk") === 1)
       .select(col("query_id"), col("doc_id"), col("rel"), col("__v"),
         lit(1).as("mmr_rank"), round(col("__score"), 6).as("mmr_score"))
-      .localCheckpoint()
+      .transform(materialize(_))
     for (r <- 2 to k) {
       val remaining = cand.join(
         selected.select("query_id", "doc_id"), Seq("query_id", "doc_id"), "left_anti")
@@ -1161,7 +1161,7 @@ object Similarity {
         .withColumn("__rk", row_number().over(w)).filter(col("__rk") === 1)
         .select(col("query_id"), col("doc_id"), col("rel"), col("__v"),
           lit(r).as("mmr_rank"), round(col("__score"), 6).as("mmr_score"))
-      selected = selected.unionByName(pick).localCheckpoint()
+      selected = selected.unionByName(pick).transform(materialize(_))
     }
     selected.select(col("query_id"), col("mmr_rank"), col("doc_id"),
       col("rel"), col("mmr_score"))
@@ -1233,7 +1233,7 @@ object Similarity {
     * more picks would re-pick coincident vectors forever).
     *
     * Shape at scale: k passes, each ONE codegen'd projection updating
-    * a single running double per row (localCheckpoint-materialized so
+    * a single running double per row (pinned by `materialize` so
     * round r never replays rounds 1..r−1) + a distributed top-1
     * (partial TakeOrdered per partition, one row to the driver). The
     * selected centers are k rows of driver metadata (the IVF-centroid
@@ -1273,14 +1273,14 @@ object Similarity {
     picks += org.apache.spark.sql.Row(0, seedRows.head.get(0), null)
     var cur = base
       .withColumn("__dm", lit(Double.PositiveInfinity))
-      .localCheckpoint()
+      .transform(materialize(_))
     var r = 1
     var exhausted = false
     while (r < k && !exhausted) {
       val cn = center.map(x => x * x).sum
       cur = cur.withColumn("__dm", least(col("__dm"),
           lit(cn) - dot(col("v"), array(center.map(lit): _*)) * 2d + col("__vv")))
-        .localCheckpoint()
+        .transform(materialize(_))
       val top = cur.orderBy(col("__dm").desc, col("id").asc).limit(1)
         .select(col("id"), col("v"), col("__dm")).collect()
       if (top.isEmpty || top.head.getDouble(2) <= 0.0) exhausted = true

@@ -154,7 +154,7 @@ object Stats {
       cellTerm: Column => Column): DataFrame = {
     val cells = df.groupBy(a.as("__a"), b.as("__b"))
       .agg(count(lit(1)).as("__n"))
-      .localCheckpoint() // 4 consumers below; never rescan the corpus
+      .transform(materialize(_)) // 4 consumers below; never rescan the corpus
     val ra = cells.groupBy(col("__a")).agg(sum(col("__n")).as("__rt"))
     val rb = cells.groupBy(col("__b")).agg(sum(col("__n")).as("__ct"))
     val g = cells
@@ -750,7 +750,7 @@ object Stats {
     val t = df.select(key.cast("string").as("key"),
         orderedGroup.cast("double").as("__x"), value.cast("double").as("__y"))
       .filter(col("key").isNotNull && col("__x").isNotNull && col("__y").isNotNull)
-      .localCheckpoint()
+      .transform(materialize(_))
     val stats = kendallStatsPerKey(t)
     def tieMoments(c: String, tag: String): DataFrame =
       t.groupBy(col("key"), col(c)).agg(count(lit(1)).as("__t"))
@@ -1913,7 +1913,7 @@ object Stats {
     * (key, lo, hi) segment frame (segments per key ≤ 2^(r−1), so the
     * fan-out is bounded by 2^maxDepth — a constant) + two keyed
     * windows (running prefix, argmax) — never a per-split pass; the
-    * row frame localCheckpoints ONCE, the segment frame each round
+    * row frame is pinned by `materialize` ONCE, the segment frame each round
     * (2^maxDepth plan growth otherwise). Determinism: the
     * bestChangepoint contract verbatim — 1e6 micro-lanes quantized
     * once, exact long prefix/total sums per segment, gain ONE double
@@ -1938,7 +1938,7 @@ object Stats {
     val wk = org.apache.spark.sql.expressions.Window
       .partitionBy("key").orderBy("__x")
     val rows = t.withColumn("__k", row_number().over(wk).cast("long"))
-      .localCheckpoint()
+      .transform(materialize(_))
     def d(c: Column): Column = c.cast("double")
     var segs = rows.groupBy("key")
       .agg((max(col("__k")) + 1L).as("hi"))
@@ -1972,7 +1972,7 @@ object Stats {
           (d(col("__s") - col("__p")) / d(col("__m") - col("__j")) / 1e6).as("mean_right"),
           Num.t4zero(col("__gain") / 1e12).as("gain"),
           lit(depth).as("depth"))
-        .localCheckpoint()
+        .transform(materialize(_))
       cuts ::= best
       if (depth < maxDepth) {
         val bSeg = best.select(col("key").as("__bk"), col("lo").as("__blo"),
@@ -1982,7 +1982,7 @@ object Stats {
         segs = unsplit
           .unionByName(best.select(col("key"), col("lo"), (col("__cut") + 1L).as("hi")))
           .unionByName(best.select(col("key"), (col("__cut") + 1L).as("lo"), col("hi")))
-          .localCheckpoint()
+          .transform(materialize(_))
       }
     }
     val all = cuts.reduce(_.unionByName(_))
@@ -2018,7 +2018,7 @@ object Stats {
     val t = df.select(key.cast("string").as("key"), order.cast("long").as("__x"),
         value.cast("double").as("__v"))
       .filter(col("key").isNotNull && col("__x").isNotNull && col("__v").isNotNull)
-      .localCheckpoint()
+      .transform(materialize(_))
     val nPer = t.groupBy("key").agg(count(lit(1)).as("n"))
     // assert_true INSIDE a filter so column pruning can't delete the
     // guard; NULL (the pass value) keeps every row
@@ -2034,7 +2034,7 @@ object Stats {
       .select(col("key"),
         try_divide(col("__v2") - col("__v"),
           (col("__x2") - col("__x")).cast("double")).as("__slope"))
-    // localCheckpoint the per-key PICKED values (r17): slope appears
+    // materialize the per-key PICKED values (r17): slope appears
     // in the intercept branch AND twice in the final select — without
     // the seam each appearance re-instantiates the whole quadratic
     // pair join + rank window. The checkpointed frames are one row
@@ -2042,12 +2042,12 @@ object Stats {
     // materialized.
     val slope = quantileCI(pairs, col("key"), col("__slope"))
       .select(col("grp").as("key"), col("point").as("__sl"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val icepts = t.join(slope, Seq("key"))
       .select(col("key"), (col("__v") - col("__sl") * col("__x").cast("double")).as("__b"))
     val intercept = quantileCI(icepts, col("key"), col("__b"))
       .select(col("grp").as("key"), col("point").as("__ic"))
-      .localCheckpoint()
+      .transform(materialize(_))
     nPer
       .join(slope, Seq("key"), "left")
       .join(intercept, Seq("key"), "left")
@@ -2096,7 +2096,7 @@ object Stats {
     val t = df.select(key.cast("string").as("key"), order.cast("long").as("__x"),
         value.cast("double").as("__v"))
       .filter(col("key").isNotNull && col("__x").isNotNull && col("__v").isNotNull)
-      .localCheckpoint()
+      .transform(materialize(_))
     val stats = kendallStatsPerKey(
       t.select(col("key"), col("__x").cast("double").as("__x"),
         col("__v").as("__y")),
@@ -2113,7 +2113,7 @@ object Stats {
         // __x < __x2 predicate — so the ANSI division speculatively
         // executes on equal-__x candidate pairs of the same key and
         // throws DIVIDE_BY_ZERO (reproduced r12 in the optimized
-        // plan; r11 masked it by localCheckpoint-materializing the
+        // plan; r11 masked it by materializing the
         // QUADRATIC pair frame before quantileCI could see the
         // expression). try_divide is value-identical on every row
         // that survives the strict filter. Distinct right-side names
@@ -2842,7 +2842,7 @@ object Stats {
     val arms = expDf
       .join(counts.select(col("grp"), col("n_obs")), Seq("grp"), "full_outer")
       .select(col("grp"), col("frac"), coalesce(col("n_obs"), lit(0L)).as("n_obs"))
-      .localCheckpoint() // three consumers: N, terms, report
+      .transform(materialize(_)) // three consumers: N, terms, report
     val tot = arms.agg(
       coalesce(sum(when(col("frac").isNotNull, col("n_obs"))), lit(0L)).as("__N"),
       coalesce(sum(when(col("frac").isNull, lit(1L))), lit(0L)).as("__n_undeclared"))
@@ -2851,7 +2851,7 @@ object Stats {
     val term = when(col("frac").isNotNull && col("__N") > 0,
       (col("n_obs").cast("double") - nExp) * (col("n_obs").cast("double") - nExp)
         / nExp)
-    val withTerm = j.withColumn("__term", term).localCheckpoint()
+    val withTerm = j.withColumn("__term", term).transform(materialize(_))
     val chi = withTerm.agg(
       coalesce(sum((floor(col("__term") * 1e7) / 1e7).cast("decimal(20,7)")),
         lit(0).cast("decimal(20,7)")).as("__chi2"))
@@ -2976,7 +2976,7 @@ object Stats {
         sum(Num.dec(col("__x")) * Num.dec(col("__y"))).as("sxy"),
         sum(Num.dec(col("__x")) * Num.dec(col("__x"))).as("sxx"),
         sum(Num.dec(col("__y")) * Num.dec(col("__y"))).as("syy"))
-      .localCheckpoint() // two consumers: pooled θ + the per-group report
+      .transform(materialize(_)) // two consumers: pooled θ + the per-group report
     val pooled = g.agg(sum(col("n")).as("__nn"), sum(col("sy")).as("__py"),
       sum(col("sx")).as("__px"), sum(col("sxy")).as("__pxy"),
       sum(col("sxx")).as("__pxx"))
@@ -3562,7 +3562,7 @@ object Stats {
         concat(col("__k0"), lit(sep), pmod(col("__xl"), lit(period.toLong)))
           .as("key"),
         col("__k0"), col("__xl"), col("__v"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val stats = kendallStatsPerKey(
       t.select(col("key"), col("__xl").cast("double").as("__x"),
         col("__v").as("__y")))

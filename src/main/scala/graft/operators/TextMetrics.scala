@@ -735,7 +735,7 @@ object TextMetrics {
     * blind (bag-of-words gibberish scores in-distribution on unigrams
     * but out-of-distribution here).
     *
-    * Shape at scale: the corpus is tokenized ONCE and localCheckpoint'd
+    * Shape at scale: the corpus is tokenized ONCE and pinned by `materialize`
     * (the bigram explode and the unigram term explode both read the
     * materialized blocks — the bm25 pattern); the bigram/context/
     * unigram tables are partial-aggregated counts (persist them as the
@@ -750,7 +750,7 @@ object TextMetrics {
     require(lambda > 0 && lambda < 1, "lambda in (0,1): pure ML would send unseen bigrams to -inf")
     val tk = graft.operators.scaleOut(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), tokens(col("__text")).as("tk"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val toks = tk.select(col("id"), explode(col("tk")).as("term"))
     val tf = toks.groupBy("term").agg(count(lit(1)).as("n"))
     val tot = tf.agg(sum(col("n")).as("n_total"), count(lit(1)).as("vocab"))
@@ -805,7 +805,7 @@ object TextMetrics {
     * Docs with < 2 tokens drop out. Returns (id, n_bigrams,
     * avg_logprob).
     *
-    * Shape at scale: one tokenize pass (localCheckpoint), the model =
+    * Shape at scale: one tokenize pass (`materialize`), the model =
     * three partial-aggregated count tables over the bigram frame
     * (persistable artifacts), scoring = two keyed joins back — the
     * bigramLogProb plan with continuation tables instead of raw
@@ -817,7 +817,7 @@ object TextMetrics {
     require(discount > 0 && discount < 1, "discount in (0,1)")
     val tk = graft.operators.scaleOut(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), tokens(col("__text")).as("tk"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val bi = tk.filter(size(col("tk")) >= 2)
       .select(col("id"), col("tk"),
         explode(sequence(lit(1), size(col("tk")) - 1)).as("i"))
@@ -879,7 +879,7 @@ object TextMetrics {
       .select(explode(shingles(tokens(col("__text")), gramN)).as("term"))
       .groupBy("term").agg(count(lit(1)).as("n"))
     val ff = tf.groupBy(col("n").as("r")).agg(count(lit(1)).as("n_r"))
-      .localCheckpoint() // 3 consumers: rows, the r+1 join, N1
+      .transform(materialize(_)) // 3 consumers: rows, the r+1 join, N1
     val tot = tf.agg(coalesce(sum(col("n")), lit(0L)).as("total"))
     val n1 = ff.filter(col("r") === 1)
       .agg(coalesce(sum(col("n_r")), lit(0L)).as("__n1"))
@@ -1267,7 +1267,7 @@ object TextMetrics {
     * and retrieval-based decontamination.
     *
     * Shape at scale: one tokenize pass materialized once
-    * (`localCheckpoint` — the corpus stats aggregate and the term
+    * (`materialize` — the corpus stats aggregate and the term
     * explode both read it); per-doc query-term occurrences are
     * filtered INSIDE the token array before the explode, so generated
     * rows are bounded by matches, not document length; the per-term
@@ -1293,7 +1293,7 @@ object TextMetrics {
       .select(col("id"), tokens(col("__text")).as("__tk"))
       .select(col("id"), size(col("__tk")).as("dl"),
         filter(col("__tk"), t => t.isInCollection(queryTerms)).as("__q"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val stats = base.agg(
       count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val tf = base.select(col("id"), col("dl"), explode(col("__q")).as("term"))
@@ -1482,7 +1482,7 @@ object TextMetrics {
     * york"s should enter the vocab as units) and a templated-
     * boilerplate tell (a collocation at huge counts is a template).
     *
-    * Shape at scale: ONE tokenize pass (localCheckpoint) feeds both
+    * Shape at scale: ONE tokenize pass (`materialize`) feeds both
     * the bigram and unigram partial-agg counts; totals ride in as
     * 1-row broadcasts; `minCount` prunes the long tail BEFORE the
     * top-k (rare pairs have unstable, inflated PMI — the standard
@@ -1500,7 +1500,7 @@ object TextMetrics {
     require(minCount >= 1 && k >= 1, "minCount and k must be >= 1")
     val tk = graft.operators.scaleOut(df.select(text.as("__text")))
       .select(tokens(col("__text")).as("tk"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val uni = tk.select(explode(col("tk")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
     val totU = uni.agg(sum(col("n")).as("__nu"))
@@ -1530,7 +1530,7 @@ object TextMetrics {
     * (D9b) can't: a source whose DOCUMENTS are individually clean but
     * collectively near-identical.
     *
-    * Shape at scale: tokenize ONCE (localCheckpoint — the bm25
+    * Shape at scale: tokenize ONCE (`materialize` — the bm25
     * discipline), then per n one explode with multiplicity and one
     * partial-agg count + exact distinct per (group, n) — maxN keyed
     * shuffles over heavily pre-combined frames, never all-pairs.
@@ -1547,7 +1547,7 @@ object TextMetrics {
     val tk = graft.operators.scaleOut(
         df.select(group.as("group_key"), text.as("__text")))
       .select(col("group_key"), tokens(col("__text")).as("tk"))
-      .localCheckpoint()
+      .transform(materialize(_))
     (1 to maxN).map { n =>
       val grams =
         if (n == 1) tk.select(col("group_key"), explode(col("tk")).as("g"))
@@ -1624,7 +1624,7 @@ object TextMetrics {
         df.select(source.as("src"), text.as("__text")))
       .select(col("src"), explode(tokens(col("__text"))).as("w"))
       .groupBy("src", "w").agg(count(lit(1)).as("ct"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val srcTot = tf.groupBy("src").agg(sum(col("ct")).as("st"))
     val termTot = tf.groupBy("w").agg(sum(col("ct")).as("c_t"))
     // distributed top-k (TakeOrderedAndProject) — a global row_number
@@ -1672,7 +1672,7 @@ object TextMetrics {
         df.select(source.as("src"), text.as("__text")))
       .select(col("src"), explode(tokens(col("__text"))).as("w"))
       .groupBy("src", "w").agg(count(lit(1)).as("ct"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val srcTot = tf.groupBy("src").agg(sum(col("ct")).as("st"))
     val termTot = tf.groupBy("w").agg(sum(col("ct")).as("c_t"))
     // distributed top-m, not a vocabulary-wide global window

@@ -175,7 +175,7 @@ object Unigram {
     val wf = scaleOut(df.select(text.as("__text")))
       .select(explode(tokens(col("__text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
+      .transform(materialize(_))
     // candidate substrings with occurrence multiplicity × word freq
     val cand = wf.select(
         explode(flatten(transform(
@@ -185,7 +185,7 @@ object Unigram {
             l => col("w").substr(s + 1, l))))).as("piece"),
         col("freq"))
       .groupBy("piece").agg(sum(col("freq")).as("cnt"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val singles = cand.filter(length(col("piece")) === 1)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val topMulti = cand.filter(length(col("piece")) > 1)

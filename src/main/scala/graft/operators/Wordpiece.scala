@@ -65,7 +65,7 @@ object Wordpiece {
     scaleOut(df.select(text.as("__t")))
       .select(explode(tokens(col("__t"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .transform(materialize(_))
 
   /** [[buildVocab]] over a precomputed [[wordFrequencies]] frame. */
   def buildVocabFromWords(
@@ -189,7 +189,7 @@ object Wordpiece {
   def segment(df: DataFrame, id: Column, text: Column, vocab: DataFrame): DataFrame = {
     val words = scaleOut(df.select(id.as("id"), text.as("__t")))
       .select(col("id"), explode(tokens(col("__t"))).as("w"))
-      .localCheckpoint()
+      .transform(materialize(_))
     val segd = segmentWords(words.select("w").distinct(), vocab)
       .select(col("w"), col("n_pieces"), col("is_unk"))
     words.join(segd, Seq("w"), "left")

@@ -50,22 +50,47 @@ package object operators {
     def b13(c: Column): Column = c.cast("decimal(13,0)")
   }
 
-  /** Materialize several INDEPENDENT DataFrames as local checkpoints
+  /** The one place an intermediate frame is pinned: a seam that cuts
+    * the lineage, so later jobs read the stored rows instead of
+    * recomputing the plan below it. Call sites chain it as
+    * `.transform(materialize(_))`.
+    *
+    * The policy follows Spark's own deployment setting, with no knob
+    * of its own. Without a checkpoint directory the seam is
+    * `localCheckpoint(eager)`: blocks in executor storage, lost with
+    * their executor, after which a reader fails with
+    * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`. With one (`spark.checkpoint.dir`
+    * or `SparkContext.setCheckpointDir`) the seam is a reliable
+    * `checkpoint` written to that directory, which survives executor
+    * loss. The reliable seam is always eager: Spark writes a lazily
+    * marked checkpoint in a second job after the first action, and
+    * that job recomputes the unpersisted plan. Reliable files outlive
+    * the session unless `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * is set.
+    *
+    * `eager = false` leaves a local seam to be filled by the next job
+    * that reads it, saving one job when that read follows at once.
+    */
+  def materialize(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager)
+
+  /** [[materialize]] for several INDEPENDENT frames, submitted
     * CONCURRENTLY (guide §2.6 overlap-independent-jobs): Spark's
     * scheduler runs multiple jobs at once — actions are only
     * sequential because driver code calls them sequentially. Audit
-    * queries build several checkpoint seams that share an input but
-    * not each other; submitted one by one, each short job's straggler
-    * tail leaves the cluster idle. Results come back in argument
-    * order; exceptions propagate (the seams' jobs are independent, so
-    * a failure cannot corrupt a sibling).
+    * queries build several seams that share an input but not each
+    * other; submitted one by one, each short job's straggler tail
+    * leaves the cluster idle. Results come back in argument order;
+    * exceptions propagate (the seams' jobs are independent, so a
+    * failure cannot corrupt a sibling).
     */
-  def checkpointPar(dfs: DataFrame*): Seq[DataFrame] = {
+  def materializeAll(dfs: DataFrame*): Seq[DataFrame] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     Await.result(
-      Future.sequence(dfs.toSeq.map(df => Future(df.localCheckpoint()))),
+      Future.sequence(dfs.toSeq.map(df => Future(materialize(df)))),
       Duration.Inf)
   }
 

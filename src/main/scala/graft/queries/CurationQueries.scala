@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bpe, Dedup, Packing, Quality, Sampling, TextMetrics, Unigram}
+import graft.operators.{Bpe, Dedup, Packing, Quality, Sampling, TextMetrics, Unigram, materialize}
 
 /** Corpus-curation queries (SURVEY §2.D16-D19): corpus statistics
   * (TF-IDF), deterministic sampling / dataset splits, and sequence
@@ -1006,9 +1006,9 @@ object CurationQueries {
       // aggregate paid the corpus-wide tokenize twice)
       val wf = Wordpiece.wordFrequencies(d.select(col("text")), col("text"))
       val vocab = Wordpiece.buildVocabFromWords(wf,
-        maxPieces = 200, maxPieceLen = 6).localCheckpoint()
+        maxPieces = 200, maxPieceLen = 6).transform(materialize(_))
       val topw = wf.orderBy(col("cnt").desc, col("w").asc).limit(100)
-        .localCheckpoint()
+        .transform(materialize(_))
       Wordpiece.segmentWords(topw.select("w"), vocab)
         .join(topw, Seq("w"))
         .select(col("w"), col("cnt"), col("pieces"), col("n_pieces"))
@@ -1057,7 +1057,7 @@ object CurationQueries {
       import graft.operators.Wordpiece
       val d = table(s, dir, "documents")
       val vocab = Wordpiece.buildVocab(d.select(col("text")), col("text"),
-        maxPieces = 200, maxPieceLen = 6).localCheckpoint()
+        maxPieces = 200, maxPieceLen = 6).transform(materialize(_))
       Wordpiece.encodeIds(d.filter(col("doc_id") < 50), col("doc_id"),
           col("text"), vocab)
         .withColumnRenamed("id", "doc_id")
@@ -1578,7 +1578,7 @@ object CurationQueries {
       // exchanges un-checkpointed vs a bounded tail)
       val cleaned = masked.join(
         gated.select(col("doc_id"), col("source"), col("quality")), Seq("doc_id"))
-        .localCheckpoint()
+        .transform(materialize(_))
       // stage 3: incremental MinHash dedup — shard vs the corpus
       // signature index (built once; a real pipeline reads it from
       // parquet)
@@ -1593,7 +1593,7 @@ object CurationQueries {
         .select(col("shard_id").as("doc_id")).distinct()
       val survivors = corpus
         .unionByName(shard.join(dups, Seq("doc_id"), "left_anti"))
-        .localCheckpoint()
+        .transform(materialize(_))
       // stage 4: temperature mixture over sources (n^0.5 tilt)
       val mixed = Sampling.temperatureMixture(survivors, col("source"),
         col("doc_id"), targetRows = 400, alpha = 0.5)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.tokens
-import graft.operators.{Dedup, Packing, Sampling, Similarity, TextMetrics}
+import graft.operators.{Dedup, Packing, Sampling, Similarity, TextMetrics, materialize, materializeAll}
 
 /** Near-duplicate detection and similarity search (SURVEY §2.D2-D7).
   *
@@ -1893,7 +1893,7 @@ object DedupQueries {
       val est = Dedup.sourceOverlapSketch(u, col("source"), col("text"),
         pmod(col("doc_id"), lit(4)), lgK = 14)
       val fps = u.select(col("source").as("src"),
-        normFingerprint(col("text")).as("f")).distinct().localCheckpoint()
+        normFingerprint(col("text")).as("f")).distinct().transform(materialize(_))
       val sz = fps.groupBy("src").agg(count(lit(1)).as("n"))
       val ov = fps.as("a")
         .join(fps.as("b"), col("a.f") === col("b.f") && col("a.src") < col("b.src"))
@@ -1946,12 +1946,12 @@ object DedupQueries {
       val docs = table(s, dir, "documents")
       val fpC = docs.filter(col("doc_id") < 300)
         .select(normFingerprint(col("text")).as("f")).distinct()
-        .localCheckpoint()
+        .transform(materialize(_))
       val fpS = docs.filter(col("doc_id") >= 300).select(col("text"))
         .unionByName(docs.filter(col("doc_id") < 300
             && pmod(col("doc_id"), lit(3)) === 0).select(col("text")))
         .select(normFingerprint(col("text")).as("f")).distinct()
-        .localCheckpoint()
+        .transform(materialize(_))
       val skC = fpC.agg(ThetaSketch.thetaSketch(col("f"), lgK = 13).as("__skc"),
         count(lit(1)).as("n_corpus_fps"))
       val skS = fpS.agg(ThetaSketch.thetaSketch(col("f"), lgK = 13).as("__sks"),
@@ -2114,7 +2114,7 @@ object DedupQueries {
         // replica, 6.6 s wall). The checkpoint makes the probe run
         // once; the sort reads materialized pair rows. Same rows,
         // same order, half the kernel work.
-        .localCheckpoint()
+        .transform(materialize(_))
         .orderBy("id_a", "id_b")
     },
 
@@ -2147,7 +2147,7 @@ object DedupQueries {
         // seam (r17): same range-partitioner double-eval as
         // q_dedup_editdist — the sort's sampling pass re-ran the
         // window + levenshtein stage; checkpoint makes it run once
-        .localCheckpoint()
+        .transform(materialize(_))
         .orderBy("id_a", "id_b")
     },
 
@@ -2475,7 +2475,7 @@ object DedupQueries {
         docsSql = sampledTruncDocsSql(500, None))) { (s, dir) =>
       val d = Sampling.hashSample(truncatedDocs(s, dir),
           pmod(col("id"), lit(1000000L)), fraction = 0.5)
-        .localCheckpoint()
+        .transform(materialize(_))
       val found = Dedup.minHashLSH(d, col("id"), col("text"),
         numHashes = 64, bands = 16, shingleSize = 5,
         threshold = 0.5, maxBucket = 200)
@@ -2523,9 +2523,9 @@ object DedupQueries {
       val base = pmod(col("id"), lit(1000000L))
       val d = Sampling.hashSample(truncatedDocs(s, dir), base, fraction = 0.25)
         .orderBy(Sampling.hashBucket(base), col("id")).limit(4000)
-        .localCheckpoint()
+        .transform(materialize(_))
       val sigs = Dedup.simHashSignatures(d, col("id"), col("text"))
-        .localCheckpoint()
+        .transform(materialize(_))
       // checkpoint the PAIR frames too (r17): auditPairs reads its
       // truth side twice (hit join + size count) and `found` feeds
       // both tiers, so without the seams the banding join, the brute
@@ -2534,7 +2534,7 @@ object DedupQueries {
       // The three tiers depend on d/sigs but NOT on each other, so
       // their seams materialize CONCURRENTLY (guide §2.6) instead of
       // serializing three short job chains.
-      val Seq(found, truthHam, truthJac) = graft.operators.checkpointPar(
+      val Seq(found, truthHam, truthJac) = materializeAll(
         Dedup.hammingPairs(sigs, maxDist = 3, nChunks = 4),
         Dedup.hammingPairsBrute(sigs, maxDist = 3),
         Dedup.prefixFilterJaccard(d, col("id"), col("text"),
@@ -2573,16 +2573,16 @@ object DedupQueries {
          |SELECT 'winnow_vs_jaccard07' AS tier, n_found, n_truth, n_hit, "precision", recall, f1 FROM adrow""".stripMargin) { (s, dir) =>
       val d = Sampling.hashSample(truncatedDocs(s, dir),
           pmod(col("id"), lit(1000000L)), fraction = 0.25)
-        .localCheckpoint()
+        .transform(materialize(_))
       val found = Dedup.winnowPairs(d, col("id"), col("text"))
       // seam: auditPairs reads truth twice (hit join + size count);
       // the jaccard tier is the query's dominant stage. (r17 cont.:
-      // a concurrent checkpointPar(found, truth) was A/B'd here —
+      // a concurrent materializeAll(found, truth) was A/B'd here —
       // flat at sf0.1, and it adds a materialization of `found` that
       // the merged plan doesn't need — so the truth-only seam stays.)
       val truth = Dedup.prefixFilterJaccard(d, col("id"), col("text"),
         n = 5, threshold = 0.7)
-        .localCheckpoint()
+        .transform(materialize(_))
       Dedup.auditPairs(found, truth)
         .withColumn("tier", lit("winnow_vs_jaccard07"))
         .select("tier", "n_found", "n_truth", "n_hit",
@@ -2658,9 +2658,9 @@ object DedupQueries {
         concat(col("nm").substr(lit(1), length(col("nm")) - 3),
           col("nm").substr(length(col("nm")) - 1, lit(1000))).as("nm"),
         col("blk"))
-      val u = c0.unionByName(typo).unionByName(tailTypo).localCheckpoint()
+      val u = c0.unionByName(typo).unionByName(tailTypo).transform(materialize(_))
       val truth = Dedup.levenshteinPairsBrute(u, col("id"), col("nm"), maxDist = 1)
-        .localCheckpoint()
+        .transform(materialize(_))
       val sfound = Dedup.entityPairs(u, col("id"), col("nm"),
         concat(col("blk"), lit("|"), expr("right(nm, 6)")), maxDist = 1)
       val nfound = Dedup.entityPairs(u, col("id"), col("nm"),

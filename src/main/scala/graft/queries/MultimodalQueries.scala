@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Multimodal
+import graft.operators.{Multimodal, materialize}
 
 /** Multimodal binary-column plumbing (SURVEY §2.D12). The oracle-able
   * parts are the pack step (opaque binary payload + typed metadata) and
@@ -360,11 +360,11 @@ object MultimodalQueries {
       val imgSigs = Multimodal.perceptualHash(phashCorpus(s, dir))
         .filter(col("decoded"))
         .select(col("doc_id").as("id"), col("phash").as("sig"))
-        .localCheckpoint()
+        .transform(materialize(_))
       val audSigs = Multimodal.audioFingerprint(audioNearDupCorpus(s, dir))
         .filter(col("decoded"))
         .select(col("doc_id").as("id"), col("sig"))
-        .localCheckpoint()
+        .transform(materialize(_))
       Dedup.auditPairs(
           Dedup.hammingPairs(imgSigs, maxDist = 6, nChunks = 8),
           Dedup.hammingPairsBrute(imgSigs, maxDist = 6))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Profile, Sampling}
+import graft.operators.{Profile, Sampling, materialize}
 
 /** Profiling queries (SURVEY §2.C24-C25): the "look at what arrived"
   * surface — long-format column profiles and fixed-width histograms,
@@ -2840,7 +2840,7 @@ object ProfileQueries {
       import graft.functions.tokens
       val toks = table(s, dir, "documents")
         .select(col("source"), explode(tokens(col("text"))).as("tok"))
-        .localCheckpoint()
+        .transform(materialize(_))
       val merged = toks.groupBy("source")
         .agg(freqSketch(col("tok"), 256).as("sk"))
         .agg(freqMerge(col("sk"), 256).as("m"))

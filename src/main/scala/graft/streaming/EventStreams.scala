@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
+import graft.operators.materialize
+
 /** Structured Streaming surface (SURVEY §2.E): watermarked tumbling
   * windows and stateful gap sessionization over an event stream shaped
   * like the `events` table.
@@ -325,7 +327,7 @@ object EventStreams {
           StructType.fromDDL("fp STRING"))
         // one computation feeds both writes
         val accepted = graft.operators.Dedup.exactIncremental(
-          batch, col(textCol), col(idCol), index, col("fp")).localCheckpoint()
+          batch, col(textCol), col(idCol), index, col("fp")).transform(materialize(_))
         BatchLog.write(accepted, outPath, batchId)
         BatchLog.write(graft.operators.Dedup.fingerprintIndex(accepted, col(textCol)),
           indexPath, batchId)
@@ -406,7 +408,7 @@ object EventStreams {
       pairs, col("id_a"), col("id_b"))
     val accepted = survivors
       .join(drops, col(idCol) === col("drop_id"), "left_anti")
-      .localCheckpoint()
+      .transform(materialize(_))
     BatchLog.write(accepted, outPath, batchId)
     BatchLog.write(graft.operators.Dedup.minHashSignatures(
       accepted, col(idCol), col(textCol), numHashes, shingleSize), sigPath, batchId)
@@ -418,8 +420,9 @@ object EventStreams {
     * (payload + op + version columns) merges into an on-disk parquet
     * snapshot, latest-wins. The loop per batch: read the snapshot
     * (bootstrap: empty with the payload schema), apply the batch's
-    * changes, materialize (`localCheckpoint` — the overwrite below
-    * invalidates the files the plan would lazily re-read), overwrite.
+    * changes, publish. The merge reads a version below `batchId` and
+    * publish writes `v<batchId>`, so the write never touches a file
+    * the plan reads and the merged frame needs no seam.
     *
     * Delivery: the batch merges into the snapshot version before it
     * ([[SnapshotStore.readBefore]]), so a `foreachBatch` replay of
@@ -453,7 +456,7 @@ object EventStreams {
         val snap = SnapshotStore.readBefore(batch.sparkSession, snapshotPath, batchId)
           .getOrElse(batch.select(payload.map(col): _*).limit(0))
         val merged = graft.operators.Merge.applyChanges(
-          snap, batch, keys, col(versionCol), col(opCol)).localCheckpoint()
+          snap, batch, keys, col(versionCol), col(opCol))
         SnapshotStore.publish(merged, snapshotPath, batchId, SnapshotStore.ReplayKeep)
       }
       .start()
@@ -574,10 +577,11 @@ object EventStreams {
     * ([[SnapshotStore.readBefore]]), and the result publishes as version
     * `batchId` through [[SnapshotStore]] (write-audit-publish). A
     * replayed batch therefore merges into the same pre-batch state and
-    * republishes the same version — it never counts twice. `build` must already have the snapshot's schema: the first
-    * batch publishes it unmerged. The merged frame is checkpointed
-    * before publish because a replay overwrites the version directory
-    * it would lazily re-read.
+    * republishes the same version — it never counts twice. `build`
+    * must already have the snapshot's schema: the first batch
+    * publishes it unmerged. Publish is the merged frame's only
+    * consumer and writes a version the fence never reads for this
+    * batch, so the merged frame goes to it without a seam.
     */
   private def sketchMaintained(
       input: DataFrame,
@@ -594,8 +598,7 @@ object EventStreams {
           case Some(prev) => union(Seq(prev, batchSketch))
           case None => batchSketch
         }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId,
-          SnapshotStore.ReplayKeep)
+        SnapshotStore.publish(merged, snapshotPath, batchId, SnapshotStore.ReplayKeep)
       }
       .start()
 
@@ -1387,7 +1390,7 @@ object EventStreams {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val batchSketch = graft.operators.Profile.thetaSketchTable(
-          batch, col(groupCol), col(itemCol), lgK).localCheckpoint()
+          batch, col(groupCol), col(itemCol), lgK).transform(materialize(_))
         val prev = SnapshotStore.readBefore(batch.sparkSession, snapshotPath, batchId)
         BatchLog.write(thetaNovelty(batchSketch, prev).withColumn("batch_id", lit(batchId)),
           outPath, batchId)
@@ -1396,8 +1399,7 @@ object EventStreams {
             Seq(corpus, batchSketch), lgK)
           case None => batchSketch
         }
-        SnapshotStore.publish(merged.localCheckpoint(), snapshotPath, batchId,
-          SnapshotStore.ReplayKeep)
+        SnapshotStore.publish(merged, snapshotPath, batchId, SnapshotStore.ReplayKeep)
       }
       .start()
   }
@@ -1523,14 +1525,14 @@ object EventStreams {
       lgK: Int = 12): Unit = {
     // ---- 1. ADMIT: per-group novelty vs the version-fenced corpus sketch
     val batchSketch = graft.operators.Profile.thetaSketchTable(
-      batch, col(groupCol), col(textCol), lgK).localCheckpoint()
+      batch, col(groupCol), col(textCol), lgK).transform(materialize(_))
     val prev = SnapshotStore.readBefore(batch.sparkSession, thetaSnapshotPath, batchId)
     val verdict = thetaNovelty(batchSketch, prev)
       .select(col("grp"), col("est_batch"), col("est_new"),
         coalesce(try_divide(col("est_new"), col("est_batch")), lit(0.0))
           .as("novelty"))
       .withColumn("admitted", col("novelty") >= minNovelty)
-      .localCheckpoint()
+      .transform(materialize(_))
     BatchLog.write(verdict.withColumn("batch_id", lit(batchId)), verdictPath, batchId)
     val admitted = batch.join(
       broadcast(verdict.filter(col("admitted")).select(col("grp").as("__adm"))),
@@ -1551,8 +1553,7 @@ object EventStreams {
         graft.operators.Profile.thetaSketchUnion(Seq(corpus, accSketch), lgK)
       case None => accSketch
     }
-    SnapshotStore.publish(merged.localCheckpoint(), thetaSnapshotPath, batchId,
-      SnapshotStore.ReplayKeep)
+    SnapshotStore.publish(merged, thetaSnapshotPath, batchId, SnapshotStore.ReplayKeep)
   }
 
   /** E48: streaming duplicated-n-gram COVERAGE gate — D146's ONION
@@ -1589,7 +1590,7 @@ object EventStreams {
         val base = batch.select(col(idCol).as("doc_id"),
             graft.functions.shingles(
               graft.functions.tokens(col(textCol)), n).as("__sh"))
-          .localCheckpoint()
+          .transform(materialize(_))
         val occ = base.select(col("doc_id"), explode(col("__sh")).as("sh"))
         // per-batch PARTIAL df counts land in a BatchLog; the live df
         // of a shingle is the SUM over committed batches < N
@@ -1715,7 +1716,7 @@ object EventStreams {
     val w = (hi - lo) / nBins
     val bin = least(lit((nBins - 1).toLong),
       greatest(lit(0L), floor((value - lo) / w))).cast("int")
-    val base = baseline.select(col("bin"), col("n").as("nb")).localCheckpoint()
+    val base = baseline.select(col("bin"), col("n").as("nb")).transform(materialize(_))
     events.withWatermark("ts", watermarkDelay)
       .filter(value.isNotNull)
       .groupBy(window(col("ts"), windowDuration), bin.as("bin"))

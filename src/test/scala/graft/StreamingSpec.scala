@@ -1538,6 +1538,24 @@ class StreamingSpec extends SparkSpec {
     assert(est == 300.0, s"corpus estimate $est")
   }
 
+  test("E8 applyChangesMaintained replayed before its checkpoint commit republishes the same table") {
+    // the replay overwrites v1 while its merge reads v0: a read of the
+    // live version would lose its files to that overwrite mid-job
+    def table(root: String) = SnapshotStore.read(spark, s"$root/snap").get
+      .select("k", "v").as[(Long, String)].collect().toSet
+    var first = Set.empty[(Long, String)]
+    val root = replayedLastBatch("graft_e8_replay", "k BIGINT, v STRING, op STRING, ver INT",
+        Seq(Seq((1L, "a", "I", 1), (2L, "b", "I", 1), (3L, "c", "I", 1)),
+          Seq((1L, "x", "D", 2), (2L, "b2", "U", 2), (4L, "d", "I", 1)))
+          .map(_.toDF("k", "v", "op", "ver"))) {
+        (in, r) => EventStreams.applyChangesMaintained(in, Seq("k"), "ver", "op",
+          s"$r/snap", s"$r/ckpt")
+      }(r => first = table(r))
+    assert(first == Set((2L, "b2"), (3L, "c"), (4L, "d")), first.toString)
+    assert(table(root) == first, "the replay changed the table")
+    assert(SnapshotStore.versions(spark, s"$root/snap") == Seq(0L, 1L))
+  }
+
   test("E8 and E14 on a fresh checkpoint refuse a root another query numbered, keeping its live state") {
     // a fresh checkpoint restarts the batch ids at 0: fenced below 0,
     // the sink would bootstrap empty and publish over the live state

@@ -216,4 +216,35 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(spellings.forall { case (helper, _) => hits.exists(_._1 == helper) },
       s"a helper spelling moved: ${hits.map(_._4)}")
   }
+
+  test("engine code pins intermediates only through operators.materialize") {
+    // a hand-placed seam decides on its own how an intermediate is
+    // pinned, so it cannot follow Spark's checkpoint dir and dies with
+    // its executor: these spellings live in the helper and nowhere
+    // else under src/main/scala/graft (comments aside)
+    import scala.jdk.CollectionConverters._
+    val needles = Seq("localCheckpoint(", ".checkpoint(", "checkpointPar")
+    val decl = """\s*(?:private(?:\[\w+\])? )?def (\w+)\b.*""".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val hits = for {
+      f <- files
+      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      code = l.split("//", 2)(0)
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      needle <- needles
+      if code.contains(needle)
+      owner = lines.take(i + 1).reverseIterator.collectFirst { case decl(n) => n }
+    } yield (f.toString, owner, needle, s"$f:${i + 1}: ${l.trim}")
+    val offenders = hits.filterNot(h => h._1.endsWith("operators/package.scala") &&
+      h._2.contains("materialize") && h._3 != "checkpointPar")
+    assert(offenders.isEmpty,
+      s"an intermediate pinned outside operators.materialize:\n${offenders.map(_._4).mkString("\n")}")
+    // and the helper really spells both seams, so a rewording cannot
+    // make this check vacuous
+    assert(Seq("localCheckpoint(", ".checkpoint(").forall(n => hits.exists(_._3 == n)),
+      s"the helper's seams moved: ${hits.map(_._4)}")
+  }
 }

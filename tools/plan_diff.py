@@ -10,7 +10,10 @@ use different suffixes (`parent`, `change`). Before comparing, the text
 of each plan is masked: expression ids (`#123`), plan ids (`plan_id=7`),
 RDD ids (`MapPartitionsRDD[44]`), lambda class names (`$$Lambda...`),
 object hash codes (`@1a2b3c`) and source line numbers (`Stats.scala:812`)
-all vary from run to run without any change to the plan.
+all vary from run to run without any change to the plan. The file of an
+RDD's creation site (`localCheckpoint at Dedup.scala:1281`) is masked
+too: it names the source file that made the call, which moves when the
+call goes through a shared helper.
 
 With `--mask-internal`, internal column names (`__name`) are masked as
 well: a refactor that only renames internal aliases then compares equal,
@@ -28,6 +31,7 @@ MASKS = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(RDD\[N\] at \w+ at )[\w$]+(\.(?:scala|java))"), r"\1*\2"),
     (re.compile(r"\$\$Lambda[^\s,()\[\]]*"), "$$Lambda"),
     (re.compile(r"@[0-9a-f]{4,}\b"), "@H"),
     (re.compile(r"(\.(?:scala|java)):\d+"), r"\1:N"),
