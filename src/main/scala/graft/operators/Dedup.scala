@@ -119,10 +119,9 @@ object Dedup {
       corpusFp: Column,
       fpp: Double = 0.01): DataFrame = {
     val idx = corpusIndex.select(corpusFp.as("fp")).transform(materialize(_))
-    val n = math.max(idx.count(), 1000L)
     // the sketch keys on xxhash64 of the fp string (BloomFilter's long
     // path); the probe hashes identically
-    val bloom = idx.select(xxhash64(col("fp")).as("h")).stat.bloomFilter("h", n, fpp)
+    val bloom = bloomOf(idx.select(xxhash64(col("fp")).as("h")), fpp)
     // materialize the within-shard winners ONCE: the two complementary
     // filters below would otherwise re-run the whole upstream shard
     // pipeline + fingerprint window apiece (the very cost exactKeep's
@@ -180,29 +179,59 @@ object Dedup {
       }: _*)).as("bucket"))
   }
 
-  /** Estimated Jaccard = fraction of agreeing signature positions,
+  /** Candidate pairs (`a`, `b`) scored by their MinHash signatures and
+    * kept at `est_jaccard >= threshold`: (a, b, est_jaccard).
+    * `left` / `right` are (id, sig) frames.
+    *
+    * Estimated Jaccard = fraction of agreeing signature positions,
     * rounded 4 dp. Codegen'd `ArrayAgreeCount` Expression — stays in
     * the candidate join's whole-stage-codegen span (the HOF form it
     * replaced ran interpreted with per-element boxing).
+    *
+    * shuffle_hash hints: signature frames GROW WITH THE CORPUS (n
+    * rows × a 64-long array each) — never a dim, so a DRIVER
+    * broadcast is wrong at scale even when the compressed-size
+    * estimate clears the threshold (measured at a 30× replica: AQE
+    * broadcast a sig frame from a fits-the-threshold estimate and
+    * the driver-side hash-relation build, several × the compressed
+    * bytes, OOM'd the query). Shuffled-hash keeps the hash build but
+    * distributes it per-partition on executors — no sort tax (SMJ
+    * measured ~40% slower here), no driver build.
     */
-  private def estJaccard(sigA: Column, sigB: Column, numHashes: Int): Column =
-    round(
-      graft.functions.ArrayAgreeCount.arrayAgreeCount(sigA, sigB)
-        .cast("double") / numHashes,
-      4)
+  private def minHashScored(cand: DataFrame, left: DataFrame, right: DataFrame,
+      a: String, b: String, numHashes: Int, threshold: Double): DataFrame =
+    cand
+      .join(left.select(col("id").as(a), col("sig").as("sig_a")).hint("shuffle_hash"), a)
+      .join(right.select(col("id").as(b), col("sig").as("sig_b")).hint("shuffle_hash"), b)
+      .withColumn("est_jaccard", round(
+        graft.functions.ArrayAgreeCount.arrayAgreeCount(col("sig_a"), col("sig_b"))
+          .cast("double") / numHashes,
+        4))
+      .filter(col("est_jaccard") >= threshold)
+      .select(a, b, "est_jaccard")
 
-  /** MinHash + LSH near-duplicate pairs.
-    *
-    * Pipeline: [[minHashSignatures]] → [[minHashBuckets]] →
-    * bucket-local self-join for candidate pairs → exact signature
-    * agreement estimates Jaccard.
-    *
-    * Scale: work is O(shingles) + O(docs × bands) + bucket-local
-    * joins; never cartesian. `maxBucket` drops degenerate buckets
-    * (thousands of identical boilerplate docs) the way web-scale dedup
-    * drops ubiquitous shingles; AQE skew-join splitting covers the
-    * rest. Returns (id_a, id_b, est_jaccard) with id_a < id_b.
+  /** Rows of `df` whose `key` group holds `lo` to `hi` rows — the
+    * degenerate-bucket cap in one pass: a count window over the key,
+    * no groupBy + semi-join back. Every group holds at least one row,
+    * so `lo = 1` is no lower bound and adds no predicate.
     */
+  private def capGroups(df: DataFrame, key: String, lo: Int, hi: Int): DataFrame = {
+    val n = col("__grp_n")
+    df.withColumn("__grp_n",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(key)))
+      .filter(if (lo > 1) n >= lo && n <= hi else n <= hi)
+      .drop("__grp_n")
+  }
+
+  /** `levenshtein(a, b) <= d`, pruned: dist >= |len(a) − len(b)|
+    * rejects hopeless pairs before the DP kernel, and the 3-arg
+    * levenshtein runs the threshold-banded O(len·d) kernel instead of
+    * the full O(len²) matrix, returning -1 past the bound — identical
+    * surviving pairs.
+    */
+  private def withinEdits(a: Column, b: Column, d: Int): Column =
+    abs(length(a) - length(b)) <= d && levenshtein(a, b, d) >= 0
+
   /** Marginal-novelty scoring — "how much NEW content does this
     * source/shard actually add?", the value-of-data measurement
     * behind mixture and acquisition decisions (a source that is 95%
@@ -325,18 +354,11 @@ object Dedup {
     require(maxDist >= 1, "maxDist must be >= 1")
     val base = df.select(id.cast("long").as("id"), name.as("__n"),
       block.as("__blk"))
-    val wB = org.apache.spark.sql.expressions.Window.partitionBy("__blk")
-    val capped = base
-      .withColumn("__bn", count(lit(1)).over(wB))
-      .filter(col("__bn") <= maxBlock && col("__bn") >= 2).drop("__bn")
-    // length-band prune (dist >= |len diff|) ahead of the threshold-
-    // banded 3-arg levenshtein — same kernel cut as
-    // [[levenshteinPairsBrute]], identical surviving pairs
+    val capped = capGroups(base, "__blk", 2, maxBlock)
     capped.as("a")
       .join(capped.as("b"),
         col("a.__blk") === col("b.__blk") && col("a.id") < col("b.id")
-          && abs(length(col("a.__n")) - length(col("b.__n"))) <= maxDist
-          && levenshtein(col("a.__n"), col("b.__n"), maxDist) >= 0)
+          && withinEdits(col("a.__n"), col("b.__n"), maxDist))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
   }
 
@@ -360,16 +382,9 @@ object Dedup {
     // single-task). Spread the streamed side; broadcast the other
     // (bounded by the audit-sample contract above).
     val streamed = graft.operators.scaleOut(base)
-    // dist >= |len(a)-len(b)| prunes hopeless pairs before the DP
-    // kernel, and the 3-arg levenshtein runs the threshold-banded
-    // O(len·maxDist) kernel instead of the full O(len²) matrix,
-    // returning -1 past the bound: `lev(a,b) <= d` ≡ `lev(a,b,d) >= 0`
-    // with identical distances for every surviving pair.
     streamed.as("a")
       .join(broadcast(base.as("b")),
-        col("a.id") < col("b.id")
-          && abs(length(col("a.__n")) - length(col("b.__n"))) <= maxDist
-          && levenshtein(col("a.__n"), col("b.__n"), maxDist) >= 0)
+        col("a.id") < col("b.id") && withinEdits(col("a.__n"), col("b.__n"), maxDist))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
   }
 
@@ -406,15 +421,9 @@ object Dedup {
     val corpus = resolved.select(resolvedId.cast("long").as("__cid"),
       resolvedName.as("__cn"), resolvedBlock.as("__cblk"),
       resolvedCluster.cast("long").as("__ccl"))
-    val wB = org.apache.spark.sql.expressions.Window.partitionBy("__cblk")
-    val corpusCapped = corpus
-      .withColumn("__bn", count(lit(1)).over(wB))
-      .filter(col("__bn") <= maxBlock).drop("__bn")
     val matches = sh
-      .join(corpusCapped,
-        col("__blk") === col("__cblk")
-          && abs(length(col("__n")) - length(col("__cn"))) <= maxDist
-          && levenshtein(col("__n"), col("__cn"), maxDist) >= 0)
+      .join(capGroups(corpus, "__cblk", 1, maxBlock),
+        col("__blk") === col("__cblk") && withinEdits(col("__n"), col("__cn"), maxDist))
       .groupBy("id").agg(min(col("__ccl")).as("__match"))
     sh.join(matches, Seq("id"), "left")
       .select(col("id"),
@@ -443,11 +452,7 @@ object Dedup {
       maxSources: Int = 50): DataFrame = {
     val fps = df.select(source.as("src"), normFingerprint(text).as("__fp"))
       .distinct()
-    val bounded = fps.withColumn("__ns",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__fp"))))
-      .filter(col("__ns") <= maxSources)
-      .drop("__ns")
+    val bounded = capGroups(fps, "__fp", 1, maxSources)
     bounded.as("a")
       .join(bounded.as("b"),
         col("a.__fp") === col("b.__fp") && col("a.src") < col("b.src"))
@@ -548,6 +553,18 @@ object Dedup {
     }.toDF("bands", "rows_per_band", "s50", "fp_area", "fn_area", "cost", "recommended")
   }
 
+  /** MinHash + LSH near-duplicate pairs.
+    *
+    * Pipeline: [[minHashSignatures]] → [[minHashBuckets]] →
+    * bucket-local self-join for candidate pairs → exact signature
+    * agreement estimates Jaccard.
+    *
+    * Scale: work is O(shingles) + O(docs × bands) + bucket-local
+    * joins; never cartesian. `maxBucket` drops degenerate buckets
+    * (thousands of identical boilerplate docs) the way web-scale dedup
+    * drops ubiquitous shingles; AQE skew-join splitting covers the
+    * rest. Returns (id_a, id_b, est_jaccard) with id_a < id_b.
+    */
   def minHashLSH(
       df: DataFrame,
       id: Column,
@@ -560,31 +577,13 @@ object Dedup {
       seed: Long = 42L): DataFrame = {
     val sigs = minHashSignatures(df, id, text, numHashes, shingleSize, seed)
     val bucketed = minHashBuckets(sigs, numHashes, bands)
-    // degenerate-bucket cap in one pass: count window over the bucket
-    // (same shape as the df-cap in ngramJaccard — no groupBy+semi-join)
-    val wB = org.apache.spark.sql.expressions.Window.partitionBy("bucket")
-    val b = bucketed.withColumn("__n", count(lit(1)).over(wB))
-      .filter(col("__n") <= maxBucket && col("__n") >= 2).drop("__n")
+    val b = capGroups(bucketed, "bucket", 2, maxBucket)
     val cand = b.as("x")
       .join(b.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    // shuffle_hash hints: signature frames GROW WITH THE CORPUS (n
-    // rows × a 64-long array each) — never a dim, so a DRIVER
-    // broadcast is wrong at scale even when the compressed-size
-    // estimate clears the threshold (measured at a 30× replica: AQE
-    // broadcast a sig frame from a fits-the-threshold estimate and
-    // the driver-side hash-relation build, several × the compressed
-    // bytes, OOM'd the query). Shuffled-hash keeps the hash build but
-    // distributes it per-partition on executors — no sort tax (SMJ
-    // measured ~40% slower here), no driver build.
-    cand
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")).hint("shuffle_hash"), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")).hint("shuffle_hash"), "id_b")
-      .withColumn("est_jaccard", estJaccard(col("sig_a"), col("sig_b"), numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
+    minHashScored(cand, sigs, sigs, "id_a", "id_b", numHashes, threshold)
   }
 
   /** Incremental MinHash near-dup: pairs between a NEW shard and an
@@ -616,21 +615,12 @@ object Dedup {
     val shardSigs = minHashSignatures(shard, id, text, numHashes, shingleSize, seed)
     val shardB = minHashBuckets(shardSigs, numHashes, bands)
     val corpusB = minHashBuckets(corpusSigs.select(col("id"), col("sig")), numHashes, bands)
-    val wB = org.apache.spark.sql.expressions.Window.partitionBy("bucket")
-    val corpusCapped = corpusB.withColumn("__n", count(lit(1)).over(wB))
-      .filter(col("__n") <= maxBucket).drop("__n")
     val cand = shardB.as("x")
-      .join(corpusCapped.as("y"), col("x.bucket") === col("y.bucket"))
+      .join(capGroups(corpusB, "bucket", 1, maxBucket).as("y"),
+        col("x.bucket") === col("y.bucket"))
       .select(col("x.id").as("shard_id"), col("y.id").as("corpus_id"))
       .distinct()
-    // shuffle_hash on the signature attaches: corpus-sized array
-    // frames must never DRIVER-broadcast (see minHashLSH)
-    cand
-      .join(shardSigs.select(col("id").as("shard_id"), col("sig").as("sig_a")).hint("shuffle_hash"), "shard_id")
-      .join(corpusSigs.select(col("id").as("corpus_id"), col("sig").as("sig_b")).hint("shuffle_hash"), "corpus_id")
-      .withColumn("est_jaccard", estJaccard(col("sig_a"), col("sig_b"), numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select("shard_id", "corpus_id", "est_jaccard")
+    minHashScored(cand, shardSigs, corpusSigs, "shard_id", "corpus_id", numHashes, threshold)
   }
 
   /** The persistable SimHash artifact: (id, sig) — store it like
@@ -694,9 +684,7 @@ object Dedup {
     * Input: (id, sig: long). Output: (id_a, id_b, hamming), id_a < id_b.
     */
   def hammingPairs(sigs: DataFrame, maxDist: Int, nChunks: Int): DataFrame = {
-    require(nChunks > 0 && 64 % nChunks == 0, s"nChunks must divide 64, got $nChunks")
-    require(maxDist <= nChunks - 1,
-      s"$nChunks-chunk blocking only guarantees recall for maxDist <= ${nChunks - 1}")
+    requirePigeonhole(maxDist, nChunks)
     val bucketed = chunkBuckets(sigs, nChunks)
     val cand = bucketed.as("x")
       .join(bucketed.as("y"),
@@ -704,13 +692,7 @@ object Dedup {
           col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    cand
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("hamming",
-        expr("bit_count(sig_a ^ sig_b)").cast("int"))
-      .filter(col("hamming") <= maxDist)
-      .select("id_a", "id_b", "hamming")
+    hammingScored(cand, sigs, sigs, "id_a", "id_b", maxDist)
   }
 
   /** Brute-force all-pairs Hamming ≤ maxDist — the AUDIT-ONLY exact
@@ -758,22 +740,37 @@ object Dedup {
     */
   def hammingPairsBipartite(
       left: DataFrame, right: DataFrame, maxDist: Int, nChunks: Int): DataFrame = {
-    require(nChunks > 0 && 64 % nChunks == 0, s"nChunks must divide 64, got $nChunks")
-    require(maxDist <= nChunks - 1,
-      s"$nChunks-chunk blocking only guarantees recall for maxDist <= ${nChunks - 1}")
+    requirePigeonhole(maxDist, nChunks)
     val cand = chunkBuckets(left, nChunks).as("x")
       .join(chunkBuckets(right, nChunks).as("y"),
         col("x.chunk") === col("y.chunk") && col("x.val") === col("y.val"))
       .select(col("x.id").as("shard_id"), col("y.id").as("corpus_id"))
       .distinct()
+    hammingScored(cand, left, right, "shard_id", "corpus_id", maxDist)
+  }
+
+  /** `nChunks` equal chunks of a 64-bit signature guarantee, by
+    * pigeonhole, that every pair within `maxDist` shares a chunk.
+    */
+  private def requirePigeonhole(maxDist: Int, nChunks: Int): Unit = {
+    require(nChunks > 0 && 64 % nChunks == 0, s"nChunks must divide 64, got $nChunks")
+    require(maxDist <= nChunks - 1,
+      s"$nChunks-chunk blocking only guarantees recall for maxDist <= ${nChunks - 1}")
+  }
+
+  /** Candidate pairs (`a`, `b`) confirmed by exact Hamming distance
+    * (codegen'd bit_count(xor)) of their `left` / `right` (id, sig)
+    * signatures: (a, b, hamming) within `maxDist`.
+    */
+  private def hammingScored(cand: DataFrame, left: DataFrame, right: DataFrame,
+      a: String, b: String, maxDist: Int): DataFrame =
     cand
-      .join(left.select(col("id").as("shard_id"), col("sig").as("sig_a")), "shard_id")
-      .join(right.select(col("id").as("corpus_id"), col("sig").as("sig_b")), "corpus_id")
+      .join(left.select(col("id").as(a), col("sig").as("sig_a")), a)
+      .join(right.select(col("id").as(b), col("sig").as("sig_b")), b)
       .withColumn("hamming",
         expr("bit_count(sig_a ^ sig_b)").cast("int"))
       .filter(col("hamming") <= maxDist)
-      .select("shard_id", "corpus_id", "hamming")
-  }
+      .select(a, b, "hamming")
 
   /** Near-duplicate IMAGE pairs via perceptual hash (dHash) — SURVEY
     * §2.D42. Payloads are decoded partition-locally
@@ -860,9 +857,7 @@ object Dedup {
     // exchange already provides: ONE pass tags each posting with its
     // document frequency — no separate rare-groupBy and no semi-join
     // back (measured ~15% off the candidate phase, identical pairs)
-    val wSh = org.apache.spark.sql.expressions.Window.partitionBy("sh")
-    val indexed = sh.withColumn("__df", count(lit(1)).over(wSh))
-      .filter(col("__df") >= 2 && col("__df") <= dfCap).drop("__df")
+    val indexed = capGroups(sh, "sh", 2, dfCap)
     val inter = indexed.as("a")
       .join(indexed.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -1018,10 +1013,7 @@ object Dedup {
           graft.functions.RollingHashWinnow.winnowFingerprint(col("__text"), k, w))).as("fp"))
       .repartition(col("fp"))
     // one-pass df-cap via a count window over the fp partitioning
-    // (same shape as ngramJaccard)
-    val wFp = org.apache.spark.sql.expressions.Window.partitionBy("fp")
-    val idx = fp.withColumn("__df", count(lit(1)).over(wFp))
-      .filter(col("__df") >= 2 && col("__df") <= dfCap).drop("__df")
+    val idx = capGroups(fp, "fp", 2, dfCap)
     idx.as("a")
       .join(idx.as("b"), col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -1658,9 +1650,7 @@ object Dedup {
     */
   def dedupSpans(df: DataFrame, id: Column, text: Column, k: Int = 10): DataFrame = {
     require(k >= 2, "k must be >= 2: unigram spans would strip every repeated word")
-    val tk = graft.operators.scaleOut(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), tokens(col("__text")).as("tk"))
-      .transform(materialize(_))
+    val tk = tokenFrame(df, id, text, "id")
     val spans = tk.filter(size(col("tk")) >= k)
       .select(col("id"), posexplode(shingles(col("tk"), k)).as(Seq("start", "shingle")))
     val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))
@@ -1669,28 +1659,54 @@ object Dedup {
       .withColumn("cnt", count(lit(1)).over(wAll))
       .withColumn("rn", row_number().over(wOrd))
       .filter(col("cnt") >= 2 && col("rn") >= 2)
-      .select(col("id"),
-        explode(sequence(col("start"), col("start") + (k - 1))).as("pos"))
+    excise(tk, losers, "id", k)
+      .select(col("id"), col("n_tokens"),
+        excisedTokens.as("n_dup_tokens"),
+        when(col("n_tokens") === 0, lit(0d))
+          .otherwise(round(excisedTokens.cast("double") / col("n_tokens"), 4))
+          .as("dup_ratio"),
+        coalesce(col("__rebuilt"), lit("")).as("cleaned_text"))
+  }
+
+  /** (`idName`, tk) token arrays of a text column, pinned by
+    * `materialize`: the span operators read it for their n-grams and
+    * again for [[excise]]'s rebuild.
+    */
+  private def tokenFrame(df: DataFrame, id: Column, text: Column,
+      idName: String): DataFrame =
+    scaleOut(df.select(id.as(idName), text.as("__text")))
+      .select(col(idName), tokens(col("__text")).as("tk"))
+      .transform(materialize(_))
+
+  /** The span operators' rebuild: every token position covered by a
+    * `k`-gram starting at one of `starts`' (`idName`, start) rows is
+    * excised and each doc of the [[tokenFrame]] `tk` re-assembled from
+    * the survivors. The ×k position expansion is paid only on those
+    * starts; the rebuild aggregate is per-doc (collect_list bounded by
+    * doc length — the bound the tokenizer already imposes). Returns
+    * every doc: (`idName`, n_tokens, __kept, __rebuilt), the last two
+    * null for a doc with nothing kept; [[excisedTokens]] counts the
+    * excised positions.
+    */
+  private def excise(tk: DataFrame, starts: DataFrame, idName: String,
+      k: Int): DataFrame = {
+    val lose = starts
+      .select(col(idName), explode(sequence(col("start"), col("start") + (k - 1))).as("pos"))
       .distinct()
-    val tkpos = tk.select(col("id"), posexplode(col("tk")).as(Seq("pos", "term")))
-    val rebuilt = tkpos.join(losers, Seq("id", "pos"), "left_anti")
-      .groupBy("id")
+    val rebuilt = tk.select(col(idName), posexplode(col("tk")).as(Seq("pos", "term")))
+      .join(lose, Seq(idName, "pos"), "left_anti")
+      .groupBy(idName)
       .agg(
-        count(lit(1)).as("n_kept"),
+        count(lit(1)).as("__kept"),
         array_join(
           transform(array_sort(collect_list(struct(col("pos"), col("term")))),
-            s => s.getField("term")), " ").as("cleaned"))
-    tk.select(col("id"), size(col("tk")).cast("long").as("n_tokens"))
-      .join(rebuilt, Seq("id"), "left")
-      .select(col("id"), col("n_tokens"),
-        (col("n_tokens") - coalesce(col("n_kept"), lit(0L))).as("n_dup_tokens"),
-        when(col("n_tokens") === 0, lit(0d))
-          .otherwise(round(
-            (col("n_tokens") - coalesce(col("n_kept"), lit(0L))).cast("double") /
-              col("n_tokens"), 4))
-          .as("dup_ratio"),
-        coalesce(col("cleaned"), lit("")).as("cleaned_text"))
+            s => s.getField("term")), " ").as("__rebuilt"))
+    tk.select(col(idName), size(col("tk")).cast("long").as("n_tokens"))
+      .join(rebuilt, Seq(idName), "left")
   }
+
+  /** Positions [[excise]] dropped from a doc. */
+  private def excisedTokens: Column = col("n_tokens") - coalesce(col("__kept"), lit(0L))
 
   /** Benchmark decontamination: per-document fraction of its distinct
     * word n-grams that occur ANYWHERE in the probe corpus (eval/test
@@ -1712,23 +1728,40 @@ object Dedup {
       probes: DataFrame,
       probeText: Column,
       n: Int = 5): DataFrame = {
-    val docSh = scaleOut(docs.select(id.as("id"), text.as("__text")))
-      .select(col("id"),
-        explode(array_distinct(shingles(tokens(col("__text")), n))).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("sh"))
-    val probeSh = scaleOut(probes.select(probeText.as("__text")))
+    val docSh = hashedShingles(docs.select(id.as("id"), text.as("__text")), n)
+    contaminationScore(docSh,
+      docSh.join(probeShingles(probes, probeText, n), Seq("sh"), "left_semi"))
+  }
+
+  /** (sh) distinct 8-byte hashes of a probe corpus' word `n`-grams —
+    * benchmark-suite-sized, the set every decontamination tier joins
+    * or sketches.
+    */
+  private def probeShingles(probes: DataFrame, probeText: Column, n: Int): DataFrame =
+    scaleOut(probes.select(probeText.as("__text")))
       .select(explode(array_distinct(shingles(tokens(col("__text")), n))).as("s"))
       .select(xxhash64(col("s")).as("sh"))
       .distinct()
+
+  /** Per-doc contamination from a doc's (id, sh) shingle postings and
+    * the postings of them that hit the probe set: (id, n_shingles,
+    * n_contaminated, contamination).
+    */
+  private def contaminationScore(docSh: DataFrame, hits: DataFrame): DataFrame = {
     val tot = docSh.groupBy("id").agg(count(lit(1)).as("n_shingles"))
-    val hit = docSh.join(probeSh, Seq("sh"), "left_semi")
-      .groupBy("id").agg(count(lit(1)).as("n_contaminated"))
+    val hit = hits.groupBy("id").agg(count(lit(1)).as("n_contaminated"))
     tot.join(hit, Seq("id"), "left")
       .select(col("id"), col("n_shingles"),
         coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
         round(coalesce(col("n_contaminated"), lit(0L)).cast("double") / col("n_shingles"), 4)
           .as("contamination"))
   }
+
+  /** Bloom sketch of a one-column frame of long hashes, sized to its
+    * row count (at least 1000).
+    */
+  private def bloomOf(hashes: DataFrame, fpp: Double): org.apache.spark.util.sketch.BloomFilter =
+    hashes.stat.bloomFilter(hashes.columns.head, math.max(hashes.count(), 1000L), fpp)
 
   /** Positions of doc n-grams that occur in the probe corpus: one row
     * per (id, start) whose k-gram [start, start+n) matched. Shared
@@ -1744,17 +1777,12 @@ object Dedup {
       probes: DataFrame,
       probeText: Column,
       n: Int): (DataFrame, DataFrame) = {
-    val tk = scaleOut(docs.select(id.as("id"), text.as("__text")))
-      .select(col("id"), tokens(col("__text")).as("tk"))
-      .transform(materialize(_))
+    val tk = tokenFrame(docs, id, text, "id")
     val docSh = tk.filter(size(col("tk")) >= n)
       .select(col("id"), posexplode(shingles(col("tk"), n)).as(Seq("start", "s")))
       .select(col("id"), col("start"), xxhash64(col("s")).as("sh"))
-    val probeSh = scaleOut(probes.select(probeText.as("__text")))
-      .select(explode(array_distinct(shingles(tokens(col("__text")), n))).as("s"))
-      .select(xxhash64(col("s")).as("sh"))
-      .distinct()
-    (tk, docSh.join(probeSh, Seq("sh"), "left_semi").select(col("id"), col("start")))
+    (tk, docSh.join(probeShingles(probes, probeText, n), Seq("sh"), "left_semi")
+      .select(col("id"), col("start")))
   }
 
   /** SPAN-level benchmark decontamination (mask, don't drop): the
@@ -1809,14 +1837,12 @@ object Dedup {
 
   /** Masked rebuild over [[contaminationSpans]]' verdict: every token
     * position covered by a probe-matching n-gram is excised and the
-    * document re-assembled from the survivors — [[dedupSpans]]' rebuild
-    * shape pointed at benchmark overlap instead of duplication. Returns
-    * every input doc (zero-hit docs pass through unchanged) with
-    * (n_tokens, n_masked, masked_ratio, cleaned_text).
+    * document re-assembled from the survivors — the [[excise]] rebuild
+    * [[dedupSpans]] runs, pointed at benchmark overlap instead of
+    * duplication. Returns every input doc (zero-hit docs pass through
+    * unchanged) with (n_tokens, n_masked, masked_ratio, cleaned_text).
     *
-    * The ×n position expansion is paid only on HIT n-grams; the rebuild
-    * aggregate is per-doc (collect_list bounded by doc length — the
-    * same bound the tokenizer already imposes).
+    * The ×n position expansion is paid only on HIT n-grams.
     */
   def maskContamination(
       docs: DataFrame,
@@ -1827,28 +1853,13 @@ object Dedup {
       n: Int = 5): DataFrame = {
     require(n >= 2, "n must be >= 2: unigram spans would strip every shared word")
     val (tk, hits) = contaminationHits(docs, id, text, probes, probeText, n)
-    val lose = hits
-      .select(col("id"),
-        explode(sequence(col("start"), col("start") + (n - 1))).as("pos"))
-      .distinct()
-    val tkpos = tk.select(col("id"), posexplode(col("tk")).as(Seq("pos", "term")))
-    val rebuilt = tkpos.join(lose, Seq("id", "pos"), "left_anti")
-      .groupBy("id")
-      .agg(
-        count(lit(1)).as("__n_kept"),
-        array_join(
-          transform(array_sort(collect_list(struct(col("pos"), col("term")))),
-            s => s.getField("term")), " ").as("__cleaned"))
-    tk.select(col("id"), size(col("tk")).cast("long").as("n_tokens"))
-      .join(rebuilt, Seq("id"), "left")
+    excise(tk, hits, "id", n)
       .select(col("id"), col("n_tokens"),
-        (col("n_tokens") - coalesce(col("__n_kept"), lit(0L))).as("n_masked"),
+        excisedTokens.as("n_masked"),
         when(col("n_tokens") === 0, lit(0d))
-          .otherwise(round(
-            (col("n_tokens") - coalesce(col("__n_kept"), lit(0L))).cast("double") /
-              col("n_tokens"), 4))
+          .otherwise(round(excisedTokens.cast("double") / col("n_tokens"), 4))
           .as("masked_ratio"),
-        coalesce(col("__cleaned"), lit("")).as("cleaned_text"))
+        coalesce(col("__rebuilt"), lit("")).as("cleaned_text"))
   }
 
   /** Sketch-tier AUDIT: precision/recall/F1 of a candidate near-dup
@@ -1947,6 +1958,21 @@ object Dedup {
       .agg(count(lit(1)).as("n_probe_hits"), max(col("cos_sim")).as("max_cos"))
   }
 
+  /** Probe-side Bloom sketch alone — the distilled, shippable artifact
+    * of [[contaminationBloom]]'s pre-filter: build once from the
+    * benchmark suite, then gate arriving shards ANYWHERE (the
+    * streaming tier [[graft.streaming.EventStreams.decontaminateStream]],
+    * or a plain filter in front of a batch confirm-join) without
+    * re-reading the probes. Driver metadata by the same contract as
+    * IVF centroids: kilobytes-to-MB for benchmark-suite-sized sets.
+    */
+  def probeBloom(
+      probes: DataFrame,
+      probeText: Column,
+      n: Int = 5,
+      fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter =
+    bloomOf(probeShingles(probes, probeText, n), fpp)
+
   /** `contamination` with a Bloom pre-filter on the corpus side —
     * identical output (Bloom filters have no false negatives and an
     * exact semi-join confirm removes the false positives), different
@@ -1962,27 +1988,6 @@ object Dedup {
     * assumption — the reason a bloom pre-filter wins in the first
     * place.
     */
-  /** Probe-side Bloom sketch alone — the distilled, shippable artifact
-    * of [[contaminationBloom]]'s pre-filter: build once from the
-    * benchmark suite, then gate arriving shards ANYWHERE (the
-    * streaming tier [[graft.streaming.EventStreams.decontaminateStream]],
-    * or a plain filter in front of a batch confirm-join) without
-    * re-reading the probes. Driver metadata by the same contract as
-    * IVF centroids: kilobytes-to-MB for benchmark-suite-sized sets.
-    */
-  def probeBloom(
-      probes: DataFrame,
-      probeText: Column,
-      n: Int = 5,
-      fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter = {
-    val probeSh = scaleOut(probes.select(probeText.as("__text")))
-      .select(explode(array_distinct(shingles(tokens(col("__text")), n))).as("s"))
-      .select(xxhash64(col("s")).as("sh"))
-      .distinct()
-    val nProbe = math.max(probeSh.count(), 1000L)
-    probeSh.stat.bloomFilter("sh", nProbe, fpp)
-  }
-
   def contaminationBloom(
       docs: DataFrame,
       id: Column,
@@ -1991,26 +1996,12 @@ object Dedup {
       probeText: Column,
       n: Int = 5,
       fpp: Double = 0.01): DataFrame = {
-    val docSh = scaleOut(docs.select(id.as("id"), text.as("__text")))
-      .select(col("id"),
-        explode(array_distinct(shingles(tokens(col("__text")), n))).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("sh"))
-    val probeSh = scaleOut(probes.select(probeText.as("__text")))
-      .select(explode(array_distinct(shingles(tokens(col("__text")), n))).as("s"))
-      .select(xxhash64(col("s")).as("sh"))
-      .distinct()
-      .transform(materialize(_))
-    val nProbe = math.max(probeSh.count(), 1000L)
-    val bloom = probeSh.stat.bloomFilter("sh", nProbe, fpp)
-    val tot = docSh.groupBy("id").agg(count(lit(1)).as("n_shingles"))
-    val hit = docSh.filter(BloomMightContain.mightContain(col("sh"), bloom))
-      .join(probeSh, Seq("sh"), "left_semi")
-      .groupBy("id").agg(count(lit(1)).as("n_contaminated"))
-    tot.join(hit, Seq("id"), "left")
-      .select(col("id"), col("n_shingles"),
-        coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
-        round(coalesce(col("n_contaminated"), lit(0L)).cast("double") / col("n_shingles"), 4)
-          .as("contamination"))
+    val docSh = hashedShingles(docs.select(id.as("id"), text.as("__text")), n)
+    val probeSh = probeShingles(probes, probeText, n).transform(materialize(_))
+    val bloom = bloomOf(probeSh, fpp)
+    contaminationScore(docSh,
+      docSh.filter(BloomMightContain.mightContain(col("sh"), bloom))
+        .join(probeSh, Seq("sh"), "left_semi"))
   }
 
   /** Blocked sorted-neighborhood candidate pairs — the classic
@@ -2287,11 +2278,30 @@ object Dedup {
     val occ = base
       .select(col("doc_id"), explode(col("__sh")).as("sh"))
       .repartition(col("sh"))
-    val df2 = occ.select(col("doc_id"), col("sh")).distinct()
+    coverageScore(base, occ, duplicatedShingles(occ, minDf), maxCoverage)
+      .withColumn("too_short", col("n_grams") === 0L)
+  }
+
+  /** (sh) shingles of the (doc_id, sh) occurrence frame `occ` held by
+    * at least `minDf` docs — distinct per doc first, so self-repetition
+    * does not count as document frequency.
+    */
+  private def duplicatedShingles(occ: DataFrame, minDf: Int): DataFrame =
+    occ.select(col("doc_id"), col("sh")).distinct()
       .groupBy("sh").agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= minDf)
       .select(col("sh"))
-    val perDoc = occ.join(df2, Seq("sh"), "left_semi")
+
+  /** Duplicated-n-gram coverage of each doc of `base` (doc_id, __sh:
+    * its n-gram array): the share of its `occ` (doc_id, sh) occurrences
+    * whose shingle is in `dupSet`, 4-dp floored, 0 for a doc with no
+    * n-grams. Returns (doc_id, n_grams, n_dup_grams, dup_coverage,
+    * flagged) — shared by the batch gate and its maintained stream
+    * ([[graft.streaming.EventStreams.dupCoverageMaintained]]).
+    */
+  private[graft] def coverageScore(base: DataFrame, occ: DataFrame, dupSet: DataFrame,
+      maxCoverage: Double): DataFrame = {
+    val perDoc = occ.join(dupSet, Seq("sh"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_dup_grams"))
     base.select(col("doc_id"), size(col("__sh")).cast("long").as("n_grams"))
       .join(perDoc, Seq("doc_id"), "left")
@@ -2301,7 +2311,6 @@ object Dedup {
         coalesce(floor(try_divide(col("n_dup_grams").cast("double"),
           col("n_grams").cast("double")) * 1e4) / 1e4, lit(0.0)))
       .withColumn("flagged", col("dup_coverage") > maxCoverage)
-      .withColumn("too_short", col("n_grams") === 0L)
   }
 
   /** D149: duplicated-n-gram TRIM — the ACTION tier over
@@ -2318,9 +2327,9 @@ object Dedup {
     * Shape at scale: positioned shingles from one pass, the duplicated
     * set by a df-filtered partial-agg on the shingle hash (distinct
     * per doc first — self-repetition is [[textRepetition]]'s job, not
-    * df), covered positions by a bounded explode (n per hit), rebuild
-    * by the maskContamination position-anti-join — no window over
-    * corpus rows, no driver data. The tokens frame feeds three
+    * df), covered positions and rebuild by [[excise]] (a bounded
+    * explode, n per hit, then a position anti-join) — no window over
+    * corpus rows, no driver data. The [[tokenFrame]] feeds three
     * consumers and is pinned by `materialize` once.
     *
     * Returns one row per doc: (doc_id, n_tokens, n_dropped,
@@ -2335,41 +2344,19 @@ object Dedup {
       minDf: Int = 2): DataFrame = {
     require(n >= 2 && n <= 16, "n in [2, 16]: unigram trims would strip every shared word")
     require(minDf >= 2, "minDf must be >= 2 (df 1 = unique material)")
-    val tk = scaleOut(docs.select(id.as("doc_id"), text.as("__text")))
-      .select(col("doc_id"),
-        graft.functions.tokens(col("__text")).as("tk"))
-      .transform(materialize(_))
+    val tk = tokenFrame(docs, id, text, "doc_id")
     val occ = tk.filter(size(col("tk")) >= n)
       .select(col("doc_id"),
         posexplode(graft.functions.shingles(col("tk"), n))
           .as(Seq("start", "sh")))
       .repartition(col("sh"))
-    val dup = occ.select(col("doc_id"), col("sh")).distinct()
-      .groupBy("sh").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") >= minDf)
-      .select(col("sh"))
-    val lose = occ.join(dup, Seq("sh"), "left_semi")
-      .select(col("doc_id"),
-        explode(sequence(col("start"), col("start") + (n - 1))).as("pos"))
-      .distinct()
-    val tkpos = tk.select(col("doc_id"),
-      posexplode(col("tk")).as(Seq("pos", "term")))
-    val rebuilt = tkpos.join(lose, Seq("doc_id", "pos"), "left_anti")
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).as("__kept"),
-        array_join(
-          transform(array_sort(collect_list(struct(col("pos"), col("term")))),
-            s => s.getField("term")), " ").as("__trimmed"))
-    tk.select(col("doc_id"), size(col("tk")).cast("long").as("n_tokens"))
-      .join(rebuilt, Seq("doc_id"), "left")
+    excise(tk, occ.join(duplicatedShingles(occ, minDf), Seq("sh"), "left_semi"), "doc_id", n)
       .select(col("doc_id"), col("n_tokens"),
-        (col("n_tokens") - coalesce(col("__kept"), lit(0L))).as("n_dropped"),
-        coalesce(floor(try_divide(
-          (col("n_tokens") - coalesce(col("__kept"), lit(0L))).cast("double"),
+        excisedTokens.as("n_dropped"),
+        coalesce(floor(try_divide(excisedTokens.cast("double"),
           col("n_tokens").cast("double")) * 1e4) / 1e4, lit(0.0))
           .as("drop_ratio"),
-        coalesce(col("__trimmed"), lit("")).as("trimmed_text"))
+        coalesce(col("__rebuilt"), lit("")).as("trimmed_text"))
   }
 
   /** D148: cluster-aware k-fold cross-validation assignment —

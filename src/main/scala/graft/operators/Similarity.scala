@@ -1203,8 +1203,7 @@ object Similarity {
       sum(cd7).as("__scd"))
     val meanCos = col("__scd").cast("double") / col("n_pairs")
     g.select(col("dim"), col("n_pairs"),
-      (signum(meanCos) * (floor(abs(meanCos) * 1e6) / 1e6) + 0.0)
-        .as("mean_cos_prefix"),
+      Num.t6zero(meanCos).as("mean_cos_prefix"),
       (floor(col("__sad").cast("double") / col("n_pairs") * 1e6) / 1e6)
         .as("mean_abs_delta"),
       (floor(col("__mad").cast("double") * 1e6) / 1e6).as("max_abs_delta"))

@@ -2014,7 +2014,6 @@ object Stats {
     */
   def theilSen(df: DataFrame, key: Column, order: Column, value: Column,
       senMaxN: Long = 10000L): DataFrame = {
-    def t6z(c: Column): Column = signum(c) * (floor(abs(c) * 1e6) / 1e6) + 0.0
     val t = df.select(key.cast("string").as("key"), order.cast("long").as("__x"),
         value.cast("double").as("__v"))
       .filter(col("key").isNotNull && col("__x").isNotNull && col("__v").isNotNull)
@@ -2057,9 +2056,9 @@ object Stats {
         // NULL result row must carry the flag (the mannKendall
         // zero-variance convention), never masquerade as unflagged
         when(col("n") < 2 || col("__sl").isNull, lit(null).cast("double"))
-          .otherwise(t6z(col("__sl"))).as("slope"),
+          .otherwise(Num.t6zero(col("__sl"))).as("slope"),
         when(col("n") < 2 || col("__sl").isNull, lit(null).cast("double"))
-          .otherwise(t6z(col("__ic"))).as("intercept"),
+          .otherwise(Num.t6zero(col("__ic"))).as("intercept"),
         (col("n") < 2 || col("__sl").isNull).as("degenerate"))
   }
 
@@ -2092,7 +2091,6 @@ object Stats {
     */
   def mannKendall(df: DataFrame, key: Column, order: Column, value: Column,
       senMaxN: Long = 10000L, computeSen: Boolean = true): DataFrame = {
-    def t6z(c: Column): Column = signum(c) * (floor(abs(c) * 1e6) / 1e6) + 0.0
     val t = df.select(key.cast("string").as("key"), order.cast("long").as("__x"),
         value.cast("double").as("__v"))
       .filter(col("key").isNotNull && col("__x").isNotNull && col("__v").isNotNull)
@@ -2139,7 +2137,7 @@ object Stats {
     joined.select(col("key"), col("n"), col("s"),
       when(degenerate, lit(0.0)).otherwise(Num.t4zero(z)).as("z"),
       if (computeSen)
-        when(degenerate, lit(null).cast("double")).otherwise(t6z(col("__sen"))).as("sen_slope")
+        when(degenerate, lit(null).cast("double")).otherwise(Num.t6zero(col("__sen"))).as("sen_slope")
       else lit(null).cast("double").as("sen_slope"),
       degenerate.as("degenerate"))
   }
@@ -2341,13 +2339,11 @@ object Stats {
     val degenerate = col("n") < 2 || varX === 0.0
     val slope = cov / varX
     val intercept = (sy - slope * sx) / n
-    def t6zero(c: Column): Column =
-      signum(c) * (floor(abs(c) * 1e6) / 1e6) + 0.0
     val r2 = when(varY === 0.0, 0.0)
       .otherwise(least(lit(1.0), greatest(lit(0.0), cov * cov / (varX * varY))))
     m.select(col("key"), col("n"),
-      when(degenerate, 0.0).otherwise(t6zero(slope)).as("slope"),
-      when(degenerate, 0.0).otherwise(t6zero(intercept)).as("intercept"),
+      when(degenerate, 0.0).otherwise(Num.t6zero(slope)).as("slope"),
+      when(degenerate, 0.0).otherwise(Num.t6zero(intercept)).as("intercept"),
       when(degenerate, 0.0).otherwise(floor(r2 * 1e4) / 1e4).as("r2"))
   }
 

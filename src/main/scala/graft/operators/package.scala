@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 
 package object operators {
 
-  /** ONE copy of the cross-engine numeric determinism contract
-    * (SURVEY §6 r4) shared by the statistical operators
-    * (Profile / Stats): the DuckDB oracles replay these formulas
-    * textually, so a change here must be deliberate and global —
-    * three hand-maintained copies were one silent divergence away
-    * from a hash mismatch.
+  /** The cross-engine numeric determinism contract (SURVEY §6 r4)
+    * shared by the statistical operators (Profile / Stats): the DuckDB
+    * oracles replay these formulas textually, so a change here must be
+    * deliberate and global — three hand-maintained copies were one
+    * silent divergence away from a hash mismatch. Not yet the only
+    * copy: code under operators/, streaming/ and functions/ still
+    * spells the K-dp floor `floor(x * 1eK) / 1eK` inline (ROADMAP,
+    * "Quality of design").
     */
   private[operators] object Num {
     /** 4-dp floor truncation — repr-independent where round() is not
@@ -33,6 +35,10 @@ package object operators {
       */
     def t4zero(c: Column): Column =
       signum(c) * (floor(abs(c) * 1e4) / 1e4) + 0.0
+
+    /** [[t4zero]] at 6 dp. */
+    def t6zero(c: Column): Column =
+      signum(c) * (floor(abs(c) * 1e6) / 1e6) + 0.0
 
     /** Exact 6-dp decimal reduction for order-independent sums. */
     def dec(c: Column): Column = c.cast("decimal(18,6)")

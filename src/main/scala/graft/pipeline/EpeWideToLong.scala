@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Reshape
@@ -22,36 +22,6 @@ import graft.queries.dec
   * make_date (B14) → concat_ws key (B16).
   */
 object EpeWideToLong {
-
-  /** Wide monthly sheet from (classe, ano, mes, valor-decimal) rows:
-    * one row per (classe, ano); m1..m12 hold the exact decimal month
-    * sums (the analogue of one pivoted EPE sheet).
-    */
-  def monthlyWideFrom(base: DataFrame): DataFrame = {
-    val wide = Reshape.pivotWider(
-      base, Seq("classe", "ano"), "mes", 1 to 12, sum(col("valor")))
-    Reshape.renameWith(wide, "^[0-9]+$", c => s"m$c")
-  }
-
-  /** Wide monthly sheet straight off `orders` (single-sheet use). */
-  def monthlyWide(orders: DataFrame, classe: Column): DataFrame =
-    monthlyWideFrom(orders.select(
-      classe.as("classe"),
-      year(col("o_orderdate")).as("ano"),
-      month(col("o_orderdate")).as("mes"),
-      dec(col("o_totalprice")).as("valor")))
-
-  /** Wide sheet → long (classe, ano, mes, valor, data) rows. */
-  def sheetToLong(wide: DataFrame): DataFrame = {
-    val casted = Reshape.castMatching(wide, "^m[0-9]+$", "double")
-    Reshape
-      .pivotLonger(casted, Seq("classe", "ano"), (1 to 12).map(m => s"m$m"),
-        "mes_raw", "valor")
-      .filter(col("valor").isNotNull)
-      .withColumn("mes", regexp_extract(col("mes_raw"), "([0-9]+)$", 1).cast("int"))
-      .drop("mes_raw")
-      .withColumn("data", make_date(col("ano"), col("mes"), lit(1)))
-  }
 
   /** Full pipeline over `orders`: two sheets, regex dims, union, key.
     *

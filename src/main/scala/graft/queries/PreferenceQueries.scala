@@ -211,7 +211,6 @@ object PreferenceQueries {
     // D88: GRPO group-relative advantage normalization.
     Q(
       "q_group_advantage", {
-        def t4z(e: String) = s"sign($e) * (floor(abs($e) * 1e4) / 1e4) + 0.0"
         s"""WITH t AS (
            |  SELECT doc_id % 50 AS group_key, doc_id AS sample_id,
            |    CAST(n_chars AS DOUBLE) AS reward
@@ -228,9 +227,9 @@ object PreferenceQueries {
            |      (ss - sm * sm / group_n) / group_n)) AS sd
            |  FROM s)
            |SELECT t.group_key, t.sample_id, t.reward, m.group_n,
-           |  ${t4z("m.mu")} AS group_mean,
-           |  ${t4z("m.sd")} AS group_std,
-           |  ${t4z("(t.reward - m.mu) / (m.sd + CAST(0.0001 AS DOUBLE))")} AS advantage
+           |  ${truncZeroSql("m.mu", 4)} AS group_mean,
+           |  ${truncZeroSql("m.sd", 4)} AS group_std,
+           |  ${truncZeroSql("(t.reward - m.mu) / (m.sd + CAST(0.0001 AS DOUBLE))", 4)} AS advantage
            |FROM t JOIN m ON t.group_key = m.group_key
            |ORDER BY t.group_key, t.sample_id""".stripMargin
       }

@@ -2252,7 +2252,6 @@ object ProfileQueries {
         val slope = s"($cov / $varX)"
         val icept = s"((${d("sy")} - $slope * ${d("sx")}) / ${d("n")})"
         val r2 = s"least(1.0, greatest(0.0, $cov * $cov / ($varX * $varY)))"
-        def t6z(e: String) = s"sign($e) * (floor(abs($e) * 1e6) / 1e6) + 0.0"
         val degen = s"n < 2 OR $varX = 0.0"
         s"""WITH b AS (
            |  SELECT event_type AS key,
@@ -2268,8 +2267,8 @@ object ProfileQueries {
            |    sum(CAST(y AS DECIMAL(38,6)) * CAST(y AS DECIMAL(38,6))) AS syy
            |  FROM b GROUP BY 1)
            |SELECT key, CAST(n AS BIGINT) AS n,
-           |  CASE WHEN $degen THEN 0.0 ELSE ${t6z(slope)} END AS slope,
-           |  CASE WHEN $degen THEN 0.0 ELSE ${t6z(icept)} END AS intercept,
+           |  CASE WHEN $degen THEN 0.0 ELSE ${truncZeroSql(slope, 6)} END AS slope,
+           |  CASE WHEN $degen THEN 0.0 ELSE ${truncZeroSql(icept, 6)} END AS intercept,
            |  CASE WHEN $degen THEN 0.0
            |       WHEN $varY = 0.0 THEN 0.0
            |       ELSE floor($r2 * 1e4) / 1e4 END AS r2

@@ -541,8 +541,7 @@ object TemporalQueries {
     // derivation order.
     Q(
       "q_level_shift", {
-        def t4z(e: String) = s"sign($e) * (floor(abs($e) * 1e4) / 1e4) + 0.0"
-        val z = t4z("(post - pre) / sd")
+        val z = truncZeroSql("(post - pre) / sd", 4)
         s"""WITH ${ProfileQueries.hourlyCountsSql},
            |m AS (
            |  SELECT key, bucket, value,
@@ -567,9 +566,9 @@ object TemporalQueries {
            |  FROM m)
            |SELECT key, CAST(bucket AS BIGINT) AS bucket, value,
            |  CAST(np AS BIGINT) AS n_pre, CAST(nq AS BIGINT) AS n_post,
-           |  CASE WHEN fullw THEN ${t4z("pre")} ELSE 0.0 END AS pre_mean,
-           |  CASE WHEN fullw THEN ${t4z("post")} ELSE 0.0 END AS post_mean,
-           |  CASE WHEN fullw THEN ${t4z("post - pre")} ELSE 0.0 END AS shift,
+           |  CASE WHEN fullw THEN ${truncZeroSql("pre", 4)} ELSE 0.0 END AS pre_mean,
+           |  CASE WHEN fullw THEN ${truncZeroSql("post", 4)} ELSE 0.0 END AS post_mean,
+           |  CASE WHEN fullw THEN ${truncZeroSql("post - pre", 4)} ELSE 0.0 END AS shift,
            |  CASE WHEN fullw AND sd > 0.0 THEN $z ELSE 0.0 END AS shift_z,
            |  (fullw AND ((sd > 0.0 AND abs(CASE WHEN sd > 0.0 THEN $z ELSE 0.0 END) > 4.0)
            |    OR (sd = 0.0 AND post - pre <> 0.0))) AS changepoint

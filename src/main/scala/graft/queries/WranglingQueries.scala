@@ -23,7 +23,9 @@ object WranglingQueries {
 
   private val m12 = "m1,m2,m3,m4,m5,m6,m7,m8,m9,m10,m11,m12"
 
-  /** DuckDB twin of one wide monthly sheet (EpeWideToLong.monthlyWide). */
+  /** DuckDB twin of one wide monthly sheet (one sheet of
+    * [[graft.pipeline.EpeWideToLong.run]]'s `pivotWider`).
+    */
   private def wideSql(classeExpr: String): String = {
     val months = (1 to 12).map(m =>
       s"sum(CASE WHEN month(o_orderdate) = $m THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS m$m")

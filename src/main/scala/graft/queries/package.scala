@@ -59,6 +59,13 @@ package object queries {
   private[queries] def normFingerprintSql(c: String): String =
     s"""md5(trim(regexp_replace(regexp_replace(lower($c), '[^\\p{L}\\p{Nd}\\s]', ' ', 'g'), '\\s+', ' ', 'g')))"""
 
+  /** DuckDB twin of `Num.t4zero` / `Num.t6zero`: expression `e`
+    * truncated toward zero at `dp` decimal places, with `+ 0.0` folding
+    * -0.0 to the zero Spark emits.
+    */
+  private[queries] def truncZeroSql(e: String, dp: Int): String =
+    s"sign($e) * (floor(abs($e) * 1e$dp) / 1e$dp) + 0.0"
+
   /** `words` as an SQL IN-list of string literals. */
   private[queries] def inListSql(words: Seq[String]): String =
     words.map(w => s"'$w'").mkString("(", ", ", ")")

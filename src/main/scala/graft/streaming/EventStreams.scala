@@ -1598,17 +1598,7 @@ object EventStreams {
             StructType.fromDDL("sh STRING, df BIGINT"))
           .groupBy("sh").agg(sum(col("df")).as("df"))
         val dupSet = dfTable.filter(col("df") >= minDf).select("sh")
-        val perDoc = occ.join(dupSet, Seq("sh"), "left_semi")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_dup_grams"))
-        val scored = base
-          .select(col("doc_id"), size(col("__sh")).cast("long").as("n_grams"))
-          .join(perDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_grams"),
-            coalesce(col("n_dup_grams"), lit(0L)).as("n_dup_grams"))
-          .withColumn("dup_coverage",
-            coalesce(floor(try_divide(col("n_dup_grams").cast("double"),
-              col("n_grams").cast("double")) * 1e4) / 1e4, lit(0.0)))
-          .withColumn("flagged", col("dup_coverage") > maxCoverage)
+        val scored = graft.operators.Dedup.coverageScore(base, occ, dupSet, maxCoverage)
         BatchLog.write(scored.withColumn("batch_id", lit(batchId)), outPath, batchId)
         BatchLog.write(occ.select(col("doc_id"), col("sh")).distinct()
           .groupBy("sh").agg(count(lit(1)).as("df")), dfPath, batchId)

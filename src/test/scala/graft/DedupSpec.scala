@@ -135,6 +135,21 @@ class DedupSpec extends SparkSpec {
     assert(pairs.forall(r => r.getInt(2) <= 3))
   }
 
+  test("hammingPairsBipartite of a frame against itself, one orientation, equals hammingPairs") {
+    val pert = docs.select(
+      (col("id") + 1000000).as("id"),
+      concat(col("text"), lit(" zzz")).as("text"))
+    val sigs = Dedup.simHashSignatures(docs.unionByName(pert), col("id"), col("text"))
+    def triples(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue, r.getInt(2))).toSet
+    val self = triples(Dedup.hammingPairs(sigs, maxDist = 3, nChunks = 4))
+    val bipartite = triples(Dedup.hammingPairsBipartite(sigs, sigs, maxDist = 3, nChunks = 4)
+      .filter(col("shard_id") < col("corpus_id")))
+    assert(self.size >= 60, s"only ${self.size} pairs: the planted near-dups went missing")
+    assert(bipartite == self,
+      s"only bipartite: ${(bipartite -- self).take(5)}; only self: ${(self -- bipartite).take(5)}")
+  }
+
   test("simHash signature is identical for identical token multisets") {
     val sig = docs.select(
       graft.functions.SimHash64.simhash64(graft.functions.tokens(col("text"))).as("s1"),

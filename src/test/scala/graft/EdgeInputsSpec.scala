@@ -195,6 +195,18 @@ class EdgeInputsSpec extends SparkSpec {
     Seq.empty[(Long, String)].toDF("id", "text"), col("id"), col("text")))
   edge("dup-trim blank-doc")(Dedup.duplicatedNgramTrim(
     Seq((1L, ""), (2L, "a")).toDF("id", "text"), col("id"), col("text")))
+  // dedupSpans / maskContamination: the excision rebuild with nothing
+  // to excise (empty) and with a lone doc excised by its own repeats
+  // or by itself as the probe (one-row)
+  private def oneRow = Seq((1L, "a b a b a b")).toDF("id", "text")
+  edge("dedup-spans empty")(Dedup.dedupSpans(
+    Seq.empty[(Long, String)].toDF("id", "text"), col("id"), col("text")))
+  edge("dedup-spans one-row")(Dedup.dedupSpans(oneRow, col("id"), col("text"), k = 2))
+  edge("mask-contamination empty")(Dedup.maskContamination(
+    Seq.empty[(Long, String)].toDF("id", "text"), col("id"), col("text"),
+    Seq.empty[Tuple1[String]].toDF("text"), col("text")))
+  edge("mask-contamination one-row")(Dedup.maskContamination(
+    oneRow, col("id"), col("text"), oneRow, col("text"), n = 2))
   edge("cv-folds no-pairs")(Dedup.cvFolds(
     Seq((1L, "x")).toDF("id", "text"), col("id"), emptyPairs, col("id_a"), col("id_b")))
   edge("cv-folds empty")(Dedup.cvFolds(

@@ -247,4 +247,38 @@ class SurveyRegistrySpec extends AnyFunSuite {
     assert(Seq("localCheckpoint(", ".checkpoint(").forall(n => hits.exists(_._3 == n)),
       s"the helper's seams moved: ${hits.map(_._4)}")
   }
+
+  test("Dedup spells each span-rebuild and probe-shingle building block once") {
+    // a hand-copied excision rebuild or shingle set is where the copies
+    // drift: the sorted rebuild and the k-gram position expansion are
+    // spelled once under src/main/scala/graft, and the hashed-shingle
+    // explode only in Dedup.hashedShingles and Dedup.probeShingles
+    // (comments aside)
+    import scala.jdk.CollectionConverters._
+    val rebuild = """collect_list(struct(col("pos"), col("term")))"""
+    val expansion = """explode(sequence(col("start")"""
+    val shingleSet = """explode(array_distinct(shingles(tokens(col("__text")), n)))"""
+    val decl = """\s*(?:private(?:\[\w+\])? )?def (\w+)\b.*""".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val hits = for {
+      f <- files
+      lines = java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq
+      (l, i) <- lines.zipWithIndex
+      code = l.split("//", 2)(0)
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      needle <- Seq(rebuild, expansion, shingleSet)
+      if code.contains(needle)
+      owner = lines.take(i + 1).reverseIterator.collectFirst { case decl(n) => n }
+    } yield (needle, f.getFileName.toString, owner, s"$f:${i + 1}: ${l.trim}")
+    for (needle <- Seq(rebuild, expansion)) {
+      val at = hits.filter(_._1 == needle)
+      assert(at.size == 1, s"$needle spelled ${at.size} times:\n${at.map(_._4).mkString("\n")}")
+    }
+    val shingleSites = hits.filter(_._1 == shingleSet)
+    assert(shingleSites.map(h => (h._2, h._3.getOrElse(""))).sorted ==
+        Seq("Dedup.scala" -> "hashedShingles", "Dedup.scala" -> "probeShingles"),
+      s"the hashed-shingle explode outside its two helpers:\n${shingleSites.map(_._4).mkString("\n")}")
+  }
 }
